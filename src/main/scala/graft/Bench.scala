@@ -182,7 +182,7 @@ object Bench {
             "sweep measures pure session pinning)"))
         Some("0")
       } else spanPinEnv
-    val b0 = SparkSession.builder()
+    val b0 = GraftSession.withLocalFs(SparkSession.builder())
       .master(master)
       .config("spark.sql.shuffle.partitions", pinnedShuffle.getOrElse(sized))
       .config("spark.sql.adaptive.coalescePartitions.enabled",
@@ -499,7 +499,6 @@ object Bench {
       runs, tag = "bench", brokenNoun = "query errors",
       fork = (idx, label) => childRound(label, withExec = idx == 0),
       total = _.total, failedKeys = _.errors.keySet)
-    var rounds = outcome.rounds
     val discardedTotals = outcome.discardedTotals
     val residualBroken = outcome.residualBroken
     // Exec-pass disturbance guard (r18, TODO #0 / verdict item 7): the exec
@@ -514,37 +513,23 @@ object Bench {
     // ForkedRounds' in-place slot-0 replacement runs — on its own re-fork
     // budget. A replacement is accepted only if it is keepable by the
     // normal guard rules (child alive, no extra errors, timed total within
-    // the factor); an unacceptable replacement burns budget and is logged.
-    // Discarded exec totals land in the full record (`exec_reforks` /
-    // `exec_discarded_totals`) — additions only, the stdout contract line
-    // carries the same fields as before.
-    val execDiscards = scala.collection.mutable.ArrayBuffer.empty[Double]
-    if (runs > 1) {
-      val commonErrs = rounds.map(_.errors.keySet).reduce(_ intersect _)
-      var tries = 0
-      def cleanMin: Double = rounds.map(_.total).min
-      def execTotal: Double = rounds.head.exec.map(_._2).sum
-      while (rounds.head.exec.nonEmpty && execTotal > disturbFactor * cleanMin &&
-          tries < maxReforks) {
-        System.err.println(
-          s"[bench] round 0 EXEC pass disturbed (exec ${num(execTotal, 1)} s > " +
-            s"${num(disturbFactor, 2)}x clean round min ${num(cleanMin, 1)} s) — " +
-            s"re-forking slot 0 (${tries + 1}/$maxReforks)")
-        execDiscards += execTotal
-        tries += 1
-        val repl = childRound(s"0-execrefork$tries", withExec = true)
-        val keepable = !repl.errors.contains(ChildDiedKey) &&
-          repl.errors.keySet == commonErrs &&
-          repl.total <= disturbFactor * cleanMin
-        if (keepable) rounds = rounds.updated(0, repl)
-        else System.err.println(
-          s"[bench] exec re-fork $tries not keepable " +
-            s"(total ${num(repl.total, 1)} s, errors ${repl.errors.size}) — discarded")
+    // the factor); an unacceptable replacement burns budget and is logged
+    // (ForkedRounds.guardExec). Discarded exec totals land in the full
+    // record (`exec_reforks` / `exec_discarded_totals`) — additions only,
+    // the stdout contract line carries the same fields as before.
+    val execOutcome =
+      if (runs <= 1) ForkedRounds.ExecOutcome(outcome.rounds, 0, Seq.empty)
+      else {
+        val commonErrs = outcome.rounds.map(_.errors.keySet).reduce(_ intersect _)
+        ForkedRounds.guardExec[ChildRound](
+          outcome.rounds, tag = "bench",
+          fork = label => childRound(label, withExec = true),
+          total = _.total,
+          exec = r => if (r.exec.isEmpty) None else Some(r.exec.map(_._2).sum),
+          keepable = (repl, cleanMin) => !repl.errors.contains(ChildDiedKey) &&
+            repl.errors.keySet == commonErrs && repl.total <= disturbFactor * cleanMin)
       }
-      if (rounds.head.exec.nonEmpty && execTotal > disturbFactor * cleanMin)
-        System.err.println(s"[bench] exec re-fork budget exhausted ($maxReforks); " +
-          "exec pass recorded as-is — box may be genuinely busy")
-    }
+    val rounds = execOutcome.rounds
     // Transient child deaths self-heal through the guard above; a death
     // surviving the re-fork budget (or present in every round, which the
     // guard cannot tell from "the build") means the medians CANNOT be
@@ -598,7 +583,7 @@ object Bench {
       roundTotals = rounds.map(_.total).toSeq, execTimes = rounds.head.exec,
       errors = errors, selectedCount = selected.size,
       discardedTotals = discardedTotals.toSeq, residualBroken = residualBroken,
-      execDiscardedTotals = execDiscards.toSeq)
+      execReforks = execOutcome.reforks, execDiscardedTotals = execOutcome.discardedExec)
   }
 
   /** r8 behavior: interleaved rounds inside this one JVM (`SPARK_GRAFT_FORK=0`),
@@ -673,6 +658,7 @@ object Bench {
       selectedCount: Int,
       discardedTotals: Seq[Double] = Seq.empty,
       residualBroken: Boolean = false,
+      execReforks: Int = 0,
       execDiscardedTotals: Seq[Double] = Seq.empty): Unit = {
     val total = stats.map(_._2).sum
     val totalMin = stats.map(_._3).sum
@@ -699,7 +685,7 @@ object Bench {
          |"round_totals":${roundTotals.map(num(_, 3)).mkString("[", ",", "]")},
          |"rounds_discarded":${discardedTotals.size},
          |"discarded_totals":${discardedTotals.map(num(_, 3)).mkString("[", ",", "]")},
-         |"exec_reforks":${execDiscardedTotals.size},
+         |"exec_reforks":$execReforks,
          |"exec_discarded_totals":${execDiscardedTotals.map(num(_, 3)).mkString("[", ",", "]")},
          |"residual_broken_round":$residualBroken,
          |"errors":$errJson,

@@ -117,4 +117,61 @@ private[graft] object ForkedRounds {
     }
     Outcome(rounds.toIndexedSeq, discardedTotals.toSeq, residualBroken, settled)
   }
+
+  /** @param rounds       the kept rounds, slot 0 possibly replaced
+    * @param reforks      slot-0 re-forks run (`exec_reforks`)
+    * @param discardedExec exec totals of the passes thrown away, each once:
+    *                     a replaced slot-0 pass and every rejected
+    *                     replacement (`exec_discarded_totals`)
+    */
+  final case class ExecOutcome[R](
+      rounds: IndexedSeq[R], reforks: Int, discardedExec: Seq[Double])
+
+  /** Bench's exec-pass guard: while slot 0's exec total (planning excluded)
+    * exceeds `factor` x the minimum round total (planning included), which
+    * no clean pass can, re-fork slot 0. A replacement replaces slot 0 only
+    * when `keepable(replacement, cleanMin)`; otherwise it is discarded and
+    * slot 0 stays. Slot 0's pass is recorded as discarded once, when it is
+    * replaced; a slot 0 that outlives the budget is the recorded exec pass,
+    * so it is not listed as discarded.
+    *
+    * @param exec a round's exec total, `None` when it ran no exec pass
+    */
+  def guardExec[R](
+      rounds: IndexedSeq[R],
+      tag: String,
+      fork: String => R,
+      total: R => Double,
+      exec: R => Option[Double],
+      keepable: (R, Double) => Boolean,
+      factor: Double = Bench.disturbFactor,
+      budget: Int = Bench.maxReforks): ExecOutcome[R] = {
+    import Bench.num
+    var kept = rounds
+    var reforks = 0
+    val discarded = scala.collection.mutable.ArrayBuffer.empty[Double]
+    def cleanMin: Double = kept.map(total).min
+    def disturbed: Option[Double] = exec(kept.head).filter(_ > factor * cleanMin)
+    while (disturbed.isDefined && reforks < budget) {
+      val slot0 = disturbed.get
+      System.err.println(
+        s"[$tag] round 0 EXEC pass disturbed (exec ${num(slot0, 1)} s > " +
+          s"${num(factor, 2)}x clean round min ${num(cleanMin, 1)} s) — " +
+          s"re-forking slot 0 (${reforks + 1}/$budget)")
+      reforks += 1
+      val repl = fork(s"0-execrefork$reforks")
+      if (keepable(repl, cleanMin)) {
+        discarded += slot0
+        kept = kept.updated(0, repl)
+      } else {
+        discarded ++= exec(repl)
+        System.err.println(
+          s"[$tag] exec re-fork $reforks not keepable (total ${num(total(repl), 1)} s) — discarded")
+      }
+    }
+    if (disturbed.isDefined)
+      System.err.println(s"[$tag] exec re-fork budget exhausted ($budget); " +
+        "exec pass recorded as-is — box may be genuinely busy")
+    ExecOutcome(kept, reforks, discarded.toSeq)
+  }
 }

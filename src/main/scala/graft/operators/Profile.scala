@@ -30,17 +30,23 @@ object Profile {
     * pass before training (drop one of each highly-correlated pair). ONE
     * aggregate computes every moment the k·(k−1)/2 pairs need — n, Σxᵢ,
     * Σxᵢ², Σxᵢxⱼ — with map-side partial aggregation, so the shuffle carries
-    * a single row of k·(k+3)/2 sums regardless of input size; the matrix
-    * assembles driver-side from that one row (k is a column count, never
-    * data-sized). Sums accumulate in DECIMAL (exact under any partial-agg
-    * order), and the correlation arithmetic then runs in deterministic
-    * doubles — the same engine-portability discipline as the interarrival
-    * variance (rounded to 6 dp at the edge).
+    * a single row of k·(k+3)/2 sums regardless of input size; the plan
+    * then explodes that one row into the k·(k−1)/2 pair rows (k is a column
+    * count, never data-sized), so the query runs as one job and nothing is
+    * collected while it is built. Sums accumulate in DECIMAL (exact under
+    * any partial-agg order), and the correlation arithmetic then runs in
+    * deterministic doubles — the same engine-portability discipline as the
+    * interarrival variance (rounded to 6 dp at the edge).
     *
     * Null contract: rows with a null in ANY of `cols` are excluded from
     * every moment (listwise deletion), so each pair sees the same n and the
     * matrix is positive-semidefinite-consistent; per-pair deletion would
     * mix incomparable populations silently.
+    *
+    * Non-finite moments: if `cov`, `va` or `vb` comes out NaN or ±Infinity
+    * (inputs of extreme magnitude), `corr_r` is NaN, not an error — Spark's
+    * `round` passes non-finite doubles through and NaN compares greater
+    * than 0.0, so the constant-column guard does not catch it.
     */
   def correlations(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, s"need at least 2 columns, got ${cols.size}")
@@ -82,7 +88,8 @@ object Profile {
       struct(
         lit(cols(i)).as("col_a"),
         lit(cols(j)).as("col_b"),
-        // a constant column has no correlation (va/vb <= 0 -> null)
+        // a constant column has no correlation (va/vb <= 0 -> null);
+        // non-finite moments give NaN (see the scaladoc)
         when(va > 0.0 && vb > 0.0, round(cov / sqrt(va) / sqrt(vb), 6)).as("corr_r"),
         col("n").as("n_rows"))
     }

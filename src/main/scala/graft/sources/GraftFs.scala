@@ -20,18 +20,29 @@ import org.apache.spark.util.SerializableConfiguration
   * and write factories carry a [[SerializableConfiguration]] captured on the
   * driver — the same mechanism Spark's own file sources use — and tasks
   * re-resolve the FileSystem from it per partition.
+  *
+  * Local writes: sessions from [[graft.GraftSession]] resolve `file:` to
+  * [[NioLocalFileSystem]] / [[NioLocalFs]], which set permissions and test
+  * for symlinks through `java.nio.file` instead of forking `chmod` and
+  * `readlink` (Hadoop's `chmod` fallback on hosts without native
+  * `libhadoop`, and its `readlink` on every host), which were the bulk of
+  * the streaming hot path's per-batch cost (SCALE.md, streaming). Only
+  * `file:` is affected; `hdfs:` and `s3a:` resolve as configured.
   */
 object GraftFs {
 
   /** The active session's Hadoop configuration (driver side), which carries
     * `spark.hadoop.*` overrides — credentials, endpoints, timeouts. Falls
-    * back to classpath defaults when no session exists on this JVM (an
-    * edge-side capture process journaling without Spark).
+    * back to classpath defaults plus the local-filesystem choice
+    * ([[graft.GraftSession.hadoopConf]]) when no session exists on this JVM
+    * (an edge-side capture process journaling without Spark), so a capture
+    * that runs before the session cannot pin Hadoop's cached `file:`
+    * FileSystem to the forking stock class.
     */
   def conf(): Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
+      .getOrElse(graft.GraftSession.hadoopConf())
 
   def serializableConf(): SerializableConfiguration =
     new SerializableConfiguration(conf())
@@ -41,7 +52,8 @@ object GraftFs {
     * refuses `append` (the capture journal's contract), strews `.crc`
     * sidecars through capture directories, and adds nothing here — the
     * length-prefixed/container formats carry their own integrity framing.
-    * Raw local preserves the exact `java.io` byte semantics this API
+    * Raw local ([[NioRawLocalFileSystem]] under a [[graft.GraftSession]]
+    * configuration) preserves the exact `java.io` byte semantics this API
     * replaced; every other scheme (`hdfs:`, `s3a:`, ...) is returned as
     * configured.
     */

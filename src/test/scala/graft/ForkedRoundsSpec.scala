@@ -144,4 +144,61 @@ class ForkedRoundsSpec extends AnyFunSuite {
     assert(out.settled && out.discardedTotals.isEmpty)
     assert(out.rounds.forall(_.failed.contains(Bench.ChildDiedKey)))
   }
+
+  /** Bench's exec-pass guard: rounds are (timed total, exec total) fakes;
+    * slot-0 replacements come from a script. Keepable = timed total within
+    * the factor of the clean minimum, as in Bench.
+    */
+  private case class E(total: Double, exec: Option[Double])
+
+  private def driveExec(
+      initial: IndexedSeq[E], replacements: Seq[E], budget: Int = 3)
+      : (ForkedRounds.ExecOutcome[E], Seq[String]) = {
+    val queue = scala.collection.mutable.Queue(replacements: _*)
+    val labels = scala.collection.mutable.ArrayBuffer.empty[String]
+    val out = ForkedRounds.guardExec[E](
+      initial, tag = "spec",
+      fork = label => { labels += label; queue.dequeue() },
+      total = _.total, exec = _.exec,
+      keepable = (r, cleanMin) => r.total <= 1.5 * cleanMin,
+      factor = 1.5, budget = budget)
+    (out, labels.toSeq)
+  }
+
+  test("exec guard: a clean or absent exec pass re-forks nothing") {
+    for (exec <- Seq(Some(12.0), None)) {
+      val (out, labels) = driveExec(IndexedSeq(E(10.0, exec), E(10.2, None)), Seq.empty)
+      assert(out.reforks == 0 && out.discardedExec.isEmpty && labels.isEmpty)
+    }
+  }
+
+  test("exec guard: each discarded pass is recorded once, rejected replacements included") {
+    // refork1 is rejected (timed total 30 > 1.5 x 10): its own exec total
+    // is what is thrown away, and slot 0's 100 s stays until refork2
+    // replaces it — then 100 s is recorded, once
+    val (out, labels) = driveExec(
+      IndexedSeq(E(10.0, Some(100.0)), E(10.2, None)),
+      Seq(E(30.0, Some(40.0)), E(10.1, Some(9.0))))
+    assert(labels == Seq("0-execrefork1", "0-execrefork2"))
+    assert(out.reforks == 2)
+    assert(out.discardedExec == Seq(40.0, 100.0))
+    assert(out.rounds.head == E(10.1, Some(9.0)))
+  }
+
+  test("exec guard: a slot 0 that outlives the budget is kept, not listed as discarded") {
+    val (out, _) = driveExec(
+      IndexedSeq(E(10.0, Some(100.0)), E(10.2, None)),
+      Seq(E(30.0, Some(41.0)), E(31.0, Some(42.0))), budget = 2)
+    assert(out.reforks == 2)
+    assert(out.discardedExec == Seq(41.0, 42.0))
+    assert(out.rounds.head == E(10.0, Some(100.0)))
+  }
+
+  test("exec guard: an accepted replacement whose exec is disturbed is re-forked in turn") {
+    val (out, _) = driveExec(
+      IndexedSeq(E(10.0, Some(100.0)), E(10.2, None)),
+      Seq(E(10.1, Some(90.0)), E(10.3, Some(11.0))))
+    assert(out.discardedExec == Seq(100.0, 90.0))
+    assert(out.rounds.head.exec == Some(11.0))
+  }
 }
