@@ -182,7 +182,7 @@ object Bench {
             "sweep measures pure session pinning)"))
         Some("0")
       } else spanPinEnv
-    val b0 = GraftSession.withLocalFs(SparkSession.builder())
+    val b0 = GraftSession.withEngineConfs(SparkSession.builder())
       .master(master)
       .config("spark.sql.shuffle.partitions", pinnedShuffle.getOrElse(sized))
       .config("spark.sql.adaptive.coalescePartitions.enabled",

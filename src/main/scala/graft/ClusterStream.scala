@@ -127,7 +127,7 @@ object ClusterStream {
       .empty[(String, String), Either[String, (Double, Long, Fp)]]
 
     for ((mode, master) <- Seq("local" -> s"local[$cpus]", "cluster" -> clusterMaster)) {
-      val b0 = GraftSession.withLocalFs(SparkSession.builder())
+      val b0 = GraftSession.withEngineConfs(SparkSession.builder())
         .master(master)
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")

@@ -14,11 +14,12 @@ import graft.sources.{NioLocalFileSystem, NioLocalFs}
   * to be a sane upper bound (2-3x total cores).
   *
   * Every session built here resolves `file:` to the fork-free local
-  * filesystem ([[withLocalFs]]).
+  * filesystem and runs its tasks without per-session artifact isolation
+  * ([[withEngineConfs]]).
   */
 object GraftSession {
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
-    withLocalFs(SparkSession.builder())
+    withEngineConfs(SparkSession.builder())
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -153,12 +154,27 @@ object GraftSession {
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
-  /** Applies [[LocalFsConfs]] as `spark.hadoop.*` entries. Every session
-    * factory in this project goes through it, so tests, benchmarks and the
-    * measurement mains all write through the same filesystem.
+  /** Applies the fixed engine settings every session in this project
+    * carries: [[LocalFsConfs]] as `spark.hadoop.*` entries, and session
+    * artifact isolation off. Every session factory here goes through it, so
+    * tests, benchmarks and the measurement mains all write through the same
+    * filesystem and run the same engine.
+    *
+    * Why isolation off: Spark 4 defaults `spark.sql.artifact.isolation.enabled`
+    * to true, so every job carries its session's UUID and class URI, and
+    * executors run its tasks under a per-session `ExecutorClassLoader`.
+    * Generated code is cached per (class loader, source), and every
+    * streaming query runs on a cloned session, so each live and replay
+    * query recompiled every generated class on the executors, and each
+    * class name the compiler probed became a lookup on the driver's class
+    * server. This project adds no session artifacts (no `addArtifact` or
+    * `addJar`), so isolation buys it nothing; with it off, tasks run under
+    * the application class loader and all queries share one codegen cache.
+    * Must be set when a session is created; it has no effect later.
     */
-  def withLocalFs(b: SparkSession.Builder): SparkSession.Builder =
+  def withEngineConfs(b: SparkSession.Builder): SparkSession.Builder =
     LocalFsConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(s"spark.hadoop.$k", v) }
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** A fresh Hadoop configuration carrying [[LocalFsConfs]], for
     * filesystem calls made without a session. Hadoop caches one `file:`

@@ -66,7 +66,7 @@ object MemSweep {
   private def childMain(): Unit = {
     val name = sys.env("SPARK_GRAFT_MEM_QUERY")
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
-    val spark = GraftSession.withLocalFs(SparkSession.builder())
+    val spark = GraftSession.withEngineConfs(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -442,7 +442,7 @@ object StreamBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val n = sys.env.get("SPARK_GRAFT_STREAM_N").map(_.toInt).getOrElse(1000000)
     val chunks = 20
-    val spark = GraftSession.withLocalFs(SparkSession.builder())
+    val spark = GraftSession.withEngineConfs(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -542,7 +542,7 @@ object StreamBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val n = sys.env.get("SPARK_GRAFT_STREAM_N").map(_.toInt).getOrElse(1000000)
     val symbols = 64
-    val spark = GraftSession.withLocalFs(SparkSession.builder())
+    val spark = GraftSession.withEngineConfs(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -624,7 +624,7 @@ object StreamBench {
     val n = sys.env.get("SPARK_GRAFT_STREAM_N").map(_.toInt).getOrElse(1000000)
     val chunks = ThroughputChunks
     val symbols = ThroughputSymbols
-    val spark = GraftSession.withLocalFs(SparkSession.builder())
+    val spark = GraftSession.withEngineConfs(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

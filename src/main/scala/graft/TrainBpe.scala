@@ -30,7 +30,7 @@ object TrainBpe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nMerges = args.lift(1).map(_.toInt).getOrElse(256)
     val artifactDir = args.lift(2)
-    val spark = GraftSession.withLocalFs(SparkSession.builder())
+    val spark = GraftSession.withEngineConfs(SparkSession.builder())
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")

@@ -12,7 +12,7 @@ object Verify {
     // per-executor codegen) — the r12 cluster-mode hash-exactness gate;
     // needs SPARK_HOME pointing at a full distribution.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val b0 = GraftSession.withLocalFs(SparkSession.builder())
+    val b0 = GraftSession.withEngineConfs(SparkSession.builder())
       .master(master)
       // bytes-aware initial partition count (r15) — at the verify SFs
       // (0.01/0.001) this returns exactly `cpus`, so the correctness

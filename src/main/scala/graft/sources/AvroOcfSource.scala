@@ -7,6 +7,7 @@ import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter, Seeka
 import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -34,10 +35,10 @@ import graft.functions.Avro
   * Storage: all IO goes through the Hadoop FileSystem API ([[GraftFs]]) —
   * the reference's container dumps live on S3 (`s3_writer.py:216-230`), so
   * `load("s3a://bucket/exports")` must work, not just local paths; the
-  * reader factory and write factory each carry a
-  * [[SerializableConfiguration]] so executors resolve the FileSystem
-  * themselves. Note the write commit protocol's rename step is atomic on
-  * `file:`/`hdfs:` but a copy on S3A — a reader listing mid-commit may see
+  * reader factory and write factory each carry a broadcast
+  * [[SerializableConfiguration]] ([[GraftFs.broadcastConf]]) so executors
+  * resolve the FileSystem themselves. Note the write commit protocol's
+  * rename step is atomic on `file:`/`hdfs:` but a copy on S3A — a reader listing mid-commit may see
   * a file appear non-atomically there; the `.tmp` prefix still keeps
   * half-written containers out of every scan (listing filters by suffix).
   *
@@ -297,7 +298,7 @@ class AvroOcfBatchWrite(
     syncEvery: Int,
     doTruncate: Boolean) extends BatchWrite {
 
-  private val conf = GraftFs.serializableConf()
+  private val conf = GraftFs.conf()
 
   // Distinguishes this write job's files from any earlier job's (task ids
   // restart across applications, so they alone can't keep append-mode file
@@ -310,15 +311,16 @@ class AvroOcfBatchWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val dir = new Path(path)
-    GraftFs.fs(dir, conf.value).mkdirs(dir)
+    GraftFs.fs(dir, conf).mkdirs(dir)
     AvroOcfWriterFactory(
-      path, schemaJson, sparkSchema, codec, deflateLevel, syncEvery, writeId, conf)
+      path, schemaJson, sparkSchema, codec, deflateLevel, syncEvery, writeId,
+      GraftFs.broadcastConf(conf))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(path)
-    val f = GraftFs.fs(dir, conf.value)
-    if (doTruncate) AvroOcfSource.listFiles(path, conf.value).foreach { st =>
+    val f = GraftFs.fs(dir, conf)
+    if (doTruncate) AvroOcfSource.listFiles(path, conf).foreach { st =>
       if (!f.delete(st.getPath, false))
         throw new java.io.IOException(s"avro-ocf: cannot truncate ${st.getPath}")
     }
@@ -333,7 +335,7 @@ class AvroOcfBatchWrite(
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.collect { case m: AvroOcfCommit if m.tmpPath.nonEmpty => m }.foreach { m =>
       val tmp = new Path(m.tmpPath)
-      try GraftFs.fs(tmp, conf.value).delete(tmp, false)
+      try GraftFs.fs(tmp, conf).delete(tmp, false)
       catch { case _: Throwable => () }
     }
 }
@@ -346,11 +348,11 @@ case class AvroOcfWriterFactory(
     deflateLevel: Int,
     syncEvery: Int,
     writeId: String,
-    conf: SerializableConfiguration) extends DataWriterFactory {
+    conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new AvroOcfDataWriter(
       path, schemaJson, sparkSchema, codec, deflateLevel, syncEvery,
-      partitionId, taskId, writeId, conf)
+      partitionId, taskId, writeId, conf.value.value)
 }
 
 class AvroOcfDataWriter(
@@ -363,7 +365,7 @@ class AvroOcfDataWriter(
     partitionId: Int,
     taskId: Long,
     writeId: String,
-    conf: SerializableConfiguration) extends DataWriter[InternalRow] {
+    conf: Configuration) extends DataWriter[InternalRow] {
 
   private val schema = new Schema.Parser().parse(schemaJson)
   // writeId leads: files sort job-major (append order), then by partition.
@@ -382,7 +384,7 @@ class AvroOcfDataWriter(
       case "zstd" | "zstandard" => CodecFactory.zstandardCodec(3)
       case other => throw new IllegalArgumentException(s"avro-ocf: unknown codec '$other'")
     })
-    writer.create(schema, GraftFs.fs(tmpPath, conf.value).create(tmpPath, true))
+    writer.create(schema, GraftFs.fs(tmpPath, conf).create(tmpPath, true))
   }
 
   override def write(record: InternalRow): Unit = {
@@ -400,7 +402,7 @@ class AvroOcfDataWriter(
 
   override def abort(): Unit = {
     if (writer != null) { try writer.close() catch { case _: Throwable => () }; writer = null }
-    try GraftFs.fs(tmpPath, conf.value).delete(tmpPath, false)
+    try GraftFs.fs(tmpPath, conf).delete(tmpPath, false)
     catch { case _: Throwable => () }
   }
 
@@ -415,7 +417,9 @@ class AvroOcfScan(
     splitBytes: Long,
     prunedNames: Option[Seq[String]],
     maxFilesPerTrigger: Option[Int] = None) extends Scan {
-  private val conf = GraftFs.serializableConf()
+  private val conf = GraftFs.conf()
+  // once per scan: its batch, or its stream for the stream's lifetime
+  private lazy val confBc = GraftFs.broadcastConf(conf)
   override def readSchema(): StructType = outSchema
 
   private def partitionsOf(files: Seq[FileStatus]): Array[InputPartition] =
@@ -432,9 +436,9 @@ class AvroOcfScan(
 
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
-      partitionsOf(AvroOcfSource.listFiles(path, conf.value).toSeq)
+      partitionsOf(AvroOcfSource.listFiles(path, conf).toSeq)
     override def createReaderFactory(): PartitionReaderFactory =
-      AvroOcfReaderFactory(conf)
+      AvroOcfReaderFactory(confBc)
   }
 
   /** Streaming tail of a growing shard directory — the training-side
@@ -454,7 +458,7 @@ class AvroOcfScan(
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new MicroBatchStream with SupportsAdmissionControl {
       private def namesAfter(boundary: String): Seq[String] =
-        AvroOcfSource.listFiles(path, conf.value)
+        AvroOcfSource.listFiles(path, conf)
           .map(_.getPath.getName).filter(_ > boundary).toSeq
       private def offsetAt(boundary: String, take: Option[Int]): AvroOcfStreamOffset = {
         val fresh = namesAfter(boundary)
@@ -477,11 +481,11 @@ class AvroOcfScan(
         val s = start.asInstanceOf[AvroOcfStreamOffset].lastName
         val e = end.asInstanceOf[AvroOcfStreamOffset].lastName
         partitionsOf(
-          AvroOcfSource.listFiles(path, conf.value)
+          AvroOcfSource.listFiles(path, conf)
             .filter(st => st.getPath.getName > s && st.getPath.getName <= e).toSeq)
       }
       override def createReaderFactory(): PartitionReaderFactory =
-        AvroOcfReaderFactory(conf)
+        AvroOcfReaderFactory(confBc)
       override def commit(end: Offset): Unit = ()
       override def stop(): Unit = ()
     }
@@ -506,7 +510,7 @@ case class AvroOcfPartition(
     end: Long)
     extends InputPartition
 
-case class AvroOcfReaderFactory(conf: SerializableConfiguration)
+case class AvroOcfReaderFactory(conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[AvroOcfPartition]
@@ -520,7 +524,7 @@ case class AvroOcfReaderFactory(conf: SerializableConfiguration)
       }
       private val fileReader = {
         val path = new Path(p.file)
-        AvroOcfSource.openReader(GraftFs.fs(path, conf.value), path, datumReader)
+        AvroOcfSource.openReader(GraftFs.fs(path, conf.value.value), path, datumReader)
       }
       // Position at the first block boundary at or past the range start
       // (sync(0) lands just past the header — the header ends with the sync

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
@@ -17,9 +18,10 @@ import org.apache.spark.util.SerializableConfiguration
   * endpoints) flow through the session's `hadoopConfiguration`.
   *
   * Executor-side access: `Configuration` is not Java-serializable, so scan
-  * and write factories carry a [[SerializableConfiguration]] captured on the
-  * driver — the same mechanism Spark's own file sources use — and tasks
-  * re-resolve the FileSystem from it per partition.
+  * and write factories carry a broadcast [[SerializableConfiguration]]
+  * ([[broadcastConf]]), as Spark's own `FileScan` does, and tasks
+  * re-resolve the FileSystem from it per partition. Driver-side listing
+  * and boundary walks use the plain [[conf]].
   *
   * Local writes: sessions from [[graft.GraftSession]] resolve `file:` to
   * [[NioLocalFileSystem]] / [[NioLocalFs]], which set permissions and test
@@ -44,8 +46,19 @@ object GraftFs {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(graft.GraftSession.hadoopConf())
 
-  def serializableConf(): SerializableConfiguration =
-    new SerializableConfiguration(conf())
+  /** `hadoopConf` broadcast once, for reader and writer factories to carry.
+    *
+    * Why not the configuration itself: even a bare `Configuration` is
+    * ~360 properties, ~34 KB Java-serialized, and a factory goes into more
+    * task binaries than its own scan's — `MicroBatchScanExec` keeps the
+    * reader factory as a field, and every stateful operator's task closure
+    * captures its own exec node, scan subtree included. Each task of each
+    * micro-batch then wrote and read the whole configuration; a broadcast
+    * ships as its id and is fetched once per executor. Callers create it
+    * once per scan, stream or write job, not per batch.
+    */
+  def broadcastConf(hadoopConf: Configuration): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
 
   /** FileSystem for `path`. The local scheme resolves to the RAW local
     * filesystem, not the checksumming `LocalFileSystem` wrapper: the wrapper

@@ -5,6 +5,7 @@ import java.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -40,11 +41,12 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Storage: all paths go through the Hadoop FileSystem API ([[GraftFs]]) —
   * a capture directory can live on `file:`, `hdfs:`, or `s3a:`; executors
-  * resolve the FileSystem from a [[SerializableConfiguration]] carried by
-  * the reader factory. The journal directory contract is the same on every
-  * scheme: files appear/grow under increasing names (on object stores
-  * without append, the capture uploads closed rolls — each file is then
-  * frozen on arrival and only the tail-walk optimization is moot).
+  * resolve the FileSystem from a broadcast [[SerializableConfiguration]]
+  * carried by the reader factory ([[GraftFs.broadcastConf]]). The journal
+  * directory contract is the same on every scheme: files appear/grow under
+  * increasing names (on object stores without append, the capture uploads
+  * closed rolls — each file is then frozen on arrival and only the
+  * tail-walk optimization is moot).
   *
   * Scale shape: one InputPartition per frame file (plus one bounded tail
   * range), so a 1000-executor cluster tails a wide capture directory with
@@ -188,14 +190,15 @@ class SbeFrameTable(path: String) extends Table with SupportsRead {
 
 class SbeFrameScan(path: String, maxFilesPerTrigger: Option[Int]) extends Scan {
   // Captured ONCE on the driver while the session is on this thread; tasks
-  // get it via the reader factory's SerializableConfiguration.
-  private val conf = GraftFs.serializableConf()
+  // get it via the reader factory's broadcast, made once per scan.
+  private val conf = GraftFs.conf()
+  private lazy val confBc = GraftFs.broadcastConf(conf)
   override def readSchema(): StructType = SbeFrameSource.Schema
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
-      SbeFrameSource.listFrameFiles(path, conf.value)
+      SbeFrameSource.listFrameFiles(path, conf)
         .map(st => SbeFramePartition(st.getPath.toString, 0L, -1L): InputPartition)
-    override def createReaderFactory(): PartitionReaderFactory = SbeFrameReaderFactory(conf)
+    override def createReaderFactory(): PartitionReaderFactory = SbeFrameReaderFactory(confBc)
   }
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new SbeFrameMicroBatchStream(path, maxFilesPerTrigger, conf)
@@ -218,8 +221,11 @@ case class SbeFrameOffset(file: String, tailBytes: Long) extends Offset {
 class SbeFrameMicroBatchStream(
     path: String,
     maxFilesPerTrigger: Option[Int],
-    conf: SerializableConfiguration = GraftFs.serializableConf())
+    conf: Configuration = GraftFs.conf())
     extends MicroBatchStream with SupportsAdmissionControl {
+
+  // one broadcast for the stream's lifetime, not one per micro-batch
+  private lazy val confBc = GraftFs.broadcastConf(conf)
 
   override def initialOffset(): Offset = SbeFrameOffset("", 0L)
 
@@ -228,13 +234,13 @@ class SbeFrameMicroBatchStream(
     * per-trigger cost is O(new frames), not O(file).
     */
   private def available(resume: Option[SbeFrameOffset]): SbeFrameOffset = {
-    val files = SbeFrameSource.listFrameFiles(path, conf.value)
+    val files = SbeFrameSource.listFrameFiles(path, conf)
     if (files.isEmpty) SbeFrameOffset("", 0L)
     else {
       val active = files.last
       val from = resume
         .filter(_.file == active.getPath.getName).map(_.tailBytes).getOrElse(0L)
-      val f = GraftFs.fs(active.getPath, conf.value)
+      val f = GraftFs.fs(active.getPath, conf)
       SbeFrameOffset(
         active.getPath.getName,
         SbeFrameSource.completeFrameBoundary(f, active, from))
@@ -254,7 +260,7 @@ class SbeFrameMicroBatchStream(
         // consumed by a later trigger once all complete files are behind
         // the offset. `pending` counts from the partially-consumed start
         // file itself, matching the index-based semantics this replaces.
-        val names = SbeFrameSource.listFrameFiles(path, conf.value).map(_.getPath.getName)
+        val names = SbeFrameSource.listFrameFiles(path, conf).map(_.getPath.getName)
         val pending =
           if (from.file.isEmpty) names.toSeq else names.filter(_ >= from.file).toSeq
         if (m.maxFiles() < pending.length) SbeFrameOffset(pending(m.maxFiles()), 0L)
@@ -294,7 +300,7 @@ class SbeFrameMicroBatchStream(
         val t = tail.getOrElse(0L)
         if (n == 0 && t == 0L) SbeFrameOffset("", 0L)
         else {
-          val files = SbeFrameSource.listFrameFiles(path, conf.value)
+          val files = SbeFrameSource.listFrameFiles(path, conf)
           if (n >= files.length) throw new IllegalStateException(
             s"sbe-frames: legacy offset index $n does not map onto the " +
               s"${files.length} files now under $path (consumed files deleted " +
@@ -302,7 +308,7 @@ class SbeFrameMicroBatchStream(
               "to choose an explicit restart point")
           val st = files(n)
           if (t > 0 && !SbeFrameSource.isFrameBoundary(
-              GraftFs.fs(st.getPath, conf.value), st, t))
+              GraftFs.fs(st.getPath, conf), st, t))
             throw new IllegalStateException(
               s"sbe-frames: legacy offset tailBytes=$t is not a frame boundary " +
                 s"of ${st.getPath.getName} — the index mapping has shifted " +
@@ -318,7 +324,7 @@ class SbeFrameMicroBatchStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[SbeFrameOffset]
     val e = end.asInstanceOf[SbeFrameOffset]
-    val files = SbeFrameSource.listFrameFiles(path, conf.value)
+    val files = SbeFrameSource.listFrameFiles(path, conf)
     def pathOf(name: String): Option[String] =
       files.find(_.getPath.getName == name).map(_.getPath.toString)
     val parts = Seq.newBuilder[InputPartition]
@@ -337,7 +343,7 @@ class SbeFrameMicroBatchStream(
     }
     parts.result().toArray
   }
-  override def createReaderFactory(): PartitionReaderFactory = SbeFrameReaderFactory(conf)
+  override def createReaderFactory(): PartitionReaderFactory = SbeFrameReaderFactory(confBc)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -349,14 +355,14 @@ class SbeFrameMicroBatchStream(
 case class SbeFramePartition(file: String, fromByte: Long, untilByte: Long)
     extends InputPartition
 
-case class SbeFrameReaderFactory(conf: SerializableConfiguration)
+case class SbeFrameReaderFactory(conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SbeFramePartition]
     new PartitionReader[InternalRow] {
       private val path = new Path(p.file)
       private val in = {
-        val raw = GraftFs.fs(path, conf.value).open(path)
+        val raw = GraftFs.fs(path, conf.value.value).open(path)
         try raw.seek(p.fromByte)
         catch { case e: Throwable => raw.close(); throw e }
         new DataInputStream(new java.io.BufferedInputStream(raw))

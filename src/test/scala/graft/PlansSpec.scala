@@ -34,7 +34,7 @@ class PlansSpec extends SparkSpec {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession.builder()
+      val s2 = GraftSession.withEngineConfs(SparkSession.builder())
         .master("local[4]")
         .withExtensions(new GraftExtensions)
         .getOrCreate()
