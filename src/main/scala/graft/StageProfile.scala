@@ -56,16 +56,8 @@ object StageProfile {
     df.write.format("noop").mode("overwrite").save()
     val wall = (System.nanoTime() - t0) / 1e9
     // the listener bus is async; completion events for the last stage can
-    // trail the job end. No public waitUntilEmpty, so poll until the stage
-    // count is stable across two consecutive checks (bounded at 10 s), and
-    // never exit before the old fixed 1 s settle — a backlogged bus can
-    // deliver nothing for 750 ms and then the heaviest stage.
-    var (prev, stable, waited) = (-1, 0, 0)
-    while ((stable < 2 || waited < 1000) && waited < 10000) {
-      Thread.sleep(250); waited += 250
-      val n = stages.size
-      if (n == prev) stable += 1 else { stable = 0; prev = n }
-    }
+    // trail the job end
+    org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark.sparkContext)
 
     println(f"=== $name @ $dir — ${wall}%.1f s, ${stages.size} stages ===")
     println(f"${"stage"}%-44s ${"tasks"}%5s ${"wall_s"}%7s ${"task_s"}%7s ${"cpu_s"}%7s " +

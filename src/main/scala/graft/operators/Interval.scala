@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * a BroadcastNestedLoopJoin (or a cartesian) because the containment
   * predicate is not an equi-join — quadratic and cluster-fatal at scale.
   *
-  * Spark-first rewrite (same family as [[AsOf]]'s bucketed tier): bucket the
+  * Spark-first rewrite (the cell-and-copy idea of [[AsOf]]'s ranges): bucket the
   * time axis into `chunkMs` cells; points land in exactly ONE cell, each
   * interval is replicated to the cells it overlaps (`sequence(start div c,
   * end div c)` — replication factor = interval span / chunkMs, bounded and

@@ -1,93 +1,103 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.LongType
+
+import graft.operators.AsOf.{Range, RightTs}
 
 /** Whole-operator Catalyst integration for the as-of join — the (c)-tier of
   * SURVEY §4's preference order: a resolved logical node planned by an
   * injected `SparkStrategy` into a dedicated physical operator that merges
-  * the two key-clustered, time-sorted children in ONE streaming pass.
+  * the two clustered, time-sorted children in ONE streaming pass. Built by
+  * `operators.AsOf.nearest` / `backward`, the only as-of entry points.
   *
-  * Versus the tolerance-bucketed equi-join rewrite (`operators.AsOf`, the
-  * (a)-tier form both j1/j1b run through), this physical plan:
-  *   - shuffles each side exactly once on the key — no 2-3x right-side
-  *     bucket replication (`explode(array(b-1, b, b+1))`);
-  *   - needs no `row_number()` dedup window after the join, so no second
-  *     sort and no fan-out of |L|x(rows-per-bucket) intermediate matches;
-  *   - holds only the rows inside one tolerance window in memory per key —
-  *     the same bound the bucket rewrite pays as join fan-out.
-  * At 100 TB both shapes scale, but the merge pass moves ~3x less data.
+  * Both children carry a `__asof_range` column, `floor(ts / span)` with
+  * `span` a fixed multiple of the tolerance, and the right side also carries
+  * a copy of every row lying within one tolerance of a range edge, tagged
+  * with the neighbouring range. The exec clusters and merges on
+  * (key, range), so one hot key spreads over as many tasks as its time span
+  * has ranges, and each (key, range) cell is complete on its own: no
+  * `row_number()` dedup, no fan-out of intermediate matches, and memory per
+  * task bounded by the right rows inside one tolerance window.
   *
-  * Semantics (matches `AsOf.nearest` / `AsOf.backward`, reference
-  * `RDS_SCHEMA.md:703-756`): for each left row, the right row minimizing
-  * |rightTs - leftTs| within tolerance (ties -> earlier right ts), or for
+  * Semantics (reference `RDS_SCHEMA.md:703-756`): for each left row, the
+  * right row minimizing |rightTs - leftTs| within tolerance (ties -> earlier
+  * right ts, then smallest `rightTieCols` in order), or for
   * `backward = true` the latest right row with rightTs <= leftTs within
-  * tolerance (ties -> largest `rightTieBreak`). Inner: unmatched left rows
-  * are dropped, like the rewrite's equi-join form.
+  * tolerance (ties -> largest `rightTieCols`). Inner: unmatched left rows
+  * are dropped.
   */
 case class AsOfMergeJoinNode(
-    left: LogicalPlan,
-    right: LogicalPlan, // pre-projected to (key, __right_ts, value cols...)
+    left: LogicalPlan,  // carries __asof_range
+    right: LogicalPlan, // (key, __right_ts, value cols..., __asof_range)
     key: String,
     leftTs: String,
     toleranceMs: Long,
     backward: Boolean,
-    rightTieBreak: Option[String]) extends BinaryNode {
+    rightTieCols: Seq[String]) extends BinaryNode {
   override def output: Seq[Attribute] =
-    left.output ++ right.output.filterNot(_.name == key)
+    left.output.filterNot(_.name == Range) ++
+      right.output.filterNot(a => a.name == key || a.name == Range)
   // The join columns are named by String, not held as Expressions, so the
   // default (expression-derived) references are EMPTY and ColumnPruning
-  // would strip key/ts/tie-break out of the children before planning.
-  // Declaring them here keeps pruning correct: unused VALUE columns still
-  // prune all the way to the scan, but the merge columns survive.
+  // would strip key/ts/range/tie columns out of the children before
+  // planning. Declaring them here keeps pruning correct: unused VALUE
+  // columns still prune all the way to the scan, but the merge columns
+  // survive.
   override def references: AttributeSet = AttributeSet(
-    left.output.filter(a => a.name == key || a.name == leftTs) ++
+    left.output.filter(a => a.name == key || a.name == leftTs || a.name == Range) ++
       right.output.filter(a =>
-        a.name == key || a.name == AsOfDsl.RightTs ||
-          rightTieBreak.contains(a.name)))
+        a.name == key || a.name == RightTs || a.name == Range ||
+          rightTieCols.contains(a.name)))
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): AsOfMergeJoinNode =
     copy(left = newLeft, right = newRight)
 }
 
 /** Plans [[AsOfMergeJoinNode]] → [[AsOfMergeJoinExec]]. Registered per
-  * session via `spark.experimental.extraStrategies` (see [[AsOfDsl]]) or
-  * globally via [[GraftExtensions]].
+  * session by `operators.AsOf` on first use, or globally via
+  * [[GraftExtensions]].
   */
 object AsOfMergeJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case n: AsOfMergeJoinNode =>
       AsOfMergeJoinExec(
-        n.key, n.leftTs, n.toleranceMs, n.backward, n.rightTieBreak,
+        n.key, n.leftTs, n.toleranceMs, n.backward, n.rightTieCols,
         n.output, planLater(n.left), planLater(n.right)) :: Nil
     case _ => Nil
   }
+}
+
+/** `SparkSession.builder().withExtensions(new GraftExtensions)` plans the
+  * as-of node on every session of the builder.
+  */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(e: SparkSessionExtensions): Unit =
+    e.injectPlannerStrategy(_ => AsOfMergeJoinStrategy)
 }
 
 /** Single-pass sorted-merge as-of join.
   *
   * Required layout (declared, so `EnsureRequirements` inserts the exchanges
   * and sorts, and AQE re-plans them like any built-in join): both children
-  * clustered on `key` and sorted by (key, ts[, tieBreak]). Each partition is
-  * then merged with a sliding window of right rows per key — O(|L| + |R|)
-  * plus the in-window nearest scan, no intermediate fan-out.
+  * clustered on (key, range) and sorted by (key, range, ts[, tie cols]).
+  * Each partition is then merged with a sliding window of right rows per
+  * (key, range) cell — O(|L| + |R|) plus the in-window nearest scan.
   */
 case class AsOfMergeJoinExec(
     keyName: String,
     leftTsName: String,
     toleranceMs: Long,
     backward: Boolean,
-    rightTieBreak: Option[String],
+    rightTieCols: Seq[String],
     output: Seq[Attribute],
     left: SparkPlan,
     right: SparkPlan) extends BinaryExecNode {
@@ -100,23 +110,25 @@ case class AsOfMergeJoinExec(
   private def keyL = attr(left, keyName)
   private def tsL = attr(left, leftTsName)
   private def keyR = attr(right, keyName)
-  private def tsR = attr(right, AsOfDsl.RightTs)
+  private def tsR = attr(right, RightTs)
 
   override lazy val metrics: Map[String, SQLMetric] =
     Map("numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(keyL)) :: ClusteredDistribution(Seq(keyR)) :: Nil
+    ClusteredDistribution(Seq(keyL, attr(left, Range))) ::
+      ClusteredDistribution(Seq(keyR, attr(right, Range))) :: Nil
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    Seq(SortOrder(keyL, Ascending), SortOrder(tsL, Ascending)),
-    Seq(SortOrder(keyR, Ascending), SortOrder(tsR, Ascending)) ++
-      rightTieBreak.map(n => SortOrder(attr(right, n), Ascending)))
+    Seq(keyL, attr(left, Range), tsL).map(SortOrder(_, Ascending)),
+    (Seq(keyR, attr(right, Range), tsR) ++ rightTieCols.map(attr(right, _)))
+      .map(SortOrder(_, Ascending)))
 
-  // Matched left rows stream out in the left child's (key, ts) order, still
-  // hash-clustered on the key — downstream per-key aggregates reuse both.
-  override def outputPartitioning: Partitioning = left.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] = requiredChildOrdering.head
+  // Matched left rows stream out sorted by key within each partition; the
+  // partitioning itself is on the range column, which the output drops.
+  override def outputPartitioning: Partitioning =
+    UnknownPartitioning(left.outputPartitioning.numPartitions)
+  override def outputOrdering: Seq[SortOrder] = SortOrder(keyL, Ascending) :: Nil
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): AsOfMergeJoinExec =
@@ -134,8 +146,10 @@ case class AsOfMergeJoinExec(
     val numOutputRows = longMetric("numOutputRows")
     val kIdxL = left.output.indexWhere(_.name == keyName)
     val tIdxL = left.output.indexWhere(_.name == leftTsName)
+    val gIdxL = left.output.indexWhere(_.name == Range)
     val kIdxR = right.output.indexWhere(_.name == keyName)
-    val tIdxR = right.output.indexWhere(_.name == AsOfDsl.RightTs)
+    val tIdxR = right.output.indexWhere(_.name == RightTs)
+    val gIdxR = right.output.indexWhere(_.name == Range)
     val keyType = keyL.dataType
     val tol = toleranceMs
     val back = backward
@@ -149,12 +163,14 @@ case class AsOfMergeJoinExec(
       val joined = new JoinedRow
 
       new Iterator[InternalRow] {
-        // Right rows of the current key within the active tolerance window,
-        // ts-ascending. Rows are copied when buffered (upstream iterators
-        // reuse row objects); eviction keeps the buffer bounded by the rows
-        // inside one 2*tol window — the operator's only state.
+        // Right rows of the current (key, range) cell within the active
+        // tolerance window, in (ts, tie cols) order. Rows are copied when
+        // buffered (upstream iterators reuse row objects); eviction keeps
+        // the buffer bounded by the rows inside one 2*tol window — the
+        // operator's only state.
         private val buf = new java.util.ArrayDeque[InternalRow]()
         private var bufKey: Any = null
+        private var bufRange = 0L
         private var rNext: InternalRow = _
         private var pendL: InternalRow = _
         private var pendR: InternalRow = _
@@ -170,6 +186,12 @@ case class AsOfMergeJoinExec(
           }
         }
 
+        // rNext's (key, range) cell against the left row's: <0, 0 or >0.
+        private def cellCmp(k: Any, g: Long): Int = {
+          val c = keyOrd.compare(rNext.get(kIdxR, keyType), k)
+          if (c != 0) c else java.lang.Long.compare(rNext.getLong(gIdxR), g)
+        }
+
         // findNext only LOCATES the next (left, best-right) pair; the shared
         // UnsafeProjection buffer is applied in next(). Projecting inside
         // hasNext() would overwrite the row handed out by the previous
@@ -181,26 +203,27 @@ case class AsOfMergeJoinExec(
           pendL = null; pendR = null
           while (pendL == null && lIter.hasNext) {
             val l = lIter.next()
+            // a non-null ts always has a non-null range
             if (!l.isNullAt(kIdxL) && !l.isNullAt(tIdxL)) {
               val k = l.get(kIdxL, keyType)
+              val g = l.getLong(gIdxL)
               val t = l.getLong(tIdxL)
-              if (bufKey != null && keyOrd.compare(bufKey, k) != 0) {
+              if (bufKey != null && (bufRange != g || keyOrd.compare(bufKey, k) != 0)) {
                 buf.clear(); bufKey = null
               }
-              while (rNext != null && keyOrd.compare(rNext.get(kIdxR, keyType), k) < 0)
-                advanceRight()
+              while (rNext != null && cellCmp(k, g) < 0) advanceRight()
               val hi = if (back) t else t + tol
-              while (rNext != null && keyOrd.compare(rNext.get(kIdxR, keyType), k) == 0 &&
-                  rNext.getLong(tIdxR) <= hi) {
+              while (rNext != null && cellCmp(k, g) == 0 && rNext.getLong(tIdxR) <= hi) {
                 // rNext is a copy — its key value stays valid as bufKey.
                 bufKey = rNext.get(kIdxR, keyType)
+                bufRange = g
                 buf.addLast(rNext)
                 advanceRight()
               }
               while (!buf.isEmpty && buf.peekFirst.getLong(tIdxR) < t - tol)
                 buf.removeFirst()
               val best =
-                if (back) buf.peekLast // latest ts <= t; sort puts max tieBreak last
+                if (back) buf.peekLast // latest ts <= t; sort puts max tie cols last
                 else {
                   var b: InternalRow = null
                   var bestD = Long.MaxValue
@@ -208,7 +231,8 @@ case class AsOfMergeJoinExec(
                   while (it.hasNext) {
                     val r = it.next()
                     val d = math.abs(r.getLong(tIdxR) - t)
-                    if (d < bestD) { bestD = d; b = r } // tie -> earlier ts wins
+                    // tie -> first in (ts, tie cols) order wins
+                    if (d < bestD) { bestD = d; b = r }
                   }
                   b
                 }
@@ -234,68 +258,4 @@ case class AsOfMergeJoinExec(
       }
     }
   }
-}
-
-/** DataFrame DSL over the physical node. Self-registers the strategy on the
-  * calling session (idempotently), so it works on any session, not just ones
-  * built with [[GraftExtensions]].
-  */
-object AsOfMergeDsl {
-  val RightTs: String = AsOfDsl.RightTs
-
-  private def build(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
-      toleranceMs: Long,
-      rightValueCols: Seq[String],
-      backward: Boolean,
-      rightTieBreak: Option[String]): DataFrame = {
-    // The node's output drops the right side's key BY NAME, so a value
-    // column sharing that name (or the reserved right-ts name) would vanish
-    // silently — reject it loudly; alias the column beforehand instead.
-    require(!rightValueCols.contains(key) && !rightValueCols.contains(AsOfDsl.RightTs),
-      s"rightValueCols may not contain the join key '$key' or the reserved " +
-        s"'${AsOfDsl.RightTs}' name — alias the column on the right side first")
-    val spark = left.sparkSession
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(AsOfMergeJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfMergeJoinStrategy
-    // Aliases mint fresh exprIds on every right-side column so the node's
-    // output never collides with the left side, even on self-joins.
-    val rightProj = right.select(
-      (col(key).as(key) +: col(rightTs).as(AsOfDsl.RightTs) +:
-        rightValueCols.map(c => col(c).as(c))): _*)
-    val node = AsOfMergeJoinNode(
-      left.queryExecution.analyzed, rightProj.queryExecution.analyzed,
-      key, leftTs, toleranceMs, backward, rightTieBreak)
-    ColumnBridge.ofRows(spark, node)
-  }
-
-  /** Physical-plan form of [[graft.operators.AsOf.nearest]]. */
-  def nearest(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
-      toleranceMs: Long,
-      rightValueCols: Seq[String]): DataFrame =
-    build(left, right, key, leftTs, rightTs, toleranceMs, rightValueCols,
-      backward = false, rightTieBreak = None)
-
-  /** Physical-plan form of [[graft.operators.AsOf.backward]]. */
-  def backward(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
-      toleranceMs: Long,
-      rightValueCols: Seq[String],
-      rightTieBreak: String): DataFrame =
-    build(left, right, key, leftTs, rightTs, toleranceMs, rightValueCols,
-      backward = true, rightTieBreak = Some(rightTieBreak))
 }

@@ -26,12 +26,9 @@ object JoinQueries {
   /** J1 + P11 — prediction-outcome as-of join (RDS_SCHEMA.md:703-756):
     * actual price = close of the bar containing target_ts, else the bar
     * whose close_time is nearest within ±30 min (scaled from ±30 s), else
-    * null. COALESCE fallback chain exercised via outcome_source. The
-    * nearest lookup runs through either the operator directly or the
-    * declarative Catalyst node ([[graft.plans.AsOfDsl]]) — both shapes
-    * share the same oracle.
+    * null. COALESCE fallback chain exercised via outcome_source.
     */
-  private def asofOutcomes(s: SparkSession, dir: String, via: String): DataFrame = {
+  private def asofOutcomes(s: SparkSession, dir: String): DataFrame = {
     val b = bars(s, dir)
       .select(
         col("symbol"), col("open_time_ms"),
@@ -47,25 +44,10 @@ object JoinQueries {
       col("symbol").as("esym"), col("open_time_ms").as("ebar"),
       col("close_price").as("exact_price"))
     val bSel = b.select(col("symbol"), col("close_time_ms"), col("close_price"))
-    val nearRaw = via match {
-      case "node" =>
-        graft.plans.AsOfDsl.asofNearest(
-          preds, bSel,
-          key = "symbol", leftTs = "target_ts", rightTs = "close_time_ms",
-          toleranceMs = 1800000L, leftId = "prediction_id",
-          rightValueCols = Seq("close_price"))
-      case "exec" =>
-        graft.plans.AsOfMergeDsl.nearest(
-          preds, bSel,
-          key = "symbol", leftTs = "target_ts", rightTs = "close_time_ms",
-          toleranceMs = 1800000L, rightValueCols = Seq("close_price"))
-      case _ =>
-        AsOf.nearest(
-          preds, bSel,
-          key = "symbol", leftTs = "target_ts", rightTs = "close_time_ms",
-          toleranceMs = 1800000L, leftId = "prediction_id",
-          rightValueCols = Seq("close_price"))
-    }
+    val nearRaw = AsOf.nearest(
+      preds, bSel,
+      key = "symbol", leftTs = "target_ts", rightTs = "close_time_ms",
+      toleranceMs = 1800000L, rightValueCols = Seq("close_price"))
     val near = nearRaw.select(col("prediction_id").as("pid"), col("close_price").as("near_price"))
     preds
       .join(
@@ -84,15 +66,31 @@ object JoinQueries {
           .as("prediction_error"))
   }
 
+  /** J3 — stream-static enrichment: each trade gets the most recent quote
+    * mid at-or-before its timestamp (vwap_minus_mid input,
+    * DATA_PIPELINE.md:129,153) via a backward as-of join.
+    */
+  private def enrichLatestMid(s: SparkSession, dir: String): DataFrame = {
+    val t = Tables.trades(s, dir)
+    val quotes = t.filter(pmod(col("trade_id"), lit(2)) === 0)
+      .select(col("symbol"), col("ts_ms"), col("trade_id").as("qid"), col("price").as("mid"))
+    val tr = t.filter(pmod(col("trade_id"), lit(2)) === 1)
+      .select("symbol", "ts_ms", "trade_id", "price")
+    AsOf
+      .backward(tr, quotes, key = "symbol", leftTs = "ts_ms", rightTs = "ts_ms",
+        toleranceMs = 3600000L, rightValueCols = Seq("mid", "qid"), rightTieBreak = "qid")
+      .select(
+        col("symbol"), col("trade_id"), col("ts_ms"), col("price"),
+        col(AsOf.RightTs).as("quote_ts"), col("mid"),
+        round(col("price") - col("mid"), 8).as("price_minus_mid"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "j1_asof_outcomes" -> { (s, dir) => asofOutcomes(s, dir, via = "operator") },
-    // J1 through the declarative AsOfJoinNode + resolution rule — verifies
-    // the Catalyst integration end-to-end against the same oracle.
-    "j1b_asof_catalyst_node" -> { (s, dir) => asofOutcomes(s, dir, via = "node") },
-    // J1 through the physical sort-merge exec (AsOfMergeJoinExec): one
-    // shuffle per side, single merge pass, no bucket replication or
-    // row_number dedup — same oracle as j1/j1b.
-    "j1c_asof_merge_exec" -> { (s, dir) => asofOutcomes(s, dir, via = "exec") },
+    // j1b/j1c name the Catalyst-node and merge-exec forms, which are now
+    // the one as-of operator: all three run the same plan and oracle.
+    "j1_asof_outcomes" -> asofOutcomes,
+    "j1b_asof_catalyst_node" -> asofOutcomes,
+    "j1c_asof_merge_exec" -> asofOutcomes,
     // J2 — 10-ahead label self-join on the feature grid (S3_SCHEMA.md:629-663);
     // 2 s grid scaled to 2 min, 10 s horizon to 10 min (5 buckets).
     "j2_horizon_labels" -> { (s, dir) =>
@@ -130,41 +128,9 @@ object JoinQueries {
             2).as("revenue"),
           countDistinct(col("o_orderkey")).as("n_orders"))
     },
-    // J3 — stream-static enrichment: each trade gets the most recent quote
-    // mid at-or-before its timestamp (vwap_minus_mid input,
-    // DATA_PIPELINE.md:129,153) via a backward as-of join.
-    "j3_enrich_latest_mid" -> { (s, dir) =>
-      val t = Tables.trades(s, dir)
-      val quotes = t.filter(pmod(col("trade_id"), lit(2)) === 0)
-        .select(col("symbol"), col("ts_ms"), col("trade_id").as("qid"), col("price").as("mid"))
-      val tr = t.filter(pmod(col("trade_id"), lit(2)) === 1)
-        .select("symbol", "ts_ms", "trade_id", "price")
-      AsOf
-        .backward(tr, quotes, key = "symbol", leftTs = "ts_ms", rightTs = "ts_ms",
-          toleranceMs = 3600000L, leftId = "trade_id",
-          rightValueCols = Seq("mid", "qid"), rightTieBreak = "qid")
-        .select(
-          col("symbol"), col("trade_id"), col("ts_ms"), col("price"),
-          col("__right_ts").as("quote_ts"), col("mid"),
-          round(col("price") - col("mid"), 8).as("price_minus_mid"))
-    },
-    // J3 through the physical merge exec (backward direction, qid tie-break)
-    // — same oracle as j3.
-    "j3b_asof_merge_backward" -> { (s, dir) =>
-      val t = Tables.trades(s, dir)
-      val quotes = t.filter(pmod(col("trade_id"), lit(2)) === 0)
-        .select(col("symbol"), col("ts_ms"), col("trade_id").as("qid"), col("price").as("mid"))
-      val tr = t.filter(pmod(col("trade_id"), lit(2)) === 1)
-        .select("symbol", "ts_ms", "trade_id", "price")
-      graft.plans.AsOfMergeDsl
-        .backward(tr, quotes, key = "symbol", leftTs = "ts_ms", rightTs = "ts_ms",
-          toleranceMs = 3600000L, rightValueCols = Seq("mid", "qid"),
-          rightTieBreak = "qid")
-        .select(
-          col("symbol"), col("trade_id"), col("ts_ms"), col("price"),
-          col("__right_ts").as("quote_ts"), col("mid"),
-          round(col("price") - col("mid"), 8).as("price_minus_mid"))
-    },
+    "j3_enrich_latest_mid" -> enrichLatestMid,
+    // j3b names the merge-exec form, now the one as-of operator
+    "j3b_asof_merge_backward" -> enrichLatestMid,
     // U1/J4 — SBE+REST union with source_mix provenance (S3_SCHEMA.md:352).
     "u1_source_mix" -> { (s, dir) =>
       val t = Tables.trades(s, dir)
@@ -241,27 +207,28 @@ object JoinQueries {
          |LEFT JOIN exact e USING (prediction_id)
          |LEFT JOIN near n USING (prediction_id)""".stripMargin
 
+  private val j3OracleSql: String =
+    s"""WITH t AS ($T),
+       |quotes AS (
+       |  SELECT symbol, ts_ms AS qts, trade_id AS qid, price AS mid
+       |  FROM t WHERE trade_id % 2 = 0),
+       |tr AS (SELECT symbol, ts_ms, trade_id, price FROM t WHERE trade_id % 2 = 1),
+       |j AS (
+       |  SELECT tr.symbol, tr.trade_id, tr.ts_ms, tr.price, q.qts, q.mid,
+       |    row_number() OVER (PARTITION BY tr.symbol, tr.trade_id
+       |                       ORDER BY q.qts DESC, q.qid DESC) AS rn
+       |  FROM tr JOIN quotes q
+       |    ON q.symbol = tr.symbol AND q.qts <= tr.ts_ms AND tr.ts_ms - q.qts <= 3600000)
+       |SELECT symbol, trade_id, ts_ms, price, qts AS quote_ts, mid,
+       |  round(price - mid, 8) AS price_minus_mid
+       |FROM j WHERE rn = 1""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "j1_asof_outcomes" -> j1OracleSql,
-    // the Catalyst-node and physical-exec forms are semantics-identical by
-    // construction — all three shapes share one oracle
     "j1b_asof_catalyst_node" -> j1OracleSql,
     "j1c_asof_merge_exec" -> j1OracleSql,
-    "j3b_asof_merge_backward" -> // same semantics as j3 through the merge exec
-      s"""WITH t AS ($T),
-         |quotes AS (
-         |  SELECT symbol, ts_ms AS qts, trade_id AS qid, price AS mid
-         |  FROM t WHERE trade_id % 2 = 0),
-         |tr AS (SELECT symbol, ts_ms, trade_id, price FROM t WHERE trade_id % 2 = 1),
-         |j AS (
-         |  SELECT tr.symbol, tr.trade_id, tr.ts_ms, tr.price, q.qts, q.mid,
-         |    row_number() OVER (PARTITION BY tr.symbol, tr.trade_id
-         |                       ORDER BY q.qts DESC, q.qid DESC) AS rn
-         |  FROM tr JOIN quotes q
-         |    ON q.symbol = tr.symbol AND q.qts <= tr.ts_ms AND tr.ts_ms - q.qts <= 3600000)
-         |SELECT symbol, trade_id, ts_ms, price, qts AS quote_ts, mid,
-         |  round(price - mid, 8) AS price_minus_mid
-         |FROM j WHERE rn = 1""".stripMargin,
+    "j3_enrich_latest_mid" -> j3OracleSql,
+    "j3b_asof_merge_backward" -> j3OracleSql,
     "j2_horizon_labels" ->
       s"""WITH t AS ($T),
          |grid AS (
@@ -287,21 +254,6 @@ object JoinQueries {
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY r_name, n_name""".stripMargin,
-    "j3_enrich_latest_mid" ->
-      s"""WITH t AS ($T),
-         |quotes AS (
-         |  SELECT symbol, ts_ms AS qts, trade_id AS qid, price AS mid
-         |  FROM t WHERE trade_id % 2 = 0),
-         |tr AS (SELECT symbol, ts_ms, trade_id, price FROM t WHERE trade_id % 2 = 1),
-         |j AS (
-         |  SELECT tr.symbol, tr.trade_id, tr.ts_ms, tr.price, q.qts, q.mid,
-         |    row_number() OVER (PARTITION BY tr.symbol, tr.trade_id
-         |                       ORDER BY q.qts DESC, q.qid DESC) AS rn
-         |  FROM tr JOIN quotes q
-         |    ON q.symbol = tr.symbol AND q.qts <= tr.ts_ms AND tr.ts_ms - q.qts <= 3600000)
-         |SELECT symbol, trade_id, ts_ms, price, qts AS quote_ts, mid,
-         |  round(price - mid, 8) AS price_minus_mid
-         |FROM j WHERE rn = 1""".stripMargin,
     "u1_source_mix" ->
       s"""WITH t AS ($T),
          |m AS (

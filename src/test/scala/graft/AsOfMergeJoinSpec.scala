@@ -4,14 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.AsOf
-import graft.plans.AsOfMergeDsl
+import graft.plans.AsOfMergeJoinExec
 
 /** Adversarial coverage for [[graft.plans.AsOfMergeJoinExec]]: exact
   * tolerance boundaries, equal-distance ties, duplicate right timestamps
-  * with tie-breaks, null join columns, self-joins, and pre-shuffled children
+  * with tie-breaks, null join columns, self-joins, pre-shuffled children
   * with UNEQUAL partition counts (EnsureRequirements must co-partition the
   * sides before zipPartitions — the AQE/ValidateRequirements interaction the
-  * hand-rolled physical operator is most exposed to).
+  * hand-rolled physical operator is most exposed to), range edges, and a
+  * nested-loop reference over random data.
   */
 class AsOfMergeJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -46,7 +47,7 @@ class AsOfMergeJoinSpec extends SparkSpec {
     ).toDF("k", "rts", "rid", "v")
 
   test("nearest: tolerance boundary inclusive, equal-distance tie -> earlier right ts") {
-    val out = AsOfMergeDsl
+    val out = AsOf
       .nearest(leftDf, rightDf, "k", "lts", "rts", tol, Seq("v"))
       .select("lid", "__right_ts", "v")
       .as[(Long, Long, Double)].collect().sortBy(_._1)
@@ -58,7 +59,7 @@ class AsOfMergeJoinSpec extends SparkSpec {
   }
 
   test("backward: duplicate right ts -> max tieBreak; future rights ignored") {
-    val out = AsOfMergeDsl
+    val out = AsOf
       .backward(leftDf, rightDf, "k", "lts", "rts", tol, Seq("rid", "v"), "rid")
       .select("lid", "__right_ts", "rid")
       .as[(Long, Long, Long)].collect().sortBy(_._1)
@@ -69,22 +70,76 @@ class AsOfMergeJoinSpec extends SparkSpec {
     assert(out.toSeq === Seq((1L, 0L, 10L), (2L, 4000L, 41L), (3L, 8000L, 80L)))
   }
 
-  test("exec matches the bucketed-rewrite operator on the adversarial data") {
-    val exec = AsOfMergeDsl
-      .nearest(leftDf, rightDf, "k", "lts", "rts", tol, Seq("v"))
-      .select("lid", "__right_ts", "v").collect().map(_.toString).sorted.toSeq
-    val op = AsOf
-      .nearest(leftDf, rightDf, "k", "lts", "rts", tol, "lid", Seq("v"))
-      .select("lid", "__right_ts", "v").collect().map(_.toString).sorted.toSeq
-    assert(exec === op)
+  /** Nested-loop reference: every same-key pair inside the tolerance, best
+    * by the documented rule — nearest: min |Δt|, then earlier ts, then
+    * smaller rid; backward: latest ts, then larger rid. Returns (lid, ts, rid).
+    */
+  private def reference(
+      l: Seq[(String, Long, Long)], r: Seq[(String, Long, Long)],
+      tol: Long, backward: Boolean): Seq[(Long, Long, Long)] =
+    l.flatMap { case (k, lts, lid) =>
+      val in = r.filter { case (rk, rts, _) =>
+        rk == k && (if (backward) rts <= lts && lts - rts <= tol else math.abs(rts - lts) <= tol)
+      }
+      val best =
+        if (backward) in.maxByOption { case (_, rts, rid) => (rts, rid) }
+        else in.minByOption { case (_, rts, rid) => (math.abs(rts - lts), rts, rid) }
+      best.map { case (_, rts, rid) => (lid, rts, rid) }
+    }.sorted
 
-    val execB = AsOfMergeDsl
-      .backward(leftDf, rightDf, "k", "lts", "rts", tol, Seq("rid", "v"), "rid")
-      .select("lid", "__right_ts", "rid").collect().map(_.toString).sorted.toSeq
-    val opB = AsOf
-      .backward(leftDf, rightDf, "k", "lts", "rts", tol, "lid", Seq("rid", "v"), "rid")
-      .select("lid", "__right_ts", "rid").collect().map(_.toString).sorted.toSeq
-    assert(execB === opB)
+  test("random data matches a nested-loop reference: both directions, range edges, negative epochs, one hot key") {
+    for ((tol, seed) <- Seq((1L, 1), (7L, 2), (250L, 3))) {
+      val rnd = new scala.util.Random(seed)
+      val span = tol * AsOf.SpanTolerances
+      // timestamps over [-12, 12) ranges, a third of them on or next to an
+      // edge (offsets -tol-1 .. tol+1 around a range boundary)
+      def ts(): Long = {
+        val edge = (rnd.nextInt(24) - 12) * span
+        if (rnd.nextInt(3) == 0) edge + Seq(-tol - 1, -tol, -1, 0, 1, tol - 1, tol, tol + 1)(rnd.nextInt(8))
+        else edge + rnd.nextLong(span)
+      }
+      // "H" is hot (~80 % of rows), c0..c3 cold
+      def key(): String = if (rnd.nextInt(5) > 0) "H" else s"c${rnd.nextInt(4)}"
+      val l = (0 until 400).map(i => (key(), ts(), i.toLong))
+      val r = (0 until 600).map(i => (key(), ts(), 1000L + i))
+      val lDf = l.toDF("k", "lts", "lid")
+      val rDf = r.toDF("k", "rts", "rid").withColumn("v", col("rid") * 0.5)
+      for (backward <- Seq(false, true)) {
+        val out =
+          (if (backward) AsOf.backward(lDf, rDf, "k", "lts", "rts", tol, Seq("rid", "v"), "rid")
+           else AsOf.nearest(lDf, rDf, "k", "lts", "rts", tol, Seq("rid", "v")))
+            .select("lid", "__right_ts", "rid").as[(Long, Long, Long)].collect().toSeq.sorted
+        val want = reference(l, r, tol, backward)
+        assert(want.size > 100, s"tol=$tol backward=$backward: too few matches to test")
+        assert(out === want, s"tol=$tol backward=$backward")
+      }
+    }
+  }
+
+  test("nearest: rows sharing (key, ts) resolve to the smallest value, whatever the input order") {
+    val l = Seq(("A", 1000L, 1L)).toDF("k", "lts", "lid")
+    // one row per input partition, read back in descending value order
+    val r = Seq(("A", 1000L, 3.0), ("A", 1000L, 2.0), ("A", 1000L, 1.0)).toDF("k", "rts", "v")
+    val out = AsOf.nearest(l, r, "k", "lts", "rts", tol, Seq("v")).select("v").as[Double].collect()
+    assert(out.toSeq === Seq(1.0))
+  }
+
+  test("one hot key spanning 8 ranges reaches the exec through several partitions") {
+    val span = tol * AsOf.SpanTolerances
+    val l = (0 until 8).map(i => ("H", i * span + 5, i.toLong)).toDF("k", "lts", "lid")
+    val r = (0 until 8).map(i => ("H", i * span, i.toDouble)).toDF("k", "rts", "v")
+    // without AQE the executed plan holds the exec with its planned
+    // exchanges, which AQE's coalescing would merge on inputs this small
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val df = AsOf.nearest(l, r, "k", "lts", "rts", tol, Seq("v"))
+      assert(df.count() === 8)
+      val exec = df.queryExecution.executedPlan.collectFirst { case e: AsOfMergeJoinExec => e }.get
+      val nonEmpty = exec.left.execute()
+        .mapPartitions(it => Iterator(if (it.hasNext) 1 else 0)).collect().sum
+      assert(nonEmpty >= 2, exec.left.treeString)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   test("children pre-shuffled to UNEQUAL partition counts are re-co-partitioned") {
@@ -93,7 +148,7 @@ class AsOfMergeJoinSpec extends SparkSpec {
     // counts or zipPartitions throws at runtime.
     val l5 = leftDf.repartition(5, col("k"))
     val r3 = rightDf.repartition(3, col("k"))
-    val out = AsOfMergeDsl
+    val out = AsOf
       .nearest(l5, r3, "k", "lts", "rts", tol, Seq("v"))
       .select("lid", "__right_ts")
       .as[(Long, Long)].collect().sortBy(_._1)
@@ -104,7 +159,7 @@ class AsOfMergeJoinSpec extends SparkSpec {
     val base = Seq(
       ("A", 1000L, 1L, 1.0), ("A", 3000L, 2L, 2.0), ("A", 6000L, 3L, 3.0)
     ).toDF("k", "ts", "id", "px")
-    val out = AsOfMergeDsl
+    val out = AsOf
       .backward(
         base.select(col("k"), col("ts"), col("id")),
         base.select(col("k"), col("ts"), col("id").as("rid"), col("px")),

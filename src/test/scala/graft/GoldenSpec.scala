@@ -75,13 +75,13 @@ class GoldenSpec extends SparkSpec {
       ("K", 400L, "far_early"), ("K", 900L, "near_early"),
       ("K", 1100L, "near_late"), ("K", 5000L, "outside")
     ).toDF("k", "rts", "tag")
-    val out = AsOf.nearest(left, right, "k", "lts", "rts", 2000L, "lid", Seq("tag"))
+    val out = AsOf.nearest(left, right, "k", "lts", "rts", 2000L, Seq("tag"))
     // |900-1000| == |1100-1000|: tie breaks toward earlier right ts
     assert(out.select("tag").as[String].collect().toSeq === Seq("near_early"))
     // tolerance excludes 5000 even with no better match
     val far = AsOf.nearest(
       Seq(("K", 10000L, 2L)).toDF("k", "lts", "lid"),
-      right, "k", "lts", "rts", 2000L, "lid", Seq("tag"))
+      right, "k", "lts", "rts", 2000L, Seq("tag"))
     assert(far.count() === 0) // 5000 is 5000ms away > 2000
   }
 
@@ -102,7 +102,7 @@ class GoldenSpec extends SparkSpec {
     val bars = Seq(("BTC", 0L, 60000L, 100.0)).toDF("symbol", "open_time_ms", "close_time_ms", "close_price")
     val preds = Seq(("BTC", 10_000_000L, 1L)).toDF("symbol", "target_ts", "prediction_id")
     val near = AsOf.nearest(preds, bars, "symbol", "target_ts", "close_time_ms",
-      toleranceMs = 30000L, leftId = "prediction_id", rightValueCols = Seq("close_price"))
+      toleranceMs = 30000L, rightValueCols = Seq("close_price"))
     assert(near.count() === 0) // bar is ~10^7 ms away: no outcome
   }
 
@@ -126,7 +126,7 @@ class GoldenSpec extends SparkSpec {
     assert(SetOps.dedupFirst(empty, Seq($"symbol"), $"ts_ms", $"trade_id").count() === 0)
     val emptyDocs = spark.emptyDataset[(Long, String)].toDF("doc_id", "text")
     assert(TextDedup.nearDuplicates(emptyDocs, $"doc_id", $"text").count() === 0)
-    assert(AsOf.nearest(empty, empty, "symbol", "ts_ms", "ts_ms", 1000L, "trade_id",
+    assert(AsOf.nearest(empty, empty, "symbol", "ts_ms", "ts_ms", 1000L,
       Seq("price")).count() === 0)
   }
 

@@ -2,32 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.plans.{AsOfDsl, AsOfJoinNode, GraftExtensions, ResolveAsOfJoin}
+import graft.plans.GraftExtensions
 
 class PlansSpec extends SparkSpec {
-  import spark.implicits._
 
-  private def leftDf = Seq(("K", 1000L, 1L), ("K", 9000L, 2L)).toDF("k", "lts", "lid")
-  private def rightDf =
-    Seq(("K", 900L, 10.0), ("K", 1100L, 11.0), ("K", 8000L, 12.0)).toDF("k", "rts", "v")
-
-  test("AsOfDsl node expands to the same result as the direct operator") {
-    val viaNode = AsOfDsl
-      .asofNearest(leftDf, rightDf, "k", "lts", "rts", 2000L, "lid", Seq("v"))
-      .select("lid", "v").collect().map(_.toString).sorted
-    val direct = operators.AsOf
-      .nearest(leftDf, rightDf, "k", "lts", "rts", 2000L, "lid", Seq("v"))
-      .select("lid", "v").collect().map(_.toString).sorted
-    assert(viaNode.toSeq === direct.toSeq)
-    assert(viaNode.nonEmpty)
-  }
-
-  test("ResolveAsOfJoin leaves plans without the node untouched") {
-    val plan = leftDf.queryExecution.analyzed
-    assert(ResolveAsOfJoin(spark)(plan) eq plan)
-  }
-
-  test("a session built with GraftExtensions resolves the node during analysis") {
+  test("a session built with GraftExtensions plans AsOfMergeJoinNode without the DSL's self-registration") {
     // carve out a session with extensions on the shared SparkContext
     val prevActive = SparkSession.getActiveSession
     val prevDefault = SparkSession.getDefaultSession
@@ -38,17 +17,16 @@ class PlansSpec extends SparkSpec {
         .master("local[4]")
         .withExtensions(new GraftExtensions)
         .getOrCreate()
-      try {
-        import org.apache.spark.sql.graftbridge.ColumnBridge
-        val node = AsOfJoinNode(
-          leftDf.queryExecution.analyzed, rightDf.queryExecution.analyzed,
-          "k", "lts", "rts", 2000L, "lid", Seq("v"))
-        // no eager rule application: the session's own analyzer must expand it
-        val out = ColumnBridge.ofRows(s2, node).select("lid", "v").collect()
-        assert(out.length === 2)
-      } finally {
-        // leave s2 alive (shared context) but restore session slots below
-      }
+      // leave s2 alive (shared context) but restore session slots below
+      val l = s2.createDataFrame(Seq(("K", 1000L, 1L), ("K", 9000L, 2L))).toDF("k", "lts", "lid")
+      val r = s2.createDataFrame(Seq(("K", 900L, 10.0), ("K", 1100L, 11.0), ("K", 8000L, 12.0)))
+        .toDF("k", "rts", "v")
+      val df = operators.AsOf.nearest(l, r, "k", "lts", "rts", 2000L, Seq("v"))
+      val out = df.select("lid", "v").collect().map(x => (x.getLong(0), x.getDouble(1))).sortBy(_._1)
+      assert(out.toSeq === Seq((1L, 10.0), (2L, 12.0)))
+      val cs2 = s2.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      assert(cs2.experimental.extraStrategies.isEmpty)
+      assert(df.queryExecution.executedPlan.toString.contains("AsOfMergeJoin"))
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

@@ -120,11 +120,11 @@ class PropertySpec extends SparkSpec {
       .toDF("k", "lts", "lid")
     val right = (0 until 300).map(i => ("K", rnd.nextInt(100000).toLong, i.toLong, rnd.nextDouble()))
       .toDF("k", "rts", "rid", "v")
-    val bw = AsOf.backward(left, right, "k", "lts", "rts", 5000L, "lid", Seq("v", "rid"), "rid")
+    val bw = AsOf.backward(left, right, "k", "lts", "rts", 5000L, Seq("v", "rid"), "rid")
     assert(bw.filter(col("__right_ts") > col("lts")).count() === 0)
     assert(bw.filter(col("lts") - col("__right_ts") > 5000L).count() === 0)
     assert(bw.groupBy("lid").count().filter($"count" > 1).count() === 0)
-    val nr = AsOf.nearest(left, right, "k", "lts", "rts", 5000L, "lid", Seq("v"))
+    val nr = AsOf.nearest(left, right, "k", "lts", "rts", 5000L, Seq("v"))
     assert(nr.filter(abs(col("__right_ts") - col("lts")) > 5000L).count() === 0)
     assert(nr.groupBy("lid").count().filter($"count" > 1).count() === 0)
   }
