@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * all accumulate monotonically, so later rounds run in a measurably
   * different JVM than round 1.
   *
-  * FORKED MODE (default when runs > 1): each round is a FRESH child JVM —
+  * Each round is a FRESH child JVM (the record's `mode` is `forked-jvm`) —
   * same classpath and JVM flags as this one (taken from the running JVM, so
   * sbt's -Xmx/--add-opens carry over), running warmup over the full query
   * set then exactly one timed round. Aging cannot leak across rounds
@@ -39,9 +39,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     sees at 100x data);
   *   - `round_totals`: per-child totals (dispersion across FRESH JVMs is
   *     genuine machine noise, not aging).
-  * `SPARK_GRAFT_FORK=0` restores the r8 in-process interleaved rounds;
-  * `SPARK_GRAFT_RUNS=1` restores the legacy single sweep (both also
-  * measure `queries_exec` off the sweep pass). `SPARK_GRAFT_ONLY=a,b`
+  * `SPARK_GRAFT_RUNS=1` runs one forked child. `SPARK_GRAFT_ONLY=a,b`
   * restricts the query set for local iteration.
   */
 object Bench {
@@ -52,7 +50,6 @@ object Bench {
   // ---------------------------------------------------------------- shared
 
   private def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
   /** Cache basis label stamped into every emitted record (r14, verdict
     * item 7): r13 moved the timed rounds from warm-cache (warmup's persisted
@@ -72,18 +69,16 @@ object Bench {
   private def offBasis: Boolean =
     sys.env.contains("SPARK_GRAFT_MASTER") ||
       sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS") ||
-      sys.env.contains("SPARK_GRAFT_ADVISORY_MB") ||
       !sfDir.startsWith("/root/testdata/")
 
   /** Guard/round knobs count as non-default too (r14 review): a
-    * hair-trigger DISTURB_FACTOR run (the guard-validation pattern), a
-    * RUNS override, or in-process FORK=0 produces numbers on a different
-    * footing — StreamBench already smoke-names on these; Bench's canonical
-    * bench_full/bench_diag must not be clobberable by them either.
+    * hair-trigger DISTURB_FACTOR run (the guard-validation pattern) or a
+    * RUNS override produces numbers on a different footing — StreamBench
+    * already smoke-names on these; Bench's canonical bench_full/bench_diag
+    * must not be clobberable by them either.
     */
   private def guardKnobs: Boolean =
     sys.env.contains("SPARK_GRAFT_RUNS") ||
-      sys.env.contains("SPARK_GRAFT_FORK") ||
       sys.env.contains("SPARK_GRAFT_DISTURB_FACTOR") ||
       sys.env.contains("SPARK_GRAFT_MAX_REFORKS")
 
@@ -127,10 +122,19 @@ object Bench {
     }).toSeq.sortBy(_._1)
   }
 
-  private[graft] def buildSession(): SparkSession = {
+  /** What [[buildSession]] takes from the environment and the data dir:
+    * the master, the initial shuffle-partition count, whether that count is
+    * pinned, and the char-span stage pin. Pure apart from pricing `sfDir`,
+    * so the sizing is testable without a session.
+    */
+  private[graft] final case class SessionShape(
+      master: String, shufflePartitions: Int, pinned: Boolean, spanPin: Option[String])
+
+  private[graft] def sessionShape(sfDir: String, env: Map[String, String]): SessionShape = {
+    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // SPARK_GRAFT_MASTER overrides (e.g. local-cluster[2,8,4096] for the
     // multi-JVM bench slice); the default stays single-JVM local[N]
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    val master = env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     // SPARK_GRAFT_SHUFFLE_PARTITIONS pins the shuffle partition count for
     // the 100x partition-count sweep (r13, verdict item 4 / TODO #1):
     // per-partition working set = shuffle bytes / partitions, so sweeping
@@ -138,36 +142,28 @@ object Bench {
     // turns off AQE partition coalescing — with it on, AQE would coalesce
     // small post-shuffle partitions back toward the 64 MB advisory target
     // and the sweep would measure the advisory, not the pinned count.
-    val pinnedShuffle = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    val pinnedShuffle = env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map { v =>
+      require(v.trim.matches("[0-9]+") && v.trim.toInt > 0,
+        s"SPARK_GRAFT_SHUFFLE_PARTITIONS must be a positive whole number, got '$v'")
+      v.trim.toInt
+    }
     // Unpinned runs size the INITIAL shuffle-partition count from the SF
     // dir's bytes (r15, verdict item 1): AQE only coalesces DOWN, so the
     // initial count must be >= expected shuffle bytes / the measured
     // ~40 MB sweet spot or heavy shuffles are bound to giant spilling
     // partitions before AQE can act. At sf0.1 and below this returns
-    // exactly `cpus` — the committed bench basis is unchanged; the 100x
-    // slice sizes to ~235 (see GraftSession.sizedShufflePartitions).
-    // Inside getOrElse (by-name) so PINNED rounds — the sweep's 15 child
-    // JVMs — never pay the recursive dir walk for a discarded value.
-    def sized: String = GraftSession.sizedShufflePartitions(
-      GraftSession.dirBytes(sfDir), cpus.toInt).toString
-    // SPARK_GRAFT_ADVISORY_MB overrides AQE's advisory partition size for
-    // the advisory-alignment experiment (TODO #1): the sweep's measured
-    // optimum is ~40 MB of shuffle write per partition, but coalescing
-    // merges back toward the 64 MB default advisory — above the optimum —
-    // so the sized initial count alone recovers only part of the pinned
-    // win. Off-basis (smoke-named) like the pinned knob; the DEFAULT
-    // session is unchanged when unset.
-    val advisoryMb = sys.env.get("SPARK_GRAFT_ADVISORY_MB").map { v =>
-      require(v.trim.matches("[0-9]+") && v.trim.toInt > 0,
-        s"SPARK_GRAFT_ADVISORY_MB must be a positive whole number of MB, got '$v'")
-      v.trim.toInt
-    }
+    // exactly `cpus`; the 100x slice sizes to ~235 (see
+    // GraftSession.sizedShufflePartitions). Inside getOrElse (by-name) so
+    // PINNED rounds — the sweep's 15 child JVMs — never pay the recursive
+    // dir walk for a discarded value.
+    val partitions = pinnedShuffle.getOrElse(
+      GraftSession.sizedShufflePartitions(GraftSession.dirBytes(sfDir), cpus))
     // SPARK_GRAFT_SPAN_PARTITIONS overrides the char-span STAGE pin
     // (Corpus.SpanPartitionsConf: 0 = off, >0 = forced count) for the
-    // stage-pin sweep — off-basis like the session knobs above. A
-    // session-wide PINNED sweep always turns the stage pin OFF so the
-    // sweep measures pure session pinning, never a mix of the two.
-    val spanPinEnv = sys.env.get("SPARK_GRAFT_SPAN_PARTITIONS").map { v =>
+    // stage-pin sweep and the scale-identity dump (partitioning must never
+    // change results). A session-wide PINNED sweep always turns the stage
+    // pin OFF so the sweep measures pure session pinning, never a mix.
+    val spanPinEnv = env.get("SPARK_GRAFT_SPAN_PARTITIONS").map { v =>
       require(v.trim.matches("[0-9]+"),
         s"SPARK_GRAFT_SPAN_PARTITIONS must be a non-negative whole number, got '$v'")
       v.trim
@@ -182,28 +178,23 @@ object Bench {
             "sweep measures pure session pinning)"))
         Some("0")
       } else spanPinEnv
-    val b0 = GraftSession.withEngineConfs(SparkSession.builder())
-      .master(master)
-      .config("spark.sql.shuffle.partitions", pinnedShuffle.getOrElse(sized))
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        pinnedShuffle.isEmpty.toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        s"${advisoryMb.getOrElse(64)}m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // 97+ queries x several codegen stages far exceed the default
-      // 100-entry generated-code cache; every query would otherwise
-      // RECOMPILE its codegen each pass (measured +0.1-0.8 s per query,
-      // uniformly) — a bench-harness artifact, not a plan cost. A
-      // production job runs few queries repeatedly and never sees this.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-    val b1 = spanPin.fold(b0)(p =>
-      b0.config(graft.operators.Corpus.SpanPartitionsConf, p))
-    val spark =
-      (if (master.startsWith("local-cluster")) GraftSession.withMultiJvm(b1) else b1)
-        .getOrCreate()
+    SessionShape(master, partitions, pinnedShuffle.isDefined, spanPin)
+  }
+
+  /** The [[GraftSession.builder]] session sized for `sfDir`: shared by the
+    * bench rounds, [[Verify]], the [[MemSweep]] child and [[Inspect]], so
+    * what the oracle gate checks, what is timed and what is inspected run
+    * one configuration.
+    */
+  private[graft] def buildSession(sfDir: String): SparkSession = {
+    val shape = sessionShape(sfDir, sys.env)
+    val b0 = GraftSession.builder(shape.master, shape.shufflePartitions)
+    val b1 =
+      if (shape.pinned) b0.config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      else b0
+    val spark = shape.spanPin
+      .fold(b1)(p => b1.config(graft.operators.Corpus.SpanPartitionsConf, p))
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -219,7 +210,7 @@ object Bench {
     * silently benchmarking just the scan).
     */
   private def childMain(): Unit = {
-    val spark = buildSession()
+    val spark = buildSession(sfDir)
     val selected = selectedQueries()
     val withExec = sys.env.get("SPARK_GRAFT_EXEC").contains("1")
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -325,11 +316,8 @@ object Bench {
 
   // ---------------------------------------------------------------- parent
 
-  private def parentMain(): Unit = {
-    val runs = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(5).max(1)
-    val fork = sys.env.getOrElse("SPARK_GRAFT_FORK", "1") != "0"
-    if (runs > 1 && fork) forkedMain(runs) else inProcessMain(runs)
-  }
+  private def parentMain(): Unit =
+    forkedMain(sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(5).max(1))
 
   /** One completed child round: per-query wall times, per-query (gc, cpu)
     * deltas, (exec rounds only) the exec-only re-write times, and the
@@ -579,87 +567,27 @@ object Bench {
       val ts = rounds.map(_.times(i)._2).toSeq.sorted
       (name, ts(ts.length / 2), ts.head, ts.last)
     }
-    emit(runs, mode = "forked-jvm", sweep = rounds.head.times, stats = stats,
+    emit(runs, sweep = rounds.head.times, stats = stats,
       roundTotals = rounds.map(_.total).toSeq, execTimes = rounds.head.exec,
       errors = errors, selectedCount = selected.size,
       discardedTotals = discardedTotals.toSeq, residualBroken = residualBroken,
       execReforks = execOutcome.reforks, execDiscardedTotals = execOutcome.discardedExec)
   }
 
-  /** r8 behavior: interleaved rounds inside this one JVM (`SPARK_GRAFT_FORK=0`),
-    * or the legacy single sweep (`SPARK_GRAFT_RUNS=1`). Kept as the
-    * fallback and for quick `SPARK_GRAFT_ONLY` iteration where JVM spawn
-    * overhead would dominate.
-    */
-  private def inProcessMain(runs: Int): Unit = {
-    val spark = buildSession()
-    val selected = selectedQueries()
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def runLogged(name: String, fn: (SparkSession, String) => DataFrame): Option[DataFrame] =
-      try {
-        val df = fn(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        Some(df)
-      } catch {
-        case e: Throwable =>
-          errors.getOrElseUpdate(
-            name, s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
-          None
-      }
-    def timed(name: String, fn: (SparkSession, String) => DataFrame): (Double, Option[DataFrame]) = {
-      // cold-cache basis, same as childMain: a prior pass's persisted sets
-      // must not subsidize this timed run
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val df = runLogged(name, fn)
-      ((System.nanoTime() - t0) / 1e9, df)
-    }
-    selected.foreach { case (name, fn) => runLogged(name, fn) } // warmup
-    // sweep pass, keeping each DataFrame for the exec-only re-write
-    val sweepFull = selected.map { case (name, fn) => name -> timed(name, fn) }
-    val sweep = sweepFull.map { case (n, (t, _)) => n -> t }
-    val execTimes = sweepFull.flatMap { case (n, (_, dfOpt)) =>
-      dfOpt.map { df =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        try df.write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        n -> (System.nanoTime() - t0) / 1e9
-      }
-    }
-    val (stats, roundTotals) = if (runs > 1) {
-      System.gc(); Thread.sleep(3000); System.gc(); Thread.sleep(1000)
-      val rounds = (0 until runs).map { _ =>
-        System.gc(); Thread.sleep(500)
-        selected.map { case (name, fn) => timed(name, fn)._1 }
-      }
-      val st = selected.zipWithIndex.map { case ((name, _), i) =>
-        val ts = rounds.map(_(i)).sorted
-        (name, ts(ts.length / 2), ts.head, ts.last)
-      }
-      (st, rounds.map(_.sum))
-    } else (sweep.map { case (n, t) => (n, t, t, t) }, Seq(sweep.map(_._2).sum))
-    emit(runs, mode = if (runs > 1) "in-process" else "sweep", sweep = sweep,
-      stats = stats, roundTotals = roundTotals, execTimes = execTimes,
-      errors = errors, selectedCount = selected.size)
-    spark.stop()
-  }
-
   // ------------------------------------------------------------- reporting
 
   private def emit(
       runs: Int,
-      mode: String,
       sweep: Seq[(String, Double)],
       stats: Seq[(String, Double, Double, Double)],
       roundTotals: Seq[Double],
       execTimes: Seq[(String, Double)],
       errors: scala.collection.Map[String, String],
       selectedCount: Int,
-      discardedTotals: Seq[Double] = Seq.empty,
-      residualBroken: Boolean = false,
-      execReforks: Int = 0,
-      execDiscardedTotals: Seq[Double] = Seq.empty): Unit = {
+      discardedTotals: Seq[Double],
+      residualBroken: Boolean,
+      execReforks: Int,
+      execDiscardedTotals: Seq[Double]): Unit = {
     val total = stats.map(_._2).sum
     val totalMin = stats.map(_._3).sum
     val totalExec = execTimes.map(_._2).sum
@@ -678,7 +606,7 @@ object Bench {
     // the round artifacts are read from.
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","runs":$runs,
-         |"mode":"$mode",
+         |"mode":"forked-jvm",
          |"basis":"$CacheBasis",
          |"value_min":${num(totalMin, 6)},
          |"value_exec":${num(totalExec, 6)},
@@ -716,7 +644,7 @@ object Bench {
     // medians map LAST so the surviving tail is the regression signal.
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","runs":$runs,""" +
-        s""""mode":"$mode","basis":"$CacheBasis",""" +
+        s""""mode":"forked-jvm","basis":"$CacheBasis",""" +
         s""""value_min":${num(totalMin, 3)},"value_exec":${num(totalExec, 3)},""" +
         s""""round_totals":${roundTotals.map(num(_, 3)).mkString("[", ",", "]")},""" +
         s""""rounds_discarded":${discardedTotals.size},""" +

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * with it watermark progression and state transitions — is the same):
   *
   *   - `local[4]` — the in-process baseline;
-  *   - `local-cluster[2,4,…]` ([[GraftSession.withMultiJvm]]) — real
+  *   - `local-cluster[2,4,…]` ([[GraftSession.builder]]) — real
   *     executor processes: typed state encoders and streaming shuffles
   *     serialize, the state-store provider (incl. RocksDB's native lib)
   *     instantiates on remote executors, generated code recompiles per
@@ -127,14 +127,7 @@ object ClusterStream {
       .empty[(String, String), Either[String, (Double, Long, Fp)]]
 
     for ((mode, master) <- Seq("local" -> s"local[$cpus]", "cluster" -> clusterMaster)) {
-      val b0 = GraftSession.withEngineConfs(SparkSession.builder())
-        .master(master)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-      val spark =
-        (if (master.startsWith("local-cluster")) GraftSession.withMultiJvm(b0) else b0)
-          .getOrCreate()
+      val spark = GraftSession.builder(master, cpus.toInt).getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       try {
         val OnHeapProvider =

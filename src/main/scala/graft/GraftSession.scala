@@ -15,11 +15,18 @@ import graft.sources.{NioLocalFileSystem, NioLocalFs}
   *
   * Every session built here resolves `file:` to the fork-free local
   * filesystem and runs its tasks without per-session artifact isolation
-  * ([[withEngineConfs]]).
+  * ([[withEngineConfs]]). This is the only session recipe in the project:
+  * the tests, the oracle dump ([[Verify]]), [[Bench]], the measurement
+  * mains and the benchmark all build through [[builder]], so the oracle
+  * gate checks the configuration that is measured.
   */
 object GraftSession {
-  def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
-    withEngineConfs(SparkSession.builder())
+  /** The project's session. A `local-cluster[n,cores,memMB]` master also
+    * gets the multi-JVM executor settings ([[withMultiJvm]]); any other
+    * master runs in this JVM.
+    */
+  def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder = {
+    val b = withEngineConfs(SparkSession.builder())
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -30,7 +37,6 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       // testdata events.parquet carries TIMESTAMP(NANOS) — read as nanos long
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
       // ~100 distinct queries x several codegen stages in one JVM (Verify,
       // the test suite) overflow the default 100-entry generated-code
       // cache and recompile constantly; a production job running few
@@ -38,9 +44,8 @@ object GraftSession {
       // first session built in the JVM.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.ui.enabled", "false")
-
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    builder(s"local[$cores]", math.max(cores, 8)).getOrCreate()
+    localClusterWorkerMb(master).fold(b)(mb => withMultiJvm(b, mb))
+  }
 
   /** Measured sweet spot for per-partition shuffle working sets
     * (shufflesweep100.json, r14): sweeping t25's pinned partition count on
@@ -156,9 +161,9 @@ object GraftSession {
 
   /** Applies the fixed engine settings every session in this project
     * carries: [[LocalFsConfs]] as `spark.hadoop.*` entries, and session
-    * artifact isolation off. Every session factory here goes through it, so
-    * tests, benchmarks and the measurement mains all write through the same
-    * filesystem and run the same engine.
+    * artifact isolation off. [[builder]] applies it, so tests, benchmarks
+    * and the measurement mains all write through the same filesystem and
+    * run the same engine.
     *
     * Why isolation off: Spark 4 defaults `spark.sql.artifact.isolation.enabled`
     * to true, so every job carries its session's UUID and class URI, and
@@ -172,7 +177,7 @@ object GraftSession {
     * the application class loader and all queries share one codegen cache.
     * Must be set when a session is created; it has no effect later.
     */
-  def withEngineConfs(b: SparkSession.Builder): SparkSession.Builder =
+  private def withEngineConfs(b: SparkSession.Builder): SparkSession.Builder =
     LocalFsConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(s"spark.hadoop.$k", v) }
       .config("spark.sql.artifact.isolation.enabled", "false")
 
@@ -197,25 +202,40 @@ object GraftSession {
     * forks them), so exchanges serialize, broadcasts ship over RPC, and
     * generated code recompiles per executor — the closest approximation of
     * a real cluster a single box can run. The executor JVMs are launched
-    * from SPARK_HOME (must point at a full distribution, /opt/spark here)
-    * and do NOT inherit the sbt JVM's classpath or --add-opens, so both
-    * are forwarded explicitly.
+    * from SPARK_HOME (must point at a full distribution) and do NOT inherit
+    * the driver's classpath, `--add-opens` or Scala version, so all three
+    * are forwarded explicitly: Spark's launcher looks for the Scala build
+    * directories under SPARK_HOME unless `SPARK_SCALA_VERSION` is in the
+    * executor's environment, and a binary distribution has none.
+    *
+    * Executor memory defaults to the worker's MB, the most one executor may
+    * ask for; `SPARK_GRAFT_EXEC_MEM` (e.g. "2g") caps it lower — composing
+    * the multi-JVM and constrained-memory axes: the size-aware join's
+    * budget reads spark.executor.memory, so a capped REMOTE executor must
+    * flip the repeated-set join to spillable sort-merge.
     */
-  def withMultiJvm(
-      b: SparkSession.Builder,
-      // SPARK_GRAFT_EXEC_MEM caps the executor JVMs (e.g. "2g") — composing
-      // the multi-JVM and constrained-memory axes: the size-aware join's
-      // budget reads spark.executor.memory, so a capped REMOTE executor
-      // must flip the repeated-set join to spillable sort-merge.
-      executorMem: String = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "3g")): SparkSession.Builder = {
+  private def withMultiJvm(b: SparkSession.Builder, workerMb: Int): SparkSession.Builder = {
     import scala.jdk.CollectionConverters._
     val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala
       .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports"))
       .mkString(" ")
-    b.config("spark.executor.memory", executorMem)
+    b.config("spark.executor.memory", sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", s"${workerMb}m"))
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
       .config("spark.executor.extraJavaOptions", opens)
+      .config("spark.executorEnv.SPARK_SCALA_VERSION",
+        scala.util.Properties.versionNumberString.split('.').take(2).mkString("."))
+  }
+
+  /** The per-worker MB of a `local-cluster[n,cores,memMB]` master; None for
+    * any other master.
+    */
+  private[graft] def localClusterWorkerMb(master: String): Option[Int] = {
+    val LocalCluster = """local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]""".r
+    master match {
+      case LocalCluster(mb) => Some(mb.toInt)
+      case _ => None
+    }
   }
 
   /** FQN of Spark's RocksDB state store provider (ships in spark-sql with

@@ -3,7 +3,6 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Constrained-memory completion sweep: runs the heaviest queries one child
   * JVM each with the heap CAPPED (default `-Xmx2g` — replacing the inherited
@@ -24,8 +23,10 @@ import org.apache.spark.sql.SparkSession
   * — build it with tools/make_scale.py first), `SPARK_GRAFT_MEM_XMX`
   * (default 2g), `SPARK_GRAFT_CPUS` (default 8 — 32 threads' concurrent
   * working sets in a 2 GiB heap would measure thread count, not operator
-  * spill), `SPARK_GRAFT_ONLY` (query subset). Writes `memsweep.json` and
-  * prints one JSON line.
+  * spill), `SPARK_GRAFT_ONLY` (query subset). Each child runs the bench's
+  * session ([[Bench.buildSession]]), so `SPARK_GRAFT_MASTER` and
+  * `SPARK_GRAFT_SHUFFLE_PARTITIONS` apply too (and smoke-name the record).
+  * Writes `memsweep.json` and prints one JSON line.
   */
 object MemSweep {
 
@@ -66,15 +67,9 @@ object MemSweep {
   private def childMain(): Unit = {
     val name = sys.env("SPARK_GRAFT_MEM_QUERY")
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
-    val spark = GraftSession.withEngineConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's session, so a query that completes here completes in
+    // the configuration the bench times (the parent passes its cpus down)
+    val spark = Bench.buildSession(sfDir)
     if (sys.env.get("SPARK_GRAFT_MEM_NO_BROADCAST").contains("1")) {
       // degraded-mode retry: broadcast builds need the whole build side
       // deserialized in the driver heap — under a capped heap AQE can pick
@@ -84,7 +79,6 @@ object MemSweep {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     }
-    spark.sparkContext.setLogLevel("WARN")
     var spillMem = 0L
     var spillDisk = 0L
     var peakExec = 0L
@@ -136,6 +130,7 @@ object MemSweep {
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_CHILD", "1")
       pb.environment().put("SPARK_GRAFT_MEM_QUERY", name)
+      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
       if (noBroadcast) pb.environment().put("SPARK_GRAFT_MEM_NO_BROADCAST", "1")
       val p = pb.start()
       // ConcurrentLinkedDeque + a post-exit join: the parent reads the tail
@@ -223,7 +218,9 @@ object MemSweep {
         s""""sf":"$sfDir",""" +
         rows.map { case (k, v) => "\"" + k + "\":" + v }.mkString("\"queries\":{", ",", "}}")
     val smoke = sys.env.contains("SPARK_GRAFT_ONLY") ||
-      sfDir != "/tmp/graft_scale/x10" || xmx != "2g" || cpus != "8"
+      sfDir != "/tmp/graft_scale/x10" || xmx != "2g" || cpus != "8" ||
+      sys.env.contains("SPARK_GRAFT_MASTER") ||
+      sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     java.nio.file.Files.write(
       Bench.recordPath("memsweep", smoke),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -442,12 +442,7 @@ object StreamBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val n = sys.env.get("SPARK_GRAFT_STREAM_N").map(_.toInt).getOrElse(1000000)
     val chunks = 20
-    val spark = GraftSession.withEngineConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -542,11 +537,7 @@ object StreamBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val n = sys.env.get("SPARK_GRAFT_STREAM_N").map(_.toInt).getOrElse(1000000)
     val symbols = 64
-    val spark = GraftSession.withEngineConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       // retain every batch's progress: _batches_observed must COUNT the
       // per-chunk batch amplification (each data chunk is followed by a
       // no-data watermark-advance batch), and the default 100-entry window
@@ -624,12 +615,7 @@ object StreamBench {
     val n = sys.env.get("SPARK_GRAFT_STREAM_N").map(_.toInt).getOrElse(1000000)
     val chunks = ThroughputChunks
     val symbols = ThroughputSymbols
-    val spark = GraftSession.withEngineConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, explode}
 
 import graft.functions.TextFunctions
@@ -30,11 +29,7 @@ object TrainBpe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nMerges = args.lift(1).map(_.toInt).getOrElse(256)
     val artifactDir = args.lift(2)
-    val spark = GraftSession.withEngineConfs(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[8]", shufflePartitions = 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the ENRICHED corpus (r12): training on the raw fixture saturated at
     // 89 merges over its 31 distinct words; the doc_id-seeded expansion is

@@ -444,7 +444,7 @@ object Corpus {
 
   /** Measured shuffle expansion of the TOKEN-span pass (r16, verdict task
     * 1): set-build exchange write / compressed documents bytes, from
-    * `graft.StageProfile t23_repeated_spans` over the x100 slice — 250 MB
+    * `graft.Inspect stages` of `t23_repeated_spans` over the x100 slice — 250 MB
     * of set-build shuffle over 54.6 MB of documents.parquet, ratio ~4.6,
     * rounded up. ~20x below the char constant, NOT the naive ~6x row
     * ratio: word-shingle rows are one per TOKEN (~6x fewer than chars)

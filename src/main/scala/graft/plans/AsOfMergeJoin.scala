@@ -76,7 +76,7 @@ object AsOfMergeJoinStrategy extends SparkStrategy {
   }
 }
 
-/** `SparkSession.builder().withExtensions(new GraftExtensions)` plans the
+/** `GraftSession.builder(...).withExtensions(new GraftExtensions)` plans the
   * as-of node on every session of the builder.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

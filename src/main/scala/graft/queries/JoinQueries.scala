@@ -29,12 +29,18 @@ object JoinQueries {
     * null. COALESCE fallback chain exercised via outcome_source.
     */
   private def asofOutcomes(s: SparkSession, dir: String): DataFrame = {
+    // Predictions are one symbol's trades; filtering the bars to it here
+    // pushes the filter into their scan. Catalyst cannot infer it through
+    // the as-of node, so otherwise every symbol's bars are aggregated,
+    // shuffled and sorted into the merge and never matched.
+    val predSymbol = col("symbol") === "purchase"
     val b = bars(s, dir)
+      .filter(predSymbol)
       .select(
         col("symbol"), col("open_time_ms"),
         (col("open_time_ms") + 60000L).as("close_time_ms"), col("close_price"))
     val preds = Tables.trades(s, dir)
-      .filter(col("symbol") === "purchase")
+      .filter(predSymbol)
       .select(
         col("trade_id").as("prediction_id"), col("symbol"),
         col("ts_ms").as("prediction_ts"),

@@ -15,7 +15,7 @@ object ColumnBridge {
 
   /** Drain the async listener bus (`listenerBus` is private[spark]) so
     * metrics accumulated by a SparkListener are complete before reading —
-    * used by the Bench, MemSweep and StageProfile listeners.
+    * used by the Bench, MemSweep and Inspect listeners.
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

@@ -81,6 +81,20 @@ class PlanQualitySpec extends SparkSpec {
     // merge columns survive column pruning (regression guard for the
     // references fix): both children project symbol + timestamps
     assert(sub.contains("close_time_ms") || sub.contains("__right_ts"))
+    // both sides read only the predictions' symbol: the bars side gets the
+    // filter from the query itself (Catalyst cannot infer it through the
+    // as-of node), so no other symbol's bars are aggregated into the merge
+    val merge = SparkEntry.queries("j1c_asof_merge_exec")(spark, sf)
+      .queryExecution.sparkPlan.collect { case m: graft.plans.AsOfMergeJoinExec => m }
+    assert(merge.size === 1)
+    val scans = merge.head.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size === 2, merge.head.toString.take(800))
+    // `symbol` is the events table's `event_type` (Tables.trades)
+    for (s <- scans)
+      assert(s.dataFilters.map(_.sql).contains("(event_type = 'purchase')"),
+        s"scan without the symbol filter: ${s.dataFilters.map(_.sql)}")
   }
 
   test("t12/t28 contamination joins stay hash-keyed — never a cartesian") {

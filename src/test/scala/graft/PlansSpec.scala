@@ -13,8 +13,7 @@ class PlansSpec extends SparkSpec {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = GraftSession.withEngineConfs(SparkSession.builder())
-        .master("local[4]")
+      val s2 = GraftSession.builder("local[4]", shufflePartitions = 4)
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       // leave s2 alive (shared context) but restore session slots below

@@ -31,10 +31,16 @@ REPO=$(cd "$(dirname "$0")/.." && pwd)
 WT=/tmp/graft_paired_old
 cd "$REPO"
 OLD_SHA=$(git rev-parse "$OLD_REF")
+# the new arm benches the working tree, so a tree with uncommitted changes
+# is not HEAD: say so in the stamp
 NEW_SHA=$(git rev-parse HEAD)
+[ -z "$(git status --porcelain)" ] || NEW_SHA="$NEW_SHA-dirty"
 
 git worktree remove --force "$WT" 2>/dev/null || true
 git worktree add --detach "$WT" "$OLD_SHA" >/dev/null
+# remove the worktree however the script ends: an arm that dies under
+# set -e would otherwise leave its metadata in the repo
+trap 'git -C "$REPO" worktree remove --force "$WT" 2>/dev/null || true' EXIT
 
 run_arm() { # dir record logfile
   (cd "$1" &&
@@ -58,6 +64,5 @@ python3 "$REPO/tools/paired_report.py" "$OUT" \
   /tmp/paired_old1.json /tmp/paired_new1.json \
   /tmp/paired_old2.json /tmp/paired_new2.json
 
-git worktree remove --force "$WT"
-rm -f "$REPO"/bench_diag_only.json "$WT"/bench_diag_only.json 2>/dev/null || true
+rm -f "$REPO"/bench_diag_only.json 2>/dev/null || true
 echo "paired record written to $OUT"
