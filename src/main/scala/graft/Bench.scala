@@ -1,5 +1,6 @@
 package graft
 
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -73,9 +74,8 @@ object Bench {
 
   /** Guard/round knobs count as non-default too (r14 review): a
     * hair-trigger DISTURB_FACTOR run (the guard-validation pattern) or a
-    * RUNS override produces numbers on a different footing — StreamBench
-    * already smoke-names on these; Bench's canonical bench_full/bench_diag
-    * must not be clobberable by them either.
+    * RUNS override produces numbers on a different footing, so Bench's
+    * canonical bench_full/bench_diag must not be clobberable by them.
     */
   private def guardKnobs: Boolean =
     sys.env.contains("SPARK_GRAFT_RUNS") ||
@@ -86,7 +86,7 @@ object Bench {
     s"%.${dp}f".formatLocal(java.util.Locale.ROOT, v)
 
   /** SPARK_GRAFT_ROUND_TIMEOUT_MIN with a per-tool default — ONE parse +
-    * named validation shared by Bench and MemSweep (an NFE from deep inside
+    * named validation shared by Bench, MemSweep and StateSweep (an NFE from deep inside
     * a multi-hour run would abort with a bare stack trace; copies had
     * already drifted once).
     */
@@ -319,12 +319,6 @@ object Bench {
   private def parentMain(): Unit =
     forkedMain(sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(5).max(1))
 
-  /** One completed child round: per-query wall times, per-query (gc, cpu)
-    * deltas, (exec rounds only) the exec-only re-write times, and the
-    * round's OWN errors — kept per round so a discarded round's errors do
-    * not contaminate the emitted record, and so the disturbance guard can
-    * tell "fast because quiet" from "fast because broken".
-    */
   /** Sentinel failure key marking a round whose child JVM died or exited
     * nonzero (never a real query name — query names are lowercase
     * identifiers). Carried in a round's error map so the shared
@@ -333,6 +327,12 @@ object Bench {
     */
   private[graft] val ChildDiedKey = "__child_died__"
 
+  /** One completed child round: per-query wall times, per-query (gc, cpu)
+    * deltas, (exec rounds only) the exec-only re-write times, and the
+    * round's OWN errors — kept per round so a discarded round's errors do
+    * not contaminate the emitted record, and so the disturbance guard can
+    * tell "fast because quiet" from "fast because broken".
+    */
   private final case class ChildRound(
       times: Seq[(String, Double)],
       diag: Map[String, Seq[Long]], // gc_ms, cpu_ms, spill_mem, spill_disk, shuf_read, shuf_write
@@ -341,9 +341,31 @@ object Bench {
     def total: Double = times.map(_._2).sum
   }
 
-  /** Spawn `runs` child JVMs sequentially, each a fresh round. The child
-    * command line mirrors THIS JVM (same java, input arguments, classpath)
-    * so sbt's javaOptions (--add-opens, -Xmx) apply identically.
+  /** Env-tunable so the re-fork path is exercisable on a quiet box (set it
+    * barely above 1.0 and natural jitter trips it) and relaxable on a noisy
+    * one. */
+  private[graft] def disturbFactor: Double =
+    sys.env.get("SPARK_GRAFT_DISTURB_FACTOR").map { v =>
+      val d = try v.trim.toDouble catch {
+        case _: NumberFormatException =>
+          throw new IllegalArgumentException(
+            s"SPARK_GRAFT_DISTURB_FACTOR must be a number > 1.0, got '$v'")
+      }
+      require(d > 1.0, s"SPARK_GRAFT_DISTURB_FACTOR must be > 1.0, got '$v'")
+      d
+    }.getOrElse(1.5)
+
+  /** Re-fork budget for the disturbance guard. */
+  private[graft] def maxReforks: Int =
+    sys.env.get("SPARK_GRAFT_MAX_REFORKS").map { v =>
+      require(v.trim.matches("[0-9]+"),
+        s"SPARK_GRAFT_MAX_REFORKS must be a whole number, got '$v'")
+      v.trim.toInt
+    }.getOrElse(3)
+
+  /** Spawn `runs` child JVMs sequentially, each a fresh round, through
+    * [[ChildJvm]] (same java, input arguments, classpath as THIS JVM, so
+    * sbt's javaOptions — --add-opens, -Xmx — apply identically).
     *
     * DISTURBANCE GUARD (r11): the official round-10 driver bench was an
     * environmentally disturbed run (round 1 totaled 139 s vs 83 s settled;
@@ -360,97 +382,34 @@ object Bench {
     * `rounds_discarded` + `discarded_totals` so a re-forked run is
     * distinguishable from a naturally quiet one.
     */
-  /** Env-tunable so the re-fork path is exercisable on a quiet box (set it
-    * barely above 1.0 and natural jitter trips it) and relaxable on a noisy
-    * one. Shared with [[StreamBench]]'s forked throughput rounds (r13) so
-    * the two harnesses cannot drift on what counts as "disturbed". */
-  private[graft] def disturbFactor: Double =
-    sys.env.get("SPARK_GRAFT_DISTURB_FACTOR").map { v =>
-      val d = try v.trim.toDouble catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"SPARK_GRAFT_DISTURB_FACTOR must be a number > 1.0, got '$v'")
-      }
-      require(d > 1.0, s"SPARK_GRAFT_DISTURB_FACTOR must be > 1.0, got '$v'")
-      d
-    }.getOrElse(1.5)
-
-  /** Re-fork budget for the disturbance guard (shared with [[StreamBench]]). */
-  private[graft] def maxReforks: Int =
-    sys.env.get("SPARK_GRAFT_MAX_REFORKS").map { v =>
-      require(v.trim.matches("[0-9]+"),
-        s"SPARK_GRAFT_MAX_REFORKS must be a whole number, got '$v'")
-      v.trim.toInt
-    }.getOrElse(3)
-
   private def forkedMain(runs: Int): Unit = {
     val selected = selectedQueries().map(_._1)
-    val javaBin = new java.io.File(
-      new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-    val cp = sys.props("java.class.path")
+    val deadline = roundTimeoutMin(default = 20L).minutes
 
     def childRound(label: String, withExec: Boolean): ChildRound = {
+      val res = ChildJvm.run("graft.Bench",
+        Map("SPARK_GRAFT_CHILD" -> "1", "SPARK_GRAFT_EXEC" -> (if (withExec) "1" else "0")),
+        deadline, s"bench-child-$label")
       val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-      val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_CHILD", "1")
-      pb.environment().put("SPARK_GRAFT_EXEC", if (withExec) "1" else "0")
-      val p = pb.start()
-      // child stderr (Spark logs) streams through so a hung round is
-      // diagnosable from the driver's capture
-      val drainer = new Thread(() => {
-        val buf = new Array[Byte](8192)
-        val in = p.getErrorStream
-        var n = in.read(buf)
-        while (n >= 0) { System.err.write(buf, 0, n); n = in.read(buf) }
-      }, s"bench-child-$label-stderr")
-      drainer.setDaemon(true)
-      drainer.start()
       val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
       val diag = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
       val exec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-      val reader = new java.io.BufferedReader(
-        new java.io.InputStreamReader(p.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
-      // The hang guard must fire BEFORE the stdout read loop, not after:
-      // a wedged child that never closes stdout keeps readLine() blocked
-      // forever, so a post-loop waitFor(timeout) is unreachable. The
-      // watchdog kills the child at the deadline, which EOFs stdout and
-      // lets the loop fall through to the loud require below.
-      // Deadline is env-tunable: bigger SF dirs legitimately run longer than
-      // the sf0.1 default; a fixed constant would silently cap them mid-pass.
-      val deadlineMin = roundTimeoutMin(default = 20L)
-      val watchdog = new Thread(() => {
-        if (!p.waitFor(deadlineMin, java.util.concurrent.TimeUnit.MINUTES)) p.destroyForcibly()
-      }, s"bench-child-$label-watchdog")
-      watchdog.setDaemon(true)
-      watchdog.start()
       var done = false
-      var line = reader.readLine()
-      while (line != null) {
-        if (line.startsWith("#GRAFT ")) {
-          val body = line.drop(7)
-          if (body.startsWith("Q ")) {
-            val Array(n, t) = body.drop(2).split(" ", 2)
-            times(n) = t.toDouble
-          } else if (body.startsWith("D ")) {
-            val parts = body.drop(2).split(" ")
-            diag(parts(0)) = parts.drop(1).toSeq.map(_.toLong)
-          } else if (body.startsWith("E ")) {
-            val Array(n, t) = body.drop(2).split(" ", 2)
-            exec(n) = t.toDouble
-          } else if (body.startsWith("ERR ")) {
-            val Array(n, msg) = body.drop(4).split("\t", 2)
-            errors.getOrElseUpdate(n, msg)
-          } else if (body == "DONE") done = true
-        }
-        line = reader.readLine()
+      res.lines.map(_.drop(7)).foreach { body =>
+        if (body.startsWith("Q ")) {
+          val Array(n, t) = body.drop(2).split(" ", 2)
+          times(n) = t.toDouble
+        } else if (body.startsWith("D ")) {
+          val parts = body.drop(2).split(" ")
+          diag(parts(0)) = parts.drop(1).toSeq.map(_.toLong)
+        } else if (body.startsWith("E ")) {
+          val Array(n, t) = body.drop(2).split(" ", 2)
+          exec(n) = t.toDouble
+        } else if (body.startsWith("ERR ")) {
+          val Array(n, msg) = body.drop(4).split("\t", 2)
+          errors.getOrElseUpdate(n, msg)
+        } else if (body == "DONE") done = true
       }
-      // stdout already EOF'd here (loop above ended), so the child is done
-      // or the watchdog killed it — this wait only reaps the exit code
-      val exited = p.waitFor(1, java.util.concurrent.TimeUnit.MINUTES)
-      if (!exited) p.destroyForcibly()
       // A round whose child died (or exited nonzero — e.g. the transient
       // spill read-ahead OOM that killed one r14 sweep point AFTER all
       // queries had timed) is handed to the disturbance guard as a BROKEN
@@ -460,10 +419,9 @@ object Bench {
       // medians: if deaths persist in EVERY kept round the run still fails
       // loudly below (r6's silent-failure lesson) — a partial bench record
       // is worse than none.
-      val complete = done && exited && p.exitValue() == 0 && times.size == selected.size
+      val complete = done && res.exit == 0 && times.size == selected.size
       if (!complete) {
-        val why = s"child death: done=$done exited=$exited " +
-          s"exit=${if (exited) p.exitValue().toString else "?"} " +
+        val why = s"child death: done=$done exit=${res.exit} " +
           s"times=${times.size}/${selected.size}"
         System.err.println(s"[bench] round $label $why — left to the disturbance guard")
         ChildRound(times.toSeq, diag.toMap, exec.toSeq,

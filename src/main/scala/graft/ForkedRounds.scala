@@ -1,13 +1,10 @@
 package graft
 
-/** The forked-rounds disturbance-guard loop, shared by [[Bench]] (r11) and
-  * [[StreamBench]] (r13). Until r14 each harness carried its own copy of the
-  * fork/collect/discard logic; the copies had already needed one lockstep
-  * edit (the broken-round-first ordering) and a drift here would mean the
-  * two records silently disagree on what counts as "disturbed" — so the
-  * loop lives once, and [[ForkedRoundsSpec]] pins its semantics once.
+/** The forked-rounds disturbance-guard loop of [[Bench]], kept apart from
+  * the process plumbing ([[ChildJvm]]) so [[ForkedRoundsSpec]] can pin its
+  * semantics with scripted rounds and no JVM.
   *
-  * Protocol (unchanged from the r11/r13 in-place versions):
+  * Protocol:
   *   1. Fork `runs` rounds, each a fresh child JVM (the `fork` callback owns
   *      process plumbing; this driver never touches a process).
   *   2. BROKEN rounds re-fork first: a round whose failure-key set has
@@ -46,9 +43,8 @@ private[graft] object ForkedRounds {
 
   /** Run the guard loop over `runs` forked rounds.
     *
-    * @param tag        stderr log prefix ("bench" / "streambench")
-    * @param brokenNoun what a failure key is called in logs ("query errors" /
-    *                   "failed rows")
+    * @param tag        stderr log prefix ("bench")
+    * @param brokenNoun what a failure key is called in logs ("query errors")
     * @param fork       (slot index, label) => completed round; labels are
     *                   "0".."N-1" then "&lt;slot&gt;-refork&lt;k&gt;"
     * @param total      a round's total seconds (the disturbance signal)

@@ -265,24 +265,20 @@ object GraftSession {
     * same incremental-not-full economics as the k7 watermark store).
     *
     * Budget at 1 M live keys (BookState shape, the largest state row):
-    * MEASURED by the statesweep (statesweep.json, SCALE.md table), whose
-    * largest point is now 1,048,576 live keys (r11) — the 1 M-key budget
-    * below is no longer an extrapolation. At 1 M keys the on-heap
-    * provider holds 757.6 B/key (0.79 GB of heap for the whole
-    * population — within 8% of the 0.7 GB the r10 extrapolation from
-    * 262k predicted, confirming per-key cost is cardinality-flat from
-    * 32k to 1 M) and still sustains ~86k events/s on local[4]; RocksDB
-    * sustains ~74k events/s with pinned native blocks at ~177 MB —
-    * UNCHANGED from the 262k point, i.e. native memory tracks the hot
-    * write set, not key cardinality. FULL two-sided books (200
-    * levels/side since the r10 workload fix; ~400 levels total) cost
-    * ~5.6 KB/key on-heap (linear in fill: ~3.5 KB/key at 60% fill) —
-    * 1 M full books ≈ 5.6 GB of heap, which is the ceiling that forces
-    * this provider swap — vs ~1.3 KB/key durable in RocksDB SSTs
-    * (extrapolated from the measured ~790 B/key at 60% fill), with
-    * native memory (memtables + pinned blocks) capped by `maxMemoryMB`
-    * across every store instance on the node. Set `maxMemoryMB` to the
-    * executor's off-heap allowance.
+    * MEASURED by [[StateSweep]] (`statesweep.json`, SCALE.md "state cost
+    * per key"), one `-Xmx2g` child JVM per point on local[4]. At ~31-level
+    * books the on-heap provider holds ~710–725 B/key, flat in cardinality
+    * (706.6 at 262k, 724.2 at 524k): 0.38 GB of state completes, and
+    * 1,048,576 keys (~0.76 GB, ~38 % of the heap) dies with
+    * `OutOfMemoryError: Java heap space`. RocksDB completes every point,
+    * its native state flat at ~0.58 GB while keys grow 4× — native memory
+    * tracks the hot write set under `boundedMemoryUsage`, not key
+    * cardinality. FULL two-sided books (200 levels/side, ~400 levels)
+    * cost ~5.6 KB/key on-heap in the r12 uncapped sweep — 1 M full books
+    * ≈ 5.6 GB of heap, which is the ceiling that forces this provider
+    * swap. Rule: past ~1/3 of the executor heap in keys × bytes/key, flip
+    * the provider, not the heap. Set `maxMemoryMB` to the executor's
+    * off-heap allowance.
     *
     * Runtime confs — callable on a LIVE session (`configureRocksDbState`)
     * before `.start()`, or baked into the builder here; each streaming

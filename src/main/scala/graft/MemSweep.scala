@@ -1,6 +1,6 @@
 package graft
 
-import scala.jdk.CollectionConverters._
+import scala.concurrent.duration._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
@@ -116,70 +116,17 @@ object MemSweep {
       }
     require(new java.io.File(sfDir).isDirectory,
       s"SPARK_GRAFT_SF_DIR $sfDir missing — build the slice with tools/make_scale.py first")
-    val javaBin = new java.io.File(
-      new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-    // the child heap cap IS the experiment: drop the inherited -Xmx/-Xms
-    // (sbt's 128 GiB would void the measurement) and pin the capped value
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-Xmx") || a.startsWith("-Xms")) :+ s"-Xmx$xmx"
-    val cp = sys.props("java.class.path")
+    val deadline = Bench.roundTimeoutMin(default = 30L).minutes
 
     def runOne(name: String, noBroadcast: Boolean): String = {
-      val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.MemSweep")
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_CHILD", "1")
-      pb.environment().put("SPARK_GRAFT_MEM_QUERY", name)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-      if (noBroadcast) pb.environment().put("SPARK_GRAFT_MEM_NO_BROADCAST", "1")
-      val p = pb.start()
-      // ConcurrentLinkedDeque + a post-exit join: the parent reads the tail
-      // on exactly the failure path (OOM/kill) where the drainer may still
-      // be flushing — an unsynchronized deque would risk a CME there and
-      // lose the whole sweep's record
-      val errTail = new java.util.concurrent.ConcurrentLinkedDeque[String]()
-      // root cause captured AS IT STREAMS: a long stack trace pushes the
-      // message line out of the bounded tail before the parent reads it.
-      // Two tiers: a memory-fatal line always wins over a generic
-      // SparkException (a benign wrapped/retried exception logged early
-      // would otherwise sticky-capture and mask the real OOM).
-      val strongCause = new java.util.concurrent.atomic.AtomicReference[String](null)
-      val weakCause = new java.util.concurrent.atomic.AtomicReference[String](null)
-      def classify(l: String): Unit = {
-        if (l.contains("OutOfMemoryError") || l.contains("Not enough memory") ||
-          l.contains("Killed")) strongCause.compareAndSet(null, l)
-        else if (l.contains("SparkException")) weakCause.compareAndSet(null, l)
-      }
-      val drainer = new Thread(() => {
-        val r = new java.io.BufferedReader(new java.io.InputStreamReader(p.getErrorStream))
-        var line = r.readLine()
-        while (line != null) {
-          System.err.println(line)
-          classify(line)
-          if (errTail.size >= 50) errTail.pollFirst()
-          errTail.addLast(line)
-          line = r.readLine()
-        }
-      }, s"memsweep-$name-stderr")
-      drainer.setDaemon(true)
-      drainer.start()
-      var mem: Option[String] = None
-      val reader = new java.io.BufferedReader(
-        new java.io.InputStreamReader(p.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
-      val deadlineMin = Bench.roundTimeoutMin(default = 30L)
-      val watchdog = new Thread(() => {
-        if (!p.waitFor(deadlineMin, java.util.concurrent.TimeUnit.MINUTES)) p.destroyForcibly()
-      }, s"memsweep-$name-watchdog")
-      watchdog.setDaemon(true)
-      watchdog.start()
-      var line = reader.readLine()
-      while (line != null) {
-        if (line.startsWith("#GRAFT MEM ")) mem = Some(line.drop(11))
-        line = reader.readLine()
-      }
-      p.waitFor(1, java.util.concurrent.TimeUnit.MINUTES)
-      drainer.join(5000) // let the stderr tail finish flushing before reading it
-      val row = mem match {
+      // the child heap cap IS the experiment: the inherited -Xmx/-Xms (sbt's
+      // 16 GiB would void the measurement) is replaced by the capped value
+      val res = ChildJvm.run("graft.MemSweep",
+        Map("SPARK_GRAFT_CHILD" -> "1", "SPARK_GRAFT_MEM_QUERY" -> name,
+          "SPARK_GRAFT_CPUS" -> cpus) ++
+          (if (noBroadcast) Map("SPARK_GRAFT_MEM_NO_BROADCAST" -> "1") else Map.empty),
+        deadline, s"memsweep-$name", xmx = Some(xmx))
+      val row = res.lines.collectFirst { case l if l.startsWith("#GRAFT MEM ") => l.drop(11) } match {
         case Some(rec) =>
           val Array(n, sec, sm, sd, pk, ft) = rec.split(" ")
           require(n == name, s"child answered for $n, asked $name")
@@ -187,12 +134,8 @@ object MemSweep {
             s""""spill_disk_bytes":$sd,"peak_task_execution_memory":$pk,"failed_tasks":$ft}"""
         case None =>
           // OOM / watchdog kill: the FINDING, not a sweep failure — keep the
-          // diagnostic tail so the record says why
-          val why = StreamBench.jsonSafe(
-            Option(strongCause.get)
-              .orElse(Option(weakCause.get))
-              .orElse(errTail.asScala.lastOption).getOrElse("no stderr"), 500)
-          s"""{"completed":false,"exit":${if (p.isAlive) -1 else p.exitValue()},"why":"$why"}"""
+          // diagnostic cause so the record says why
+          s"""{"completed":false,"exit":${res.exit},"why":"${res.why}"}"""
       }
       System.err.println(
         s"[memsweep] $name${if (noBroadcast) " (no-broadcast retry)" else ""} -> $row")

@@ -38,27 +38,35 @@ object TokenizerArtifact {
     * directory form of the compiled [[graft.operators.TrainedMerges]]
     * table, trained by the same job on the same corpus, so queries loading
     * it replay the DuckDB oracles generated from the compiled constant.
-    * Resolved against the working directory (the repo root under the
-    * driver contract) unless [[ShippedDirConf]] overrides. Existence is
-    * checked HERE with an error naming the conf knob: every other query
-    * takes its inputs from the sfDir argument, so this is the one path
-    * that breaks when the process runs from outside the repo root — a
-    * bare parquet path-not-found deep in query construction (or worse, a
-    * stray same-named directory at another CWD silently supplying a
-    * different merge table) would be much harder to diagnose.
+    * Resolved against the repo root found from where this class was loaded
+    * ([[repoRootOf]]), so a run from any working directory reads the same
+    * table, unless [[ShippedDirConf]] overrides. Existence is checked HERE
+    * with an error naming the conf knob: every other query takes its inputs
+    * from the sfDir argument, so a bare parquet path-not-found deep in
+    * query construction would be much harder to diagnose.
     */
   def shippedDir(spark: SparkSession): String =
     spark.conf.getOption(ShippedDirConf).getOrElse {
-      // the existence check guards only the CWD-resolved default — a conf
-      // override may name any Spark-readable URI (hdfs:/s3a:), which a
-      // local File probe cannot see
-      val dir = new java.io.File("artifacts/bpe_sf0.1").getAbsolutePath
-      require(new java.io.File(dir, "merges").isDirectory,
-        s"tokenizer artifact not found at $dir (no merges/ table): run " +
-          s"from the repo root, or point $ShippedDirConf at a " +
-          "TrainBpe-emitted artifact directory")
-      dir
+      // the existence check guards only the default — a conf override may
+      // name any Spark-readable URI (hdfs:/s3a:), which a local File probe
+      // cannot see
+      val code = Option(getClass.getProtectionDomain.getCodeSource)
+        .map(cs => java.nio.file.Paths.get(cs.getLocation.toURI))
+      val dir = code.flatMap(repoRootOf).map(_.resolve("artifacts/bpe_sf0.1").toFile)
+      require(dir.exists(d => new java.io.File(d, "merges").isDirectory),
+        s"tokenizer artifact not found (no merges/ table at " +
+          s"${dir.getOrElse(s"<no build.sbt above ${code.getOrElse("unknown code location")}>")}): " +
+          s"point $ShippedDirConf at a TrainBpe-emitted artifact directory")
+      dir.get.getAbsolutePath
     }
+
+  /** The repo root for code loaded from `codeLocation` (a compiled-classes
+    * directory or a jar under the checkout): its nearest ancestor holding
+    * `build.sbt`.
+    */
+  private[graft] def repoRootOf(codeLocation: java.nio.file.Path): Option[java.nio.file.Path] =
+    Iterator.iterate(codeLocation.toAbsolutePath)(_.getParent).takeWhile(_ != null)
+      .find(d => java.nio.file.Files.isRegularFile(d.resolve("build.sbt")))
 
   def save(spark: SparkSession, merges: Seq[(String, String)], vocab: DataFrame,
       dir: String): Unit = {

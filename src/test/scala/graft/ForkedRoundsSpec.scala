@@ -2,10 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the disturbance-guard semantics of [[ForkedRounds]] — the ONE
-  * fork/collect/discard driver shared by Bench.forkedMain and
-  * StreamBench.throughputParent since r14 (they carried drifting copies
-  * before). Rounds here are plain (total, failedKeys) fakes driven through
+/** Pins the disturbance-guard semantics of [[ForkedRounds]] — the
+  * fork/collect/discard driver behind Bench.forkedMain. Rounds here are plain (total, failedKeys) fakes driven through
   * the `fork` callback, so every branch of the guard is exercisable without
   * spawning a JVM.
   */
@@ -119,7 +117,7 @@ class ForkedRoundsSpec extends AnyFunSuite {
   }
 
   test("a child-death sentinel round is discarded broken-first and re-forked (r15)") {
-    // Bench/StreamBench mark a dead or nonzero-exit child with
+    // Bench marks a dead or nonzero-exit child with
     // Bench.ChildDiedKey instead of throwing, so a transient OOM death
     // self-heals through the guard and is visible as a discard in the
     // record. The sentinel rides the ordinary broken-round path: discarded
@@ -137,7 +135,7 @@ class ForkedRoundsSpec extends AnyFunSuite {
 
   test("a death in EVERY round settles as persistent — callers must abort on the sentinel") {
     // the guard cannot tell all-round deaths from a broken build (same
-    // intersection rule as persistent failures); Bench/StreamBench require
+    // intersection rule as persistent failures); Bench requires
     // no kept round carries the sentinel and fail loudly themselves
     val (out, _) = drive(
       Seq(R(10.0, Set(Bench.ChildDiedKey)), R(10.1, Set(Bench.ChildDiedKey))))

@@ -57,6 +57,22 @@ class TokenizerArtifactSpec extends SparkSpec {
     assert(loaded === Bpe.Merges)
   }
 
+  test("the shipped artifact resolves from the code's checkout, not the working directory") {
+    // a synthetic checkout: the root is the nearest build.sbt above the
+    // compiled classes, wherever the JVM was started
+    val root = java.nio.file.Files.createTempDirectory("graft_root_")
+    java.nio.file.Files.createFile(root.resolve("build.sbt"))
+    val classes = java.nio.file.Files.createDirectories(root.resolve("target/scala-2.13/classes"))
+    assert(TokenizerArtifact.repoRootOf(classes).contains(root))
+    assert(TokenizerArtifact.repoRootOf(root.getParent).isEmpty)
+    // the default: this checkout's artifact, found from where the spec's
+    // own classes were loaded (user.dir plays no part)
+    val specClasses = java.nio.file.Paths.get(
+      classOf[TokenizerArtifactSpec].getProtectionDomain.getCodeSource.getLocation.toURI)
+    val expected = TokenizerArtifact.repoRootOf(specClasses).get.resolve("artifacts/bpe_sf0.1")
+    assert(TokenizerArtifact.shippedDir(spark) == expected.toFile.getAbsolutePath)
+  }
+
   test("t14h reproduces t14d from the artifact, and a tampered artifact CHANGES it") {
     val base = run("t14d_bpe_vocab_marked").orderBy("token_id").collect().toSeq
     assert(base.nonEmpty)

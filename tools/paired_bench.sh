@@ -7,12 +7,14 @@
 # chased it. Round-over-round claims should instead cite a PAIRED record:
 # both commits benched in one sitting.
 #
-# Arm schedule: A1 -> B1 -> A2 -> B2 (each rev measured FIRST and LAST).
-# The maiden 3-arm run (A1->B->A2) showed a monotone within-sitting box
-# trend putting the single B arm at a systematic disadvantage against
-# min(A1,A2); with two arms per side, min-vs-min cancels any monotone
-# trend instead of merely detecting it, and each side carries its own
-# same-code drift band.
+# Arm schedule: A1 -> B1 -> B2 -> A2 (ABBA). Both sides sit at the same
+# mean position in the sitting (arms 1+4 vs 2+3), so a LINEAR within-
+# sitting box trend hits them equally; the old A1 -> B1 -> A2 -> B2 order
+# put the new side later on average and favoured it on a box that speeds
+# up through the sitting (paired_session_sf0.1.json: A2 faster than A1 on
+# 112/137 queries). min-vs-min does not cancel a trend — a curved one can
+# still favour either side — so each side also carries its own same-code
+# drift band, and a delta inside it is noise.
 #
 # Usage: tools/paired_bench.sh <old-ref> <queries-csv> <sf-dir> <out.json> [runs]
 #   old-ref      git rev the NEW head is compared against (e.g. last
@@ -56,13 +58,13 @@ run_arm() { # dir record logfile
 echo "== paired bench: old=$OLD_SHA new=$NEW_SHA queries=$QUERIES =="
 echo "== arm A1 (old) =="; run_arm "$WT"   /tmp/paired_old1.json /tmp/paired_old1.log
 echo "== arm B1 (new) =="; run_arm "$REPO" /tmp/paired_new1.json /tmp/paired_new1.log
-echo "== arm A2 (old) =="; run_arm "$WT"   /tmp/paired_old2.json /tmp/paired_old2.log
 echo "== arm B2 (new) =="; run_arm "$REPO" /tmp/paired_new2.json /tmp/paired_new2.log
+echo "== arm A2 (old) =="; run_arm "$WT"   /tmp/paired_old2.json /tmp/paired_old2.log
 
 python3 "$REPO/tools/paired_report.py" "$OUT" \
   "$OLD_SHA" "$NEW_SHA" \
   /tmp/paired_old1.json /tmp/paired_new1.json \
-  /tmp/paired_old2.json /tmp/paired_new2.json
+  /tmp/paired_new2.json /tmp/paired_old2.json
 
 rm -f "$REPO"/bench_diag_only.json 2>/dev/null || true
 echo "paired record written to $OUT"

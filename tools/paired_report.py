@@ -2,12 +2,16 @@
 """Merge the arms of tools/paired_bench.sh into one paired record.
 
 Usage:
-  paired_report.py out.json old_sha new_sha A1.json B1.json A2.json [B2.json]
+  paired_report.py out.json old_sha new_sha A1.json B1.json B2.json A2.json
+  paired_report.py out.json old_sha new_sha A1.json B.json A2.json
 
-With four arms (A1 -> B1 -> A2 -> B2, the schedule paired_bench.sh runs)
-each rev is measured first AND last, so a monotone within-sitting box
-trend hits both sides symmetrically and min-vs-min cancels it. Per
-query, on the suite's standard MIN-WALL basis:
+Arm records are given in the order they ran. With four arms (A1 -> B1 ->
+B2 -> A2, the schedule paired_bench.sh runs) both sides sit at the same
+mean position in the sitting, so a linear within-sitting box trend hits
+them equally; a curved trend can still favour one side, which is what the
+drift bands below are for. Records made before this schedule ran A1 ->
+B1 -> A2 -> B2, which put the new side later on average. Per query, on
+the suite's standard MIN-WALL basis:
 
   - `ratio` — min(B1, B2) / min(A1, A2): the headline point estimate.
   - `drift_old` / `drift_new` — each side's same-code relative gap
@@ -39,8 +43,8 @@ def main() -> None:
     arms = [json.load(open(p)) for p in arm_paths]
     four = len(arms) == 4
     if four:
-        old_arms, new_arms = [arms[0], arms[2]], [arms[1], arms[3]]
-        arm_order = ["old_a1", "new_b1", "old_a2", "new_b2"]
+        old_arms, new_arms = [arms[0], arms[3]], [arms[1], arms[2]]
+        arm_order = ["old_a1", "new_b1", "new_b2", "old_a2"]
     else:
         old_arms, new_arms = [arms[0], arms[2]], [arms[1]]
         arm_order = ["old_a1", "new", "old_a2"]
@@ -101,10 +105,11 @@ def main() -> None:
         "basis": "cold-cache",
         "basis_detail": (
             "interleaved arms in one sitting on one box, min-wall per arm; "
-            + ("ratio = min(B1,B2)/min(A1,A2) — each rev measured first and "
-               "last so monotone box trends cancel; drift_old/drift_new are "
-               "each side's same-code arm gap, and only |ratio-1| clearing "
-               "max(drift) is attributable to the code change"
+            + ("ratio = min(B1,B2)/min(A1,A2) over arms run A1 B1 B2 A2, "
+               "so a linear box trend hits both sides equally; "
+               "drift_old/drift_new are each side's same-code arm gap, and "
+               "only |ratio-1| clearing max(drift) is attributable to the "
+               "code change"
                if four else
                "ratio_vs_best_old = new/min(A1,A2) (conservative for "
                "improvement claims), ratio_adjacent = new/A1 "

@@ -21,9 +21,9 @@
 #   - clusterverify at 137.
 #
 # What is NOT re-run (unchanged code + inputs, r13-r16 precedent):
-# statesweep, batchsweep, memsweep, statesweep_capped (StreamBench/
-# MemSweep paths untouched), streambench + streambench_smoke +
-# clusterstream (no streaming-path diff this round), shufflesweep100/
+# statesweep + memsweep (graft.StateSweep / graft.MemSweep paths
+# untouched), clusterstream (no streaming-path diff this round),
+# shufflesweep100/
 # stagepin100/advisory100/tokenpin100/tokenpinknee/charknee (their code
 # paths and the constants they measured are unchanged), clusterbench +
 # clustermem100_pin8 + scaleidentity (re-measured at the late-r16
