@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Event-time rolling (range-frame) statistics — the reference's 1 s/5 s
@@ -13,6 +13,14 @@ import org.apache.spark.sql.functions._
   * and then run a single ordered scan per partition — O(rows log rows) local
   * sort, no self-join. Range frames on the epoch-ms long axis express
   * "last N seconds" exactly (event-time, not row-count).
+  *
+  * Every statistic comes in two plans over one body: the per-symbol window
+  * (a5/w5/w6/w9) and the (symbol, time-chunk) bucketed plan (a5b/w5b/w6b/
+  * w9b), whose parallelism is symbols × chunks instead of the symbol
+  * cardinality. The bodies take their window, so the only difference is
+  * the partition — `symbol`, or `(__sym, __chunk)` plus the chunk
+  * stitching. Both stay: the per-symbol plan is faster at sf0.01, the
+  * bucketed one at 10× (SCALE.md).
   *
   * Per SURVEY §7.5.5 the reference's `trades_per_second` floors the time span
   * at 1 s, underestimating sub-second intensity; here intensity uses the true
@@ -36,8 +44,17 @@ object Rolling {
       windowMs: Long = 5000L): DataFrame = {
     val wRange = Window.partitionBy(symbol).orderBy(tsMs).rangeBetween(-windowMs, 0)
     val wSeq = Window.partitionBy(symbol).orderBy(tsMs, tieBreak)
-    val spanSec = (tsMs - min(tsMs).over(wRange)).cast("double") / 1000.0
-    trades
+    priceFrameStats(trades, wRange, price, qty)
+      .withColumn("interarrival_ms", tsMs - lag(tsMs, 1).over(wSeq))
+      .transform(arrivalFrameStats(_, wRange, tsMs))
+  }
+
+  /** A5's price and volume frame stats: `n_w`, `vol_w`, `vwap_w`,
+    * `price_std_w`, `price_range_w` over the trailing frame `wRange`.
+    */
+  private def priceFrameStats(
+      rows: DataFrame, wRange: WindowSpec, price: Column, qty: Column): DataFrame =
+    rows
       .withColumn("n_w", count(lit(1)).over(wRange))
       .withColumn("vol_w", sum(qty.cast("decimal(27,8)")).over(wRange).cast("double"))
       .withColumn(
@@ -48,7 +65,14 @@ object Rolling {
       .withColumn(
         "price_range_w",
         round(max(price).over(wRange) - min(price).over(wRange), 8))
-      .withColumn("interarrival_ms", tsMs - lag(tsMs, 1).over(wSeq))
+
+  /** A5's arrival frame stats over the trailing frame `wRange`, from the
+    * rows' `interarrival_ms` and `n_w`: `interarrival_mean_s_w`,
+    * `interarrival_var_s_w` and `trade_intensity_w`.
+    */
+  private def arrivalFrameStats(rows: DataFrame, wRange: WindowSpec, tsMs: Column): DataFrame = {
+    val spanSec = (tsMs - min(tsMs).over(wRange)).cast("double") / 1000.0
+    rows
       // Interarrival mean/variance from EXACT integer power sums: windowed
       // var_samp differs across engines at ~1e-6 relative (segment-tree vs
       // streaming accumulation), which no output rounding survives. Integer
@@ -109,25 +133,17 @@ object Rolling {
       windowMs: Long = 5000L,
       chunkMs: Long = 60000L): DataFrame = {
     require(chunkMs >= windowMs, s"chunkMs ($chunkMs) must be >= windowMs ($windowMs)")
-    val base = trades
-      .withColumn("__sym", symbol)
-      .withColumn("__ts", tsMs)
-      .withColumn("__tie", tieBreak)
-      .withColumn("__chunk", graft.functions.TimeUnits.bucketIndex(tsMs, chunkMs))
+    val base = chunked(trades, symbol, tsMs, Some(tieBreak), chunkMs)
 
     // 1 — exact interarrival: chunk-local lag + boundary stitch. The only
     // per-symbol window runs over the per-chunk summary (one row per
-    // non-empty chunk), not the stream; it is derived from the already
-    // (symbol, chunk)-partitioned side so its aggregate reuses that exchange.
-    val wSeqChunk = Window
-      .partitionBy(col("__sym"), col("__chunk"))
-      .orderBy(col("__ts"), col("__tie"))
-    val local = base.withColumn("__ia_local", col("__ts") - lag(col("__ts"), 1).over(wSeqChunk))
-    val wChunks = Window.partitionBy(col("__sym")).orderBy(col("__chunk"))
+    // non-empty chunk), not the stream. Column pruning gives the summary
+    // its own scan and (symbol, chunk) exchange (PlanQualitySpec pins it).
+    val local = base.withColumn("__ia_local", col("__ts") - lag(col("__ts"), 1).over(chunkSeq))
     val prevBounds = local
       .groupBy(col("__sym"), col("__chunk"))
       .agg(max(col("__ts")).as("__chunk_last_ts"))
-      .withColumn("__prev_last_ts", lag(col("__chunk_last_ts"), 1).over(wChunks))
+      .withColumn("__prev_last_ts", lag(col("__chunk_last_ts"), 1).over(chunkOrder))
       .select(col("__sym"), col("__chunk"), col("__prev_last_ts"))
     val withIa = local
       .join(prevBounds, Seq("__sym", "__chunk"))
@@ -138,56 +154,36 @@ object Rolling {
 
     // 2 — trailing frames over (symbol, chunk) with boundary-band context:
     // a row in chunk c sees back to ts - windowMs >= c*chunkMs - windowMs,
-    // all of which lives in chunk c-1's trailing band. Context rows are
-    // produced by a single explode (one pass over phase 1), not a
-    // self-union (which would execute the phase-1 lineage twice).
-    val all = withIa
-      .withColumn(
-        "__dests",
-        when(
-          col("__ts") >= (col("__chunk") + 1) * chunkMs - windowMs,
-          array(col("__chunk"), col("__chunk") + 1))
-          .otherwise(array(col("__chunk"))))
-      .withColumn("__home", col("__chunk"))
-      .withColumn("__chunk", explode(col("__dests")))
-      .withColumn("__owner", col("__chunk") === col("__home"))
-      .drop("__dests", "__home")
-    val wRange = Window
-      .partitionBy(col("__sym"), col("__chunk"))
-      .orderBy(col("__ts"))
-      .rangeBetween(-windowMs, 0)
-    val spanSec = (col("__ts") - min(col("__ts")).over(wRange)).cast("double") / 1000.0
-    all
-      .withColumn("n_w", count(lit(1)).over(wRange))
-      .withColumn("vol_w", sum(qty.cast("decimal(27,8)")).over(wRange).cast("double"))
-      .withColumn(
-        "vwap_w",
-        sum((price * qty).cast("decimal(27,10)")).over(wRange).cast("double") /
-          nullif(col("vol_w"), lit(0.0)))
-      .withColumn("price_std_w", round(stddev_samp(price).over(wRange), 4))
-      .withColumn(
-        "price_range_w",
-        round(max(price).over(wRange) - min(price).over(wRange), 8))
-      .withColumn("__ia_n", count(col("interarrival_ms")).over(wRange))
-      .withColumn("__ia_s1", sum(col("interarrival_ms")).over(wRange).cast("double"))
-      .withColumn(
-        "__ia_s2",
-        sum(col("interarrival_ms") * col("interarrival_ms")).over(wRange).cast("double"))
-      .withColumn(
-        "interarrival_mean_s_w",
-        col("__ia_s1") / col("__ia_n") / 1000.0)
-      .withColumn(
-        "interarrival_var_s_w",
-        when(
-          col("__ia_n") >= 2,
-          (col("__ia_s2") - col("__ia_s1") * col("__ia_s1") / col("__ia_n")) /
-            (col("__ia_n") - 1) / 1.0e6))
-      .withColumn(
-        "trade_intensity_w",
-        col("n_w").cast("double") / greatest(spanSec, lit(0.001)))
+    // all of which lives in chunk c-1's trailing band.
+    val wRange = chunkFrame(-windowMs, 0)
+    withBandContext(withIa, col("__ts") >= (col("__chunk") + 1) * chunkMs - windowMs, step = 1)
+      .transform(priceFrameStats(_, wRange, price, qty))
+      .transform(arrivalFrameStats(_, wRange, col("__ts")))
       .filter(col("__owner"))
-      .drop("__ia_n", "__ia_s1", "__ia_s2", "__owner", "__chunk", "__tie", "__sym", "__ts")
+      .drop("__owner", "__chunk", "__tie", "__sym", "__ts")
   }
+
+  /** W5: forward path stats over `(t, t + horizonMs]` — the label-side
+    * max/min/range/volume/count of the 10 s window after each feature tick.
+    */
+  def forwardPathStats(
+      rows: DataFrame,
+      symbol: Column,
+      tsMs: Column,
+      price: Column,
+      qty: Column,
+      horizonMs: Long = 10000L): DataFrame =
+    // (t, t+h]: exclude the current instant, include the horizon end.
+    pathStats(rows, Window.partitionBy(symbol).orderBy(tsMs).rangeBetween(1, horizonMs), price, qty)
+
+  /** W5's path stats over the forward frame `w`. */
+  private def pathStats(rows: DataFrame, w: WindowSpec, price: Column, qty: Column): DataFrame =
+    rows
+      .withColumn("path_max", max(price).over(w))
+      .withColumn("path_min", min(price).over(w))
+      .withColumn("path_range", round(col("path_max") - col("path_min"), 8))
+      .withColumn("path_volume", sum(qty.cast("decimal(27,8)")).over(w).cast("double"))
+      .withColumn("path_trades", count(price).over(w))
 
   /** W5 at firehose scale: [[forwardPathStats]] partitions by `symbol` only,
     * collapsing to one task on a single-symbol stream. Mirror image of
@@ -208,56 +204,16 @@ object Rolling {
       horizonMs: Long = 10000L,
       chunkMs: Long = 60000L): DataFrame = {
     require(chunkMs >= horizonMs, s"chunkMs ($chunkMs) must be >= horizonMs ($horizonMs)")
-    val base = rows
-      .withColumn("__sym", symbol)
-      .withColumn("__ts", tsMs)
-      .withColumn("__chunk", graft.functions.TimeUnits.bucketIndex(tsMs, chunkMs))
     // A row in chunk c reaches forward to ts + horizonMs, all of which lives
     // in chunk c+1's leading band — so the band rows of chunk c+1 replicate
-    // back into chunk c (single explode, no self-union).
-    val all = base
-      .withColumn(
-        "__dests",
-        when(
-          col("__ts") < col("__chunk") * chunkMs + horizonMs,
-          array(col("__chunk") - 1, col("__chunk")))
-          .otherwise(array(col("__chunk"))))
-      .withColumn("__home", col("__chunk"))
-      .withColumn("__chunk", explode(col("__dests")))
-      .withColumn("__owner", col("__chunk") === col("__home"))
-      .drop("__dests", "__home")
-    val w = Window
-      .partitionBy(col("__sym"), col("__chunk"))
-      .orderBy(col("__ts"))
-      .rangeBetween(1, horizonMs)
-    all
-      .withColumn("path_max", max(price).over(w))
-      .withColumn("path_min", min(price).over(w))
-      .withColumn("path_range", round(col("path_max") - col("path_min"), 8))
-      .withColumn("path_volume", sum(qty.cast("decimal(27,8)")).over(w).cast("double"))
-      .withColumn("path_trades", count(price).over(w))
+    // back into chunk c.
+    withBandContext(
+      chunked(rows, symbol, tsMs, None, chunkMs),
+      col("__ts") < col("__chunk") * chunkMs + horizonMs,
+      step = -1)
+      .transform(pathStats(_, chunkFrame(1, horizonMs), price, qty))
       .filter(col("__owner"))
       .drop("__owner", "__chunk", "__sym", "__ts")
-  }
-
-  /** W5: forward path stats over `(t, t + horizonMs]` — the label-side
-    * max/min/range/volume/count of the 10 s window after each feature tick.
-    */
-  def forwardPathStats(
-      rows: DataFrame,
-      symbol: Column,
-      tsMs: Column,
-      price: Column,
-      qty: Column,
-      horizonMs: Long = 10000L): DataFrame = {
-    // (t, t+h]: exclude the current instant, include the horizon end.
-    val w = Window.partitionBy(symbol).orderBy(tsMs).rangeBetween(1, horizonMs)
-    rows
-      .withColumn("path_max", max(price).over(w))
-      .withColumn("path_min", min(price).over(w))
-      .withColumn("path_range", round(col("path_max") - col("path_min"), 8))
-      .withColumn("path_volume", sum(qty.cast("decimal(27,8)")).over(w).cast("double"))
-      .withColumn("path_trades", count(price).over(w))
   }
 
   /** W6: momentum / acceleration — differences of lagged rolling means
@@ -273,16 +229,19 @@ object Rolling {
       windowMs: Long = 5000L): DataFrame = {
     val wRange = Window.partitionBy(symbol).orderBy(tsMs).rangeBetween(-windowMs, 0)
     val wSeq = Window.partitionBy(symbol).orderBy(tsMs, tieBreak)
-    // Decimal-accumulated mean: exact under any evaluation order, so the
-    // momentum diffs are engine- and partition-order-independent.
-    val maExact =
-      sum(price.cast("decimal(27,8)")).over(wRange).cast("double") /
-        count(lit(1)).over(wRange)
     rows
-      .withColumn("ma_w", maExact)
+      .withColumn("ma_w", movingMean(price, wRange))
       .withColumn("momentum", col("ma_w") - lag(col("ma_w"), 1).over(wSeq))
       .withColumn("acceleration", col("momentum") - lag(col("momentum"), 1).over(wSeq))
   }
+
+  /** W6's `ma_w` over the trailing frame `wRange`. Decimal-accumulated mean:
+    * exact under any evaluation order, so the momentum diffs are engine-
+    * and partition-order-independent, and the bucketed doubles are
+    * bit-identical to the per-symbol ones.
+    */
+  private def movingMean(price: Column, wRange: WindowSpec): Column =
+    sum(price.cast("decimal(27,8)")).over(wRange).cast("double") / count(lit(1)).over(wRange)
 
   /** W6 at firehose scale: [[momentum]]'s per-symbol windows bucketed by
     * (symbol, time-chunk), bit-identical output (same oracle). Two stitches:
@@ -290,8 +249,7 @@ object Rolling {
     *   1. `ma_w` (trailing range frame) — the same boundary-band replication
     *      as [[trailingStatsBucketed]]: trailing-band rows of chunk c are
     *      context rows of chunk c+1, frames compute chunk-locally, context
-    *      drops. Decimal-sum/count means are evaluation-order exact, so the
-    *      bucketed doubles are bit-identical to the per-symbol ones.
+    *      drops.
     *   2. the lag chain — `momentum = ma - lag(ma)` and `acceleration =
     *      momentum - lag(momentum) = (ma - l1) - (l1 - l2)` need the last TWO
     *      `ma_w` values before each chunk's first row. A per-chunk tail
@@ -343,75 +301,41 @@ object Rolling {
       materializeSharedStage: Boolean = true,
       checkpointDir: Option[String] = None): DataFrame = {
     require(chunkMs >= windowMs, s"chunkMs ($chunkMs) must be >= windowMs ($windowMs)")
-    val base = rows
-      .withColumn("__sym", symbol)
-      .withColumn("__ts", tsMs)
-      .withColumn("__tie", tieBreak)
-      .withColumn("__chunk", graft.functions.TimeUnits.bucketIndex(tsMs, chunkMs))
     // 1 — trailing ma over (symbol, chunk) with boundary-band context rows.
-    val all = base
-      .withColumn(
-        "__dests",
-        when(
-          col("__ts") >= (col("__chunk") + 1) * chunkMs - windowMs,
-          array(col("__chunk"), col("__chunk") + 1))
-          .otherwise(array(col("__chunk"))))
-      .withColumn("__home", col("__chunk"))
-      .withColumn("__chunk", explode(col("__dests")))
-      .withColumn("__owner", col("__chunk") === col("__home"))
-      .drop("__dests", "__home")
-    val wRange = Window
-      .partitionBy(col("__sym"), col("__chunk"))
-      .orderBy(col("__ts"))
-      .rangeBetween(-windowMs, 0)
-    val owned = all
-      .withColumn(
-        "ma_w",
-        sum(price.cast("decimal(27,8)")).over(wRange).cast("double") /
-          count(lit(1)).over(wRange))
+    val owned = withBandContext(
+      chunked(rows, symbol, tsMs, Some(tieBreak), chunkMs),
+      col("__ts") >= (col("__chunk") + 1) * chunkMs - windowMs,
+      step = 1)
+      .withColumn("ma_w", movingMean(price, chunkFrame(-windowMs, 0)))
       .filter(col("__owner"))
       .drop("__owner")
     // 2 — lag stitch. Chunk-local lags reuse the (symbol, chunk) exchange;
     // only the first two rows of a chunk read the stitched tail values.
-    val wSeqChunk = Window
-      .partitionBy(col("__sym"), col("__chunk"))
-      .orderBy(col("__ts"), col("__tie"))
-    val wholeChunk = Window.partitionBy(col("__sym"), col("__chunk"))
-    val withRnPlan = owned
-      .withColumn("__rn", row_number().over(wSeqChunk))
-      .withColumn("__cnt", count(lit(1)).over(wholeChunk))
-      .withColumn("__ma_l1_local", lag(col("ma_w"), 1).over(wSeqChunk))
-      .withColumn("__ma_l2_local", lag(col("ma_w"), 2).over(wSeqChunk))
-      // ordering scratch is consumed by the windows above; keep it out of
-      // the materialized stage
-      .drop("__ts", "__tie")
-    val withRn =
-      if (!materializeSharedStage) withRnPlan
-      else Materialize.stage(withRnPlan, checkpointDir, eager = false)
-    // The chunk's LAST row already carries the whole tail: its ma_w is the
-    // tail's newest value and its chunk-local lag is the second-newest — so
-    // a filter+select yields one row per non-empty chunk with zero
-    // aggregation (the collect_list formulation cost two exchanges and an
-    // ObjectHashAggregate pair for the same ≤2 values). The tail length is
-    // decided by __cnt, NOT by null-filtering: a chunk whose last ma_w is
-    // genuinely null (every price in its trailing window null) must keep
-    // that null positionally — the next chunk's first momentum is then null,
-    // exactly as w6's lag over the full partition computes it. Filtering
-    // nulls would promote an OLDER ma into the stitch and silently shift it.
-    val tails = withRn
-      .filter(col("__rn") === col("__cnt"))
-      .select(
-        col("__sym"), col("__chunk"),
-        when(col("__cnt") >= 2, array(col("__ma_l1_local"), col("ma_w")))
-          .otherwise(array(col("ma_w"))).as("__tail"))
-    val wChunks = Window.partitionBy(col("__sym")).orderBy(col("__chunk"))
+    val withRn = sharedStage(
+      withChunkPosition(owned)
+        .withColumn("__ma_l1_local", lag(col("ma_w"), 1).over(chunkSeq))
+        .withColumn("__ma_l2_local", lag(col("ma_w"), 2).over(chunkSeq))
+        // ordering scratch is consumed by the windows above; keep it out of
+        // the materialized stage
+        .drop("__ts", "__tie"),
+      materializeSharedStage, checkpointDir)
+    // The tail length is decided by __cnt, NOT by null-filtering: a chunk
+    // whose last ma_w is genuinely null (every price in its trailing window
+    // null) must keep that null positionally — the next chunk's first
+    // momentum is then null, exactly as w6's lag over the full partition
+    // computes it. Filtering nulls would promote an OLDER ma into the
+    // stitch and silently shift it.
+    val tails = chunkTails(
+      withRn,
+      when(col("__cnt") >= 2, array(col("__ma_l1_local"), col("ma_w")))
+        .otherwise(array(col("ma_w"))))
     val empty = array().cast("array<double>")
     val prev = tails
       .withColumn(
         "__prevcat",
         concat(
-          coalesce(lag(col("__tail"), 2).over(wChunks), empty),
-          coalesce(lag(col("__tail"), 1).over(wChunks), empty)))
+          coalesce(lag(col("__tail"), 2).over(chunkOrder), empty),
+          coalesce(lag(col("__tail"), 1).over(chunkOrder), empty)))
       .select(
         col("__sym"), col("__chunk"),
         when(size(col("__prevcat")) >= 1, element_at(col("__prevcat"), -1)).as("__prev1"),
@@ -429,6 +353,75 @@ object Rolling {
       .drop(
         "__rn", "__cnt", "__ma_l1_local", "__ma_l2_local", "__prev1", "__prev2",
         "__ma_l1", "__ma_l2", "__chunk", "__tie", "__sym", "__ts")
+  }
+
+  /** W9 default parameters. [[graft.queries.MarketQueries]] derives the
+    * oracle SQL's frame size and alpha/complement literals from these (the
+    * same way `duckBucket` shares hash params), so the query wiring and the
+    * oracle cannot silently drift apart.
+    */
+  val EwmaFastAlpha = 0.25
+  val EwmaSlowAlpha = 0.0625
+  val EwmaLookback = 32
+
+  /** 1−α must round-trip exactly (true for dyadic α: 1/4, 1/16, …) so a
+    * human writing the complement as a literal in oracle SQL gets the same
+    * double the fold uses. `(1−a)+a == 1` is too weak (0.3 passes it by
+    * re-rounding); the inverse subtraction is the faithful test.
+    */
+  private def requireExactAlphas(fastAlpha: Double, slowAlpha: Double): Unit = {
+    def exactComplement(a: Double): Boolean = 1.0 - (1.0 - a) == a
+    require(
+      exactComplement(fastAlpha) && exactComplement(slowAlpha),
+      s"alphas must have exactly representable complements (got $fastAlpha, $slowAlpha)")
+  }
+
+  /** The prices of the row frame `w`, in frame order.
+    *
+    * collect_list silently DROPS nulls while DuckDB's `list()` window
+    * aggregate keeps them, so a null price would shift the Spark frame one
+    * slot and silently desync lookback alignment from the oracle. The EWMA
+    * contract is therefore non-null price, enforced loudly per row (the
+    * Corpus precondition style) instead of diverging quietly.
+    */
+  private def framePrices(price: Column, w: WindowSpec): Column =
+    collect_list(coalesce(price, raise_error(lit("ewmaFeatures: null price")).cast("double")))
+      .over(w)
+
+  /** The EWMA left fold `y₀ = xs(1); yₜ = (1−α)·yₜ₋₁ + α·xs(t)` over an
+    * already-materialized frame array — the identical IEEE double sequence
+    * DuckDB's `list_reduce` executes.
+    */
+  private def ewmaFold(xs: Column, alpha: Double, lookback: Int): Column = {
+    val decay = lit(1.0 - alpha)
+    round(
+      aggregate(
+        slice(xs, 2, lookback - 1),
+        element_at(xs, 1),
+        (acc, x) => acc * decay + x * lit(alpha)),
+      6)
+  }
+
+  /** W9's `ewma_fast`, `ewma_slow` and `macd` from each row's price frame. */
+  private def withEwma(
+      rows: DataFrame, frame: Column, fastAlpha: Double, slowAlpha: Double,
+      lookback: Int): DataFrame =
+    rows
+      .withColumn("ewma_fast", ewmaFold(frame, fastAlpha, lookback))
+      .withColumn("ewma_slow", ewmaFold(frame, slowAlpha, lookback))
+      .withColumn("macd", round(col("ewma_fast") - col("ewma_slow"), 6))
+
+  /** Output/scratch names both EWMA variants claim; an input already using
+    * one would be silently clobbered (then dropped) — fail loudly instead.
+    */
+  private def requireNoReservedEwmaColumns(rows: DataFrame): Unit = {
+    val reserved = Set(
+      "__xs", "__xs_local", "__frame", "__ctx", "__tail", "__rn", "__cnt",
+      "__sym", "__ts", "__tie", "__chunk", "ewma_fast", "ewma_slow", "macd")
+    val clash = rows.columns.toSet.intersect(reserved)
+    require(
+      clash.isEmpty,
+      s"input already defines reserved EWMA column(s): ${clash.mkString(", ")}")
   }
 
   /** W9 (extension): bounded-lookback EWMA features — the online exponential
@@ -456,67 +449,9 @@ object Rolling {
     * identical to the rest of the rolling family; the per-row frame list is
     * bounded at `lookback` doubles (32 ⇒ 256 bytes) regardless of data
     * volume, and the fold is codegen'd per row with zero extra shuffle.
-    * The w6b boundary-band chunk stitch applies unchanged if a single key
-    * dominates (replicate the trailing `lookback−1` rows into the next
-    * chunk).
+    * When a single key dominates, [[ewmaFeaturesBucketed]] computes the
+    * same output over (symbol, time-chunk) partitions.
     */
-  /** W9 default parameters. [[graft.queries.MarketQueries]] derives the
-    * oracle SQL's frame size and alpha/complement literals from these (the
-    * same way `duckBucket` shares hash params), so the query wiring and the
-    * oracle cannot silently drift apart.
-    */
-  val EwmaFastAlpha = 0.25
-  val EwmaSlowAlpha = 0.0625
-  val EwmaLookback = 32
-
-  /** 1−α must round-trip exactly (true for dyadic α: 1/4, 1/16, …) so a
-    * human writing the complement as a literal in oracle SQL gets the same
-    * double the fold uses. `(1−a)+a == 1` is too weak (0.3 passes it by
-    * re-rounding); the inverse subtraction is the faithful test.
-    */
-  private def requireExactAlphas(fastAlpha: Double, slowAlpha: Double): Unit = {
-    def exactComplement(a: Double): Boolean = 1.0 - (1.0 - a) == a
-    require(
-      exactComplement(fastAlpha) && exactComplement(slowAlpha),
-      s"alphas must have exactly representable complements (got $fastAlpha, $slowAlpha)")
-  }
-
-  /** collect_list silently DROPS nulls while DuckDB's `list()` window
-    * aggregate keeps them, so a null price would shift the Spark frame one
-    * slot and silently desync lookback alignment from the oracle. The EWMA
-    * contract is therefore non-null price, enforced loudly per row (the
-    * Corpus precondition style) instead of diverging quietly.
-    */
-  private def nonNullPrice(price: Column): Column =
-    coalesce(price, raise_error(lit("ewmaFeatures: null price")).cast("double"))
-
-  /** The EWMA left fold `y₀ = xs(1); yₜ = (1−α)·yₜ₋₁ + α·xs(t)` over an
-    * already-materialized frame array — the identical IEEE double sequence
-    * DuckDB's `list_reduce` executes.
-    */
-  private def ewmaFold(xs: Column, alpha: Double, lookback: Int): Column = {
-    val decay = lit(1.0 - alpha)
-    round(
-      aggregate(
-        slice(xs, 2, lookback - 1),
-        element_at(xs, 1),
-        (acc, x) => acc * decay + x * lit(alpha)),
-      6)
-  }
-
-  /** Output/scratch names both EWMA variants claim; an input already using
-    * one would be silently clobbered (then dropped) — fail loudly instead.
-    */
-  private def requireNoReservedEwmaColumns(rows: DataFrame): Unit = {
-    val reserved = Set(
-      "__xs", "__xs_local", "__frame", "__ctx", "__tail", "__rn", "__cnt",
-      "__sym", "__ts", "__tie", "__chunk", "ewma_fast", "ewma_slow", "macd")
-    val clash = rows.columns.toSet.intersect(reserved)
-    require(
-      clash.isEmpty,
-      s"input already defines reserved EWMA column(s): ${clash.mkString(", ")}")
-  }
-
   def ewmaFeatures(
       rows: DataFrame,
       symbol: Column,
@@ -532,10 +467,8 @@ object Rolling {
     val w = Window.partitionBy(symbol).orderBy(tsMs, tieBreak)
       .rowsBetween(-(lookback - 1), Window.currentRow)
     rows
-      .withColumn("__xs", collect_list(nonNullPrice(price)).over(w))
-      .withColumn("ewma_fast", ewmaFold(col("__xs"), fastAlpha, lookback))
-      .withColumn("ewma_slow", ewmaFold(col("__xs"), slowAlpha, lookback))
-      .withColumn("macd", round(col("ewma_fast") - col("ewma_slow"), 6))
+      .withColumn("__xs", framePrices(price, w))
+      .transform(withEwma(_, col("__xs"), fastAlpha, slowAlpha, lookback))
       .drop("__xs")
   }
 
@@ -593,46 +526,26 @@ object Rolling {
     // trailing n elements (all of them if the array is shorter)
     def lastN(arr: Column, n: Int): Column =
       slice(arr, greatest(size(arr) - (n - 1), lit(1)), lit(n))
-    val base = rows
-      .withColumn("__sym", symbol)
-      .withColumn("__ts", tsMs)
-      .withColumn("__tie", tieBreak)
-      .withColumn("__chunk", graft.functions.TimeUnits.bucketIndex(tsMs, chunkMs))
-    val wFrame = Window
-      .partitionBy(col("__sym"), col("__chunk"))
-      .orderBy(col("__ts"), col("__tie"))
-      .rowsBetween(-(lookback - 1), Window.currentRow)
-    val wSeqChunk = Window
-      .partitionBy(col("__sym"), col("__chunk"))
-      .orderBy(col("__ts"), col("__tie"))
-    val wholeChunk = Window.partitionBy(col("__sym"), col("__chunk"))
-    val stagePlan = base
-      .withColumn("__xs_local", collect_list(nonNullPrice(price)).over(wFrame))
-      .withColumn("__rn", row_number().over(wSeqChunk))
-      .withColumn("__cnt", count(lit(1)).over(wholeChunk))
-      // ordering scratch is consumed by the windows above; keep it out of
-      // the materialized stage
-      .drop("__ts", "__tie")
-    val stage =
-      if (!materializeSharedStage) stagePlan
-      else Materialize.stage(stagePlan, checkpointDir, eager = false)
-    // One row per non-empty chunk: the last row's local frame already holds
-    // the chunk's trailing min(cnt, lookback) prices in order — its last
-    // ctxLen values ARE the tail.
-    val tails = stage
-      .filter(col("__rn") === col("__cnt"))
-      .select(
-        col("__sym"), col("__chunk"),
-        lastN(col("__xs_local"), ctxLen).as("__tail"))
-    val wChunks = Window
-      .partitionBy(col("__sym"))
-      .orderBy(col("__chunk"))
-      .rowsBetween(-ctxLen, -1)
+    val stage = sharedStage(
+      chunked(rows, symbol, tsMs, Some(tieBreak), chunkMs)
+        .withColumn(
+          "__xs_local",
+          framePrices(price, chunkSeq.rowsBetween(-(lookback - 1), Window.currentRow)))
+        .transform(withChunkPosition)
+        // ordering scratch is consumed by the windows above; keep it out of
+        // the materialized stage
+        .drop("__ts", "__tie"),
+      materializeSharedStage, checkpointDir)
+    // the last row's local frame holds the chunk's trailing min(cnt,
+    // lookback) prices in order — its last ctxLen values ARE the tail
+    val tails = chunkTails(stage, lastN(col("__xs_local"), ctxLen))
     val ctx = tails
       .withColumn(
         "__ctx",
         lastN(
-          flatten(coalesce(collect_list(col("__tail")).over(wChunks), emptyTails)),
+          flatten(
+            coalesce(collect_list(col("__tail")).over(chunkOrder.rowsBetween(-ctxLen, -1)),
+              emptyTails)),
           ctxLen))
       .select(col("__sym"), col("__chunk"), col("__ctx"))
     stage
@@ -642,9 +555,78 @@ object Rolling {
         // deep-in-chunk rows never touch the context array
         when(size(col("__xs_local")) >= lookback, col("__xs_local"))
           .otherwise(lastN(concat(col("__ctx"), col("__xs_local")), lookback)))
-      .withColumn("ewma_fast", ewmaFold(col("__frame"), fastAlpha, lookback))
-      .withColumn("ewma_slow", ewmaFold(col("__frame"), slowAlpha, lookback))
-      .withColumn("macd", round(col("ewma_fast") - col("ewma_slow"), 6))
+      .transform(withEwma(_, col("__frame"), fastAlpha, slowAlpha, lookback))
       .drop("__xs_local", "__rn", "__cnt", "__ctx", "__frame", "__chunk", "__sym")
   }
+
+  // The chunk machinery every bucketed plan shares.
+
+  /** Adds the bucketed plans' scratch keys: `__sym`, `__ts`, `__tie` (when
+    * the plan orders ties) and `__chunk`, the row's `chunkMs` time bucket.
+    */
+  private def chunked(
+      rows: DataFrame, symbol: Column, tsMs: Column, tieBreak: Option[Column],
+      chunkMs: Long): DataFrame = {
+    val keyed = rows.withColumn("__sym", symbol).withColumn("__ts", tsMs)
+    tieBreak.fold(keyed)(keyed.withColumn("__tie", _))
+      .withColumn("__chunk", graft.functions.TimeUnits.bucketIndex(tsMs, chunkMs))
+  }
+
+  private def chunkPartition: WindowSpec = Window.partitionBy(col("__sym"), col("__chunk"))
+
+  /** The chunk-local counterpart of the per-symbol `(ts, tieBreak)` order. */
+  private def chunkSeq: WindowSpec = chunkPartition.orderBy(col("__ts"), col("__tie"))
+
+  /** The chunk-local range frame `[ts + from, ts + to]`. */
+  private def chunkFrame(from: Long, to: Long): WindowSpec =
+    chunkPartition.orderBy(col("__ts")).rangeBetween(from, to)
+
+  /** Each symbol's chunks in time order: the one per-symbol window of a
+    * stitch, run over one row per non-empty chunk.
+    */
+  private def chunkOrder: WindowSpec = Window.partitionBy(col("__sym")).orderBy(col("__chunk"))
+
+  /** Range-frame boundary band: every row for which `inBand` holds also
+    * goes into the neighbouring chunk (`step` +1 the next one, −1 the
+    * previous one) as a context row. `__chunk` becomes the chunk the copy
+    * lives in and `__owner` marks the original, so frames compute
+    * chunk-locally and a filter on `__owner` drops the context. A single
+    * explode — one pass over the input, not a self-union, which would
+    * execute its lineage twice.
+    */
+  private def withBandContext(rows: DataFrame, inBand: Column, step: Int): DataFrame = {
+    val home = col("__chunk")
+    rows
+      .withColumn("__dests", when(inBand, array(home, home + step)).otherwise(array(home)))
+      .withColumn("__home", home)
+      .withColumn("__chunk", explode(col("__dests")))
+      .withColumn("__owner", col("__chunk") === col("__home"))
+      .drop("__dests", "__home")
+  }
+
+  /** Adds `__rn`, the row's position in its chunk's (ts, tieBreak) order,
+    * and `__cnt`, the chunk's row count: what the tail stitch selects on.
+    */
+  private def withChunkPosition(rows: DataFrame): DataFrame =
+    rows
+      .withColumn("__rn", row_number().over(chunkSeq))
+      .withColumn("__cnt", count(lit(1)).over(chunkPartition))
+
+  /** One `__tail` row per non-empty chunk, taken off the chunk's LAST row,
+    * which already carries everything the next chunks need from it (its
+    * value and its chunk-local lags or frame) — a filter and a select, no
+    * aggregation (the collect_list formulation cost two exchanges and an
+    * ObjectHashAggregate pair for the same ≤2 values).
+    */
+  private def chunkTails(stage: DataFrame, tail: Column): DataFrame =
+    stage
+      .filter(col("__rn") === col("__cnt"))
+      .select(col("__sym"), col("__chunk"), tail.as("__tail"))
+
+  /** The windowed stage a tail stitch reads twice, materialized once unless
+    * `materialize` is off (see [[momentumBucketed]]).
+    */
+  private def sharedStage(
+      plan: DataFrame, materialize: Boolean, checkpointDir: Option[String]): DataFrame =
+    if (materialize) Materialize.stage(plan, checkpointDir, eager = false) else plan
 }

@@ -35,7 +35,10 @@ object Windows {
   }
 
   /** W2/A9: latest row per key (`DISTINCT ON (key) ... ORDER BY ts DESC`).
-    * Deterministic under ts ties via the descending tiebreak.
+    * Deterministic under ts ties via the descending tiebreak — which also
+    * makes it the K4 `foreachBatch` sink body: replays (at-least-once)
+    * converge, the contract of the reference's Redis `SETEX ...:latest`
+    * (`redis_writer.py:67-112`).
     */
   def latestPerKey(rows: DataFrame, key: Column, tsMs: Column, tieBreak: Column): DataFrame = {
     val w = Window.partitionBy(key).orderBy(tsMs.desc, tieBreak.desc)

@@ -115,32 +115,6 @@ object SbeFrameSource {
     } finally in.close()
   }
 
-  /** Is `target` a frame boundary of `st` — byte 0, or the position just
-    * past a complete frame? Walks length prefixes until reaching or passing
-    * `target`. Used to validate a legacy index-translated offset: a
-    * tailBytes that is NOT a boundary of the candidate file proves the
-    * index mapping shifted (the boundary was recorded against a different
-    * file), where resuming would skip files and mis-seek mid-frame.
-    */
-  private[sources] def isFrameBoundary(
-      f: FileSystem, st: FileStatus, target: Long): Boolean = {
-    if (target == 0L) return true
-    if (target > st.getLen) return false
-    val in = new DataInputStream(new java.io.BufferedInputStream(f.open(st.getPath)))
-    try {
-      var pos = 0L
-      while (pos < target) {
-        if (pos + 4 > st.getLen) return false // torn tail before target
-        val frameLen = in.readInt().toLong
-        if (frameLen < 0 || frameLen > MaxFrameBytes) return false
-        if (pos + 4 + frameLen > st.getLen) return false
-        in.skipNBytes(frameLen)
-        pos += 4 + frameLen
-      }
-      pos == target
-    } finally in.close()
-  }
-
   /** Capture-side writer (ingest/test fixture, not the query hot path):
     * one length-prefixed frame file.
     */
@@ -268,55 +242,18 @@ class SbeFrameMicroBatchStream(
       case _ => avail
     }
   }
-  /** Current format: `{"file":name,"tailBytes":M}`. Checkpoints written
-    * before the name-anchored format carry `{"files":N,"tailBytes":M}` —
-    * N files fully consumed by INDEX, tailing the (N+1)th. A legacy index
-    * is translated into the Nth sorted file name (same semantics) so an
-    * existing checkpoint resumes at its exact boundary instead of silently
-    * decoding to the empty offset and replanning every consumed file
-    * (duplicate ingestion downstream).
-    *
-    * The index is only meaningful against the listing it was recorded
-    * under — a retention delete of any earlier file shifts every index (the
-    * corruption that motivated name anchoring), and no listing can reveal
-    * that after the fact. Defenses, each failing the restart LOUDLY rather
-    * than guessing: an index past the current listing throws; a non-zero
-    * tailBytes must be an exact frame boundary of the candidate file
-    * (boundaries are sparse, so a shifted mapping almost surely lands
-    * mid-frame and is caught; an unshifted mapping always validates); and
-    * JSON matching neither format throws. tailBytes == 0 on a shifted
-    * index remains undetectable in principle — that case re-ingests or
-    * skips whole files only if files were deleted mid-era, which the
-    * legacy format never supported in the first place.
+  /** `{"file":name,"tailBytes":M}`. Anything else — the index-counted
+    * `{"files":N,"tailBytes":M}` of early checkpoints included — fails the
+    * restart loudly instead of decoding to the empty offset and replanning
+    * every consumed file (duplicate ingestion downstream); an index is only
+    * meaningful against the listing it was recorded under, which a
+    * retention delete shifts.
     */
   override def deserializeOffset(json: String): Offset = {
     val fileRe = """\"file\":\"([^\"]*)\"""".r
     val tailRe = """\"tailBytes\":(-?\d+)""".r
-    val legacyRe = """\"files\":(\d+)""".r
     val tail = tailRe.findFirstMatchIn(json).map(_.group(1).toLong)
     fileRe.findFirstMatchIn(json).map(m => SbeFrameOffset(m.group(1), tail.getOrElse(0L)))
-      .orElse(legacyRe.findFirstMatchIn(json).map { m =>
-        val n = m.group(1).toInt
-        val t = tail.getOrElse(0L)
-        if (n == 0 && t == 0L) SbeFrameOffset("", 0L)
-        else {
-          val files = SbeFrameSource.listFrameFiles(path, conf)
-          if (n >= files.length) throw new IllegalStateException(
-            s"sbe-frames: legacy offset index $n does not map onto the " +
-              s"${files.length} files now under $path (consumed files deleted " +
-              "by retention?) — cannot translate safely; clear the checkpoint " +
-              "to choose an explicit restart point")
-          val st = files(n)
-          if (t > 0 && !SbeFrameSource.isFrameBoundary(
-              GraftFs.fs(st.getPath, conf), st, t))
-            throw new IllegalStateException(
-              s"sbe-frames: legacy offset tailBytes=$t is not a frame boundary " +
-                s"of ${st.getPath.getName} — the index mapping has shifted " +
-                "(consumed files deleted by retention?); cannot translate " +
-                "safely; clear the checkpoint to choose an explicit restart point")
-          SbeFrameOffset(st.getPath.getName, t)
-        }
-      })
       .getOrElse(throw new IllegalArgumentException(
         s"sbe-frames: unrecognized offset JSON: $json"))
   }

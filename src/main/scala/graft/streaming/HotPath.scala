@@ -104,20 +104,4 @@ object HotPath {
         t("symbol"), t("ts"), t("price"), q("qts"), q("mid"),
         (t("price") - q("mid")).as("price_minus_mid"))
   }
-
-  /** K4-analog: idempotent latest-row-per-key sink body for `foreachBatch`.
-    * Each micro-batch reduces to one row per key before the write, so replays
-    * (at-least-once) converge — same contract as the reference's Redis
-    * `SETEX ...:latest` (`redis_writer.py:67-112`). `tieBreak` makes the
-    * choice DETERMINISTIC under equal timestamps — without it a replayed
-    * attempt could pick a different same-ts row and the sink would not
-    * converge (the contract the whole helper exists for).
-    */
-  def latestPerKeyBatch(
-      batch: DataFrame, key: Column, tsMs: Column, tieBreak: Column): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(key)
-      .orderBy(tsMs.desc, tieBreak.desc)
-    batch.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Bronze
 import graft.streaming.HotPath
-import graft.operators.Multimodal
+import graft.operators.{Multimodal, Windows}
 import graft.functions.Sbe
 
 class BronzeStreamingSpec extends SparkSpec {
@@ -148,8 +148,8 @@ class BronzeStreamingSpec extends SparkSpec {
   test("HotPath: latest-per-key batch sink is idempotent") {
     val batch = Seq(("BTC", 1L, 1.0), ("BTC", 2L, 2.0), ("ETH", 1L, 3.0))
       .toDF("symbol", "ts_ms", "v")
-    val once = HotPath.latestPerKeyBatch(batch, col("symbol"), col("ts_ms"), col("v"))
-    val twice = HotPath.latestPerKeyBatch(once, col("symbol"), col("ts_ms"), col("v"))
+    val once = Windows.latestPerKey(batch, col("symbol"), col("ts_ms"), col("v"))
+    val twice = Windows.latestPerKey(once, col("symbol"), col("ts_ms"), col("v"))
     assert(twice.orderBy("symbol").select("v").as[Double].collect().toSeq === Seq(2.0, 3.0))
   }
 

@@ -50,7 +50,7 @@ class HotPathIntegrationSpec extends SparkSpec {
     assert(math.abs(out(0).getAs[Double]("vwap") - 101.0) < 1e-9)
 
     // latest-feature view over the emitted feature rows (K4 analog)
-    val latest = HotPath.latestPerKeyBatch(
+    val latest = graft.operators.Windows.latestPerKey(
       spark.table("hotpath"), col("symbol"), unix_millis(col("open_time")),
       tieBreak = col("trade_count"))
     assert(latest.count() === 1L)

@@ -167,28 +167,30 @@ class PlanQualitySpec extends SparkSpec {
     assert(a5b.exceptAll(a5).isEmpty && a5.exceptAll(a5b).isEmpty)
   }
 
+  // w6b/w9b default plans hide the big stage behind a localCheckpoint scan,
+  // so their shapes are asserted on the materializeSharedStage=false twins
+  // (same logical plan, no checkpoint barrier).
+  private def w6bPlain: String = graft.operators.Rolling.momentumBucketed(
+    Tables.trades(spark, sf),
+    symbol = org.apache.spark.sql.functions.col("symbol"),
+    tsMs = org.apache.spark.sql.functions.col("ts_ms"),
+    price = org.apache.spark.sql.functions.col("price"),
+    tieBreak = org.apache.spark.sql.functions.col("trade_id"),
+    windowMs = 300000L, chunkMs = 3600000L,
+    materializeSharedStage = false)
+    .queryExecution.executedPlan.toString
+
+  private def w9bPlain: String = graft.operators.Rolling.ewmaFeaturesBucketed(
+    Tables.trades(spark, sf).select("symbol", "ts_ms", "trade_id", "price"),
+    symbol = org.apache.spark.sql.functions.col("symbol"),
+    tsMs = org.apache.spark.sql.functions.col("ts_ms"),
+    price = org.apache.spark.sql.functions.col("price"),
+    tieBreak = org.apache.spark.sql.functions.col("trade_id"),
+    chunkMs = 3600000L,
+    materializeSharedStage = false)
+    .queryExecution.executedPlan.toString
+
   test("w5b/w6b/w9b bucketed windows partition by (symbol, chunk), not symbol alone") {
-    // w6b/w9b default plans hide the big stage behind a localCheckpoint scan,
-    // so their shapes are asserted on the materializeSharedStage=false twins
-    // (same logical plan, no checkpoint barrier).
-    val w6bPlain = graft.operators.Rolling.momentumBucketed(
-      Tables.trades(spark, sf),
-      symbol = org.apache.spark.sql.functions.col("symbol"),
-      tsMs = org.apache.spark.sql.functions.col("ts_ms"),
-      price = org.apache.spark.sql.functions.col("price"),
-      tieBreak = org.apache.spark.sql.functions.col("trade_id"),
-      windowMs = 300000L, chunkMs = 3600000L,
-      materializeSharedStage = false)
-      .queryExecution.executedPlan.toString
-    val w9bPlain = graft.operators.Rolling.ewmaFeaturesBucketed(
-      Tables.trades(spark, sf).select("symbol", "ts_ms", "trade_id", "price"),
-      symbol = org.apache.spark.sql.functions.col("symbol"),
-      tsMs = org.apache.spark.sql.functions.col("ts_ms"),
-      price = org.apache.spark.sql.functions.col("price"),
-      tieBreak = org.apache.spark.sql.functions.col("trade_id"),
-      chunkMs = 3600000L,
-      materializeSharedStage = false)
-      .queryExecution.executedPlan.toString
     for ((name, p) <- Seq(
         "w5b_path_stats_bucketed" -> plan("w5b_path_stats_bucketed"),
         "w6b_momentum_bucketed(materialize=false)" -> w6bPlain,
@@ -197,6 +199,29 @@ class PlanQualitySpec extends SparkSpec {
       assert(
         "hashpartitioning\\([^)]*__chunk".r.findFirstIn(p).nonEmpty,
         s"$name: ${p.take(800)}")
+    }
+  }
+
+  test("rolling plans keep their shuffle and broadcast exchange counts") {
+    // (shuffle exchanges, broadcast exchanges) per plan. Every per-symbol
+    // fork shuffles once on symbol. The bucketed stitches do not reuse the
+    // (symbol, chunk) exchange of the rows they stitch: a5b's per-chunk
+    // summary re-reads the scan under an exchange of its own (column
+    // pruning makes the subtree differ), and the w6b/w9b twins plan the
+    // windowed stage again under the tail side (the materialized default
+    // runs it once). Each stitch adds one symbol exchange for its per-chunk
+    // lag and one broadcast of the per-chunk table.
+    for ((name, p, want) <- Seq(
+        ("a5_rolling_stats", plan("a5_rolling_stats"), (1, 0)),
+        ("a5b_rolling_stats_bucketed", plan("a5b_rolling_stats_bucketed"), (4, 1)),
+        ("w5_path_stats", plan("w5_path_stats"), (1, 0)),
+        ("w5b_path_stats_bucketed", plan("w5b_path_stats_bucketed"), (1, 0)),
+        ("w6_momentum", plan("w6_momentum"), (1, 0)),
+        ("w6b_momentum_bucketed(materialize=false)", w6bPlain, (3, 1)),
+        ("w9_ewma_macd", plan("w9_ewma_macd"), (1, 0)),
+        ("w9b_ewma_macd_bucketed(materialize=false)", w9bPlain, (3, 1)))) {
+      val got = ("\\bExchange ".r.findAllIn(p).size, "BroadcastExchange ".r.findAllIn(p).size)
+      assert(got === want, s"$name:\n${p.take(3000)}")
     }
   }
 

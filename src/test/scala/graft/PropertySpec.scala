@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -146,33 +147,65 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  for (seed <- Seq(5L, 23L)) {
-    test(s"A5b bucketed trailing stats equal the per-symbol window on adversarial data, seed $seed") {
-      val rnd = new scala.util.Random(seed)
-      val windowMs = 1000L
-      val chunkMs = 2000L
-      // adversarial timestamps: exact chunk boundaries, boundary-band edges
-      // (chunk*chunkMs - windowMs), duplicate ts, and multi-chunk silences
-      val ts = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var t = 0L
-      (0 until 400).foreach { _ =>
-        t += (rnd.nextInt(5) match {
-          case 0 => 0L // duplicate timestamp
-          case 1 => chunkMs - (t % chunkMs) // land exactly on a boundary
-          case 2 => (chunkMs * 3) + rnd.nextInt(1000) // skip >1 empty chunk
-          case _ => rnd.nextInt(700).toLong + 1L
-        })
-        ts += t
-      }
-      val rows = ts.zipWithIndex.map { case (tms, i) =>
-        (if (i % 7 == 0) "ETH" else "BTC", tms, 10.0 + rnd.nextDouble() * 90.0,
-          0.1 + rnd.nextDouble() * 9.9, i.toLong)
-      }.toSeq
-      val df = rows.toDF("symbol", "ts_ms", "price", "qty", "trade_id")
-      val plain = Rolling.trailingStats(
-        df, $"symbol", $"ts_ms", $"price", $"qty", $"trade_id", windowMs)
-      val bucketed = Rolling.trailingStatsBucketed(
-        df, $"symbol", $"ts_ms", $"price", $"qty", $"trade_id", windowMs, chunkMs)
+  // chunk = 2.5 windows: the trailing and leading band edges differ
+  private val (windowMs, chunkMs) = (1000L, 2500L)
+
+  /** Trades built to break a chunk stitch: rows on chunk edges and on the
+    * band edges `chunk*chunkMs ± windowMs` (each also a millisecond either
+    * side), duplicate timestamps and silences of more than one chunk; one
+    * row in seven on a second symbol.
+    */
+  private def adversarialTrades(seed: Long): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val ts = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var t = 0L
+    // the step to the first `target + k*chunkMs` at or after t
+    def stepTo(target: Long): Long = {
+      var x = target
+      while (x < t) x += chunkMs
+      x - t
+    }
+    (0 until 400).foreach { _ =>
+      val jitter = rnd.nextInt(3) - 1L
+      t += (rnd.nextInt(7) match {
+        case 0 => 0L // duplicate timestamp
+        case 1 => stepTo((t / chunkMs + 1) * chunkMs + jitter) // chunk edge
+        case 2 => stepTo((t / chunkMs + 1) * chunkMs - windowMs + jitter) // trailing band edge
+        case 3 => stepTo((t / chunkMs) * chunkMs + windowMs + jitter) // leading band edge
+        case 4 => (chunkMs * 3) + rnd.nextInt(1000) // skip >1 empty chunk
+        case _ => rnd.nextInt(700).toLong + 1L
+      })
+      ts += t
+    }
+    ts.zipWithIndex.map { case (tms, i) =>
+      (if (i % 7 == 0) "ETH" else "BTC", tms, 10.0 + rnd.nextDouble() * 90.0,
+        0.1 + rnd.nextDouble() * 9.9, i.toLong)
+    }.toSeq.toDF("symbol", "ts_ms", "price", "qty", "trade_id")
+  }
+
+  // each bucketed fork next to its per-symbol twin; the forward horizon and
+  // the EWMA's 4-row frame reach across chunks too
+  private val bucketedForks: Seq[(String, DataFrame => (DataFrame, DataFrame))] = {
+    val (sym, ts, price, qty, tie) =
+      (col("symbol"), col("ts_ms"), col("price"), col("qty"), col("trade_id"))
+    Seq(
+      "A5b bucketed trailing stats" -> (df => (
+        Rolling.trailingStats(df, sym, ts, price, qty, tie, windowMs),
+        Rolling.trailingStatsBucketed(df, sym, ts, price, qty, tie, windowMs, chunkMs))),
+      "W5b bucketed forward path stats" -> (df => (
+        Rolling.forwardPathStats(df, sym, ts, price, qty, windowMs),
+        Rolling.forwardPathStatsBucketed(df, sym, ts, price, qty, windowMs, chunkMs))),
+      "W6b bucketed momentum features" -> (df => (
+        Rolling.momentum(df, sym, ts, price, tie, windowMs),
+        Rolling.momentumBucketed(df, sym, ts, price, tie, windowMs, chunkMs))),
+      "W9b bucketed EWMA features" -> (df => (
+        Rolling.ewmaFeatures(df, sym, ts, price, tie, lookback = 4),
+        Rolling.ewmaFeaturesBucketed(df, sym, ts, price, tie, lookback = 4, chunkMs = chunkMs))))
+  }
+
+  for ((fork, plans) <- bucketedForks; seed <- Seq(5L, 23L)) {
+    test(s"$fork equal the per-symbol window on adversarial data, seed $seed") {
+      val (plain, bucketed) = plans(adversarialTrades(seed))
       val cols = plain.columns.toSeq
       val a = plain.select(cols.map(col): _*)
       val b = bucketed.select(cols.map(col): _*)

@@ -93,28 +93,21 @@ class SbeFrameSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("legacy index-counted checkpoint offsets translate to name-anchored ones") {
+  test("checkpoint offsets: name-anchored pass through, legacy index-counted fail") {
     val feed = mkFeed() // cap_00000 (2 frames), cap_00001 (1 frame)
     val stream = new graft.sources.SbeFrameMicroBatchStream(feed.toString, None)
-    // current name-anchored format passes through untouched
+    // the name-anchored format passes through untouched
     assert(stream.deserializeOffset("""{"file":"cap_00001.sbef","tailBytes":42}""")
       === graft.sources.SbeFrameOffset("cap_00001.sbef", 42L))
-    // r5-era format: 1 file fully consumed by index + 42 bytes of the next —
-    // resumes at the same boundary, not from scratch (duplicate ingestion)
-    assert(stream.deserializeOffset("""{"files":1,"tailBytes":42}""")
-      === graft.sources.SbeFrameOffset("cap_00001.sbef", 42L))
-    assert(stream.deserializeOffset("""{"files":0,"tailBytes":0}""")
-      === graft.sources.SbeFrameOffset("", 0L))
-    // an index beyond the surviving files (retention) or unparseable JSON
-    // must fail the restart loudly, never default to the empty offset
-    intercept[IllegalStateException](
-      stream.deserializeOffset("""{"files":7,"tailBytes":9}"""))
-    intercept[IllegalArgumentException](stream.deserializeOffset("""{"wat":true}"""))
-    // a tailBytes that is NOT a frame boundary of the candidate file proves
-    // the index mapping shifted (e.g. retention deleted an earlier file) —
-    // resuming there would mis-seek mid-frame, so it must fail loudly too
-    intercept[IllegalStateException](
-      stream.deserializeOffset("""{"files":1,"tailBytes":41}"""))
+    // a legacy index-counted offset or unparseable JSON must fail the
+    // restart loudly, never default to the empty offset (replaying every
+    // consumed file)
+    for (json <- Seq(
+        """{"files":1,"tailBytes":42}""", """{"files":0,"tailBytes":0}""",
+        """{"wat":true}""")) {
+      val e = intercept[IllegalArgumentException](stream.deserializeOffset(json))
+      assert(e.getMessage.contains("unrecognized offset JSON"), e.getMessage)
+    }
   }
 
   test("full hot path on the connector: frames -> decode -> event-time windows") {

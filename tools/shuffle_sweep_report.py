@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Compose shufflesweep100.json from the per-partition-count bench records
-(the sweep step of tools/run_measurements.sh): the char family at the 100x
+of a shuffle-partition sweep (one Bench subset run per pinned
+SPARK_GRAFT_SHUFFLE_PARTITIONS value): the char family at the 100x
 slice with spark.sql.shuffle.partitions PINNED (AQE coalescing off) at each
 swept count, 3 forked rounds per point under the ForkedRounds disturbance
 guard — whose per-point outcome (discards, totals, residual flag) is
