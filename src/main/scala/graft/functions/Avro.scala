@@ -11,8 +11,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{codegen, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,16 +23,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * builds the same surface directly on Avro's public `GenericDatumReader`/
   * `GenericDatumWriter` binary codec.
   *
-  * Shape mirrors [[Sbe]]: decode is a Catalyst `Expression` over a binary
-  * column with a `doGenCode` static-call path (stays inside whole-stage
-  * codegen, no per-row interpreted dispatch), returning the record struct or
-  * null on undecodable bytes — the replay-side behavior a consumer wants when
-  * a stream segment is corrupt. Encoders are UDFs: fixture/ingest side only,
-  * never in a measured query plan.
+  * One schema-driven codec serves every record type: [[AvroDecode]] and
+  * [[AvroEncodeExpr]] take the schema JSON at plan time, map it to the
+  * Spark type ([[sparkType]]) and call a per-expression kernel from
+  * generated code (stays inside whole-stage codegen, like [[Sbe]]). Decode
+  * returns the record struct, or null on undecodable bytes — the
+  * replay-side behavior a consumer wants when a stream segment is corrupt.
+  * Encode binds struct fields to record fields by position and fails the
+  * task on a null in a non-nullable field.
   *
   * Thread-safety: `GenericDatumReader.read` resolves per-thread (Avro creates
   * a fresh `ResolvingDecoder` for threads other than the reader's creator),
-  * so the shared reader instances are safe under local[32].
+  * so a kernel shared by task threads is safe under local[32].
   */
 object Avro {
 
@@ -72,172 +73,13 @@ object Avro {
       |{"name":"source","type":"string"}]}""".stripMargin
 
   val TradeSchema: Schema = new Schema.Parser().parse(TradeSchemaJson)
-  val BbaSchema: Schema = new Schema.Parser().parse(BbaSchemaJson)
-  val DepthSchema: Schema = new Schema.Parser().parse(DepthSchemaJson)
-
-  private val tradeReader = new GenericDatumReader[GenericRecord](TradeSchema)
-  private val bbaReader = new GenericDatumReader[GenericRecord](BbaSchema)
-  private val depthReader = new GenericDatumReader[GenericRecord](DepthSchema)
-
-  /** Spark-side struct types (1:1 with the Avro record fields). */
-  val tradeType: StructType = StructType(Seq(
-    StructField("symbol", StringType),
-    StructField("event_ts", LongType),
-    StructField("ingest_ts", LongType),
-    StructField("trade_id", LongType),
-    StructField("price", DoubleType),
-    StructField("qty", DoubleType),
-    StructField("is_buyer_maker", BooleanType),
-    StructField("source", StringType)))
-
-  val bbaType: StructType = StructType(Seq(
-    StructField("symbol", StringType),
-    StructField("event_ts", LongType),
-    StructField("ingest_ts", LongType),
-    StructField("bid_px", DoubleType),
-    StructField("bid_sz", DoubleType),
-    StructField("ask_px", DoubleType),
-    StructField("ask_sz", DoubleType),
-    StructField("source", StringType)))
-
-  val depthType: StructType = StructType(Seq(
-    StructField("symbol", StringType),
-    StructField("event_ts", LongType),
-    StructField("ingest_ts", LongType),
-    StructField("bids", ArrayType(ArrayType(StringType))),
-    StructField("asks", ArrayType(ArrayType(StringType))),
-    StructField("source", StringType)))
 
   private def utf8(o: AnyRef): UTF8String = o match {
     case u: org.apache.avro.util.Utf8 => UTF8String.fromBytes(u.getBytes, 0, u.getByteLength)
     case s => UTF8String.fromString(String.valueOf(s))
   }
 
-  private def read(reader: GenericDatumReader[GenericRecord], bytes: Array[Byte]): GenericRecord = {
-    val dec = DecoderFactory.get().binaryDecoder(bytes, null)
-    val rec = reader.read(null, dec)
-    // A well-formed frame consumes exactly the record; trailing garbage means
-    // this is not a single-record payload under this schema.
-    if (!dec.isEnd) throw new java.io.IOException("trailing bytes after record")
-    rec
-  }
-
-  // ── decode kernels (shared by interpreted eval and codegen) ──────────────
-
-  def decodeTradeBytes(bytes: Array[Byte]): InternalRow =
-    try {
-      val r = read(tradeReader, bytes)
-      InternalRow(
-        utf8(r.get("symbol")),
-        r.get("event_ts").asInstanceOf[java.lang.Long],
-        r.get("ingest_ts").asInstanceOf[java.lang.Long],
-        r.get("trade_id").asInstanceOf[java.lang.Long],
-        r.get("price").asInstanceOf[java.lang.Double],
-        r.get("qty").asInstanceOf[java.lang.Double],
-        r.get("is_buyer_maker").asInstanceOf[java.lang.Boolean],
-        utf8(r.get("source")))
-    } catch { case _: Exception => null }
-
-  def decodeBbaBytes(bytes: Array[Byte]): InternalRow =
-    try {
-      val r = read(bbaReader, bytes)
-      InternalRow(
-        utf8(r.get("symbol")),
-        r.get("event_ts").asInstanceOf[java.lang.Long],
-        r.get("ingest_ts").asInstanceOf[java.lang.Long],
-        r.get("bid_px").asInstanceOf[java.lang.Double],
-        r.get("bid_sz").asInstanceOf[java.lang.Double],
-        r.get("ask_px").asInstanceOf[java.lang.Double],
-        r.get("ask_sz").asInstanceOf[java.lang.Double],
-        utf8(r.get("source")))
-    } catch { case _: Exception => null }
-
-  def decodeDepthBytes(bytes: Array[Byte]): InternalRow =
-    try {
-      val r = read(depthReader, bytes)
-      def side(o: AnyRef): GenericArrayData = {
-        val outer = o.asInstanceOf[java.util.List[AnyRef]]
-        val levels = new Array[Any](outer.size())
-        var i = 0
-        while (i < outer.size()) {
-          val inner = outer.get(i).asInstanceOf[java.util.List[AnyRef]]
-          val vals = new Array[Any](inner.size())
-          var j = 0
-          while (j < inner.size()) { vals(j) = utf8(inner.get(j)); j += 1 }
-          levels(i) = new GenericArrayData(vals)
-          i += 1
-        }
-        new GenericArrayData(levels)
-      }
-      InternalRow(
-        utf8(r.get("symbol")),
-        r.get("event_ts").asInstanceOf[java.lang.Long],
-        r.get("ingest_ts").asInstanceOf[java.lang.Long],
-        side(r.get("bids")),
-        side(r.get("asks")),
-        utf8(r.get("source")))
-    } catch { case _: Exception => null }
-
-  // ── Catalyst expressions (codegen static-call, like Sbe) ─────────────────
-
-  abstract class AvroDecodeBase extends UnaryExpression {
-    /** Fully-qualified static kernel, e.g. "graft.functions.Avro.decodeTradeBytes". */
-    protected def kernel: String
-    override def nullable: Boolean = true
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext,
-        ev: codegen.ExprCode): codegen.ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      val childGen = child.genCode(ctx)
-      val rowType = classOf[InternalRow].getName
-      ev.copy(code = code"""
-          ${childGen.code}
-          boolean ${ev.isNull} = true;
-          $rowType ${ev.value} = null;
-          if (!${childGen.isNull}) {
-            ${ev.value} = $kernel(${childGen.value});
-            ${ev.isNull} = (${ev.value} == null);
-          }
-        """)
-    }
-  }
-
-  case class AvroTradeDecode(child: Expression) extends AvroDecodeBase {
-    override def dataType: DataType = tradeType
-    override protected def kernel: String = "graft.functions.Avro.decodeTradeBytes"
-    override def nullSafeEval(input: Any): Any =
-      decodeTradeBytes(input.asInstanceOf[Array[Byte]])
-    override protected def withNewChildInternal(newChild: Expression): AvroTradeDecode =
-      copy(child = newChild)
-  }
-
-  case class AvroBbaDecode(child: Expression) extends AvroDecodeBase {
-    override def dataType: DataType = bbaType
-    override protected def kernel: String = "graft.functions.Avro.decodeBbaBytes"
-    override def nullSafeEval(input: Any): Any =
-      decodeBbaBytes(input.asInstanceOf[Array[Byte]])
-    override protected def withNewChildInternal(newChild: Expression): AvroBbaDecode =
-      copy(child = newChild)
-  }
-
-  case class AvroDepthDecode(child: Expression) extends AvroDecodeBase {
-    override def dataType: DataType = depthType
-    override protected def kernel: String = "graft.functions.Avro.decodeDepthBytes"
-    override def nullSafeEval(input: Any): Any =
-      decodeDepthBytes(input.asInstanceOf[Array[Byte]])
-    override protected def withNewChildInternal(newChild: Expression): AvroDepthDecode =
-      copy(child = newChild)
-  }
-
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-  def decodeTrade(c: Column): Column =
-    ColumnBridge.column(AvroTradeDecode(ColumnBridge.expression(c)))
-  def decodeBba(c: Column): Column =
-    ColumnBridge.column(AvroBbaDecode(ColumnBridge.expression(c)))
-  def decodeDepth(c: Column): Column =
-    ColumnBridge.column(AvroDepthDecode(ColumnBridge.expression(c)))
-
-  // ── generic decoder: any record schema + reader/writer resolution ────────
+  // ── decoder: any record schema + reader/writer resolution ────────────────
   // The `from_avro` surface: a decode expression built from schema JSON at
   // plan time, with full Avro schema-resolution semantics (reader-side added
   // fields take their defaults, dropped fields are skipped, matching is by
@@ -422,7 +264,7 @@ object Avro {
     ColumnBridge.column(
       AvroDecode(ColumnBridge.expression(c), writerJson, readerJson))
 
-  // ── generic encoder: the `to_avro` half ──────────────────────────────────
+  // ── encoder: the `to_avro` half ──────────────────────────────────────────
 
   /** Catalyst value → Avro generic datum, shaped by the schema. Inverse of
     * `toCatalyst`; struct fields bind to record fields POSITIONALLY.
@@ -509,9 +351,14 @@ object Avro {
         val sparkFields = dt.asInstanceOf[StructType].fields
         var i = 0
         while (i < fields.size()) {
-          val fs = fields.get(i).schema()
+          val f = fields.get(i)
           val ft = sparkFields(i).dataType
-          rec.put(i, fromCatalyst(row.get(i, ft), fs, ft))
+          val datum = fromCatalyst(row.get(i, ft), f.schema(), ft)
+          // fail here, naming the field: the root cause of Avro's writer NPE does not
+          if (datum == null && !f.schema().isNullable)
+            throw new NullPointerException(
+              s"null value for non-nullable Avro field ${s.getFullName}.${f.name}")
+          rec.put(i, datum)
           i += 1
         }
         rec
@@ -633,68 +480,4 @@ object Avro {
 
   def encode(c: Column, schemaJson: String): Column =
     ColumnBridge.column(AvroEncodeExpr(ColumnBridge.expression(c), schemaJson))
-
-  // ── encoders (fixture/ingest side — UDFs are fine off the hot path) ──────
-
-  private def write(schema: Schema, rec: GenericRecord): Array[Byte] = {
-    val out = new ByteArrayOutputStream(64)
-    val enc = EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
-  }
-
-  def encodeTradeRec(
-      symbol: String, eventTs: Long, ingestTs: Long, tradeId: Long,
-      price: Double, qty: Double, isBuyerMaker: Boolean, source: String): Array[Byte] = {
-    val r = new GenericData.Record(TradeSchema)
-    r.put("symbol", symbol); r.put("event_ts", eventTs); r.put("ingest_ts", ingestTs)
-    r.put("trade_id", tradeId); r.put("price", price); r.put("qty", qty)
-    r.put("is_buyer_maker", isBuyerMaker); r.put("source", source)
-    write(TradeSchema, r)
-  }
-
-  def encodeBbaRec(
-      symbol: String, eventTs: Long, ingestTs: Long,
-      bidPx: Double, bidSz: Double, askPx: Double, askSz: Double,
-      source: String): Array[Byte] = {
-    val r = new GenericData.Record(BbaSchema)
-    r.put("symbol", symbol); r.put("event_ts", eventTs); r.put("ingest_ts", ingestTs)
-    r.put("bid_px", bidPx); r.put("bid_sz", bidSz)
-    r.put("ask_px", askPx); r.put("ask_sz", askSz); r.put("source", source)
-    write(BbaSchema, r)
-  }
-
-  def encodeDepthRec(
-      symbol: String, eventTs: Long, ingestTs: Long,
-      bids: Seq[Seq[String]], asks: Seq[Seq[String]], source: String): Array[Byte] = {
-    val r = new GenericData.Record(DepthSchema)
-    def side(ls: Seq[Seq[String]]): java.util.List[java.util.List[String]] = {
-      val outer = new java.util.ArrayList[java.util.List[String]](ls.length)
-      ls.foreach { l =>
-        val inner = new java.util.ArrayList[String](l.length)
-        l.foreach(inner.add)
-        outer.add(inner)
-      }
-      outer
-    }
-    r.put("symbol", symbol); r.put("event_ts", eventTs); r.put("ingest_ts", ingestTs)
-    r.put("bids", side(bids)); r.put("asks", side(asks)); r.put("source", source)
-    write(DepthSchema, r)
-  }
-
-  val encodeTrade: UserDefinedFunction = udf(
-    (symbol: String, eventTs: Long, ingestTs: Long, tradeId: Long,
-     price: Double, qty: Double, isBuyerMaker: Boolean, source: String) =>
-      encodeTradeRec(symbol, eventTs, ingestTs, tradeId, price, qty, isBuyerMaker, source))
-
-  val encodeBba: UserDefinedFunction = udf(
-    (symbol: String, eventTs: Long, ingestTs: Long,
-     bidPx: Double, bidSz: Double, askPx: Double, askSz: Double, source: String) =>
-      encodeBbaRec(symbol, eventTs, ingestTs, bidPx, bidSz, askPx, askSz, source))
-
-  val encodeDepth: UserDefinedFunction = udf(
-    (symbol: String, eventTs: Long, ingestTs: Long,
-     bids: Seq[Seq[String]], asks: Seq[Seq[String]], source: String) =>
-      encodeDepthRec(symbol, eventTs, ingestTs, bids, asks, source))
 }

@@ -473,31 +473,15 @@ object TextKernels {
       copy(child = newChild)
   }
 
-  /** BPE token count of `t` under an ordered merge table: per whitespace
-    * word (split on ' ', empties kept — the t14 `split(text, " ")`
-    * convention, zero tokens each), start from codepoint symbols and apply
-    * each merge as one left-to-right greedy pass. The trainer
-    * ([[graft.operators.Bpe]]) never emits `a == b` merges, so each pass
-    * has no overlapping matches and greedy == simultaneous — the property
-    * the declarative DuckDB oracle replays. O(word len · merges) per word.
-    */
-  def bpeTokenCount(t: UTF8String, merges: Array[Array[String]]): Long = {
-    val s = t.toString
-    var count = 0L
-    var start = 0
-    var more = true
-    while (more) {
-      val sp = s.indexOf(' ', start)
-      val end = if (sp < 0) s.length else sp
-      count += bpeWordTokens(s, start, end, merges)
-      if (sp < 0) more = false else start = sp + 1
-    }
-    count
-  }
-
-  /** [[bpeTokenCount]] through a [[BpeTable]] memo — the codegen entry point
-    * of [[BpeCountExpr]]; same per-word kernel, each distinct word paying it
-    * once per task instead of once per occurrence.
+  /** BPE token count of `t` under an ordered merge table — the codegen
+    * entry point of [[BpeCountExpr]]: per whitespace word (split on ' ',
+    * empties kept — the t14 `split(text, " ")` convention, zero tokens
+    * each), start from codepoint symbols and apply each merge as one
+    * left-to-right greedy pass. The trainer ([[graft.operators.Bpe]]) never
+    * emits `a == b` merges, so each pass has no overlapping matches and
+    * greedy == simultaneous — the property the declarative DuckDB oracle
+    * replays. O(word len · merges) per distinct word: the [[BpeTable]] memo
+    * runs the merge loop once per word per task, not once per occurrence.
     */
   def bpeTokenCount(t: UTF8String, table: BpeTable): Long = {
     val s = t.toString
@@ -554,11 +538,13 @@ object TextKernels {
     out
   }
 
-  /** One word's BPE tokens — the single merge-application loop shared by
-    * the count kernel, the token-emitting kernel, and (via
-    * bpeSymbols/bpeMergePass) the trainer.
+  /** One word's BPE tokens — the single merge-application loop, run by
+    * [[BpeTable]] for each distinct word (so count, token and marked-token
+    * emission all share it) and built from the trainer's own
+    * bpeSymbols/bpeMergePass. Package-private so the memo class can stay
+    * top-level (its name must be source-referenceable from generated Java).
     */
-  private def bpeWordTokenList(
+  private[functions] def bpeWordTokensFor(
       s: String, from: Int, until: Int,
       merges: Array[Array[String]]): java.util.ArrayList[String] = {
     var toks = bpeSymbols(s, from, until)
@@ -569,25 +555,6 @@ object TextKernels {
     }
     toks
   }
-
-  private def bpeWordTokens(s: String, from: Int, until: Int, merges: Array[Array[String]]): Long =
-    if (until <= from) 0L else bpeWordTokenList(s, from, until, merges).size.toLong
-
-  /** [[BpeTable]]'s per-word compute hook — package-private access to the
-    * shared merge-application loop so the memo class can stay top-level
-    * (its name must be source-referenceable from generated Java).
-    */
-  private[functions] def bpeWordTokensFor(
-      s: String, from: Int, until: Int,
-      merges: Array[Array[String]]): java.util.ArrayList[String] =
-    bpeWordTokenList(s, from, until, merges)
-
-  /** All BPE tokens of `t` in order (the vocab-emission surface; same word
-    * split and merge passes as [[bpeTokenCount]], so
-    * `size(bpeTokens(x)) == bpeTokenCount(x)` by construction).
-    */
-  def bpeTokens(t: UTF8String, merges: Array[Array[String]]): GenericArrayData =
-    bpeTokensImpl(t, merges, marked = false)
 
   /** The Sennrich end-of-word marker appended to each word-FINAL token by
     * [[bpeTokensMarked]]. The no-collision guarantee (no UNMARKED token ever
@@ -612,6 +579,14 @@ object TextKernels {
     */
   val EowEscaped = "<\\w>"
 
+  /** All BPE tokens of `t` in order — the vocab-emission surface and the
+    * codegen entry of [[BpeTokensExpr]]. Same word split and per-word
+    * tokens as [[bpeTokenCount]], so `size(bpeTokens(x)) == bpeTokenCount(x)`
+    * by construction.
+    */
+  def bpeTokens(t: UTF8String, table: BpeTable): GenericArrayData =
+    bpeTokensCached(t, table, marked = false)
+
   /** [[bpeTokens]] with the GPT-2/Sennrich END-OF-WORD MARKER: the last
     * token of every word carries [[EowMarker]], so a (merges, vocab) pair
     * emitted from these tokens is loadable by external tokenizer stacks —
@@ -626,57 +601,19 @@ object TextKernels {
     * of every table TrainBpe emits from the syllable corpus: letters
     * only). On text containing '</w>' under a punctuation-pairing table
     * the escape can shift merge boundaries and the counts may differ —
-    * see the [[EowMarker]] doc for the trade.
-    */
-  def bpeTokensMarked(t: UTF8String, merges: Array[Array[String]]): GenericArrayData =
-    bpeTokensImpl(t, merges, marked = true)
-
-  private def bpeTokensImpl(
-      t: UTF8String, merges: Array[Array[String]], marked: Boolean): GenericArrayData = {
-    val raw = t.toString
-    // pre-escape the marker (see EowMarker doc): length-preserving, so the
-    // word-boundary scan below is unaffected; contains() guards the common
-    // path from an allocation
-    val s = if (marked && raw.contains(EowMarker)) raw.replace(EowMarker, EowEscaped) else raw
-    val out = new java.util.ArrayList[UTF8String]()
-    var start = 0
-    var more = true
-    while (more) {
-      val sp = s.indexOf(' ', start)
-      val end = if (sp < 0) s.length else sp
-      if (end > start) {
-        val toks = bpeWordTokenList(s, start, end, merges)
-        var i = 0
-        while (i < toks.size) {
-          val tok =
-            if (marked && i == toks.size - 1) toks.get(i) + EowMarker else toks.get(i)
-          out.add(UTF8String.fromString(tok))
-          i += 1
-        }
-      }
-      if (sp < 0) more = false else start = sp + 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-
-  /** [[bpeTokens]] through a [[BpeTable]] memo (codegen entry of
-    * [[BpeTokensExpr]]).
-    */
-  def bpeTokens(t: UTF8String, table: BpeTable): GenericArrayData =
-    bpeTokensCached(t, table, marked = false)
-
-  /** [[bpeTokensMarked]] through a [[BpeTable]] memo (codegen entry of
-    * [[BpeTokensMarkedExpr]]).
+    * see the [[EowMarker]] doc for the trade. Codegen entry of
+    * [[BpeTokensMarkedExpr]].
     */
   def bpeTokensMarked(t: UTF8String, table: BpeTable): GenericArrayData =
     bpeTokensCached(t, table, marked = true)
 
-  /** The memoized twin of [[bpeTokensImpl]]: identical word scan, escape,
-    * and emission semantics — each word's token arrays come from the
-    * table's per-distinct-word entry instead of a fresh merge-loop run.
-    * Keying the cache on the POST-escape word is sound because the escape
-    * is space-free (word boundaries unchanged) and deterministic on the
-    * word's characters alone.
+  /** The one token-emission loop behind [[bpeTokens]] and
+    * [[bpeTokensMarked]]: pre-escape the marker when marked (see
+    * [[EowMarker]]), split on ' ', and append each word's token array from
+    * the table's per-distinct-word entry. Keying the cache on the
+    * POST-escape word is sound because the escape is space-free (word
+    * boundaries unchanged) and deterministic on the word's characters
+    * alone.
     */
   private def bpeTokensCached(
       t: UTF8String, table: BpeTable, marked: Boolean): GenericArrayData = {

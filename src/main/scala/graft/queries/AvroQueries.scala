@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -8,11 +8,12 @@ import graft.functions.Avro
 
 /** Avro wire-format roundtrips — SURVEY §1.1: the reference's Kinesis
   * payloads are Avro binary (the three record schemas under `schemas/avro/`). Each query encodes the
-  * trade view into real Avro binary frames (library encoder, fixture side)
-  * and decodes them back through the codegen [[Avro]] expressions — the
-  * replay path a consumer of captured wire data runs. The oracle reproduces
-  * the projected values directly from the source table: a hash match proves
-  * the binary round-trip is lossless field-for-field.
+  * trade view into real Avro binary frames (the schema-driven encode
+  * expression, fixture side) and decodes them back through the schema-driven
+  * decode expression — the replay path a consumer of captured wire data
+  * runs. The oracle reproduces the projected values directly from the
+  * source table: a hash match proves the binary round-trip is lossless
+  * field-for-field.
   *
   * Doubles survive Avro binary bit-exactly (IEEE764 little-endian on the
   * wire), so no rounding is needed on either side.
@@ -23,67 +24,70 @@ object AvroQueries {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     baseQueries ++ evolutionQuery ++ genericQuery ++ ocfQuery
 
+  private def firstTrades(s: SparkSession, dir: String): DataFrame =
+    Tables.trades(s, dir).filter(col("trade_id") < 2000)
+
+  /** A trade row as a MarketTrade record: fields in schema order, which is
+    * how the encoder binds them.
+    */
+  private def tradeRecord: Column = struct(
+    upper(col("symbol")).as("symbol"),
+    col("ts_ms").as("event_ts"),
+    (col("ts_ms") + 5L).as("ingest_ts"),
+    col("trade_id"),
+    col("price"),
+    coalesce(col("qty"), lit(0.0)).as("qty"),
+    (col("trade_id") % 2 === 0).as("is_buyer_maker"),
+    lit("sbe").as("source"))
+
+  /** The MarketTrade roundtrip of the first 2000 trades, all 8 fields. */
+  private def tradeRoundtrip(s: SparkSession, dir: String): DataFrame =
+    firstTrades(s, dir)
+      .select(Avro.encode(tradeRecord, Avro.TradeSchemaJson).as("frame"))
+      .select(Avro.decode(col("frame"), Avro.TradeSchemaJson).as("d"))
+      .select("d.*")
+
   private val baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // MarketTrade.avsc roundtrip: all 8 fields through Avro binary.
-    "avro1_trade_roundtrip" -> { (s, dir) =>
-      val t = Tables.trades(s, dir).filter(col("trade_id") < 2000)
-      val q = coalesce(col("qty"), lit(0.0))
-      val enc = t.select(
-        Avro.encodeTrade(
-          upper(col("symbol")), col("ts_ms"), col("ts_ms") + 5L, col("trade_id"),
-          col("price"), q, col("trade_id") % 2 === 0, lit("sbe")).as("frame"))
-      enc.select(Avro.decodeTrade(col("frame")).as("d"))
-        .select(
-          col("d.symbol").as("symbol"),
-          col("d.event_ts").as("event_ts"),
-          col("d.ingest_ts").as("ingest_ts"),
-          col("d.trade_id").as("trade_id"),
-          col("d.price").as("price"),
-          col("d.qty").as("qty"),
-          col("d.is_buyer_maker").as("is_buyer_maker"),
-          col("d.source").as("source"))
-    },
+    // MarketTrade.avsc roundtrip: all 8 fields through Avro binary (the
+    // same plan as avro5).
+    "avro1_trade_roundtrip" -> tradeRoundtrip,
     // BestBidAsk.avsc roundtrip (quote fields synthesized from trades the
     // same way the a2 quote view does).
     "avro2_bba_roundtrip" -> { (s, dir) =>
-      val t = Tables.trades(s, dir).filter(col("trade_id") < 2000)
       val q = coalesce(col("qty"), lit(0.0))
-      val enc = t.select(
-        col("trade_id").as("orig_id"),
-        Avro.encodeBba(
-          upper(col("symbol")), col("ts_ms"), col("ts_ms") + 7L,
-          col("price") - q * 0.01, q + 1.0,
-          col("price") + lit(0.01) + q * 0.005, lit(101.0) - q,
-          lit("rest")).as("frame"))
-      enc.select(col("orig_id"), Avro.decodeBba(col("frame")).as("d"))
+      val bba = struct(
+        upper(col("symbol")).as("symbol"),
+        col("ts_ms").as("event_ts"),
+        (col("ts_ms") + 7L).as("ingest_ts"),
+        (col("price") - q * 0.01).as("bid_px"),
+        (q + 1.0).as("bid_sz"),
+        (col("price") + lit(0.01) + q * 0.005).as("ask_px"),
+        (lit(101.0) - q).as("ask_sz"),
+        lit("rest").as("source"))
+      firstTrades(s, dir)
         .select(
-          col("orig_id"),
-          col("d.symbol").as("symbol"),
-          col("d.event_ts").as("event_ts"),
-          col("d.ingest_ts").as("ingest_ts"),
-          col("d.bid_px").as("bid_px"),
-          col("d.bid_sz").as("bid_sz"),
-          col("d.ask_px").as("ask_px"),
-          col("d.ask_sz").as("ask_sz"),
-          col("d.source").as("source"))
+          col("trade_id").as("orig_id"), Avro.encode(bba, Avro.BbaSchemaJson).as("frame"))
+        .select(col("orig_id"), Avro.decode(col("frame"), Avro.BbaSchemaJson).as("d"))
+        .select("orig_id", "d.*")
     },
     // DepthDelta.avsc roundtrip: the nested array<array<string>> book sides.
     // Level strings are integer mantissas (cents) so the string form is
     // engine-independent; the nested arrays are flattened to CSV so the full
     // content is hash-checked (not just lengths).
     "avro3_depth_roundtrip" -> { (s, dir) =>
-      val t = Tables.trades(s, dir).filter(col("trade_id") < 2000)
       val m = round(col("price") * 100).cast("long")
-      def lvl(px: org.apache.spark.sql.Column, qy: org.apache.spark.sql.Column) =
-        array(px.cast("string"), qy.cast("string"))
-      val enc = t.select(
-        col("trade_id").as("orig_id"),
-        Avro.encodeDepth(
-          upper(col("symbol")), col("ts_ms"), col("ts_ms") + 11L,
-          array(lvl(m - 1L, m), lvl(m - 2L, m)),
-          array(lvl(m + 1L, m + 2L)),
-          lit("sbe")).as("frame"))
-      enc.select(col("orig_id"), Avro.decodeDepth(col("frame")).as("d"))
+      def lvl(px: Column, qy: Column) = array(px.cast("string"), qy.cast("string"))
+      val depth = struct(
+        upper(col("symbol")).as("symbol"),
+        col("ts_ms").as("event_ts"),
+        (col("ts_ms") + 11L).as("ingest_ts"),
+        array(lvl(m - 1L, m), lvl(m - 2L, m)).as("bids"),
+        array(lvl(m + 1L, m + 2L)).as("asks"),
+        lit("sbe").as("source"))
+      firstTrades(s, dir)
+        .select(
+          col("trade_id").as("orig_id"), Avro.encode(depth, Avro.DepthSchemaJson).as("frame"))
+        .select(col("orig_id"), Avro.decode(col("frame"), Avro.DepthSchemaJson).as("d"))
         .select(
           col("orig_id"),
           col("d.symbol").as("symbol"),
@@ -113,52 +117,23 @@ object AvroQueries {
       |{"name":"fee_bps","type":["null","double"],"default":null}]}""".stripMargin
 
   val evolutionQuery: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Schema-resolution decode: v1 frames → evolved reader (generic decoder).
+    // Schema-resolution decode: v1 frames → evolved reader, columns in
+    // reader order.
     "avro4_evolved_reader" -> { (s, dir) =>
-      val t = Tables.trades(s, dir).filter(col("trade_id") < 2000)
-      val q = coalesce(col("qty"), lit(0.0))
-      val enc = t.select(
-        Avro.encodeTrade(
-          upper(col("symbol")), col("ts_ms"), col("ts_ms") + 5L, col("trade_id"),
-          col("price"), q, col("trade_id") % 2 === 0, lit("sbe")).as("frame"))
-      enc.select(
-        Avro.decode(col("frame"), Avro.TradeSchemaJson, EvolvedTradeReaderJson).as("d"))
+      firstTrades(s, dir)
+        .select(Avro.encode(tradeRecord, Avro.TradeSchemaJson).as("frame"))
         .select(
-          col("d.venue").as("venue"),
-          col("d.trade_id").as("trade_id"),
-          col("d.price").as("price"),
-          col("d.symbol").as("symbol"),
-          col("d.fee_bps").as("fee_bps"))
+          Avro.decode(col("frame"), Avro.TradeSchemaJson, EvolvedTradeReaderJson).as("d"))
+        .select("d.*")
     }
   )
 
   /** Generic `to_avro`→`from_avro` path: the whole roundtrip through the
-    * schema-driven expressions (no typed UDF anywhere in the plan).
+    * schema-driven expressions. Since the trade queries share the one codec,
+    * this is avro1's plan under its own name.
     */
   val genericQuery: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "avro5_generic_roundtrip" -> { (s, dir) =>
-      val t = Tables.trades(s, dir).filter(col("trade_id") < 2000)
-      val rec = struct(
-        upper(col("symbol")).as("symbol"),
-        col("ts_ms").as("event_ts"),
-        (col("ts_ms") + 5L).as("ingest_ts"),
-        col("trade_id"),
-        col("price"),
-        coalesce(col("qty"), lit(0.0)).as("qty"),
-        (col("trade_id") % 2 === 0).as("is_buyer_maker"),
-        lit("sbe").as("source"))
-      t.select(Avro.encode(rec, Avro.TradeSchemaJson).as("frame"))
-        .select(Avro.decode(col("frame"), Avro.TradeSchemaJson).as("d"))
-        .select(
-          col("d.symbol").as("symbol"),
-          col("d.event_ts").as("event_ts"),
-          col("d.ingest_ts").as("ingest_ts"),
-          col("d.trade_id").as("trade_id"),
-          col("d.price").as("price"),
-          col("d.qty").as("qty"),
-          col("d.is_buyer_maker").as("is_buyer_maker"),
-          col("d.source").as("source"))
-    }
+    "avro5_generic_roundtrip" -> tradeRoundtrip
   )
 
   /** The avro7 export target: one temp dir per process, overwritten by
@@ -184,7 +159,7 @@ object AvroQueries {
       cache.getOrElseUpdate(key, {
         val feed = java.nio.file.Files.createTempDirectory("graft_ocf_feed_").toFile
         feed.deleteOnExit()
-        val rows = Tables.trades(s, sfDir).filter(col("trade_id") < 2000)
+        val rows = firstTrades(s, sfDir)
           .select(
             upper(col("symbol")).as("symbol"), col("ts_ms"), col("trade_id"),
             col("price"), coalesce(col("qty"), lit(0.0)).as("qty"))
@@ -230,7 +205,7 @@ object AvroQueries {
       // repeated bench/spec invocations don't leak a populated temp dir
       // each (deleteOnExit cannot remove non-empty directories).
       val out = Avro7ExportDir.path
-      Tables.trades(s, dir).filter(col("trade_id") < 2000)
+      firstTrades(s, dir)
         .select(
           upper(col("symbol")).as("symbol"), col("ts_ms").as("event_ts"),
           col("trade_id"), col("price"), coalesce(col("qty"), lit(0.0)).as("qty"))

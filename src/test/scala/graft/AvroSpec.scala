@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
+
+import org.apache.avro.Schema
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Avro
@@ -9,13 +14,58 @@ import graft.functions.Avro
   *
   * Covers: (1) the wire bytes are REAL Avro binary (hand-computed byte
   * sequence per the spec's zigzag-varint + IEEE764-LE encoding, not a private
-  * framing); (2) field-exact roundtrips for all three reference schemas,
-  * including the nested array<array<string>> book sides; (3) undecodable /
-  * truncated / trailing-garbage bytes decode to null instead of failing the
-  * task (replay-side behavior for corrupt stream segments).
+  * framing), and every frame matches what Avro's own `GenericDatumWriter`
+  * writes and `GenericDatumReader` reads for the same record; (2)
+  * field-exact roundtrips for all three reference schemas, including the
+  * nested array<array<string>> book sides; (3) undecodable / truncated /
+  * trailing-garbage bytes decode to null instead of failing the task
+  * (replay-side behavior for corrupt stream segments), while a null in a
+  * non-nullable field fails the encoding task loudly.
   */
 class AvroSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The frame Avro's own library writes for a record filled by `fill`. */
+  private def libraryFrame(schemaJson: String)(fill: GenericData.Record => Unit): Array[Byte] = {
+    val schema = new Schema.Parser().parse(schemaJson)
+    val rec = new GenericData.Record(schema)
+    fill(rec)
+    val out = new java.io.ByteArrayOutputStream()
+    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
+    enc.flush()
+    out.toByteArray
+  }
+
+  /** The record Avro's own library reads back from `frame`. */
+  private def libraryRecord(schemaJson: String, frame: Array[Byte]): GenericRecord = {
+    val schema = new Schema.Parser().parse(schemaJson)
+    new GenericDatumReader[GenericRecord](schema)
+      .read(null, DecoderFactory.get().binaryDecoder(frame, null))
+  }
+
+  /** All of `df`'s columns, in order, as one record struct. */
+  private def record(df: DataFrame): Column = struct(df.columns.map(col).toSeq: _*)
+
+  private def roundtrip(df: DataFrame, schemaJson: String): DataFrame =
+    df.select(Avro.decode(Avro.encode(record(df), schemaJson), schemaJson).as("d"))
+      .select("d.*")
+
+  /** The frame `encode` writes for a one-row `df`. */
+  private def frame(df: DataFrame, schemaJson: String): Array[Byte] =
+    df.select(Avro.encode(record(df), schemaJson).as("f")).head().getAs[Array[Byte]]("f")
+
+  private def fillTrade(
+      symbol: String, eventTs: Long, ingestTs: Long, tradeId: Long,
+      price: Double, qty: Double, isBuyerMaker: Boolean, source: String)(
+      r: GenericData.Record): Unit = {
+    r.put("symbol", symbol); r.put("event_ts", eventTs); r.put("ingest_ts", ingestTs)
+    r.put("trade_id", tradeId); r.put("price", price); r.put("qty", qty)
+    r.put("is_buyer_maker", isBuyerMaker); r.put("source", source)
+  }
+
+  private val tradeCols =
+    Seq("symbol", "event_ts", "ingest_ts", "trade_id", "price", "qty", "is_buyer_maker", "source")
 
   test("trade wire bytes match the Avro binary spec exactly") {
     // {"symbol":"A","event_ts":1,"ingest_ts":2,"trade_id":3,
@@ -25,7 +75,8 @@ class AvroSpec extends SparkSpec {
     //   long 1/2/3  -> zigzag = 0x02, 0x04, 0x06
     //   double      -> 8 bytes IEEE754 little-endian
     //   boolean     -> 1 byte
-    val bytes = Avro.encodeTradeRec("A", 1L, 2L, 3L, 1.0, 0.5, isBuyerMaker = true, "s")
+    val bytes = frame(
+      Seq(("A", 1L, 2L, 3L, 1.0, 0.5, true, "s")).toDF(tradeCols: _*), Avro.TradeSchemaJson)
     def le(d: Double): Seq[Byte] = {
       val bb = java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       bb.putDouble(d); bb.array().toSeq
@@ -40,63 +91,68 @@ class AvroSpec extends SparkSpec {
     val rows = Seq(
       ("BTCUSDT", 1700000000123L, 1700000000125L, 42L, 67123.45678901, 0.00123456, true, "sbe"),
       ("ETHUSDT", 1700000001000L, 1700000001002L, 43L, -0.0, Double.MinPositiveValue, false, "rest"))
-    val df = rows.toDF("symbol", "event_ts", "ingest_ts", "trade_id", "price", "qty", "mk", "source")
-      .select(Avro.decodeTrade(Avro.encodeTrade(
-        col("symbol"), col("event_ts"), col("ingest_ts"), col("trade_id"),
-        col("price"), col("qty"), col("mk"), col("source"))).as("d"))
-      .select("d.*")
+    val df = roundtrip(rows.toDF(tradeCols: _*), Avro.TradeSchemaJson)
     val got = df.as[(String, Long, Long, Long, Double, Double, Boolean, String)].collect().toSeq
-    assert(got.map(t => (t._1, t._2, t._3, t._4, t._5, t._6, t._7, t._8)) === rows)
+    assert(got === rows)
     // -0.0 must stay -0.0 (bit-exact, not value-equal)
     assert(java.lang.Double.doubleToRawLongBits(got(1)._5) ===
       java.lang.Double.doubleToRawLongBits(-0.0))
   }
 
   test("bba roundtrip is field-exact") {
-    val df = Seq(("BTCUSDT", 1L, 2L, 99.5, 1.25, 100.5, 2.5, "sbe"))
-      .toDF("s", "e", "i", "bp", "bs", "ap", "as", "src")
-      .select(Avro.decodeBba(Avro.encodeBba(
-        col("s"), col("e"), col("i"), col("bp"), col("bs"), col("ap"), col("as"),
-        col("src"))).as("d"))
-      .select("d.*")
+    val df = roundtrip(
+      Seq(("BTCUSDT", 1L, 2L, 99.5, 1.25, 100.5, 2.5, "sbe"))
+        .toDF("s", "e", "i", "bp", "bs", "ap", "as", "src"),
+      Avro.BbaSchemaJson)
     assert(df.collect().toSeq === Seq(Row("BTCUSDT", 1L, 2L, 99.5, 1.25, 100.5, 2.5, "sbe")))
   }
 
   test("depth roundtrip preserves nested array<array<string>> sides and order") {
     val bids = Seq(Seq("100.5", "2.0"), Seq("100.4", "1.5"), Seq("100.3", "0.1"))
     val asks = Seq(Seq("100.6", "3.0"))
-    val bytes = Avro.encodeDepthRec("BTCUSDT", 7L, 9L, bids, asks, "rest")
-    val df = Seq(Tuple1(bytes)).toDF("frame")
-      .select(Avro.decodeDepth(col("frame")).as("d"))
-      .select("d.*")
-    val r = df.collect().head
+    val df = roundtrip(
+      Seq(("BTCUSDT", 7L, 9L, bids, asks, "rest"), ("X", 1L, 1L, Seq.empty, Seq.empty, "s"))
+        .toDF("s", "e", "i", "bids", "asks", "src"),
+      Avro.DepthSchemaJson)
+    val Seq(r, empty) = df.collect().toSeq
     assert(r.getString(0) === "BTCUSDT")
     assert(r.getLong(1) === 7L && r.getLong(2) === 9L)
     assert(r.getSeq[Seq[String]](3) === bids)
     assert(r.getSeq[Seq[String]](4) === asks)
     assert(r.getString(5) === "rest")
     // empty sides are legal deltas
-    val empty = Avro.decodeDepthBytes(Avro.encodeDepthRec("X", 1L, 1L, Seq.empty, Seq.empty, "s"))
-    assert(empty.getArray(3).numElements() === 0 && empty.getArray(4).numElements() === 0)
+    assert(empty.getSeq[Seq[String]](3).isEmpty && empty.getSeq[Seq[String]](4).isEmpty)
   }
 
   test("undecodable bytes decode to null, not task failure") {
+    val tradeFrame =
+      libraryFrame(Avro.TradeSchemaJson)(fillTrade("A", 1L, 2L, 3L, 1.0, 1.0, true, "s"))
     val bad = Seq(
-      Array.empty[Byte],                                   // no fields at all
-      Array[Byte](0x02),                                   // truncated mid-string
-      Avro.encodeTradeRec("A", 1, 2, 3, 1.0, 1.0, true, "s").dropRight(1), // short read
-      Avro.encodeTradeRec("A", 1, 2, 3, 1.0, 1.0, true, "s") :+ 0x00.toByte) // trailing bytes
+      Array.empty[Byte],              // no fields at all
+      Array[Byte](0x02),              // truncated mid-string
+      tradeFrame.dropRight(1),        // short read
+      tradeFrame :+ 0x00.toByte)      // trailing bytes
     val df = bad.map(Tuple1(_)).toDF("frame")
-      .select(Avro.decodeTrade(col("frame")).as("d"))
+      .select(Avro.decode(col("frame"), Avro.TradeSchemaJson).as("d"))
     assert(df.filter(col("d").isNotNull).count() === 0)
     // and the good frame still decodes alongside the bad ones
-    val mixed = (bad :+ Avro.encodeTradeRec("A", 1, 2, 3, 1.0, 1.0, true, "s"))
+    val mixed = (bad :+ tradeFrame)
       .map(Tuple1(_)).toDF("frame")
-      .select(Avro.decodeTrade(col("frame")).as("d"))
+      .select(Avro.decode(col("frame"), Avro.TradeSchemaJson).as("d"))
     assert(mixed.filter(col("d").isNotNull).count() === 1)
   }
 
-  // ── generic decoder + schema resolution ──────────────────────────────────
+  test("a null in a non-nullable field fails the encoding task and names the field") {
+    val df = Seq(("BTCUSDT", Option.empty[Long], 2L, 42L, 100.5, 0.25, true, "sbe"))
+      .toDF(tradeCols: _*)
+    val e = intercept[Exception] {
+      df.select(Avro.encode(record(df), Avro.TradeSchemaJson).as("f")).collect()
+    }
+    val root = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last
+    assert(String.valueOf(root.getMessage).contains("event_ts"), root.toString)
+  }
+
+  // ── schema resolution, other Avro types, SQL surface ─────────────────────
 
   private val evolvedReaderJson =
     """{"type":"record","name":"MarketTrade","namespace":"binance","fields":[
@@ -106,27 +162,25 @@ class AvroSpec extends SparkSpec {
       |{"name":"symbol","type":"string"},
       |{"name":"fee_bps","type":["null","double"],"default":null}]}""".stripMargin
 
-  test("generic decode with writer schema matches the typed trade decoder") {
-    val df = Seq(("BTCUSDT", 1L, 2L, 42L, 100.5, 0.25, true, "sbe"))
-      .toDF("s", "e", "i", "t", "p", "q", "mk", "src")
-      .select(Avro.encodeTrade(
-        col("s"), col("e"), col("i"), col("t"), col("p"), col("q"), col("mk"),
-        col("src")).as("frame"))
-    val typed = df.select(Avro.decodeTrade(col("frame")).as("d")).select("d.*")
-    val generic = df.select(
-      Avro.decode(col("frame"), Avro.TradeSchemaJson).as("d")).select("d.*")
-    assert(generic.schema === typed.schema)
-    assert(generic.collect().toSeq === typed.collect().toSeq)
+  test("decode reads a library-written trade frame as Avro's GenericDatumReader does") {
+    val frame = libraryFrame(Avro.TradeSchemaJson)(
+      fillTrade("BTCUSDT", 1L, 2L, 42L, 100.5, 0.25, true, "sbe"))
+    val lib = libraryRecord(Avro.TradeSchemaJson, frame)
+    val got = Seq(Tuple1(frame)).toDF("frame")
+      .select(Avro.decode(col("frame"), Avro.TradeSchemaJson).as("d"))
+      .select("d.*")
+    assert(got.columns.toSeq === tradeCols)
+    val expected = tradeCols.map(f => lib.get(f) match {
+      case u: org.apache.avro.util.Utf8 => u.toString
+      case v => v
+    })
+    assert(got.head() === Row(expected: _*))
   }
 
   test("schema evolution: added fields take defaults, dropped skipped, match by name") {
-    val df = Seq(("ETHUSDT", 10L, 11L, 7L, 2000.0, 1.5, false, "rest"))
-      .toDF("s", "e", "i", "t", "p", "q", "mk", "src")
-      .select(Avro.encodeTrade(
-        col("s"), col("e"), col("i"), col("t"), col("p"), col("q"), col("mk"),
-        col("src")).as("frame"))
-    val out = df.select(
-      Avro.decode(col("frame"), Avro.TradeSchemaJson, evolvedReaderJson).as("d"))
+    val df = Seq(("ETHUSDT", 10L, 11L, 7L, 2000.0, 1.5, false, "rest")).toDF(tradeCols: _*)
+    val out = df.select(Avro.encode(record(df), Avro.TradeSchemaJson).as("frame"))
+      .select(Avro.decode(col("frame"), Avro.TradeSchemaJson, evolvedReaderJson).as("d"))
       .select("d.*")
     // reader order, NOT writer order: venue (new, default), trade_id, price,
     // symbol (moved), fee_bps (new nullable, default null)
@@ -141,11 +195,9 @@ class AvroSpec extends SparkSpec {
 
   test("avro_decode SQL surface decodes with literal schemas") {
     GraftFunctions.register(spark)
-    Seq(("BTCUSDT", 1L, 2L, 3L, 9.5, 0.5, true, "sbe"))
-      .toDF("s", "e", "i", "t", "p", "q", "mk", "src")
-      .select(Avro.encodeTrade(
-        col("s"), col("e"), col("i"), col("t"), col("p"), col("q"), col("mk"),
-        col("src")).as("frame"))
+    Seq(Tuple1(libraryFrame(Avro.TradeSchemaJson)(
+      fillTrade("BTCUSDT", 1L, 2L, 3L, 9.5, 0.5, true, "sbe"))))
+      .toDF("frame")
       .createOrReplaceTempView("avro_frames")
     val w = Avro.TradeSchemaJson.replace("\n", " ")
     val got = spark.sql(
@@ -160,20 +212,14 @@ class AvroSpec extends SparkSpec {
         |{"name":"tags","type":{"type":"map","values":"long"}},
         |{"name":"kind","type":{"type":"enum","name":"K","symbols":["A","B"]}},
         |{"name":"note","type":["null","string"],"default":null}]}""".stripMargin
-    val s = new org.apache.avro.Schema.Parser().parse(schema)
-    val rec = new org.apache.avro.generic.GenericData.Record(s)
-    val tags = new java.util.HashMap[String, java.lang.Long]()
-    tags.put("x", 1L); tags.put("y", 2L)
-    rec.put("tags", tags)
-    rec.put("kind", new org.apache.avro.generic.GenericData.EnumSymbol(
-      s.getField("kind").schema(), "B"))
-    rec.put("note", null)
-    val out = new java.io.ByteArrayOutputStream()
-    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
-    new org.apache.avro.generic.GenericDatumWriter[
-      org.apache.avro.generic.GenericRecord](s).write(rec, enc)
-    enc.flush()
-    val df = Seq(Tuple1(out.toByteArray)).toDF("frame")
+    val frame = libraryFrame(schema) { rec =>
+      val tags = new java.util.HashMap[String, java.lang.Long]()
+      tags.put("x", 1L); tags.put("y", 2L)
+      rec.put("tags", tags)
+      rec.put("kind", new GenericData.EnumSymbol(rec.getSchema.getField("kind").schema(), "B"))
+      rec.put("note", null)
+    }
+    val df = Seq(Tuple1(frame)).toDF("frame")
       .select(Avro.decode(col("frame"), schema).as("d"))
     val r = df.select("d.*").head()
     assert(r.getMap[String, Long](0).toSeq.sorted === Seq("x" -> 1L, "y" -> 2L))
@@ -188,20 +234,14 @@ class AvroSpec extends SparkSpec {
         |{"name":"at_ms","type":{"type":"long","logicalType":"timestamp-millis"}},
         |{"name":"at_us","type":{"type":"long","logicalType":"timestamp-micros"}},
         |{"name":"day","type":{"type":"int","logicalType":"date"}}]}""".stripMargin
-    val s = new org.apache.avro.Schema.Parser().parse(schema)
-    val rec = new org.apache.avro.generic.GenericData.Record(s)
-    val amt = new java.math.BigDecimal("67123.45678901") // scale 8
-    rec.put("amount", java.nio.ByteBuffer.wrap(
-      amt.setScale(8).unscaledValue().toByteArray))
-    rec.put("at_ms", 1700000000123L)
-    rec.put("at_us", 1700000000123456L)
-    rec.put("day", 19600) // days since epoch
-    val out = new java.io.ByteArrayOutputStream()
-    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
-    new org.apache.avro.generic.GenericDatumWriter[
-      org.apache.avro.generic.GenericRecord](s).write(rec, enc)
-    enc.flush()
-    val df = Seq(Tuple1(out.toByteArray)).toDF("frame")
+    val frame = libraryFrame(schema) { rec =>
+      val amt = new java.math.BigDecimal("67123.45678901") // scale 8
+      rec.put("amount", java.nio.ByteBuffer.wrap(amt.setScale(8).unscaledValue().toByteArray))
+      rec.put("at_ms", 1700000000123L)
+      rec.put("at_us", 1700000000123456L)
+      rec.put("day", 19600) // days since epoch
+    }
+    val df = Seq(Tuple1(frame)).toDF("frame")
       .select(Avro.decode(col("frame"), schema).as("d"))
       .select("d.*")
     import org.apache.spark.sql.types._
@@ -222,29 +262,38 @@ class AvroSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val n = Tables.trades(spark, sf).limit(50)
-        .select(Avro.encodeTrade(
-          upper(col("symbol")), col("ts_ms"), col("ts_ms"), col("trade_id"),
-          col("price"), coalesce(col("qty"), lit(0.0)), lit(true), lit("s")).as("frame"))
+        .select(Avro.encode(
+          struct(
+            upper(col("symbol")), col("ts_ms"), col("ts_ms"), col("trade_id"),
+            col("price"), coalesce(col("qty"), lit(0.0)), lit(true), lit("s")),
+          Avro.TradeSchemaJson).as("frame"))
         .select(Avro.decode(col("frame"), Avro.TradeSchemaJson).as("d"))
         .filter(col("d").isNotNull).count()
       assert(n === 50)
     } finally spark.conf.unset("spark.sql.codegen.factoryMode")
   }
 
-  test("generic encode emits byte-identical frames to the typed encoder") {
-    val df = Seq(("BTCUSDT", 1L, 2L, 42L, 100.5, 0.25, true, "sbe"))
-      .toDF("symbol", "event_ts", "ingest_ts", "trade_id", "price", "qty",
-        "is_buyer_maker", "source")
-    val typed = df.select(Avro.encodeTrade(
-      col("symbol"), col("event_ts"), col("ingest_ts"), col("trade_id"),
-      col("price"), col("qty"), col("is_buyer_maker"), col("source")).as("f"))
-    val generic = df.select(Avro.encode(
-      struct(
-        col("symbol"), col("event_ts"), col("ingest_ts"), col("trade_id"),
-        col("price"), col("qty"), col("is_buyer_maker"), col("source")),
-      Avro.TradeSchemaJson).as("f"))
-    assert(generic.head().getAs[Array[Byte]]("f").toSeq ===
-      typed.head().getAs[Array[Byte]]("f").toSeq)
+  test("encode writes the frame Avro's GenericDatumWriter writes, for all three schemas") {
+    def check(schemaJson: String, df: DataFrame)(fill: GenericData.Record => Unit): Unit =
+      assert(frame(df, schemaJson).toSeq === libraryFrame(schemaJson)(fill).toSeq, schemaJson)
+    check(Avro.TradeSchemaJson,
+      Seq(("BTCUSDT", 1L, 2L, 42L, 100.5, 0.25, true, "sbe")).toDF(tradeCols: _*))(
+      fillTrade("BTCUSDT", 1L, 2L, 42L, 100.5, 0.25, true, "sbe"))
+    check(Avro.BbaSchemaJson,
+      Seq(("ETHUSDT", 3L, 4L, 99.5, 1.25, 100.5, 2.5, "rest"))
+        .toDF("s", "e", "i", "bp", "bs", "ap", "as", "src")) { r =>
+      r.put("symbol", "ETHUSDT"); r.put("event_ts", 3L); r.put("ingest_ts", 4L)
+      r.put("bid_px", 99.5); r.put("bid_sz", 1.25); r.put("ask_px", 100.5); r.put("ask_sz", 2.5)
+      r.put("source", "rest")
+    }
+    val bids = Seq(Seq("100.5", "2.0"), Seq("100.4", "1.5"))
+    val asks = Seq(Seq("100.6", "3.0"))
+    check(Avro.DepthSchemaJson,
+      Seq(("BTCUSDT", 5L, 6L, bids, asks, "sbe")).toDF("s", "e", "i", "b", "a", "src")) { r =>
+      def side(ls: Seq[Seq[String]]) = ls.map(_.asJava).asJava
+      r.put("symbol", "BTCUSDT"); r.put("event_ts", 5L); r.put("ingest_ts", 6L)
+      r.put("bids", side(bids)); r.put("asks", side(asks)); r.put("source", "sbe")
+    }
   }
 
   test("generic encode/decode roundtrip covers maps, enums, unions, logical types") {
@@ -284,26 +333,17 @@ class AvroSpec extends SparkSpec {
         |{"name":"id_f","type":{"type":"fixed","name":"UF","size":16,"logicalType":"uuid"}},
         |{"name":"lt_ms","type":{"type":"long","logicalType":"local-timestamp-millis"}},
         |{"name":"lt_us","type":{"type":"long","logicalType":"local-timestamp-micros"}}]}""".stripMargin
-    val s = new org.apache.avro.Schema.Parser().parse(schema)
     val uid = "0a1b2c3d-4e5f-6071-8293-a4b5c6d7e8f9"
-    val u = java.util.UUID.fromString(uid)
-    val fixedBytes = {
+    val frame = libraryFrame(schema) { rec =>
+      val u = java.util.UUID.fromString(uid)
       val bb = java.nio.ByteBuffer.allocate(16)
       bb.putLong(u.getMostSignificantBits).putLong(u.getLeastSignificantBits)
-      bb.array()
+      rec.put("id_s", uid)
+      rec.put("id_f", new GenericData.Fixed(rec.getSchema.getField("id_f").schema(), bb.array()))
+      rec.put("lt_ms", 1700000000123L)     // 2023-11-14 22:13:20.123 (no zone)
+      rec.put("lt_us", 1700000000123456L)
     }
-    val rec = new org.apache.avro.generic.GenericData.Record(s)
-    rec.put("id_s", uid)
-    rec.put("id_f", new org.apache.avro.generic.GenericData.Fixed(
-      s.getField("id_f").schema(), fixedBytes))
-    rec.put("lt_ms", 1700000000123L)     // 2023-11-14 22:13:20.123 (no zone)
-    rec.put("lt_us", 1700000000123456L)
-    val out = new java.io.ByteArrayOutputStream()
-    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
-    new org.apache.avro.generic.GenericDatumWriter[
-      org.apache.avro.generic.GenericRecord](s).write(rec, enc)
-    enc.flush()
-    val df = Seq(Tuple1(out.toByteArray)).toDF("frame")
+    val df = Seq(Tuple1(frame)).toDF("frame")
       .select(Avro.decode(col("frame"), schema).as("d"))
       .select("d.*")
     import org.apache.spark.sql.types._
@@ -366,22 +406,17 @@ class AvroSpec extends SparkSpec {
           rnd.nextDouble(), rnd.nextBoolean(),
           symbols(rnd.nextInt(symbols.length)))
       }
-      val df = rows.toDF(
-        "symbol", "event_ts", "ingest_ts", "trade_id", "price", "qty",
-        "is_buyer_maker", "source")
-      val rt = df.select(Avro.decodeTrade(Avro.encodeTrade(
-          col("symbol"), col("event_ts"), col("ingest_ts"), col("trade_id"),
-          col("price"), col("qty"), col("is_buyer_maker"), col("source"))).as("d"))
-        .select("d.*")
-      val got = rt.collect()
+      val df = rows.toDF(tradeCols: _*)
+      val got = roundtrip(df, Avro.TradeSchemaJson).collect()
       assert(got.length === rows.length)
       got.zip(df.collect()).zipWithIndex.foreach { case ((g, e), i) =>
         assert(g.getString(0) === e.getString(0), s"row $i symbol")
         assert(g.getLong(1) === e.getLong(1) && g.getLong(2) === e.getLong(2)
           && g.getLong(3) === e.getLong(3), s"row $i longs")
         // bit-exact doubles: NaN payloads and -0.0 must survive
-        assert(java.lang.Double.doubleToRawLongBits(g.getDouble(4)) ===
-          java.lang.Double.doubleToRawLongBits(e.getDouble(4)), s"row $i price bits")
+        for (d <- Seq(4, 5))
+          assert(java.lang.Double.doubleToRawLongBits(g.getDouble(d)) ===
+            java.lang.Double.doubleToRawLongBits(e.getDouble(d)), s"row $i double $d bits")
         assert(g.getBoolean(6) === e.getBoolean(6), s"row $i flag")
         assert(g.getString(7) === e.getString(7), s"row $i source")
       }
@@ -395,10 +430,7 @@ class AvroSpec extends SparkSpec {
         (col("ts_ms") + 5L).as("ingest_ts"), col("trade_id"),
         col("price"), coalesce(col("qty"), lit(0.0)).as("qty"),
         (col("trade_id") % 2 === 0).as("is_buyer_maker"), lit("sbe").as("source"))
-    val rt = t.select(Avro.decodeTrade(Avro.encodeTrade(
-        col("symbol"), col("event_ts"), col("ingest_ts"), col("trade_id"),
-        col("price"), col("qty"), col("is_buyer_maker"), col("source"))).as("d"))
-      .select("d.*")
+    val rt = roundtrip(t, Avro.TradeSchemaJson)
     assert(rt.exceptAll(t).count() === 0 && t.exceptAll(rt).count() === 0)
   }
 }

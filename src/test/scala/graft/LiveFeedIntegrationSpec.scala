@@ -91,10 +91,12 @@ class LiveFeedIntegrationSpec extends SparkSpec {
     // aggregator shape end-to-end on real wire bytes.
     val src = Tables.trades(spark, sf).filter(col("trade_id") < 150)
     val frames = src
-      .select(Avro.encodeTrade(
-        upper(col("symbol")), col("ts_ms"), col("ts_ms") + 5L, col("trade_id"),
-        col("price"), coalesce(col("qty"), lit(0.0)),
-        col("trade_id") % 2 === 0, lit("sbe")).as("frame"))
+      .select(Avro.encode(
+        struct(
+          upper(col("symbol")), col("ts_ms"), col("ts_ms") + 5L, col("trade_id"),
+          col("price"), coalesce(col("qty"), lit(0.0)),
+          col("trade_id") % 2 === 0, lit("sbe")),
+        Avro.TradeSchemaJson).as("frame"))
       .orderBy("trade_id").collect().map(_.getAs[Array[Byte]]("frame")).toSeq
     // batch twin of the streaming agg = the expected final answer
     val expected = src

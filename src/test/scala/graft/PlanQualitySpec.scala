@@ -3,7 +3,8 @@ package graft
 /** Physical-plan regression guards — the scale-critical plan shapes from
   * SCALE.md, asserted so a future refactor can't silently regress them.
   */
-class PlanQualitySpec extends SparkSpec {
+class PlanQualitySpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
@@ -398,14 +399,16 @@ class PlanQualitySpec extends SparkSpec {
 
   test("m1/m4 image pipeline never shuffles the binary payload") {
     for (q <- Seq("m1_multimodal_meta", "m4_image_thumb")) {
-      // formatted explain lists every operator's Input/Output columns —
       // the only legal Exchange is the r17 ScanFill's pre-encode doc_id
-      // repartition (one 8-byte column/row), so every Exchange node's
-      // Input must be payload-free: the encoded bytes and everything
-      // derived from them stay strictly above the last exchange
+      // repartition (one 8-byte column/row), so no Exchange may output a
+      // binary column: the encoded bytes and everything derived from them
+      // stay strictly above the last exchange. The executed plan is an
+      // AdaptiveSparkPlanExec, a leaf to a plain plan `collect`;
+      // AdaptiveSparkPlanHelper's collect descends into it
       val qe = SparkEntry.queries(q)(spark, sf).queryExecution
       import org.apache.spark.sql.execution.exchange.Exchange
-      val exchanges = qe.executedPlan.collect { case e: Exchange => e }
+      val exchanges = collect(qe.executedPlan) { case e: Exchange => e }
+      assert(exchanges.nonEmpty, s"$q: no Exchange inspected in\n${qe.executedPlan}")
       for (e <- exchanges; attr <- e.output)
         assert(
           attr.dataType != org.apache.spark.sql.types.BinaryType,
@@ -413,3 +416,4 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 }
+

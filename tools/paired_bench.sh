@@ -24,13 +24,15 @@
 #   out.json     paired record path (repo-relative)
 #   runs         forked rounds per arm (default 3)
 #
-# The old rev builds in a detached worktree under /tmp (its own sbt target,
-# never touching the repo's); each arm is a normal forked-rounds Bench
-# subset run, serialized so no two Spark workloads contend.
+# The old rev builds in a throwaway clone under $TMPDIR (default /tmp; its
+# own sbt target, no worktree metadata in the repo's .git); each arm is a
+# normal forked-rounds Bench subset run, serialized so no two Spark
+# workloads contend. Arm records and logs go to the same $TMPDIR.
 set -e
 OLD_REF="$1"; QUERIES="$2"; SF_DIR="$3"; OUT="$4"; RUNS="${5:-3}"
 REPO=$(cd "$(dirname "$0")/.." && pwd)
-WT=/tmp/graft_paired_old
+TMP="${TMPDIR:-/tmp}"
+WT="$TMP/graft_paired_old"
 cd "$REPO"
 OLD_SHA=$(git rev-parse "$OLD_REF")
 # the new arm benches the working tree, so a tree with uncommitted changes
@@ -38,11 +40,11 @@ OLD_SHA=$(git rev-parse "$OLD_REF")
 NEW_SHA=$(git rev-parse HEAD)
 [ -z "$(git status --porcelain)" ] || NEW_SHA="$NEW_SHA-dirty"
 
-git worktree remove --force "$WT" 2>/dev/null || true
-git worktree add --detach "$WT" "$OLD_SHA" >/dev/null
-# remove the worktree however the script ends: an arm that dies under
-# set -e would otherwise leave its metadata in the repo
-trap 'git -C "$REPO" worktree remove --force "$WT" 2>/dev/null || true' EXIT
+rm -rf "$WT"
+git clone --quiet --no-checkout "$REPO" "$WT"
+git -C "$WT" checkout --quiet --detach "$OLD_SHA"
+# remove the clone however the script ends, an arm dying under set -e too
+trap 'rm -rf "$WT"' EXIT
 
 run_arm() { # dir record logfile
   (cd "$1" &&
@@ -50,21 +52,21 @@ run_arm() { # dir record logfile
     SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_RECORD="$2" \
     sbt -batch "runMain graft.Bench" > "$3" 2>&1)
   # retain the arm's diag (spill/shuffle/CPU per round) — Bench overwrites
-  # bench_diag_only.json per run and the worktree is removed at the end, so
+  # bench_diag_only.json per run and the clone is removed at the end, so
   # without this copy a surprising arm delta cannot be attributed post-hoc
   cp "$1"/bench_diag_only.json "${2%.json}_diag.json" 2>/dev/null || true
 }
 
 echo "== paired bench: old=$OLD_SHA new=$NEW_SHA queries=$QUERIES =="
-echo "== arm A1 (old) =="; run_arm "$WT"   /tmp/paired_old1.json /tmp/paired_old1.log
-echo "== arm B1 (new) =="; run_arm "$REPO" /tmp/paired_new1.json /tmp/paired_new1.log
-echo "== arm B2 (new) =="; run_arm "$REPO" /tmp/paired_new2.json /tmp/paired_new2.log
-echo "== arm A2 (old) =="; run_arm "$WT"   /tmp/paired_old2.json /tmp/paired_old2.log
+echo "== arm A1 (old) =="; run_arm "$WT"   "$TMP"/paired_old1.json "$TMP"/paired_old1.log
+echo "== arm B1 (new) =="; run_arm "$REPO" "$TMP"/paired_new1.json "$TMP"/paired_new1.log
+echo "== arm B2 (new) =="; run_arm "$REPO" "$TMP"/paired_new2.json "$TMP"/paired_new2.log
+echo "== arm A2 (old) =="; run_arm "$WT"   "$TMP"/paired_old2.json "$TMP"/paired_old2.log
 
 python3 "$REPO/tools/paired_report.py" "$OUT" \
   "$OLD_SHA" "$NEW_SHA" \
-  /tmp/paired_old1.json /tmp/paired_new1.json \
-  /tmp/paired_new2.json /tmp/paired_old2.json
+  "$TMP"/paired_old1.json "$TMP"/paired_new1.json \
+  "$TMP"/paired_new2.json "$TMP"/paired_old2.json
 
 rm -f "$REPO"/bench_diag_only.json 2>/dev/null || true
 echo "paired record written to $OUT"
