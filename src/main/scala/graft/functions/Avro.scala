@@ -9,7 +9,8 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{codegen, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{codegen, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -23,10 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * builds the same surface directly on Avro's public `GenericDatumReader`/
   * `GenericDatumWriter` binary codec.
   *
-  * One schema-driven codec serves every record type: [[AvroDecode]] and
+  * One schema-driven codec serves every record type: [[decodeCall]] and
   * [[AvroEncodeExpr]] take the schema JSON at plan time, map it to the
-  * Spark type ([[sparkType]]) and call a per-expression kernel from
-  * generated code (stays inside whole-stage codegen, like [[Sbe]]). Decode
+  * Spark type ([[sparkType]]) and call a per-plan kernel from generated
+  * code (stays inside whole-stage codegen, like [[Sbe]]). Decode
   * returns the record struct, or null on undecodable bytes — the
   * replay-side behavior a consumer wants when a stream segment is corrupt.
   * Encode binds struct fields to record fields by position and fails the
@@ -206,11 +207,18 @@ object Avro {
     }
   }
 
-  /** Serializable decode kernel: parses schemas lazily per JVM/executor,
-    * resolves writer→reader, null on undecodable bytes.
+  /** Serializable decode kernel: parses schemas lazily where it runs,
+    * resolves writer→reader, null on undecodable bytes. Equal schemas make
+    * equal kernels, so two decodes over the same schemas are one plan.
     */
   final class AvroRowKernel(val writerJson: String, val readerJson: String)
       extends Serializable {
+    override def equals(o: Any): Boolean = o match {
+      case k: AvroRowKernel => writerJson == k.writerJson && readerJson == k.readerJson
+      case _ => false
+    }
+    override def hashCode: Int = 31 * writerJson.hashCode + readerJson.hashCode
+
     @transient private lazy val readerSchema = new Schema.Parser().parse(readerJson)
     @transient private lazy val datumReader = new GenericDatumReader[GenericRecord](
       new Schema.Parser().parse(writerJson), readerSchema)
@@ -223,46 +231,21 @@ object Avro {
       } catch { case _: Exception => null }
   }
 
-  /** `from_avro` equivalent: decode `child` (binary) written with
-    * `writerJson`, projected through `readerJson` (defaults to the writer).
-    * Codegen references the kernel via `addReferenceObj` — no per-row
-    * registry lookup, schemas parsed once per executor.
+  /** `from_avro` equivalent: decode `frame` (binary) written with
+    * `writerJson`, projected through `readerJson` — an `Invoke` of the
+    * kernel's `decode`, with the kernel as an object literal (codegen holds
+    * it as a reference object: no per-row registry lookup). Null for a null
+    * frame and for undecodable bytes.
     */
-  case class AvroDecode(child: Expression, writerJson: String, readerJson: String)
-      extends UnaryExpression {
-    @transient private lazy val kernel = new AvroRowKernel(writerJson, readerJson)
-    @transient override lazy val dataType: DataType =
-      sparkType(new Schema.Parser().parse(readerJson))
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      kernel.decode(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext,
-        ev: codegen.ExprCode): codegen.ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      val kRef = ctx.addReferenceObj(
-        "avroKernel", kernel, classOf[AvroRowKernel].getName)
-      val childGen = child.genCode(ctx)
-      val rowType = classOf[InternalRow].getName
-      ev.copy(code = code"""
-          ${childGen.code}
-          boolean ${ev.isNull} = true;
-          $rowType ${ev.value} = null;
-          if (!${childGen.isNull}) {
-            ${ev.value} = $kRef.decode(${childGen.value});
-            ${ev.isNull} = (${ev.value} == null);
-          }
-        """)
-    }
-    override protected def withNewChildInternal(newChild: Expression): AvroDecode =
-      copy(child = newChild)
-  }
+  def decodeCall(frame: Expression, writerJson: String, readerJson: String): Expression =
+    Invoke(
+      Literal(new AvroRowKernel(writerJson, readerJson), ObjectType(classOf[AvroRowKernel])),
+      "decode", sparkType(new Schema.Parser().parse(readerJson)), Seq(frame))
 
   def decode(c: Column, writerJson: String): Column =
     decode(c, writerJson, writerJson)
   def decode(c: Column, writerJson: String, readerJson: String): Column =
-    ColumnBridge.column(
-      AvroDecode(ColumnBridge.expression(c), writerJson, readerJson))
+    ColumnBridge.column(decodeCall(ColumnBridge.expression(c), writerJson, readerJson))
 
   // ── encoder: the `to_avro` half ──────────────────────────────────────────
 
@@ -455,7 +438,10 @@ object Avro {
   }
 
   /** `to_avro` equivalent: serialize a struct column (shaped like
-    * `sparkType(schemaJson)`, fields bound positionally) to Avro binary.
+    * `sparkType(schemaJson)`, fields bound positionally) to Avro binary. A
+    * Catalyst class rather than an `Invoke` like [[decodeCall]]: the kernel
+    * needs the child's resolved struct type, which is unknown when the
+    * Column is built.
     */
   case class AvroEncodeExpr(child: Expression, schemaJson: String)
       extends UnaryExpression {

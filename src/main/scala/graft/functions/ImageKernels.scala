@@ -6,8 +6,8 @@ import javax.imageio.ImageIO
 import javax.imageio.stream.MemoryCacheImageInputStream
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{codegen, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,11 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *   - [[encodeImage]]: deterministic tiny PNG/JPEG fixture encoder (pixel
   *     pattern derived from a seed) — the test/fixture half, used from a
-  *     `udf()` like the SBE/Avro fixture encoders;
-  *   - [[imageMeta]] / [[ImageMetaExpr]]: HEADER-ONLY metadata extraction —
+  *     `udf()` like the SBE fixture encoders;
+  *   - [[imageMeta]] / [[imageMetaCall]]: HEADER-ONLY metadata extraction —
   *     `ImageReader.getWidth/getHeight/getFormatName` off the stream without
   *     decoding pixel data, so cost is per-header, not per-pixel;
-  *   - [[thumbnail]] / [[ThumbnailExpr]]: real downscale (Graphics2D
+  *   - [[thumbnail]] / [[thumbnailCall]]: real downscale (Graphics2D
   *     bilinear `drawImage` to width/factor x height/factor, re-encoded as
   *     PNG) — the pixel-touching half.
   *
@@ -150,41 +150,17 @@ object ImageKernels {
     StructField("height", IntegerType),
     StructField("format", StringType)))
 
-  /** binary -> struct(width, height, format); null for non-image bytes, so
-    * `nullable` and the explicit null check in codegen (nullSafeCodeGen's
-    * default wrapper only handles a null INPUT).
+  /** binary -> struct(width, height, format) through `StaticInvoke`; null
+    * for a null payload and for non-image bytes.
     */
-  case class ImageMetaExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = imageMetaSchema
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      ImageKernels.imageMeta(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.functions.ImageKernels.imageMeta($c);
-        ${ev.isNull} = ${ev.value} == null;
-      """)
-    override protected def withNewChildInternal(newChild: Expression): ImageMetaExpr =
-      copy(child = newChild)
-  }
+  def imageMetaCall(content: Expression): Expression =
+    StaticInvoke(getClass, imageMetaSchema, "imageMeta", Seq(content))
 
-  /** binary -> binary PNG thumbnail at 1/factor scale; null for non-image
-    * bytes.
+  /** binary -> binary PNG thumbnail at 1/factor scale; null for a null
+    * payload and for non-image bytes.
     */
-  case class ThumbnailExpr(child: Expression, factor: Int) extends UnaryExpression {
+  def thumbnailCall(content: Expression, factor: Int): Expression = {
     require(factor >= 1, s"thumbnail factor must be >= 1, got $factor")
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      ImageKernels.thumbnail(input.asInstanceOf[Array[Byte]], factor)
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.functions.ImageKernels.thumbnail($c, $factor);
-        ${ev.isNull} = ${ev.value} == null;
-      """)
-    override protected def withNewChildInternal(newChild: Expression): ThumbnailExpr =
-      copy(child = newChild)
+    StaticInvoke(getClass, BinaryType, "thumbnail", Seq(content, Literal(factor)))
   }
 }

@@ -4,9 +4,11 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{codegen, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,10 +27,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Prices are mantissa·10^exponent int64+int8 pairs (`sbe_decoder.cpp:107-111`);
   * µs timestamps are floored to ms (`sbe_decoder.cpp:134-136`).
   *
-  * Decode is a Catalyst `Expression` (no UDF row-encoding overhead; null on
-  * foreign templateId like the reference's dispatch) with a real `doGenCode`
-  * path: a static call into the shared ByteBuffer kernel, so decode stays
-  * inside whole-stage codegen with no interpreted eval dispatch per row.
+  * Decode is a `StaticInvoke` of the ByteBuffer kernel (no UDF row-encoding
+  * overhead; null on a foreign templateId like the reference's dispatch, and
+  * on a short or truncated frame): a static call inside whole-stage codegen,
+  * and the same method reflected when codegen is off.
   */
 object Sbe {
 
@@ -39,7 +41,9 @@ object Sbe {
     StructField("is_buyer_maker", BooleanType),
     StructField("symbol", StringType)))
 
-  /** Decode kernel shared by the interpreted and codegen paths. */
+  /** Trade decode kernel: the row, or null for a frame that is not a whole
+    * trade.
+    */
   def decodeTradeBytes(bytes: Array[Byte]): InternalRow = {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     if (bb.remaining() < 8) return null
@@ -64,37 +68,21 @@ object Sbe {
       UTF8String.fromBytes(sym))
   }
 
-  case class SbeTradeDecode(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = tradeSchema
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      decodeTradeBytes(input.asInstanceOf[Array[Byte]])
-    // Whole-stage-codegen path: a static call into the shared kernel (the
-    // StaticInvoke pattern) — no interpreted Expression.eval dispatch per
-    // row, and the decode result can be null even for non-null input.
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext,
-        ev: codegen.ExprCode): codegen.ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      val childGen = child.genCode(ctx)
-      val rowType = classOf[InternalRow].getName
-      ev.copy(code = code"""
-          ${childGen.code}
-          boolean ${ev.isNull} = true;
-          $rowType ${ev.value} = null;
-          if (!${childGen.isNull}) {
-            ${ev.value} = graft.functions.Sbe.decodeTradeBytes(${childGen.value});
-            ${ev.isNull} = (${ev.value} == null);
-          }
-        """)
-    }
-    override protected def withNewChildInternal(newChild: Expression): SbeTradeDecode =
-      copy(child = newChild)
-  }
+  /** One decode kernel bound to Catalyst: a null frame maps to null, and so
+    * does a frame the kernel rejects. The Column API below and the SQL
+    * functions (GraftFunctions) both build through these.
+    */
+  private def call(method: String, schema: StructType, frame: Expression): Expression =
+    StaticInvoke(getClass, schema, method, Seq(frame))
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge
+  def decodeTradeCall(frame: Expression): Expression =
+    call("decodeTradeBytes", tradeSchema, frame)
+  def decodeBbaCall(frame: Expression): Expression = call("decodeBbaBytes", bbaSchema, frame)
+  def decodeDepthCall(frame: Expression): Expression =
+    call("decodeDepthBytes", depthSchema, frame)
+
   def decodeTrade(c: Column): Column =
-    ColumnBridge.column(SbeTradeDecode(ColumnBridge.expression(c)))
+    ColumnBridge.column(decodeTradeCall(ColumnBridge.expression(c)))
 
   // ── BBA (templateId 10001) ───────────────────────────────────────────────
   val bbaSchema: StructType = StructType(Seq(
@@ -125,33 +113,8 @@ object Sbe {
       UTF8String.fromBytes(sym))
   }
 
-  case class SbeBbaDecode(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = bbaSchema
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      decodeBbaBytes(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext,
-        ev: codegen.ExprCode): codegen.ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      val childGen = child.genCode(ctx)
-      val rowType = classOf[InternalRow].getName
-      ev.copy(code = code"""
-          ${childGen.code}
-          boolean ${ev.isNull} = true;
-          $rowType ${ev.value} = null;
-          if (!${childGen.isNull}) {
-            ${ev.value} = graft.functions.Sbe.decodeBbaBytes(${childGen.value});
-            ${ev.isNull} = (${ev.value} == null);
-          }
-        """)
-    }
-    override protected def withNewChildInternal(newChild: Expression): SbeBbaDecode =
-      copy(child = newChild)
-  }
-
   def decodeBba(c: Column): Column =
-    ColumnBridge.column(SbeBbaDecode(ColumnBridge.expression(c)))
+    ColumnBridge.column(decodeBbaCall(ColumnBridge.expression(c)))
 
   /** Counts written as a single unsigned byte (symbol length, level counts)
     * must fit it — silent .toByte wrapping would emit an undecodable frame.
@@ -228,33 +191,8 @@ object Sbe {
     case _: java.nio.BufferUnderflowException => null
   }
 
-  case class SbeDepthDecode(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = depthSchema
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      decodeDepthBytes(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext,
-        ev: codegen.ExprCode): codegen.ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      val childGen = child.genCode(ctx)
-      val rowType = classOf[InternalRow].getName
-      ev.copy(code = code"""
-          ${childGen.code}
-          boolean ${ev.isNull} = true;
-          $rowType ${ev.value} = null;
-          if (!${childGen.isNull}) {
-            ${ev.value} = graft.functions.Sbe.decodeDepthBytes(${childGen.value});
-            ${ev.isNull} = (${ev.value} == null);
-          }
-        """)
-    }
-    override protected def withNewChildInternal(newChild: Expression): SbeDepthDecode =
-      copy(child = newChild)
-  }
-
   def decodeDepth(c: Column): Column =
-    ColumnBridge.column(SbeDepthDecode(ColumnBridge.expression(c)))
+    ColumnBridge.column(decodeDepthCall(ColumnBridge.expression(c)))
 
   val encodeDepth: UserDefinedFunction = udf(
     (tsUs: Long, firstId: Long, finalId: Long,

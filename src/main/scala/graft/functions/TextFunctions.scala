@@ -20,38 +20,36 @@ object TextFunctions {
   /** Whitespace tokens. */
   def tokens(text: Column): Column = split(text, " ")
 
+  import org.apache.spark.sql.catalyst.expressions.Expression
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  /** Distinct word n-gram shingles ("w1 w2 w3"). A row-level JVM kernel as a
-    * codegen Catalyst `Expression` ([[TextKernels.WordShinglesExpr]]): the
+  private def kernel(text: Column)(call: Expression => Expression): Column =
+    ColumnBridge.column(call(ColumnBridge.expression(text)))
+
+  /** Distinct word n-gram shingles ("w1 w2 w3"). A row-level JVM kernel
+    * bound by `StaticInvoke` ([[TextKernels.wordShinglesCall]]): the
     * equivalent `transform(sequence(...), concat_ws(element_at...))` builtin
     * runs interpreted per ELEMENT in Spark (profiled ~3.4 s for 1.5M
-    * shingles vs ~0.3 s for the kernel), and the Expression form keeps the
-    * call inside whole-stage codegen with no UDF encoder seam. Null text maps
-    * to an empty set (the pre-Expression UDF contract).
+    * shingles vs ~0.3 s for the kernel), and the static call stays inside
+    * whole-stage codegen with no UDF encoder seam. Null text maps to an
+    * empty set (the pre-kernel UDF contract).
     */
   def shingles(text: Column, n: Int = 3): Column =
-    coalesce(
-      ColumnBridge.column(TextKernels.WordShinglesExpr(ColumnBridge.expression(text), n)),
-      typedLit(Seq.empty[String]))
+    coalesce(kernel(text)(TextKernels.wordShinglesCall(_, n)), typedLit(Seq.empty[String]))
 
   /** Distinct character n-grams (the char-level dedup granularity — catches
     * near-dups that word tokenization misses, e.g. punctuation/spacing
-    * variants). Same codegen-Expression shape as [[shingles]].
+    * variants). Same kernel-call shape as [[shingles]].
     */
   def charShingles(text: Column, n: Int = 5): Column =
-    coalesce(
-      ColumnBridge.column(TextKernels.CharShinglesExpr(ColumnBridge.expression(text), n)),
-      typedLit(Seq.empty[String]))
+    coalesce(kernel(text)(TextKernels.charShinglesCall(_, n)), typedLit(Seq.empty[String]))
 
   /** Shingle hashes (md5-prefix mod p) directly — skips materializing the
     * shingle strings as a column when only the hashes are needed.
     */
   def shingleHashes(text: Column, n: Int = 3): Column =
     coalesce(
-      ColumnBridge.column(
-        TextKernels.ShingleHashesExpr(ColumnBridge.expression(text), n, MinhashP)),
-      typedLit(Seq.empty[Long]))
+      kernel(text)(TextKernels.shingleHashesCall(_, n, MinhashP)), typedLit(Seq.empty[Long]))
 
   /** Shingle hashes at EVERY token position in order, NOT deduplicated —
     * `posexplode` downstream recovers (position, hash); the positioned
@@ -59,9 +57,7 @@ object TextFunctions {
     */
   def shingleHashSeq(text: Column, n: Int = 3): Column =
     coalesce(
-      ColumnBridge.column(
-        TextKernels.ShingleHashSeqExpr(ColumnBridge.expression(text), n, MinhashP)),
-      typedLit(Seq.empty[Long]))
+      kernel(text)(TextKernels.shingleHashSeqCall(_, n, MinhashP)), typedLit(Seq.empty[Long]))
 
   /** L-char window hash at every char position in order — the character-
     * granularity positioned input of span dedup
@@ -69,9 +65,7 @@ object TextFunctions {
     */
   def charWindowHashSeq(text: Column, l: Int): Column =
     coalesce(
-      ColumnBridge.column(
-        TextKernels.CharWindowHashSeqExpr(ColumnBridge.expression(text), l, MinhashP)),
-      typedLit(Seq.empty[Long]))
+      kernel(text)(TextKernels.charWindowHashSeqCall(_, l, MinhashP)), typedLit(Seq.empty[Long]))
 
   /** Winnowed fingerprints of the L-char window hashes, packed
     * `h * 2^32 + pos` — the MOSS-sampled positioned input of span dedup
@@ -79,22 +73,21 @@ object TextFunctions {
     */
   def winnowedPackSeq(text: Column, l: Int, w: Int): Column =
     coalesce(
-      ColumnBridge.column(
-        TextKernels.WinnowedPackSeqExpr(ColumnBridge.expression(text), l, w, MinhashP)),
+      kernel(text)(TextKernels.winnowedPackSeqCall(_, l, w, MinhashP)),
       typedLit(Seq.empty[Long]))
 
   /** One-pass (n_grams, n_distinct) struct over word n-grams — the
-    * repetition-ratio kernel ([[TextKernels.NgramRepetitionExpr]]).
+    * repetition-ratio kernel ([[TextKernels.ngramRepetition]]).
     */
   def ngramRepetition(text: Column, n: Int = 3): Column =
-    ColumnBridge.column(TextKernels.NgramRepetitionExpr(ColumnBridge.expression(text), n))
+    kernel(text)(TextKernels.ngramRepetitionCall(_, n))
 
   /** One-pass (n_grams, max_count, top_gram) struct over word n-grams — the
     * Gopher most-common-n-gram dominance kernel
-    * ([[TextKernels.GramDominanceExpr]]).
+    * ([[TextKernels.gramDominance]]).
     */
   def gramDominance(text: Column, n: Int = 1): Column =
-    ColumnBridge.column(TextKernels.GramDominanceExpr(ColumnBridge.expression(text), n))
+    kernel(text)(TextKernels.gramDominanceCall(_, n))
 
   /** MinHash parameters: k permutations of h -> (a*h + b) mod p over the
     * Mersenne prime 2^31-1. Constants are fixed literals so the DuckDB oracle
@@ -114,34 +107,32 @@ object TextFunctions {
       s => (lit(a) * (md5PrefixHash(s) % MinhashP) + lit(b)) % MinhashP))
 
   /** 32-bit SimHash over distinct tokens: bit j is set when the sum of
-    * ±1 votes from each token's hash bit j is positive. Codegen-Expression
-    * kernel for the same reason as [[shingles]] (32 interpreted `aggregate`
-    * passes profiled ~4.5 s at sf0.1 vs ~0.3 s for the kernel).
+    * ±1 votes from each token's hash bit j is positive. A kernel call for
+    * the same reason as [[shingles]] (32 interpreted `aggregate` passes
+    * profiled ~4.5 s at sf0.1 vs ~0.3 s for the kernel).
     */
   def simhash32(text: Column): Column =
-    coalesce(
-      ColumnBridge.column(TextKernels.Simhash32Expr(ColumnBridge.expression(text))),
-      lit(0L))
+    coalesce(kernel(text)(TextKernels.simhash32Call), lit(0L))
 
   /** Polynomial rolling-hash document fingerprint over the codepoint stream
-    * (codegen kernel, [[TextKernels.RollingHashExpr]]).
+    * ([[TextKernels.rollingHash]]).
     */
   def rollingHash(text: Column, base: Long = 131L, mod: Long = 1000000007L): Column =
-    ColumnBridge.column(TextKernels.RollingHashExpr(ColumnBridge.expression(text), base, mod))
+    kernel(text)(TextKernels.rollingHashCall(_, base, mod))
 
-  /** BPE token count under an ordered merge table (codegen kernel,
-    * [[TextKernels.BpeCountExpr]]) — the tokenizer-real `n_tokens` input
+  /** BPE token count under an ordered merge table
+    * ([[TextKernels.bpeTokenCount]]) — the tokenizer-real `n_tokens` input
     * to sequence packing. Null text maps to null, like the SQL side.
     */
   def bpeTokenCount(text: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(TextKernels.BpeCountExpr(ColumnBridge.expression(text), merges))
+    kernel(text)(TextKernels.bpeTokenCountCall(_, merges))
 
-  /** The BPE tokens themselves (codegen kernel,
-    * [[TextKernels.BpeTokensExpr]]) — vocab emission / inspection surface;
-    * `size(bpeTokens(x, m)) == bpeTokenCount(x, m)` by shared kernel.
+  /** The BPE tokens themselves ([[TextKernels.bpeTokens]]) — vocab
+    * emission / inspection surface; `size(bpeTokens(x, m)) ==
+    * bpeTokenCount(x, m)` by shared kernel.
     */
   def bpeTokens(text: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(TextKernels.BpeTokensExpr(ColumnBridge.expression(text), merges))
+    kernel(text)(TextKernels.bpeTokensCall(_, merges))
 
   /** [[bpeTokens]] with the Sennrich/GPT-2 end-of-word marker on each
     * word-final token ([[TextKernels.bpeTokensMarked]]) — the emission
@@ -149,7 +140,7 @@ object TextFunctions {
     * reconstructible from the token stream alone.
     */
   def bpeTokensMarked(text: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(TextKernels.BpeTokensMarkedExpr(ColumnBridge.expression(text), merges))
+    kernel(text)(TextKernels.bpeTokensMarkedCall(_, merges))
 
   /** Stopword-membership count used by the quality/language heuristics. */
   def stopwordCount(tk: Column, stopwords: Seq[String]): Column =

@@ -1,20 +1,22 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{codegen, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** JVM kernels + codegen Catalyst `Expression`s for the text-dedup
-  * primitives — the documented upgrade from the scalar UDFs they replace
-  * (same algorithms byte-for-byte; every consumer is covered by a DuckDB
-  * oracle, so the swap is verified bit-exact by the gate).
+/** JVM kernels for the text-dedup primitives, each bound to Catalyst by a
+  * `StaticInvoke` (the `...Call` builders at the end) — the documented
+  * upgrade from the scalar UDFs they replace (same algorithms
+  * byte-for-byte; every consumer is covered by a DuckDB oracle, so the swap
+  * is verified bit-exact by the gate).
   *
-  * Why Expressions beat the UDFs at scale: the `doGenCode` path is a static
-  * call inside whole-stage codegen — no ScalaUDF encoder boundary, no
-  * per-row catalyst↔scala conversion of the input string, and the codegen
-  * span around the call stays unbroken (the UDF forced a codegen fence).
+  * Why a static call beats the UDFs at scale: it runs inside whole-stage
+  * codegen — no ScalaUDF encoder boundary, no per-row catalyst↔scala
+  * conversion of the input string, and the codegen span around the call
+  * stays unbroken (the UDF forced a codegen fence).
   */
 object TextKernels {
 
@@ -188,62 +190,6 @@ object TextKernels {
     out
   }
 
-  case class RollingHashExpr(child: Expression, base: Long, mod: Long) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      java.lang.Long.valueOf(rollingHash(input.asInstanceOf[UTF8String], base, mod))
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      defineCodeGen(
-        ctx, ev, c => s"graft.functions.TextKernels.rollingHash($c, ${base}L, ${mod}L)")
-    override protected def withNewChildInternal(newChild: Expression): RollingHashExpr =
-      copy(child = newChild)
-  }
-
-  case class WordShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      wordShingles(input.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.wordShingles($c, $n)")
-    override protected def withNewChildInternal(newChild: Expression): WordShinglesExpr =
-      copy(child = newChild)
-  }
-
-  case class CharShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      charShingles(input.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.charShingles($c, $n)")
-    override protected def withNewChildInternal(newChild: Expression): CharShinglesExpr =
-      copy(child = newChild)
-  }
-
-  case class ShingleHashesExpr(child: Expression, n: Int, p: Long) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      shingleHashes(input.asInstanceOf[UTF8String], n, p)
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.shingleHashes($c, $n, ${p}L)")
-    override protected def withNewChildInternal(newChild: Expression): ShingleHashesExpr =
-      copy(child = newChild)
-  }
-
-  case class ShingleHashSeqExpr(child: Expression, n: Int, p: Long) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      shingleHashSeq(input.asInstanceOf[UTF8String], n, p)
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.shingleHashSeq($c, $n, ${p}L)")
-    override protected def withNewChildInternal(newChild: Expression): ShingleHashSeqExpr =
-      copy(child = newChild)
-  }
-
   /** Karp-Rabin base for the char-window family — a fixed literal (like the
     * minhash a/b constants) so the DuckDB oracle inlines the identical
     * polynomial: `h = (h*131 + codepoint) % p` folded left-to-right over
@@ -351,29 +297,6 @@ object TextKernels {
       if (m == out.length) out else java.util.Arrays.copyOf(out, m))
   }
 
-  case class WinnowedPackSeqExpr(child: Expression, l: Int, w: Int, p: Long)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      winnowedPackSeq(input.asInstanceOf[UTF8String], l, w, p)
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.winnowedPackSeq($c, $l, $w, ${p}L)")
-    override protected def withNewChildInternal(newChild: Expression): WinnowedPackSeqExpr =
-      copy(child = newChild)
-  }
-
-  case class CharWindowHashSeqExpr(child: Expression, l: Int, p: Long) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      charWindowHashSeq(input.asInstanceOf[UTF8String], l, p)
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.charWindowHashSeq($c, $l, ${p}L)")
-    override protected def withNewChildInternal(newChild: Expression): CharWindowHashSeqExpr =
-      copy(child = newChild)
-  }
-
   /** (n_grams, n_distinct) over word n-grams of `split(text, " ")` in ONE
     * pass — no per-row gram-array materialization, no `array_distinct`
     * second scan. Windows are exactly those of
@@ -402,19 +325,6 @@ object TextKernels {
       i += 1
     }
     InternalRow(total.toLong, seen.size.toLong)
-  }
-
-  case class NgramRepetitionExpr(child: Expression, n: Int) extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("n_grams", LongType, nullable = false),
-      StructField("n_distinct", LongType, nullable = false)))
-    override def nullSafeEval(input: Any): Any =
-      ngramRepetition(input.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.ngramRepetition($c, $n)")
-    override protected def withNewChildInternal(newChild: Expression): NgramRepetitionExpr =
-      copy(child = newChild)
   }
 
   /** (n_grams, max_count, top_gram) over word n-grams of `split(text, " ")`
@@ -459,22 +369,8 @@ object TextKernels {
     InternalRow(total.toLong, bc.toLong, UTF8String.fromString(best))
   }
 
-  case class GramDominanceExpr(child: Expression, n: Int) extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("n_grams", LongType, nullable = false),
-      StructField("max_count", LongType, nullable = false),
-      StructField("top_gram", StringType, nullable = true)))
-    override def nullSafeEval(input: Any): Any =
-      gramDominance(input.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.gramDominance($c, $n)")
-    override protected def withNewChildInternal(newChild: Expression): GramDominanceExpr =
-      copy(child = newChild)
-  }
-
   /** BPE token count of `t` under an ordered merge table — the codegen
-    * entry point of [[BpeCountExpr]]: per whitespace word (split on ' ',
+    * kernel of [[bpeTokenCountCall]]: per whitespace word (split on ' ',
     * empties kept — the t14 `split(text, " ")` convention, zero tokens
     * each), start from codepoint symbols and apply each merge as one
     * left-to-right greedy pass. The trainer ([[graft.operators.Bpe]]) never
@@ -580,7 +476,7 @@ object TextKernels {
   val EowEscaped = "<\\w>"
 
   /** All BPE tokens of `t` in order — the vocab-emission surface and the
-    * codegen entry of [[BpeTokensExpr]]. Same word split and per-word
+    * kernel of [[bpeTokensCall]]. Same word split and per-word
     * tokens as [[bpeTokenCount]], so `size(bpeTokens(x)) == bpeTokenCount(x)`
     * by construction.
     */
@@ -601,8 +497,8 @@ object TextKernels {
     * of every table TrainBpe emits from the syllable corpus: letters
     * only). On text containing '</w>' under a punctuation-pairing table
     * the escape can shift merge boundaries and the counts may differ —
-    * see the [[EowMarker]] doc for the trade. Codegen entry of
-    * [[BpeTokensMarkedExpr]].
+    * see the [[EowMarker]] doc for the trade. Kernel of
+    * [[bpeTokensMarkedCall]].
     */
   def bpeTokensMarked(t: UTF8String, table: BpeTable): GenericArrayData =
     bpeTokensCached(t, table, marked = true)
@@ -636,64 +532,59 @@ object TextKernels {
     new GenericArrayData(out.toArray)
   }
 
-  case class BpeTokensExpr(child: Expression, merges: Seq[(String, String)])
-      extends UnaryExpression {
-    private lazy val table: BpeTable =
-      new BpeTable(merges.map(p => Array(p._1, p._2)).toArray)
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      bpeTokens(input.asInstanceOf[UTF8String], table)
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("bpeTable", table, classOf[BpeTable].getName)
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.bpeTokens($c, $ref)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): BpeTokensExpr =
-      copy(child = newChild)
-  }
+  // ── Catalyst bindings ────────────────────────────────────────────────────
+  // Each kernel above is called through Spark's StaticInvoke, which builds
+  // both the interpreted and the whole-stage-codegen call from the one
+  // method reference. A null text maps to null; the kernels never return
+  // null themselves. The Column API (TextFunctions) and the SQL functions
+  // (GraftFunctions) both build through these.
 
-  case class BpeTokensMarkedExpr(child: Expression, merges: Seq[(String, String)])
-      extends UnaryExpression {
-    private lazy val table: BpeTable =
-      new BpeTable(merges.map(p => Array(p._1, p._2)).toArray)
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      bpeTokensMarked(input.asInstanceOf[UTF8String], table)
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("bpeTable", table, classOf[BpeTable].getName)
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.bpeTokensMarked($c, $ref)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): BpeTokensMarkedExpr =
-      copy(child = newChild)
-  }
+  private val StringArray = ArrayType(StringType, containsNull = false)
+  private val LongArray = ArrayType(LongType, containsNull = false)
 
-  case class BpeCountExpr(child: Expression, merges: Seq[(String, String)])
-      extends UnaryExpression {
-    private lazy val table: BpeTable =
-      new BpeTable(merges.map(p => Array(p._1, p._2)).toArray)
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      java.lang.Long.valueOf(bpeTokenCount(input.asInstanceOf[UTF8String], table))
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("bpeTable", table, classOf[BpeTable].getName)
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.bpeTokenCount($c, $ref)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): BpeCountExpr =
-      copy(child = newChild)
-  }
+  private def call(method: String, dataType: DataType, args: Expression*): Expression =
+    StaticInvoke(getClass, dataType, method, args, returnNullable = false)
 
-  case class Simhash32Expr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      java.lang.Long.valueOf(simhash32(input.asInstanceOf[UTF8String]))
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.simhash32($c)")
-    override protected def withNewChildInternal(newChild: Expression): Simhash32Expr =
-      copy(child = newChild)
-  }
+  def wordShinglesCall(text: Expression, n: Int): Expression =
+    call("wordShingles", StringArray, text, Literal(n))
+  def charShinglesCall(text: Expression, n: Int): Expression =
+    call("charShingles", StringArray, text, Literal(n))
+  def shingleHashesCall(text: Expression, n: Int, p: Long): Expression =
+    call("shingleHashes", LongArray, text, Literal(n), Literal(p))
+  def shingleHashSeqCall(text: Expression, n: Int, p: Long): Expression =
+    call("shingleHashSeq", LongArray, text, Literal(n), Literal(p))
+  def charWindowHashSeqCall(text: Expression, l: Int, p: Long): Expression =
+    call("charWindowHashSeq", LongArray, text, Literal(l), Literal(p))
+  def winnowedPackSeqCall(text: Expression, l: Int, w: Int, p: Long): Expression =
+    call("winnowedPackSeq", LongArray, text, Literal(l), Literal(w), Literal(p))
+  def simhash32Call(text: Expression): Expression = call("simhash32", LongType, text)
+  def rollingHashCall(text: Expression, base: Long, mod: Long): Expression =
+    call("rollingHash", LongType, text, Literal(base), Literal(mod))
+
+  def ngramRepetitionCall(text: Expression, n: Int): Expression =
+    call("ngramRepetition", StructType(Seq(
+      StructField("n_grams", LongType, nullable = false),
+      StructField("n_distinct", LongType, nullable = false))), text, Literal(n))
+  def gramDominanceCall(text: Expression, n: Int): Expression =
+    call("gramDominance", StructType(Seq(
+      StructField("n_grams", LongType, nullable = false),
+      StructField("max_count", LongType, nullable = false),
+      StructField("top_gram", StringType, nullable = true))), text, Literal(n))
+
+  /** The merge table rides as an object literal: codegen registers it as a
+    * reference object, and [[BpeTable]]'s value equality keeps two calls
+    * over the same merges one plan.
+    */
+  private def table(merges: Seq[(String, String)]): Literal =
+    Literal(
+      new BpeTable(merges.map(p => Array(p._1, p._2)).toArray), ObjectType(classOf[BpeTable]))
+
+  def bpeTokenCountCall(text: Expression, merges: Seq[(String, String)]): Expression =
+    call("bpeTokenCount", LongType, text, table(merges))
+  def bpeTokensCall(text: Expression, merges: Seq[(String, String)]): Expression =
+    call("bpeTokens", StringArray, text, table(merges))
+  def bpeTokensMarkedCall(text: Expression, merges: Seq[(String, String)]): Expression =
+    call("bpeTokensMarked", StringArray, text, table(merges))
 }
 
 /** A merge table plus a PER-INSTANCE word → tokens memo (r17 optimization
@@ -701,11 +592,11 @@ object TextKernels {
   * merge passes per word OCCURRENCE — while a corpus repeats its vocabulary
   * constantly (Zipf), so production BPE tokenizers (GPT-2's `encoder.py`
   * cache, HuggingFace tokenizers' `cache`) all memoize per-word results.
-  * This is that memo, scoped deliberately small: the table is the codegen
-  * reference object of one Expression instance, (de)serialized with the
-  * task binary, so the `@transient` cache lives AT MOST for one task of one
-  * execution — nothing persists across queries, rounds, or JVMs, and a
-  * timed pass always recomputes every distinct word from scratch.
+  * This is that memo, scoped deliberately small: the table is an object
+  * literal of one kernel call, (de)serialized with the task binary, so the
+  * `@transient` cache lives AT MOST for one task of one execution — nothing
+  * persists across queries, rounds, or JVMs, and a timed pass always
+  * recomputes every distinct word from scratch.
   *
   * Entries hold BOTH emission variants (unmarked, and with
   * [[TextKernels.EowMarker]] on the word-final token) as immutable
@@ -714,10 +605,18 @@ object TextKernels {
   * Capacity-bounded: once [[BpeTable.MaxEntries]] distinct words are
   * resident, further words compute uncached (no eviction cost,
   * deterministic behavior, bounded task memory for adversarial
-  * vocabularies). Top-level class (not nested in the TextKernels object)
-  * because generated Java source must name the type.
+  * vocabularies). Equality is the merge list's, never the memo's, so plans
+  * over equal tables compare equal (exchange reuse, cache lookup,
+  * subexpression elimination).
   */
 final class BpeTable(val merges: Array[Array[String]]) extends Serializable {
+  override def equals(o: Any): Boolean = o match {
+    case t: BpeTable => java.util.Arrays.deepEquals(
+      merges.asInstanceOf[Array[AnyRef]], t.merges.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+  override def hashCode: Int = java.util.Arrays.deepHashCode(merges.asInstanceOf[Array[AnyRef]])
+
   @transient private lazy val cache =
     new java.util.concurrent.ConcurrentHashMap[String, BpeTable.Entry](1024)
 

@@ -1,42 +1,47 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{codegen, BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** JVM kernel + codegen Catalyst `Expression` for the dot-product fold at
-  * the heart of every cosine operator ([[graft.operators.VectorOps]]).
+/** JVM kernels for the dot-product fold at the heart of every cosine
+  * operator ([[graft.operators.VectorOps]]) and the ANN inner loops, each
+  * bound to Catalyst by a `StaticInvoke` (the `...Call` builders).
   *
   * The builtin form — `aggregate(zip_with(a, b, _*_), 0.0, _+_)` — evaluates
   * its lambda INTERPRETED per element: a blocked near-dup pass at sf0.1
   * runs ~2.5M pairs × 64 dims of boxed lambda calls. This kernel is the same
   * left-to-right multiply-add sequence (bit-identical IEEE result, verified
   * by the DuckDB oracle gate) as a static call inside whole-stage codegen.
+  *
+  * A kernel undefined on a non-null input (length mismatch, null element,
+  * missing code, wrong width) returns a boxed null, which the binding maps
+  * to SQL NULL on both evaluation paths.
   */
 object VectorKernels {
 
   /** Sequential left-to-right multiply-add — the exact fold order of
     * `aggregate(zip_with(a, b, (x, y) => x * y), 0.0, _+_)` and of DuckDB's
-    * `list_sum(list_transform(...))` accumulation.
-    *
-    * CONTRACT (enforced by [[DotExpr]], not here): both arrays same length,
-    * no null elements. Called directly, mismatched lengths truncate to the
-    * shorter side and a null element reads as garbage via
-    * `ArrayData.getDouble` — always gate on [[dotDefined]] first.
+    * `list_sum(list_transform(...))` accumulation. Null where the builtin
+    * fold is null: `zip_with` nulls the pair result on a length mismatch and
+    * `x * y` propagates a null element — never a silent truncation or a
+    * garbage read.
     */
-  def dot(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+  def dot(a: ArrayData, b: ArrayData): java.lang.Double = {
+    if (!defined(a, b)) return null
+    val n = a.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) { acc += a.getDouble(i) * b.getDouble(i); i += 1 }
     acc
   }
 
-  /** True iff [[dot]] is well-defined: equal lengths, no null elements.
+  /** True iff the folds are well-defined: equal lengths, no null elements.
     * The null scan is a bitmap test per element — negligible next to the
     * multiply-add stream it guards.
     */
-  def dotDefined(a: ArrayData, b: ArrayData): Boolean = {
+  private def defined(a: ArrayData, b: ArrayData): Boolean = {
     val n = a.numElements()
     if (b.numElements() != n) return false
     var i = 0
@@ -51,11 +56,11 @@ object VectorKernels {
     * operation order of `aggregate(zip_with(a, b, (x, y) => (x-y)*(x-y)),
     * 0.0, _+_)` and of the IVF oracle's
     * `list_sum(list_transform(..., (v[i]-c[i])*(v[i]-c[i])))`, so results
-    * are bit-identical to both. Same contract as [[dot]]: gate on
-    * [[dotDefined]] first.
+    * are bit-identical to both. Null in the same cases as [[dot]].
     */
-  def d2(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+  def d2(a: ArrayData, b: ArrayData): java.lang.Double = {
+    if (!defined(a, b)) return null
+    val n = a.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -64,35 +69,6 @@ object VectorKernels {
       i += 1
     }
     acc
-  }
-
-  /** Squared distance with the builtin fold's null semantics (null on
-    * length mismatch or null element) — see [[DotExpr]]. The IVF assignment
-    * evaluates this per (row × centroid) per Lloyd round; as an interpreted
-    * HOF lambda it dominated the IVF queries' runtime.
-    */
-  case class D2Expr(left: Expression, right: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[DataType] =
-      Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-    override def dataType: DataType = DoubleType
-    override def nullable: Boolean = true
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val (aa, bb) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      if (dotDefined(aa, bb)) java.lang.Double.valueOf(d2(aa, bb)) else null
-    }
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => s"""
-        if (graft.functions.VectorKernels.dotDefined($a, $b)) {
-          ${ev.value} = graft.functions.VectorKernels.d2($a, $b);
-        } else {
-          ${ev.isNull} = true;
-        }
-      """)
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): D2Expr =
-      copy(left = newLeft, right = newRight)
   }
 
   /** IVFADC estimator sum: Σ_s tables[s][codes[s]] in subspace order — the
@@ -135,54 +111,13 @@ object VectorKernels {
     java.lang.Double.valueOf(acc)
   }
 
-  /** [[adcSum]] as a codegen expression: `left` = the per-query ADC tables
-    * (array of cid→d2 maps, one per subspace), `right` = the candidate's
-    * codes (one cid per subspace). Evaluated once per (candidate, query)
-    * pair — the inner loop of every PQ-family search.
-    */
-  case class AdcSumExpr(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullable: Boolean = true
-    override def nullSafeEval(t: Any, c: Any): Any =
-      adcSum(t.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData])
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, (t, c) => {
-        val r = ctx.freshName("adcSum")
-        s"""
-        java.lang.Double $r = graft.functions.VectorKernels.adcSum($t, $c);
-        if ($r == null) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = $r.doubleValue();
-        }
-        """
-      })
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): AdcSumExpr =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** True iff every element of `a` is non-null and the length is exactly
-    * `dim` — the definedness gate for [[nearestCid]].
-    */
-  def vecDefined(a: ArrayData, dim: Int): Boolean = {
-    if (a.numElements() != dim) return false
-    var i = 0
-    while (i < dim) {
-      if (a.isNullAt(i)) return false
-      i += 1
-    }
-    true
-  }
-
   /** argmin-by-(d2, cid) over a fixed centroid table, with monotone early
     * exit: squared-distance partial sums only grow, so a candidate is
     * abandoned the moment its partial reaches the current best — on average
     * that prunes most of the k·dim multiply-adds while provably selecting
     * the SAME cid as scoring every centroid in full:
     *   - a pruned candidate's full d2 ≥ its partial ≥ best, so it could at
-    *     most TIE, and ties go to the earlier (smaller, `entries` are
+    *     most TIE, and ties go to the earlier (smaller, the table is
     *     cid-ascending) cid anyway — `>=` in both the exit and the
     *     keep-strict-`<` update encode exactly that;
     *   - a surviving candidate's d2 is the complete left-to-right fold,
@@ -192,20 +127,29 @@ object VectorKernels {
     * is ever kept); return the smallest cid then — the same row
     * `array_min`'s NaN-equal struct ordering picked.
     *
-    * CONTRACT: gate on [[vecDefined]]; `cids`/`cents` parallel arrays sorted
-    * ascending by cid, all subvectors of the same length as `v`.
+    * Null when `v` has a null element or is not exactly the table's width
+    * — the dirty inputs every call site already filters out (the
+    * literal-tree form's null-wins-array_min trap, made explicit).
     */
-  def nearestCid(v: ArrayData, cids: Array[Int], cents: Array[Array[Double]]): Int = {
+  def nearestCid(v: ArrayData, table: CentroidTable): java.lang.Integer = {
+    val cids = table.cids
+    val cents = table.cents
+    val dim = cents(0).length
+    if (v.numElements() != dim) return null
+    var i = 0
+    while (i < dim) {
+      if (v.isNullAt(i)) return null
+      i += 1
+    }
     var best = Double.PositiveInfinity
     var bestCid = -1
     var k = 0
     while (k < cents.length) {
       val c = cents(k)
-      val n = c.length
       var acc = 0.0
-      var i = 0
+      i = 0
       var pruned = false
-      while (i < n && !pruned) {
+      while (i < dim && !pruned) {
         val d = v.getDouble(i) - c(i)
         acc += d * d
         if (acc >= best) pruned = true
@@ -214,77 +158,61 @@ object VectorKernels {
       if (!pruned && acc < best) { best = acc; bestCid = cids(k) }
       k += 1
     }
-    if (bestCid == -1 && cids.nonEmpty) cids(0) else bestCid
+    if (bestCid == -1) cids(0) else bestCid
   }
 
-  /** Nearest-centroid assignment as ONE codegen expression over a
-    * plan-constant centroid table (carried as reference objects, not as an
-    * O(k·dim) literal tree — so codegen size is flat in k and the early-exit
-    * loop lives in a single JIT-friendly kernel). Null when the vector is
-    * null, has a null element, or is not exactly `dim` wide — the dirty
-    * inputs every call site already filters out (the literal-tree form's
-    * null-wins-array_min trap, made explicit).
+  // ── Catalyst bindings ────────────────────────────────────────────────────
+
+  private val Doubles = ArrayType(DoubleType)
+
+  /** `dot(a, b)` over `array<double>`; other numeric arrays cast implicitly.
+    * Null for a null array and wherever [[dot]] is undefined.
     */
-  case class NearestCidExpr(child: Expression, cids: Seq[Int], cents: Seq[Seq[Double]])
-      extends UnaryExpression with ImplicitCastInputTypes {
+  def dotCall(a: Expression, b: Expression): Expression =
+    StaticInvoke(getClass, DoubleType, "dot", Seq(a, b), Seq(Doubles, Doubles))
+
+  /** `d2(a, b)`, with [[dotCall]]'s casts and nulls. */
+  def d2Call(a: Expression, b: Expression): Expression =
+    StaticInvoke(getClass, DoubleType, "d2", Seq(a, b), Seq(Doubles, Doubles))
+
+  /** `adcSum(tables, codes)`: `tables` = the per-query ADC tables (array of
+    * cid→d2 maps, one per subspace), `codes` = the candidate's codes (one
+    * cid per subspace). Evaluated once per (candidate, query) pair — the
+    * inner loop of every PQ-family search.
+    */
+  def adcSumCall(tables: Expression, codes: Expression): Expression =
+    StaticInvoke(getClass, DoubleType, "adcSum", Seq(tables, codes))
+
+  /** Nearest-centroid assignment of `v` over a plan-constant table: parallel
+    * non-empty `cids`/`cents`, cid-ascending (the tie order). The table
+    * rides as an object literal — a codegen reference object, not an
+    * O(k·dim) literal tree — so codegen size is flat in k and the early-exit
+    * loop lives in a single JIT-friendly kernel.
+    */
+  def nearestCidCall(v: Expression, cids: Seq[Int], cents: Seq[Seq[Double]]): Expression = {
     require(cids.nonEmpty && cids.size == cents.size, "parallel non-empty cid/centroid tables")
     require(cids == cids.sorted, "centroid table must be cid-ascending (tie order)")
-
-    @transient private lazy val cidArr: Array[Int] = cids.toArray
-    @transient private lazy val centArr: Array[Array[Double]] = cents.map(_.toArray).toArray
-    private def dim: Int = cents.head.size
-
-    override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
-    override def dataType: DataType = IntegerType
-    override def nullable: Boolean = true
-    override def nullSafeEval(v: Any): Any = {
-      val a = v.asInstanceOf[ArrayData]
-      if (vecDefined(a, dim)) Integer.valueOf(nearestCid(a, cidArr, centArr)) else null
-    }
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode = {
-      val cidsRef = ctx.addReferenceObj("nearestCids", cidArr, "int[]")
-      val centsRef = ctx.addReferenceObj("nearestCents", centArr, "double[][]")
-      nullSafeCodeGen(ctx, ev, v => s"""
-        if (graft.functions.VectorKernels.vecDefined($v, $dim)) {
-          ${ev.value} = graft.functions.VectorKernels.nearestCid($v, $cidsRef, $centsRef);
-        } else {
-          ${ev.isNull} = true;
-        }
-      """)
-    }
-    override protected def withNewChildInternal(newChild: Expression): NearestCidExpr =
-      copy(child = newChild)
+    val table = new CentroidTable(cids.toArray, cents.map(_.toArray).toArray)
+    val tableType = ObjectType(classOf[CentroidTable])
+    StaticInvoke(getClass, IntegerType, "nearestCid",
+      Seq(v, Literal(table, tableType)), Seq(Doubles, tableType))
   }
+}
 
-  /** Dot product with the null semantics of the builtin fold it replaced:
-    * `zip_with` nulls the pair result on length mismatch and `x * y`
-    * null-propagates a null element, so the aggregate is null. DotExpr
-    * returns null in exactly those cases instead of silently truncating /
-    * reading garbage (the r4 ADVICE latent-trap fix).
-    */
-  case class DotExpr(left: Expression, right: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[DataType] =
-      Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-    override def dataType: DataType = DoubleType
-    // Null even for non-null inputs (mismatched lengths / null elements).
-    override def nullable: Boolean = true
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val (aa, bb) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      if (dotDefined(aa, bb)) java.lang.Double.valueOf(dot(aa, bb)) else null
-    }
-    override protected def doGenCode(
-        ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => s"""
-        if (graft.functions.VectorKernels.dotDefined($a, $b)) {
-          ${ev.value} = graft.functions.VectorKernels.dot($a, $b);
-        } else {
-          ${ev.isNull} = true;
-        }
-      """)
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): DotExpr =
-      copy(left = newLeft, right = newRight)
+/** [[VectorKernels.nearestCid]]'s centroid table: parallel cid-ascending ids
+  * and centroid vectors. Equality is by value, so two assignments over equal
+  * tables are one plan (exchange reuse, cache lookup, subexpression
+  * elimination).
+  */
+final class CentroidTable(val cids: Array[Int], val cents: Array[Array[Double]])
+    extends Serializable {
+  override def equals(o: Any): Boolean = o match {
+    case t: CentroidTable => java.util.Arrays.equals(cids, t.cids) &&
+      java.util.Arrays.deepEquals(
+        cents.asInstanceOf[Array[AnyRef]], t.cents.asInstanceOf[Array[AnyRef]])
+    case _ => false
   }
+  override def hashCode: Int =
+    31 * java.util.Arrays.hashCode(cids) +
+      java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]])
 }

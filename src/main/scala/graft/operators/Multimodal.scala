@@ -30,18 +30,18 @@ object Multimodal {
   val mediaMetaSchema: StructType = ImageKernels.imageMetaSchema
 
   /** Real header-only image metadata: binary -> struct(width, height,
-    * format), null for bytes no ImageIO reader accepts. Codegen Expression —
-    * stays inside whole-stage codegen, no UDF seam.
+    * format), null for bytes no ImageIO reader accepts. A static kernel
+    * call — stays inside whole-stage codegen, no UDF seam.
     */
   def imageMeta(content: Column): Column =
-    ColumnBridge.column(ImageKernels.ImageMetaExpr(ColumnBridge.expression(content)))
+    ColumnBridge.column(ImageKernels.imageMetaCall(ColumnBridge.expression(content)))
 
   /** Real 1/factor downscale re-encoded as PNG; null for non-image bytes. */
   def imageThumbnail(content: Column, factor: Int): Column =
-    ColumnBridge.column(ImageKernels.ThumbnailExpr(ColumnBridge.expression(content), factor))
+    ColumnBridge.column(ImageKernels.thumbnailCall(ColumnBridge.expression(content), factor))
 
-  /** Fixture encoder (test/oracle half, same convention as the SBE/Avro
-    * encoder udfs): deterministic real PNG/JPEG bytes from (seed, w, h,
+  /** Fixture encoder (test/oracle half, same convention as the SBE encoder
+    * udfs): deterministic real PNG/JPEG bytes from (seed, w, h,
     * format).
     */
   val encodeImageUdf: org.apache.spark.sql.expressions.UserDefinedFunction =

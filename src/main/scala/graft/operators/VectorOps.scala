@@ -4,8 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
 import graft.functions.Num.nz
 import graft.functions.TextFunctions.md5PrefixHash
+import graft.functions.VectorKernels
 
 /** Similarity search over embedding columns (`Array[Float]`) — scale
   * EXTENSION per BASELINE.json's north star; no reference counterpart.
@@ -21,40 +24,34 @@ object VectorOps {
 
   /** Sequential-fold dot product of two double arrays (deterministic order:
     * left-to-right, matching DuckDB's list accumulation). Runs as the
-    * codegen kernel [[graft.functions.VectorKernels.DotExpr]] — the builtin
+    * kernel [[graft.functions.VectorKernels.dot]] — the builtin
     * `aggregate(zip_with(...))` fold evaluates its lambda interpreted per
     * element, which dominated the blocked near-dup queries.
     */
-  def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(graft.functions.VectorKernels.DotExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-  }
+  def dot(a: Column, b: Column): Column =
+    ColumnBridge.column(
+      VectorKernels.dotCall(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Squared euclidean distance as the codegen kernel
-    * [[graft.functions.VectorKernels.D2Expr]] — same left-to-right fold
+  /** Squared euclidean distance as the kernel
+    * [[graft.functions.VectorKernels.d2]] — same left-to-right fold
     * (bit-identical to the `aggregate(zip_with(...))` form it replaced and
     * to the unrolled DuckDB oracle). The IVF assignment evaluates this
     * (rows × centroids × rounds) times; the interpreted HOF lambda was the
     * dominant cost of the IVF queries.
     */
-  def d2(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(graft.functions.VectorKernels.D2Expr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-  }
+  def d2(a: Column, b: Column): Column =
+    ColumnBridge.column(
+      VectorKernels.d2Call(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Fused IVFADC estimator ([[graft.functions.VectorKernels.AdcSumExpr]]):
-    * Σ_s tables[s][codes[s]] as ONE codegen call per candidate pair —
+  /** Fused IVFADC estimator ([[graft.functions.VectorKernels.adcSum]]):
+    * Σ_s tables[s][codes[s]] as ONE static call per candidate pair —
     * replaces the m-deep `element_at(element_at(...))` chain whose nested
     * generic map probes dominated the PQ search inner loop. Same subspace
     * add order, bit-identical result (oracle-gated).
     */
-  private def adcSum(tables: Column, codes: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(graft.functions.VectorKernels.AdcSumExpr(
-      ColumnBridge.expression(tables), ColumnBridge.expression(codes)))
-  }
+  private def adcSum(tables: Column, codes: Column): Column =
+    ColumnBridge.column(
+      VectorKernels.adcSumCall(ColumnBridge.expression(tables), ColumnBridge.expression(codes)))
 
   /** sqrt of the self-dot — the same `acc + x*x` fold order as the previous
     * `aggregate` form, so norms are bit-identical.
@@ -140,7 +137,7 @@ object VectorOps {
   }
 
   /** The nearest-centroid id as a per-row scalar expression — the fused
-    * argmin kernel [[graft.functions.VectorKernels.NearestCidExpr]]: the
+    * argmin kernel [[graft.functions.VectorKernels.nearestCid]]: the
     * centroid table rides along as a plan reference object (flat codegen
     * size in k) and each row runs one early-exit loop that abandons a
     * candidate the moment its partial d2 reaches the current best. Selects
@@ -149,9 +146,8 @@ object VectorOps {
     * its scaladoc for the proof) — with zero joins, zero shuffles.
     */
   private def nearestCidExpr(v: Column, cents: Seq[(Int, Seq[Double])]): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val sorted = cents.sortBy(_._1)
-    ColumnBridge.column(graft.functions.VectorKernels.NearestCidExpr(
+    ColumnBridge.column(VectorKernels.nearestCidCall(
       ColumnBridge.expression(v), sorted.map(_._1), sorted.map(_._2)))
   }
 

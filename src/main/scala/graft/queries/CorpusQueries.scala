@@ -607,7 +607,7 @@ object CorpusQueries {
       // NULL-text docs produce zero w0 rows (unnest of a NULL split), so the
       // per-doc sum must LEFT JOIN back to documents to keep their row with
       // NULL n_tokens — t14's len(string_split(..)) form preserves them and
-      // the Spark side's null-safe BpeCountExpr does too.
+      // the Spark side's null-safe bpeTokenCount call does too.
       s"""WITH $bpeCtes,
          |cnt AS (SELECT d.doc_id, c.n_tokens FROM documents d LEFT JOIN
          |  (SELECT doc_id, CAST(sum(len(xs)) AS BIGINT) AS n_tokens

@@ -192,8 +192,8 @@ object TextQueries {
     },
     // T17 — word-3-gram repetition ratio (the Gopher-style "repetition"
     // quality signal t5's length/TTR/stopword trio misses): share of
-    // duplicated 3-grams per document. One-pass codegen kernel
-    // (TextKernels.NgramRepetitionExpr — no gram-array materialization, no
+    // duplicated 3-grams per document. One-pass kernel
+    // (TextKernels.ngramRepetition — no gram-array materialization, no
     // array_distinct second scan; 1.54 s → sub-0.4 s at sf0.1), zero
     // shuffle; the kernel's window set is bit-identical to the declarative
     // sequence+slice form (spec-asserted) and to the DuckDB oracle.
@@ -215,7 +215,7 @@ object TextQueries {
     // T18 — Gopher most-common-n-gram dominance: the share of the document
     // claimed by its single most frequent word (and 2-gram) — the classic
     // "fraction in the most common n-gram" corpus-quality rule. One-pass
-    // codegen kernel per n (TextKernels.GramDominanceExpr), zero shuffle;
+    // kernel per n (TextKernels.gramDominance), zero shuffle;
     // the top gram breaks count ties lexicographically so the DuckDB oracle
     // (min(gram) at the max count) reproduces it exactly.
     "t18_gram_dominance" -> { (s, dir) =>

@@ -30,7 +30,7 @@ import graft.functions.Avro
   * container format's self-describing schema (inferred from the first
   * file's header), block compression codecs, and reader-schema resolution
   * via the `readerSchema` option (same evolution semantics as
-  * [[graft.functions.Avro.AvroDecode]]).
+  * [[graft.functions.Avro.decodeCall]]).
   *
   * Storage: all IO goes through the Hadoop FileSystem API ([[GraftFs]]) —
   * the reference's container dumps live on S3 (`s3_writer.py:216-230`), so

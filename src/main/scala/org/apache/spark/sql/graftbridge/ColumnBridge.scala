@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Spark 4's `Column` wraps a ColumnNode rather than a Catalyst Expression,
   * and the conversion helpers are `private[sql]`. This shim lives inside the
   * `org.apache.spark.sql` package purely to re-export those two conversions
-  * for graft's custom Catalyst expressions.
+  * for graft's kernel bindings and Catalyst nodes.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

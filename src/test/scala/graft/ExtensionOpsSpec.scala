@@ -678,11 +678,11 @@ class ExtensionOpsSpec extends SparkSpec {
   // and an all-NaN scoring row falls back to the smallest cid (array_min's
   // NaN-equal struct order, kept explicit).
   test("nearestCid kernel: tie-break, dirty-input nulls, NaN fallback") {
-    import graft.functions.VectorKernels.NearestCidExpr
+    import graft.functions.VectorKernels.nearestCidCall
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val cents = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(1.0, 0.0))
     def expr(c: org.apache.spark.sql.Column) =
-      ColumnBridge.column(NearestCidExpr(ColumnBridge.expression(c), Seq(0, 1, 2), cents))
+      ColumnBridge.column(nearestCidCall(ColumnBridge.expression(c), Seq(0, 1, 2), cents))
     val rows = Seq(
       (1L, Seq[java.lang.Double](1.0, 0.0)),      // exact on cids 0 AND 2 → 0
       (2L, Seq[java.lang.Double](0.1, 0.9)),      // nearest cid 1
@@ -707,7 +707,7 @@ class ExtensionOpsSpec extends SparkSpec {
   // chain it replaced (same left subspace add order) on BOTH eval paths,
   // and reproduce the chain's null-on-miss semantics.
   test("adcSum kernel: bit-equal to the element_at chain, null on a missing code") {
-    import graft.functions.VectorKernels.AdcSumExpr
+    import graft.functions.VectorKernels.adcSumCall
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val m = 3
     val rows = Seq(
@@ -718,7 +718,7 @@ class ExtensionOpsSpec extends SparkSpec {
       (3L, Seq(Map(0 -> 0.125), Map(1 -> 2.5), Map(0 -> 3.25)),
         Seq(5, 1, 0)) // code 5 missing from table 0 -> null
     ).toDF("id", "tbl", "codes")
-    val fused = ColumnBridge.column(AdcSumExpr(
+    val fused = ColumnBridge.column(adcSumCall(
       ColumnBridge.expression(col("tbl")), ColumnBridge.expression(col("codes"))))
     val chain = (0 until m)
       .map(s => element_at(element_at(col("tbl"), s + 1), element_at(col("codes"), s + 1)))
@@ -895,7 +895,7 @@ class ExtensionOpsSpec extends SparkSpec {
     assert(out.count() > 0)
   }
 
-  // DotExpr's contract (r4 ADVICE): null on length mismatch or null element,
+  // dot's contract (r4 ADVICE): null on length mismatch or null element,
   // same as the builtin aggregate(zip_with(...)) fold it replaced — never a
   // silent truncation or a garbage read. Pinned on both eval paths.
   test("dot: null on mismatched lengths and null elements, value otherwise") {

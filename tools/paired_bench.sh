@@ -27,7 +27,11 @@
 # The old rev builds in a throwaway clone under $TMPDIR (default /tmp; its
 # own sbt target, no worktree metadata in the repo's .git); each arm is a
 # normal forked-rounds Bench subset run, serialized so no two Spark
-# workloads contend. Arm records and logs go to the same $TMPDIR.
+# workloads contend. Arm records and logs go to the same $TMPDIR, and
+# each arm's engine configuration beside its record (<arm>_env.json: the
+# commit, nproc, SPARK_GRAFT_CPUS/SPARK_GRAFT_MASTER as set, the bench
+# JVM's -Xmx, sbt's own -Xmx, /proc/loadavg at the start and end of the
+# arm), which paired_report.py copies into the paired record.
 set -e
 OLD_REF="$1"; QUERIES="$2"; SF_DIR="$3"; OUT="$4"; RUNS="${5:-3}"
 REPO=$(cd "$(dirname "$0")/.." && pwd)
@@ -46,11 +50,31 @@ git -C "$WT" checkout --quiet --detach "$OLD_SHA"
 # remove the clone however the script ends, an arm dying under set -e too
 trap 'rm -rf "$WT"' EXIT
 
-run_arm() { # dir record logfile
+# the last -Xmx in a JVM option string, or the given default
+xmx_of() { # options default
+  local x
+  x=$(printf '%s\n' "$1" | grep -o -- '-Xmx[^ ]*' | tail -1)
+  echo "${x:-$2}"
+}
+
+run_arm() { # dir record logfile sha
+  local load0
+  load0=$(cat /proc/loadavg)
   (cd "$1" &&
     SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_RUNS="$RUNS" \
     SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_RECORD="$2" \
     sbt -batch "runMain graft.Bench" > "$3" 2>&1)
+  # build.sbt gives the forked bench JVM -Xmx$SPARK_DRIVER_MEM (default 16g)
+  python3 - "${2%.json}_env.json" <<PY
+import json, sys
+json.dump({"sha": "$4", "nproc": $(nproc),
+           "spark_graft_cpus": "${SPARK_GRAFT_CPUS:-}" or None,
+           "spark_graft_master": "${SPARK_GRAFT_MASTER:-}" or None,
+           "bench_jvm_xmx": "-Xmx${SPARK_DRIVER_MEM:-16g}",
+           "sbt_xmx": "$(xmx_of "${SBT_OPTS:-} ${JAVA_OPTS:-}" "sbt default")",
+           "loadavg_start": "$load0", "loadavg_end": "$(cat /proc/loadavg)"},
+          open(sys.argv[1], "w"), indent=1)
+PY
   # retain the arm's diag (spill/shuffle/CPU per round) — Bench overwrites
   # bench_diag_only.json per run and the clone is removed at the end, so
   # without this copy a surprising arm delta cannot be attributed post-hoc
@@ -58,10 +82,10 @@ run_arm() { # dir record logfile
 }
 
 echo "== paired bench: old=$OLD_SHA new=$NEW_SHA queries=$QUERIES =="
-echo "== arm A1 (old) =="; run_arm "$WT"   "$TMP"/paired_old1.json "$TMP"/paired_old1.log
-echo "== arm B1 (new) =="; run_arm "$REPO" "$TMP"/paired_new1.json "$TMP"/paired_new1.log
-echo "== arm B2 (new) =="; run_arm "$REPO" "$TMP"/paired_new2.json "$TMP"/paired_new2.log
-echo "== arm A2 (old) =="; run_arm "$WT"   "$TMP"/paired_old2.json "$TMP"/paired_old2.log
+echo "== arm A1 (old) =="; run_arm "$WT"   "$TMP"/paired_old1.json "$TMP"/paired_old1.log "$OLD_SHA"
+echo "== arm B1 (new) =="; run_arm "$REPO" "$TMP"/paired_new1.json "$TMP"/paired_new1.log "$NEW_SHA"
+echo "== arm B2 (new) =="; run_arm "$REPO" "$TMP"/paired_new2.json "$TMP"/paired_new2.log "$NEW_SHA"
+echo "== arm A2 (old) =="; run_arm "$WT"   "$TMP"/paired_old2.json "$TMP"/paired_old2.log "$OLD_SHA"
 
 python3 "$REPO/tools/paired_report.py" "$OUT" \
   "$OLD_SHA" "$NEW_SHA" \

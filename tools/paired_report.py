@@ -26,10 +26,22 @@ conservative for improvement claims) and against the adjacent A1
 former — see paired_r17's maiden analysis.
 
 Cross-round medians per arm are retained alongside the mins so a reader
-can check round-structure effects.
+can check round-structure effects. Each arm's engine configuration
+(`<arm>_env.json` beside its record, written by paired_bench.sh: commit,
+nproc, SPARK_GRAFT_CPUS/MASTER, bench JVM and sbt -Xmx, host load at the
+start and end of the arm) goes into `arms`; an arm without one says so.
 """
 import json
+import os
 import sys
+
+
+def arm_env(path):
+    env = os.path.splitext(path)[0] + "_env.json"
+    if not os.path.exists(env):
+        return {"note": "no engine configuration recorded for this arm"}
+    with open(env) as f:
+        return json.load(f)
 
 
 def mins(rec):
@@ -102,6 +114,7 @@ def main() -> None:
         "sf": arms[1].get("sf"),
         "runs_per_arm": arms[1].get("runs"),
         "arm_order": arm_order,
+        "arms": {name: arm_env(p) for name, p in zip(arm_order, arm_paths)},
         "basis": "cold-cache",
         "basis_detail": (
             "interleaved arms in one sitting on one box, min-wall per arm; "
