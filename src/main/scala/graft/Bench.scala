@@ -253,7 +253,14 @@ object Bench {
     // two views agree up to driver-side planning overhead.
     val taskCpuNs = new java.util.concurrent.atomic.AtomicLong
     val taskGcMs = new java.util.concurrent.atomic.AtomicLong
+    // Construction apart from execution: a job submitted before the query
+    // function returned (epoch ms, the clock of SparkListenerJobStart.time)
+    // is a build job — an eager collect, a count, a schema inference.
+    val buildEndMs = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
+    val buildJobs = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.time < buildEndMs.get) buildJobs.incrementAndGet()
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         val m = e.taskMetrics
         if (m != null) {
@@ -278,10 +285,14 @@ object Bench {
       org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark.sparkContext)
       spillMem.set(0); spillDisk.set(0); shufRead.set(0); shufWrite.set(0)
       taskCpuNs.set(0); taskGcMs.set(0)
+      buildJobs.set(0); buildEndMs.set(Long.MaxValue)
       val (gc0, cpu0) = (gcMs(), cpuMs())
       val t0 = System.nanoTime()
+      var buildMs = -1L
       try {
         val df = fn(spark, sfDir)
+        buildMs = (System.nanoTime() - t0) / 1000000L
+        buildEndMs.set(System.currentTimeMillis())
         df.write.format("noop").mode("overwrite").save()
         if (withExec) dfs(name) = df
       } catch { case e: Throwable => record(name, e) }
@@ -294,7 +305,8 @@ object Bench {
       org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark.sparkContext)
       println(s"#GRAFT D $name $gcD $cpuD " +
         s"${spillMem.get} ${spillDisk.get} ${shufRead.get} ${shufWrite.get} " +
-        s"${taskCpuNs.get / 1000000L} ${taskGcMs.get}")
+        s"${taskCpuNs.get / 1000000L} ${taskGcMs.get} " +
+        s"$buildMs ${buildJobs.get}")
     }
     if (withExec) selected.foreach { case (name, _) =>
       dfs.get(name).foreach { df =>
@@ -335,7 +347,9 @@ object Bench {
     */
   private final case class ChildRound(
       times: Seq[(String, Double)],
-      diag: Map[String, Seq[Long]], // gc_ms, cpu_ms, spill_mem, spill_disk, shuf_read, shuf_write
+      // gc_ms, cpu_ms, spill_mem, spill_disk, shuf_read, shuf_write,
+      // task_cpu_ms, task_gc_ms, build_ms, build_jobs
+      diag: Map[String, Seq[Long]],
       exec: Seq[(String, Double)],
       errors: Map[String, String]) {
     def total: Double = times.map(_._2).sum
@@ -505,7 +519,8 @@ object Bench {
           s"""{"wall":${num(wall, 3)},"gc_ms":${at(0)},"cpu_ms":${at(1)},""" +
             s""""spill_mem":${at(2)},"spill_disk":${at(3)},""" +
             s""""shuffle_read":${at(4)},"shuffle_write":${at(5)},""" +
-            s""""task_cpu_ms":${at(6)},"task_gc_ms":${at(7)}}"""
+            s""""task_cpu_ms":${at(6)},"task_gc_ms":${at(7)},""" +
+            s""""build_ms":${at(8)},"build_jobs":${at(9)}}"""
         }
         "\"" + name + "\":" + cells.mkString("[", ",", "]")
       }.mkString("{\"rounds_per_query\":{", ",", "},") +

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.sources.GraftFs
+
 /** Stateful streaming output identity across JVM topologies.
   *
   * In `local[N]` state encoders never serialize across a JVM boundary,
@@ -69,7 +71,7 @@ object ClusterStream {
   }
 
   private def fingerprint(spark: SparkSession, dir: String, path: String): Fp = {
-    val raw = spark.read.parquet(dir)
+    val raw = GraftFs.readParquet(spark, dir)
     // hot_path's volume/vwap are sum(double)-derived: partial-aggregate
     // merge order differs legitimately across topologies (defaultParallelism
     // 4 vs 8), so they are compared as tolerance-checked totals, not hashed

@@ -35,7 +35,8 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
-      // testdata events.parquet carries TIMESTAMP(NANOS) — read as nanos long
+      // a TIMESTAMP(NANOS) parquet column reads as a nanos long (Tables.events);
+      // the project's own events.ts is MICROS and reads as timestamp_ntz
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // ~100 distinct queries x several codegen stages in one JVM (Verify,
       // the test suite) overflow the default 100-entry generated-code

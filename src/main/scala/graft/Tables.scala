@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.GraftFs
+
 /** Loaders for the driver-generated test tables (TESTDATA.md) plus the
   * column-normalized "trade stream" view used by the market-data operators.
   *
@@ -13,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    GraftFs.readParquet(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
@@ -30,13 +32,14 @@ object Tables {
     * a price, and a stable tie-break id. Timestamps are reduced to epoch ms
     * exactly once here (SURVEY §7.5.7 "timestamp unit chaos" — one
     * normalization point).
-    */
-  /** The events table's `ts` is nanosecond-precision parquet, which Spark only
-    * reads with `spark.sql.legacy.parquet.nanosAsLong=true` (set by
-    * [[GraftSession]], Verify and Bench) — it then surfaces as a nanos LONG.
-    * Handle both shapes so the driver's own session config also works.
-    * `ts div 1000000` is integral division (a double division would lose
-    * precision above 2^53 ns).
+    *
+    * The project's `events.ts` (every scale slice and perfbench's copy) is
+    * INT64 `TIMESTAMP(MICROS, isAdjustedToUTC=false)`, which Spark reads as
+    * `timestamp_ntz`. The `LongType` branch serves only a NANOS file from
+    * outside the project: Spark reads one only with
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (set by [[GraftSession]]),
+    * as a nanos LONG. `ts div 1000000` is integral division (a double
+    * division would lose precision above 2^53 ns).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val raw = load(spark, dir, "events")

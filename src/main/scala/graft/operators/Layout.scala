@@ -103,7 +103,7 @@ object Layout {
     val in = GraftFs.listBySuffix(src, ".parquet", conf, keepEmpty = false)
     val bytesIn = in.map(_.getLen).sum
     val nOut = math.max(1L, (bytesIn + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(src).repartition(nOut).write.mode("overwrite").parquet(dst)
+    GraftFs.readParquet(spark, src).repartition(nOut).write.mode("overwrite").parquet(dst)
     val out = GraftFs.listBySuffix(dst, ".parquet", conf, keepEmpty = false)
     CompactionStats(in.length, bytesIn, out.length)
   }

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.GraftFs
+
 /** Persistence for the trained tokenizer — the (merges, vocab) pair — the
   * same artifact lifecycle [[VectorIndex]] gives the ANN index: training
   * builds the merge table and frequency-rank vocab offline, this writes
@@ -94,7 +96,7 @@ object TokenizerArtifact {
     * a dimension read, never a corpus read.
     */
   def loadMerges(spark: SparkSession, dir: String): Seq[(String, String)] =
-    spark.read.parquet(s"$dir/merges").collect()
+    GraftFs.readParquet(spark, s"$dir/merges").collect()
       .map(r => (r.getAs[Long]("rank"), r.getAs[String]("left"), r.getAs[String]("right")))
       .sortBy(_._1).map(t => (t._2, t._3)).toSeq
 
@@ -103,5 +105,5 @@ object TokenizerArtifact {
     * recomputing the corpus aggregate.
     */
   def loadVocab(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/vocab")
+    GraftFs.readParquet(spark, s"$dir/vocab")
 }

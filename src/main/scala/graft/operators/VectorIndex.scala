@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.VectorOps.IvfPqModel
+import graft.sources.GraftFs
 
 /** Persistence for the IVF-PQ index — the missing half of the production
   * ANN lifecycle: [[VectorOps.ivfPqTrain]] builds offline, this writes the
@@ -77,11 +78,11 @@ object VectorIndex {
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
-    val pF = Future(spark.read.parquet(s"$dir/params").head())
-    val centsF = Future(spark.read.parquet(s"$dir/centroids").collect()
+    val pF = Future(GraftFs.readParquet(spark, s"$dir/params").head())
+    val centsF = Future(GraftFs.readParquet(spark, s"$dir/centroids").collect()
       .map(r => (r.getAs[Int]("cid"), r.getAs[Seq[Double]]("c").toVector: Seq[Double]))
       .sortBy(_._1).toSeq)
-    val bookRowsF = Future(spark.read.parquet(s"$dir/books").collect()
+    val bookRowsF = Future(GraftFs.readParquet(spark, s"$dir/books").collect()
       .map(r => (r.getAs[Int]("s"), r.getAs[Int]("cid"),
         r.getAs[Seq[Double]]("c").toVector: Seq[Double])))
     val p = Await.result(pF, Duration.Inf)
@@ -93,6 +94,6 @@ object VectorIndex {
     val model = IvfPqModel(
       p.getAs[Int]("n_cells"), p.getAs[Int]("dim"), m, p.getAs[Int]("ks"),
       cents, books)
-    (model, spark.read.parquet(s"$dir/codes"))
+    (model, GraftFs.readParquet(spark, s"$dir/codes"))
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{Sbe, TimeUnits}
 import graft.operators._
+import graft.sources.GraftFs
 
 /** Quote/depth microstructure aggregates (A2/A3), the SBE binary decode
   * roundtrip (S2), and bronze partition-key derivation (K2/S8).
@@ -401,7 +402,7 @@ object MicrostructureQueries {
       val dst = CompactionFixture.dstDir(dir)
       Layout.compactParquet(s, src, dst, targetBytes = 256L * 1024)
       FixtureCleanup.registerTree(new java.io.File(dst))
-      s.read.parquet(dst)
+      GraftFs.readParquet(s, dst)
         .select("symbol", "ts_ms", "price", "qty", "trade_id", "user_id")
     },
     // K10 — MERGE-style upsert (Scd.mergeUpsert): base = latest state per

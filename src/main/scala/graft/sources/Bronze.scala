@@ -66,8 +66,7 @@ object Bronze {
       overlapMs: Long): DataFrame = {
     val cutoff = watermarkMs - overlapMs
     val cutoffDay = TimeUnits.millisToTimestamp(lit(cutoff)).cast("date")
-    spark.read
-      .parquet(path)
+    GraftFs.readParquet(spark, path)
       // partition-level prune (yyyy/mm/dd are strings; compare lexicographically via a derived date)
       .filter(
         to_date(concat_ws("-", col("yyyy"), col("mm"), col("dd"))) >= cutoffDay)
@@ -163,7 +162,7 @@ object Bronze {
     loadWatermark(spark, pointer, "version")
       .orElse(tolerant(prior))
       .orElse(loadWatermark(spark, pointer, "version"))
-      .map(v => spark.read.parquet(s"$basePath/v$v"))
+      .map(v => GraftFs.readParquet(spark, s"$basePath/v$v"))
   }
 
   /** K7: durable watermark (one-row parquet). */
@@ -179,7 +178,7 @@ object Bronze {
     */
   def loadWatermark(spark: SparkSession, path: String, key: String): Option[Long] =
     try {
-      spark.read.parquet(path).filter(col("key") === key)
+      GraftFs.readParquet(spark, path).filter(col("key") === key)
         .select("watermark_ms").collect().headOption.map(_.getLong(0))
     } catch {
       case e: org.apache.spark.sql.AnalysisException

@@ -3,7 +3,8 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.util.SerializableConfiguration
 
 /** Hadoop-FileSystem plumbing shared by the custom sources (`sbe-frames`,
@@ -59,6 +60,19 @@ object GraftFs {
     */
   def broadcastConf(hadoopConf: Configuration): Broadcast[SerializableConfiguration] =
     SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+
+  /** `spark.read.parquet(path)` without the Spark job its schema inference
+    * starts on every load: the schema comes from one footer read on the
+    * driver ([[FooterSchema]]), through the function inference applies, so
+    * the DataFrame's schema, plan and rows are unchanged. Hive partition
+    * columns still come from the paths (the given schema holds only data
+    * columns, as the inferred one does). The footer is read on every call,
+    * so a rewritten file is never read stale. When no schema can be read
+    * (no data file, a missing path, an unreadable footer) Spark infers and
+    * raises its own error.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    FooterSchema.of(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
 
   /** FileSystem for `path`. The local scheme resolves to the RAW local
     * filesystem, not the checksumming `LocalFileSystem` wrapper: the wrapper

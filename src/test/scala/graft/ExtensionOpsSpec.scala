@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Layout, Scd, Sessionize, TextDedup, TextRank, VectorOps}
 
@@ -9,6 +10,13 @@ import graft.operators.{Layout, Scd, Sessionize, TextDedup, TextRank, VectorOps}
   */
 class ExtensionOpsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The same rows over an RDD leaf. A local Seq lets ConvertToLocalRelation
+    * evaluate a kernel at optimization time, interpreted, so a test pinned
+    * to CODEGEN_ONLY would never run the generated call.
+    */
+  private def overRdd(local: DataFrame): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(local.collect().toSeq, 2), local.schema)
 
   // --- Sessionize ---------------------------------------------------------
 
@@ -690,7 +698,7 @@ class ExtensionOpsSpec extends SparkSpec {
       (4L, Seq[java.lang.Double](1.0)),           // wrong width → null
       (5L, null),                                 // null array → null
       (6L, Seq[java.lang.Double](Double.NaN, 0.0)) // NaN poisons all → cid 0
-    ).toDF("id", "v")
+    ).toDF("id", "v").transform(overRdd)
     def run(mode: String) = {
       spark.conf.set("spark.sql.codegen.factoryMode", mode)
       try rows.select(col("id"), expr(transform(col("v"), x => x.cast("double"))).as("cid"))
@@ -717,7 +725,7 @@ class ExtensionOpsSpec extends SparkSpec {
         Seq(2, 1, 0)), // all present, different picks
       (3L, Seq(Map(0 -> 0.125), Map(1 -> 2.5), Map(0 -> 3.25)),
         Seq(5, 1, 0)) // code 5 missing from table 0 -> null
-    ).toDF("id", "tbl", "codes")
+    ).toDF("id", "tbl", "codes").transform(overRdd)
     val fused = ColumnBridge.column(adcSumCall(
       ColumnBridge.expression(col("tbl")), ColumnBridge.expression(col("codes"))))
     val chain = (0 until m)
@@ -905,7 +913,7 @@ class ExtensionOpsSpec extends SparkSpec {
       (2L, Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](3.0)),      // len mismatch
       (3L, Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](3.0, 4.0)), // null elem
       (4L, null, Seq[java.lang.Double](1.0))                                  // null array
-    ).toDF("id", "a", "b")
+    ).toDF("id", "a", "b").transform(overRdd)
     def run(codegen: String) = {
       spark.conf.set("spark.sql.codegen.factoryMode", codegen)
       try rows.select(col("id"), VectorOps.dot(col("a"), col("b")).as("d"))

@@ -30,6 +30,11 @@ can check round-structure effects. Each arm's engine configuration
 (`<arm>_env.json` beside its record, written by paired_bench.sh: commit,
 nproc, SPARK_GRAFT_CPUS/MASTER, bench JVM and sbt -Xmx, host load at the
 start and end of the arm) goes into `arms`; an arm without one says so.
+Where an arm's per-round diag (`<arm>_diag.json`, also copied by
+paired_bench.sh) carries them, each query gets that arm's min `build_ms`
+(time until the query function returned) and max `build_jobs` (jobs
+started before it returned) over its rounds, keyed by arm; an arm whose
+bench predates the two fields reads null.
 """
 import json
 import os
@@ -44,6 +49,19 @@ def arm_env(path):
         return json.load(f)
 
 
+def arm_diag(path):
+    diag = os.path.splitext(path)[0] + "_diag.json"
+    if not os.path.exists(diag):
+        return {}
+    with open(diag) as f:
+        return json.load(f).get("rounds_per_query", {})
+
+
+def build_field(diag, q, field, pick):
+    vals = [c[field] for c in diag.get(q, []) if c.get(field, -1) >= 0]
+    return pick(vals) if vals else None
+
+
 def mins(rec):
     # min-wall per query; fall back to medians for legacy records
     return rec.get("queries_min") or rec["queries"]
@@ -53,6 +71,7 @@ def main() -> None:
     out, old_sha, new_sha = sys.argv[1:4]
     arm_paths = sys.argv[4:]
     arms = [json.load(open(p)) for p in arm_paths]
+    diags = [arm_diag(p) for p in arm_paths]
     four = len(arms) == 4
     if four:
         old_arms, new_arms = [arms[0], arms[3]], [arms[1], arms[2]]
@@ -103,6 +122,12 @@ def main() -> None:
                                           if best_old else None)
             entry["ratio_adjacent"] = (round(best_new / olds[0], 4)
                                        if olds[0] else None)
+        build_ms = {name: build_field(d, q, "build_ms", min)
+                    for name, d in zip(arm_order, diags)}
+        if any(v is not None for v in build_ms.values()):
+            entry["build_ms_arms"] = build_ms
+            entry["build_jobs_arms"] = {name: build_field(d, q, "build_jobs", max)
+                                        for name, d in zip(arm_order, diags)}
         queries[q] = entry
     with_r = [r for r in queries.values() if "drift_old" in r]
     a2_faster = sum(1 for r in with_r
