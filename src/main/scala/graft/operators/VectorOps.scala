@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -62,6 +63,52 @@ object VectorOps {
 
   private def asDouble(a: Column): Column = transform(a, x => x.cast("double"))
 
+  /** The (id, v) rows every trained or re-ranked path reads: the embedding
+    * as doubles, minus the rows whose embedding is null or holds a null
+    * element. Such a row would otherwise seed a null centroid, or score a
+    * null distance that ranks first. The guard is the codegen dot kernel:
+    * dot(v, v) is null exactly then (a wrong-width vector passes it).
+    * Brute force ([[annTopK]], [[nearDupPairs]]) reads no such filter: there
+    * a dirty row scores a null cosine.
+    */
+  private def vectors(vecs: DataFrame): DataFrame = // id, embedding
+    vecs.select(col("id"), asDouble(col("embedding")).as("v"))
+      .filter(dot(col("v"), col("v")).isNotNull)
+
+  /** Cosine from precomputed norms, ROUNDED to 6 dp so rank order and
+    * thresholds are stable under sub-ulp engine differences.
+    */
+  private def roundedCosine(a: Column, b: Column, na: Column, nb: Column): Column =
+    nz(round(dot(a, b) / (na * nb), 6))
+
+  /** The k best pairs per query_id by `order`, ties to the smaller vec_id:
+    * (query_id, vec_id, score, rank). Every top-k search ends here.
+    */
+  private def topK(scored: DataFrame, score: String, order: Column, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(order, col("vec_id"))
+    scored
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select("query_id", "vec_id", score, "rank")
+  }
+
+  /** Top-k by rounded cosine of pairs carrying a query (qv, qn) and a corpus
+    * row (cv, cn) with their norms.
+    */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    topK(
+      pairs.withColumn("cos_sim", roundedCosine(col("qv"), col("cv"), col("qn"), col("cn"))),
+      "cos_sim", col("cos_sim").desc, k)
+
+  /** Top-k by rounded ADC distance of pairs carrying a query's tables (tbl)
+    * and a corpus row's PQ codes. The fused kernel keeps the left subspace
+    * fold (t0 + t1 + …, the oracle's order), one call per pair.
+    */
+  private def adcTopK(pairs: DataFrame, k: Int): DataFrame =
+    topK(
+      pairs.withColumn("approx_d2", round(adcSum(col("tbl"), col("codes")), 6)),
+      "approx_d2", col("approx_d2"), k)
+
   /** Brute-force cosine top-k: for each row of `queries`, the k most similar
     * corpus rows. Rank orders by the ROUNDED similarity (6 dp) then corpus
     * id, so results are stable under sub-ulp engine differences.
@@ -78,14 +125,7 @@ object VectorOps {
       .withColumn("qn", l2Norm(col("qv")))
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("cv"))
       .withColumn("cn", l2Norm(col("cv")))
-    val joined = c
-      .crossJoin(broadcast(q))
-      .withColumn("cos_sim", nz(round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    joined
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id", "cos_sim", "rank")
+    cosineTopK(c.crossJoin(broadcast(q)), k)
   }
 
   /** Cosine near-dup pairs within a blocking key (e.g. a cluster/label or an
@@ -100,7 +140,7 @@ object VectorOps {
       .withColumn("nb", l2Norm(col("vb")))
     a.join(b, Seq("block"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cos_sim", nz(round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)))
+      .withColumn("cos_sim", roundedCosine(col("va"), col("vb"), col("na"), col("nb")))
       .filter(col("cos_sim") >= threshold)
       .select("block", "id_a", "id_b", "cos_sim")
   }
@@ -136,6 +176,9 @@ object VectorOps {
       .reduce(_ + _)
   }
 
+  /** A codebook: (cid, centroid) rows, cid-ascending. */
+  private type Book = Seq[(Int, Seq[Double])]
+
   /** The nearest-centroid id as a per-row scalar expression — the fused
     * argmin kernel [[graft.functions.VectorKernels.nearestCid]]: the
     * centroid table rides along as a plan reference object (flat codegen
@@ -143,108 +186,146 @@ object VectorOps {
     * candidate the moment its partial d2 reaches the current best. Selects
     * the identical cid as ranking rank-1 by (d2, cid) — min d2, ties to the
     * smaller cid (the kernel's `>=` prune + cid-ascending iteration; see
-    * its scaladoc for the proof) — with zero joins, zero shuffles.
+    * its scaladoc for the proof) — with zero joins, zero shuffles, at any k.
     */
-  private def nearestCidExpr(v: Column, cents: Seq[(Int, Seq[Double])]): Column = {
+  private[graft] def nearestCidExpr(v: Column, cents: Book): Column = {
     val sorted = cents.sortBy(_._1)
     ColumnBridge.column(VectorKernels.nearestCidCall(
       ColumnBridge.expression(v), sorted.map(_._1), sorted.map(_._2)))
   }
 
-  /** Above this k, [[nearestCidExpr]]'s O(k·dim) per-row scalar work stops
-    * being the obvious trade against the broadcast-join + rank path. The
-    * kernel form removed the old codegen-tree-size ceiling (the table is a
-    * reference object, and early exit prunes most of the k·dim stream), so
-    * the cap sits at 1024 — past that, prefer the join if profiling ever
-    * shows the scalar loop dominating; both paths assign identically
-    * (spec-asserted).
-    */
-  val NearestCidExprMaxK: Int = 1024
+  /** Contiguous `sub`-wide slices of `x`: the m subspaces of PQ. */
+  private def slices(x: Column, m: Int, sub: Int): Seq[Column] =
+    (0 until m).map(s => slice(x, s * sub + 1, sub))
 
-  /** The k-row centroid state as a broadcastable local DataFrame. */
-  private def centroidDf(
-      spark: org.apache.spark.sql.SparkSession,
-      cents: Seq[(Int, Seq[Double])]): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(
-        "cid", org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField(
-        "c",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
-        nullable = true)))
+  /** The code of a vector cut into `parts`: per part, the cid of the nearest
+    * codeword in that part's book.
+    */
+  private def encode(parts: Seq[Column], books: Seq[Book]): Column =
+    array(parts.zip(books).map { case (p, b) => nearestCidExpr(p, b) }: _*)
+
+  /** The ADC tables of the vector `q`: per subspace, a cid→d2 map from q's
+    * slice to every codeword of that subspace's book. Maps, not positional
+    * arrays: a codebook that lost a cell to an empty-cluster round has
+    * non-contiguous cids, so position indexing would silently misalign
+    * codes with table entries.
+    */
+  private def adcTables(q: Column, books: Seq[Book], sub: Int): Column =
+    array(slices(q, books.size, sub).zip(books).map { case (p, b) =>
+      map_from_arrays(typedLit(b.map(_._1)), transform(typedLit(b.map(_._2)), c => d2(p, c)))
+    }: _*)
+
+  /** The k-row centroid state as a broadcastable local DataFrame (cid, c). */
+  private[graft] def centroidDf(spark: SparkSession, cents: Book): DataFrame = {
+    val schema = StructType(Seq(
+      StructField("cid", IntegerType, nullable = false),
+      StructField("c", ArrayType(DoubleType), nullable = true)))
     spark.createDataFrame(
-      java.util.Arrays.asList(cents.map { case (cid, c) =>
-        org.apache.spark.sql.Row(cid, c)
-      }: _*),
-      schema)
+      java.util.Arrays.asList(cents.map { case (cid, c) => Row(cid, c) }: _*), schema)
   }
 
-  /** Nearest-centroid assignment of `v` (columns id, v) → (id, v, cid).
-    * k <= [[NearestCidExprMaxK]]: zero-shuffle scalar expression
-    * ([[nearestCidExpr]]). Larger k: broadcast the centroid table and rank —
-    * same (d2, cid) tie order, one extra per-id shuffle, expression size
-    * flat in k. Both paths produce identical assignments (the d2 fold is the
-    * same left-to-right zip_with sum), spec-asserted at k=128.
+  /** A cell mean as the sequential fold in id order (sorted `collect_list`
+    * + `aggregate`): bit-identical to the oracle's unrolled DuckDB left fold,
+    * but the whole cell's values cross the shuffle as a list per (cell,
+    * element) — O(rows × dims) shuffle volume.
     */
-  private[graft] def assignCids(
-      v: DataFrame,
-      cents: Seq[(Int, Seq[Double])],
-      maxExprK: Int = NearestCidExprMaxK): DataFrame =
-    if (cents.size <= maxExprK) v.withColumn("cid", nearestCidExpr(col("v"), cents))
-    else rankedCells(v, centroidDf(v.sparkSession, cents), 1)
+  private def orderedMean: Column =
+    aggregate(
+      transform(array_sort(collect_list(struct(col("id"), col("x")))), e => e.getField("x")),
+      lit(0.0), (a, x) => a + x) / count(lit(1))
 
-  /** IVF (inverted-file) index: deterministic Lloyd k-means (seeded by the
-    * first k vectors in id order, fixed iteration count — reproducible
-    * anywhere), assigning every vector to its nearest centroid. Queries probe
-    * only their own cell (`nProbe=1` semantics), turning top-k search into a
-    * per-cell scan — the classic recall/throughput dial for ANN at corpus
-    * scale.
+  /** A cell mean from fixed-point LONG sums, the production dial: values
+    * quantize by `floor(x·1e8 + 0.5)` (the engine-portable rounding
+    * quantizeInt8 uses) and accumulate as LONG sums. Integer addition is
+    * exact, so associative and merge-order-free (a double `avg()` merges
+    * partial sums in shuffle-arrival order, which is run- and
+    * engine-dependent, and a low-bit difference in a centroid can flip a
+    * nearest-cell assignment), and it is a codegen-primitive aggregate (a
+    * DECIMAL accumulator was measured ~0.5 s slower at sf0.1 than the exact
+    * fold it was supposed to beat). Map-side partials keep shuffle volume
+    * O(cells × dims). The cast to long BEFORE the sum is load-bearing:
+    * floor() returns DOUBLE, and a double sum is only exact to 2^53 — the
+    * cast makes it a true LONG sum (exact to 2^63, like the oracle's
+    * CAST(... AS BIGINT)). Overflow headroom: |x|·1e8·rowsPerCell must stay
+    * below 2^63 — ~9e10 rows per (cell, element) for unit-scale embeddings.
+    */
+  private def fixedPointMean: Column =
+    sum(floor(col("x") * lit(1e8) + lit(0.5)).cast("long")).cast("double") / lit(1e8) /
+      count(lit(1))
+
+  /** Deterministic Lloyd k-means over the (id, v) rows, one book per part
+    * that `split` cuts a vector into (IVF: the whole vector; PQ: m
+    * subspaces): seeded by the k smallest ids, numbered 0..k-1 in id order;
+    * a fixed number of rounds; assignment by the (d2, cid) argmin kernel;
+    * each (cell, element) updated by `mean` over its (id, x) rows. Every
+    * part is as wide as the first seed's, so element d lies in part
+    * d / width. A cell that loses every member disappears (matching the
+    * oracle's GROUP BY), so later rounds score fewer candidates.
+    *
+    * Scale shape: all parts train in the SAME per-round job, and the round
+    * is ONE exchange (the per-(cell, element) means). The codes are
+    * computed below the explode, once per row. The means are bounded by
+    * k·dim rows, so the per-cell arrays are assembled on the driver, in
+    * element order — the doubles a second groupBy exchange would give.
+    */
+  private def lloyd(
+      v: DataFrame, // id, v
+      split: Column => Seq[Column],
+      k: Int,
+      iterations: Int,
+      mean: Column): IndexedSeq[Book] = {
+    val seeds = v.orderBy("id").limit(k).select(split(col("v")): _*).collect().toSeq
+    require(seeds.nonEmpty, "no vector without nulls to seed the k-means from")
+    val m = seeds.head.length
+    val width = seeds.head.getSeq[Double](0).size
+    var books = (0 until m).map(s =>
+      seeds.zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](s)) })
+    // one part: a literal index, not a per-element division (the division
+    // measured 5-14 % of an IVF round at sf0.1)
+    val part = if (m == 1) lit(0) else (col("d") / lit(width)).cast("int")
+    for (_ <- 0 until iterations) {
+      val means = v
+        .select(col("id"), col("v"), encode(split(col("v")), books).as("cids"))
+        .select(col("id"), col("cids"), posexplode(col("v")).as(Seq("d", "x")))
+        .groupBy(element_at(col("cids"), part + 1).as("cid"), col("d"))
+        .agg(mean.as("mn"))
+        .collect()
+      books = (0 until m).map(s =>
+        means.filter(_.getInt(1) / width == s)
+          .groupBy(_.getInt(0))
+          .map { case (cid, rs) =>
+            (cid, rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq: Seq[Double])
+          }
+          .toSeq.sortBy(_._1))
+    }
+    books
+  }
+
+  /** IVF (inverted-file) index: deterministic Lloyd k-means ([[lloyd]] over
+    * the whole vector: first-k seed in id order, fixed iteration count —
+    * reproducible anywhere), assigning every vector to its nearest centroid.
+    * Queries probe only their own cell (`nProbe=1` semantics), turning top-k
+    * search into a per-cell scan — the classic recall/throughput dial for
+    * ANN at corpus scale.
     *
     * Centroid state is k tiny vectors, so it lives on the DRIVER between
-    * iterations. For k <= [[NearestCidExprMaxK]] assignment is a zero-shuffle
-    * scalar expression over the corpus ([[nearestCidExpr]]) and each Lloyd
-    * round costs exactly ONE shuffle (the per-(cell, dim) mean update) — no
-    * crossJoin, no per-id ranking, no per-iteration caches to manage or
-    * leak. Above that cap [[assignCids]] switches to the broadcast-join +
-    * rank path, which adds one per-id row_number shuffle per round (the
-    * price of keeping the codegen expression tree bounded). The k-row
-    * collect per round is the same driver traffic the final LocalRelation
-    * needed anyway.
+    * iterations; assignment is a zero-shuffle scalar expression over the
+    * corpus ([[nearestCidExpr]]), so each round costs ONE shuffle (the mean
+    * update) — no crossJoin, no per-id ranking, no per-iteration caches to
+    * manage or leak.
     *
-    * Determinism: BOTH mean modes are order-independent and therefore
-    * oracle-reproducible — double `avg()` would merge partial sums in
-    * shuffle-arrival order, which is run- and engine-dependent, and a
-    * low-bit difference in a centroid can flip a nearest-cell assignment.
-    * `exactMeans = true` uses a sequential fold in id order (sorted
-    * `collect_list` + `aggregate`): bit-identical to the unrolled DuckDB
-    * left fold, but the whole cell's values cross the shuffle as a list per
-    * (cell, dim) — O(rows × dims) shuffle volume. `exactMeans = false` is
-    * the production dial: values quantize to fixed point
-    * (`floor(x·1e8 + 0.5)`, the engine-portable rounding quantizeInt8
-    * uses) and accumulate as LONG sums — integer addition is exact, so
-    * associative and merge-order-free, and it is a codegen-primitive
-    * aggregate (a DECIMAL accumulator was measured ~0.5 s slower at sf0.1
-    * than the exact path it was supposed to beat; long sums are the cheap
-    * exact accumulator). Map-side partials keep shuffle volume
-    * O(cells × dims); the mean differs from the exact fold only by the
-    * 1e-8 per-element quantization, and recall equivalence against the
-    * exact path is spec-asserted on top of its own unrolled oracle.
-    * Overflow headroom: |x|·1e8·rowsPerCell must stay below 2^63 — for
-    * unit-scale embeddings that allows ~9e10 rows per (cell, dim), far
-    * past any real cell.
+    * Both mean modes are order-independent and therefore
+    * oracle-reproducible: `exactMeans = true` is [[orderedMean]],
+    * `exactMeans = false` the production [[fixedPointMean]]. The latter
+    * differs from the exact fold only by the 1e-8 per-element quantization;
+    * recall equivalence against the exact path is spec-asserted on top of
+    * its own unrolled oracle.
     */
   def ivfAssign(
       vecs: DataFrame, // id, embedding
       k: Int,
       iterations: Int = 3,
       exactMeans: Boolean = true): (DataFrame, DataFrame) = {
-    // Null embeddings (or vectors with null elements) are dropped up-front:
-    // a null among the seed vectors would become a null centroid whose null
-    // d2 wins array_min's nulls-first struct order for EVERY row — one dirty
-    // vector silently swallowing the whole corpus into a single cell. The
-    // guard is the codegen dot kernel: dot(v, v) is null exactly when v is
-    // null, has a null element, or mismatches itself (never) — one cheap
-    // per-row check, no interpreted HOF.
     // Materialized once (r18, guide §5 — the t21/ivfPqTrain rule applied to
     // the Lloyd loop itself): the filtered corpus is consumed by the seed
     // job, every iteration's mean job, and the final assignment — each used
@@ -252,73 +333,16 @@ object VectorOps {
     // the narrow (id, v) projection, created lazily INSIDE the query
     // (ContextCleaner-reclaimed, nothing outlives it), so a cold timed pass
     // still pays the first scan.
-    val v = Materialize.cached(
-      vecs.select(col("id"), asDouble(col("embedding")).as("v"))
-        .filter(dot(col("v"), col("v")).isNotNull),
-      eager = false)
-    // Seed = the k smallest ids numbered 0..k-1 in id order.
-    var cents: Seq[(Int, Seq[Double])] = v.orderBy("id").limit(k)
-      .select(col("v")).collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](0)) }.toSeq
-    for (_ <- 0 until iterations) {
-      // A cell that loses every member simply disappears (matching the
-      // unrolled oracle's GROUP BY), so later rounds rank fewer centroids.
-      val assigned = assignCids(v, cents)
-        .select(col("cid"), col("id"), posexplode(col("v")).as(Seq("dim", "x")))
-      // exactMeans: id-ordered sequential fold — bit-identical to a DuckDB
-      // left fold over the same order, but the whole cell's values cross the
-      // shuffle as a collect_list per (cell, dim). Fast path: fixed-point
-      // LONG power sums — integer addition is exact, so merge-order-free
-      // (deterministic under any partitioning, unlike double avg()), and
-      // the accumulator stays a codegen-primitive long, while map-side
-      // partials keep shuffle volume O(cells × dims) instead of
-      // O(rows × dims) — the production shape for huge cells.
-      val means =
-        if (exactMeans)
-          assigned
-            .groupBy("cid", "dim")
-            .agg(
-              aggregate(
-                transform(
-                  array_sort(collect_list(struct(col("id"), col("x")))),
-                  e => e.getField("x")),
-                lit(0.0), (a, x) => a + x).as("sx"),
-              count(lit(1)).as("n"))
-            .withColumn("m", col("sx") / col("n"))
-        else
-          // The cast to long BEFORE the sum is load-bearing: floor() returns
-          // DOUBLE, and a double sum is only exact to 2^53 — the cast makes
-          // the accumulator a true LONG sum (exact to 2^63, like the
-          // oracle's CAST(... AS BIGINT)), which is what the
-          // order-independence argument below rests on.
-          assigned.groupBy("cid", "dim")
-            .agg(
-              sum(floor(col("x") * lit(1e8) + lit(0.5)).cast("long")).as("sx8"),
-              count(lit(1)).as("n"))
-            .withColumn("m", col("sx8").cast("double") / lit(1e8) / col("n"))
-      // ONE exchange per round, not two (r17 opt): the per-(cell, dim)
-      // means are bounded by k·dim rows — the same driver traffic either
-      // way — so the per-cell array assembly that used to run as a second
-      // groupBy exchange (+ its own AQE stage) happens driver-side on the
-      // identical doubles, grouped and ordered by the same (cid, dim)
-      // total order the array_sort produced.
-      cents = means
-        .select(col("cid"), col("dim"), col("m"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (cid, rs) =>
-          (cid, rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq: Seq[Double])
-        }
-        .toSeq
-        .sortBy(_._1)
-    }
-    (assignCids(v, cents), centroidDf(vecs.sparkSession, cents))
+    val v = Materialize.cached(vectors(vecs), eager = false)
+    val mean = if (exactMeans) orderedMean else fixedPointMean
+    val cents = lloyd(v, Seq(_), k, iterations, mean).head
+    (v.withColumn("cid", nearestCidExpr(col("v"), cents)), centroidDf(vecs.sparkSession, cents))
   }
 
   /** Each row of `v` paired with its `n` nearest centroids (rank 1..n by
     * (distance, cid)).
     */
-  private def rankedCells(v: DataFrame, centroids: DataFrame, n: Int): DataFrame = {
+  private[graft] def rankedCells(v: DataFrame, centroids: DataFrame, n: Int): DataFrame = {
     val w = Window.partitionBy(col("id")).orderBy(col("__d2"), col("cid"))
     v.crossJoin(broadcast(centroids))
       .withColumn("__d2", d2(col("v"), col("c")))
@@ -349,35 +373,21 @@ object VectorOps {
       .filter(!col("id").isin(queryIds: _*))
       .select(col("id").as("vec_id"), col("v").as("cv"), col("cid"))
       .withColumn("cn", l2Norm(col("cv")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    corpus
-      .join(broadcast(queries), Seq("cid"))
-      .withColumn("cos_sim", nz(round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id", "cos_sim", "rank")
+    cosineTopK(corpus.join(broadcast(queries), Seq("cid")), k)
   }
 
   /** Product-quantization codebooks — the compression half of IVF-PQ, the
     * standard billion-vector ANN layout (Jégou et al., "Product Quantization
     * for Nearest Neighbor Search", TPAMI 2011). The vector splits into `m`
     * contiguous subspaces of dim/m dims; each subspace trains its OWN
-    * ks-centroid codebook under the same deterministic discipline as
-    * [[ivfAssign]]: first-ks seed in id order, fixed iteration count,
-    * (d2, cid) tie-break, and the order-free fixed-point LONG mean sums of
-    * the `exactMeans = false` production path — so the whole training run is
-    * reproducible under any partitioning and carries a full unrolled DuckDB
-    * oracle.
+    * ks-centroid codebook, all m in the same per-round job of [[lloyd]] —
+    * the IVF loop with m parts — under the order-free [[fixedPointMean]], so
+    * the whole training run is reproducible under any partitioning and
+    * carries a full unrolled DuckDB oracle. The mean update's map-side
+    * partials keep shuffle volume O(m·ks·(dim/m)) = O(ks·dim) regardless of
+    * corpus size; driver state is m·ks subvectors (~codebook kilobytes).
     *
-    * Scale shape: all `m` subspaces train in the SAME per-iteration job —
-    * assignment is m zero-shuffle scalar expressions over vector slices
-    * ([[nearestCidExpr]]), and the mean update is ONE
-    * groupBy(subspace, cid, subdim) whose map-side partials keep shuffle
-    * volume O(m·ks·(dim/m)) = O(ks·dim) regardless of corpus size. Driver
-    * state is m·ks subvectors (~codebook kilobytes), same as IVF's k rows.
-    *
-    * Dirty-null guard as in [[ivfAssign]]: rows whose embedding is null or
-    * contains a null element are dropped before seeding/assignment.
+    * Dirty-null guard as in [[ivfAssign]] ([[vectors]]).
     */
   def pqTrain(
       vecs: DataFrame, // id, embedding
@@ -388,7 +398,6 @@ object VectorOps {
       trainModulus: Int = 1): IndexedSeq[Seq[(Int, Seq[Double])]] = {
     require(m > 0 && dim % m == 0, s"dim $dim must split into m=$m equal subspaces")
     require(trainModulus >= 1, s"trainModulus must be >= 1, got $trainModulus")
-    val sub = dim / m
     // Codebooks train on a deterministic 1/trainModulus corpus sample
     // (id % trainModulus == 0 — engine-portable, unlike hash sampling): the
     // standard PQ practice (FAISS trains on a bounded sample) and the scale
@@ -397,56 +406,8 @@ object VectorOps {
     // Materialized once (r18): the training sample feeds the seed job plus
     // every codebook round — same in-query cache rationale as ivfAssign's.
     val v = Materialize.cached(
-      vecs.select(col("id"), asDouble(col("embedding")).as("v"))
-        .filter(dot(col("v"), col("v")).isNotNull)
-        .filter(col("id") % trainModulus === 0),
-      eager = false)
-    val seeds = v.orderBy("id").limit(ks)
-      .select(col("v")).collect().map(_.getSeq[Double](0))
-    var books: IndexedSeq[Seq[(Int, Seq[Double])]] =
-      (0 until m).map(s => seeds.zipWithIndex.map { case (vec, i) =>
-        (i, vec.slice(s * sub, (s + 1) * sub))
-      }.toSeq)
-    for (_ <- 0 until iterations) {
-      // Hoist the m subvector slices into one projection so codegen
-      // computes each slice ONCE per row — inlined in nearestCidExpr they
-      // would re-evaluate per scored centroid (m·ks slice allocations/row).
-      val sliced = v.select(
-        col("id") +: col("v") +:
-          (0 until m).map(s => slice(col("v"), s * sub + 1, sub).as(s"__v$s")): _*)
-      val cids = array((0 until m).map(s =>
-        nearestCidExpr(col(s"__v$s"), books(s))): _*)
-      // One wide exploded pass: subspace s = dim index div sub, sd = index
-      // mod sub; a cell that loses every member disappears (matching the
-      // oracle's GROUP BY), so later rounds score fewer candidates there.
-      val means = sliced
-        .select(col("id"), cids.as("cids"), posexplode(col("v")).as(Seq("d", "x")))
-        .select(
-          (col("d") / lit(sub)).cast("int").as("s"),
-          element_at(col("cids"), (col("d") / lit(sub)).cast("int") + 1).as("cid"),
-          (col("d") % lit(sub)).as("sd"),
-          col("x"))
-        .groupBy("s", "cid", "sd")
-        .agg(
-          // long BEFORE sum: see ivfAssign — exact to 2^63, not double's 2^53
-          sum(floor(col("x") * lit(1e8) + lit(0.5)).cast("long")).as("sx8"),
-          count(lit(1)).as("n"))
-        .withColumn("mn", col("sx8").cast("double") / lit(1e8) / col("n"))
-        // one exchange per round (r17 opt, the ivfAssign argument): the
-        // means are bounded by m·ks·sub rows, so the per-(s, cid) array
-        // assembly happens driver-side instead of as a second groupBy
-        // exchange — identical doubles, same (sd) order
-        .select(col("s"), col("cid"), col("sd"), col("mn"))
-        .collect()
-      books = (0 until m).map(s =>
-        means.filter(_.getInt(0) == s)
-          .groupBy(_.getInt(1))
-          .map { case (cid, rs) =>
-            (cid, rs.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq: Seq[Double])
-          }
-          .toSeq.sortBy(_._1))
-    }
-    books
+      vectors(vecs).filter(col("id") % trainModulus === 0), eager = false)
+    lloyd(v, slices(_, m, dim / m), ks, iterations, fixedPointMean)
   }
 
   /** PQ/ADC top-k: corpus rows carry only their m-code PQ encoding; each
@@ -471,44 +432,18 @@ object VectorOps {
       trainModulus: Int = 1): DataFrame = {
     val sub = dim / m
     val books = pqTrain(vecs, dim, m, ks, iterations, trainModulus)
-    val v = vecs.select(col("id"), asDouble(col("embedding")).as("v"))
-      .filter(dot(col("v"), col("v")).isNotNull)
-    val codes = array((0 until m).map(s =>
-      nearestCidExpr(col(s"__v$s"), books(s))): _*)
+    val v = vectors(vecs)
     val corpus = v.filter(!col("id").isin(queryIds: _*))
-      .select(
-        col("id") +:
-          (0 until m).map(s => slice(col("v"), s * sub + 1, sub).as(s"__v$s")): _*)
-      .select(col("id").as("vec_id"), codes.as("codes"))
-    // cid→d2 maps, not positional arrays: a codebook that lost a cell to an
-    // empty-cluster round has non-contiguous cids, so position indexing
-    // would silently misalign codes with table entries.
-    val tables = array((0 until m).map { s =>
-      val cids = typedLit(books(s).map(_._1))
-      val cents = typedLit(books(s).map(_._2))
-      map_from_arrays(
-        cids, transform(cents, c => d2(slice(col("v"), s * sub + 1, sub), c)))
-    }: _*)
+      .select(col("id").as("vec_id"), encode(slices(col("v"), m, sub), books).as("codes"))
     val queries = v.filter(col("id").isin(queryIds: _*))
-      .select(col("id").as("query_id"), tables.as("tbl"))
-    // fused kernel = the same left subspace fold as the previous
-    // element_at chain (t0 + t1 + …, the oracle's order), one call per pair
-    val approx = adcSum(col("tbl"), col("codes"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("approx_d2"), col("vec_id"))
-    corpus.crossJoin(broadcast(queries))
-      .withColumn("approx_d2", round(approx, 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id", "approx_d2", "rank")
+      .select(col("id").as("query_id"), adcTables(col("v"), books, sub).as("tbl"))
+    adcTopK(corpus.crossJoin(broadcast(queries)), k)
   }
 
   /** Two-stage PQ retrieval — the standard production ANN pipeline: a cheap
     * ADC shortlist over codes ([[annTopKPq]], `shortlist` deep), then exact
-    * cosine re-ranked to top-k over ONLY the shortlisted rows. Full-precision
-    * vectors are touched for queries·shortlist rows total, never the corpus:
-    * the equi-join back to corpus floats broadcasts the tiny shortlist, so
-    * the corpus parquet is scanned once with no shuffle — quantization error
-    * caps recall (shortlist membership) but never final ordering precision.
+    * cosine re-ranked to top-k over ONLY the shortlisted rows
+    * ([[cosineRerank]]).
     */
   def annTopKPqRerank(
       vecs: DataFrame, // id, embedding
@@ -538,20 +473,14 @@ object VectorOps {
       vecs: DataFrame, // id, embedding
       queryIds: Seq[Long],
       k: Int): DataFrame = {
-    val v = vecs.select(col("id"), asDouble(col("embedding")).as("v"))
-      .filter(dot(col("v"), col("v")).isNotNull)
+    val v = vectors(vecs)
     val corpus = v.select(col("id").as("vec_id"), col("v").as("cv"))
       .withColumn("cn", l2Norm(col("cv")))
     val queries = v.filter(col("id").isin(queryIds: _*))
       .select(col("id").as("query_id"), col("v").as("qv"))
       .withColumn("qn", l2Norm(col("qv")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    corpus.join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("cos_sim", nz(round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id", "cos_sim", "rank")
+    cosineTopK(
+      corpus.join(broadcast(short), Seq("vec_id")).join(broadcast(queries), Seq("query_id")), k)
   }
 
   /** The complete production retrieval pipeline over a PERSISTED index:
@@ -626,6 +555,23 @@ object VectorOps {
       cents: Seq[(Int, Seq[Double])],
       books: IndexedSeq[Seq[(Int, Seq[Double])]])
 
+  /** (id, cid, rv): each (id, v, cid) row's residual against its OWN cell's
+    * centroid — element-wise double subtraction (exact, order-free) through
+    * a broadcast join with the k-row centroid table, which drops a row whose
+    * cid is null.
+    */
+  private def residuals(assigned: DataFrame, centroids: DataFrame): DataFrame =
+    assigned.join(broadcast(centroids), Seq("cid"))
+      .select(col("id"), col("cid"), zip_with(col("v"), col("c"), (a, b) => a - b).as("rv"))
+
+  /** The encoded corpus (vec_id, cid, codes): every residual row reduced to
+    * its cell and m PQ codes.
+    */
+  private def residualCodes(res: DataFrame, books: Seq[Book], sub: Int): DataFrame =
+    res.select(
+      col("id").as("vec_id"), col("cid"),
+      encode(slices(col("rv"), books.size, sub), books).as("codes"))
+
   /** Train the two quantizer levels and encode the corpus ONCE — the
     * index-build half of the production ANN lifecycle (build offline,
     * persist, serve many searches). Every row is encoded (queries are not
@@ -640,37 +586,20 @@ object VectorOps {
       coarseIterations: Int = 2,
       pqIterations: Int = 2,
       trainModulus: Int = 1): (IvfPqModel, DataFrame) = {
-    val sub = dim / m
     val (assigned, centroids) = ivfAssign(vecs, nCells, coarseIterations, exactMeans = false)
     val cents = centroids.collect() // bounded: nCells rows (same as ivfAssign's per-round state)
       .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-    // Residual per row w.r.t. its OWN cell: element-wise double subtraction
-    // (exact, order-free) against the broadcast k-row centroid table.
     // Materialized once — pqTrain fires pqIterations+1 actions and the
     // encode pass one more; without the stage each would recompute the
     // coarse assignment kernel + centroid join + subtraction over the whole
     // corpus (Materialize picks localCheckpoint / lineage-preserving RDD
-    // cache per environment). Projected down to (id, cid, rv) first so
-    // nothing wider crosses the materialization point.
-    val res = Materialize.stage(
-      assigned.join(broadcast(centroids), Seq("cid"))
-        .select(
-          col("id"), col("cid"),
-          zip_with(col("v"), col("c"), (a, b) => a - b).as("rv")),
-      checkpointDir = None, eager = false)
+    // cache per environment). Only (id, cid, rv) crosses the
+    // materialization point.
+    val res = Materialize.stage(residuals(assigned, centroids), checkpointDir = None, eager = false)
     val books = pqTrain(
       res.select(col("id"), col("rv").as("embedding")),
       dim, m, ks, pqIterations, trainModulus)
-    // Encode pass: every corpus row shrinks to (cid, m codes). Slices are
-    // hoisted once per row (same codegen argument as pqTrain's projection).
-    val codeArr = array((0 until m).map(s =>
-      nearestCidExpr(col(s"__r$s"), books(s))): _*)
-    val codes = res
-      .select(
-        col("id") +: col("cid") +:
-          (0 until m).map(s => slice(col("rv"), s * sub + 1, sub).as(s"__r$s")): _*)
-      .select(col("id").as("vec_id"), col("cid"), codeArr.as("codes"))
-    (IvfPqModel(nCells, dim, m, ks, cents, books), codes)
+    (IvfPqModel(nCells, dim, m, ks, cents, books), residualCodes(res, books, dim / m))
   }
 
   /** Encode vectors with an EXISTING model — no training: coarse-assign to
@@ -685,24 +614,11 @@ object VectorOps {
     * serving deployment.
     */
   def ivfPqEncode(model: IvfPqModel, vecs: DataFrame): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val sub = model.dim / model.m
-    val centroids = model.cents
-      .map { case (cid, c) => (cid, c.toVector) }.toDF("cid", "c")
-    val codeArr = array((0 until model.m).map(s =>
-      nearestCidExpr(col(s"__r$s"), model.books(s))): _*)
-    vecs
-      .select(col("id"), asDouble(col("embedding")).as("v"))
+    val assigned = vecs.select(col("id"), asDouble(col("embedding")).as("v"))
       .withColumn("cid", nearestCidExpr(col("v"), model.cents))
-      .join(broadcast(centroids), Seq("cid"))
-      .select(
-        col("id"), col("cid"),
-        zip_with(col("v"), col("c"), (a, b) => a - b).as("rv"))
-      .select(
-        col("id") +: col("cid") +:
-          (0 until model.m).map(s => slice(col("rv"), s * sub + 1, sub).as(s"__r$s")): _*)
-      .select(col("id").as("vec_id"), col("cid"), codeArr.as("codes"))
+    residualCodes(
+      residuals(assigned, centroidDf(vecs.sparkSession, model.cents)),
+      model.books, model.dim / model.m)
   }
 
   /** Query-time half: each query probes its nProbe nearest cells; the ADC
@@ -719,34 +635,13 @@ object VectorOps {
       queryIds: Seq[Long],
       k: Int,
       nProbe: Int = 1): DataFrame = {
-    val sub = model.dim / model.m
-    val spark = vecs.sparkSession
-    val centroids = centroidDf(spark, model.cents)
-    val qv = vecs.select(col("id"), asDouble(col("embedding")).as("v"))
-      .filter(dot(col("v"), col("v")).isNotNull)
-      .filter(col("id").isin(queryIds: _*))
-    val probes = rankedCells(qv, centroids, nProbe)
-      .join(broadcast(centroids), Seq("cid"))
+    val centroids = centroidDf(vecs.sparkSession, model.cents)
+    val qv = vectors(vecs).filter(col("id").isin(queryIds: _*))
+    val queries = residuals(rankedCells(qv, centroids, nProbe), centroids)
       .select(
         col("id").as("query_id"), col("cid"),
-        zip_with(col("v"), col("c"), (a, b) => a - b).as("qrv"))
-    val tables = array((0 until model.m).map { s =>
-      val cids = typedLit(model.books(s).map(_._1))
-      val cents = typedLit(model.books(s).map(_._2))
-      map_from_arrays(
-        cids, transform(cents, c => d2(slice(col("qrv"), s * sub + 1, sub), c)))
-    }: _*)
-    val queries = probes.select(col("query_id"), col("cid"), tables.as("tbl"))
-    // fused kernel = the same left subspace fold as the previous
-    // element_at chain (t0 + t1 + …, the oracle's order), one call per pair
-    val approx = adcSum(col("tbl"), col("codes"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("approx_d2"), col("vec_id"))
-    codes.filter(!col("vec_id").isin(queryIds: _*))
-      .join(broadcast(queries), Seq("cid"))
-      .withColumn("approx_d2", round(approx, 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id", "approx_d2", "rank")
+        adcTables(col("rv"), model.books, model.dim / model.m).as("tbl"))
+    adcTopK(codes.filter(!col("vec_id").isin(queryIds: _*)).join(broadcast(queries), Seq("cid")), k)
   }
 
   /** LSH-bucketed near-dup: block by SRP bucket, then exact cosine verify
@@ -792,7 +687,7 @@ object VectorOps {
       .join(probes, Seq("block"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("hamming", bit_count(col("ba").bitwiseXOR(col("bb"))).cast("int"))
-      .withColumn("cos_sim", nz(round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)))
+      .withColumn("cos_sim", roundedCosine(col("va"), col("vb"), col("na"), col("nb")))
       .filter(col("cos_sim") >= threshold)
       .select("id_a", "id_b", "hamming", "cos_sim")
   }

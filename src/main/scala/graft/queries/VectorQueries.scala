@@ -276,166 +276,227 @@ object VectorQueries {
       }
       .mkString(" + ")
 
+  /** The corpus as e(id, v DOUBLE[]), the root CTE of the search oracles. */
+  private val vectorsCte =
+    """WITH e AS (SELECT vec_id AS id,
+      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)""".stripMargin
+
+  /** DuckDB d2 over `width` elements, the d2 kernel's left fold; with an
+    * offset, the left side's element i is read at `off + i`.
+    */
+  private def d2Sql(v: String, c: String, width: Int, off: Option[Int] = None): String = {
+    val at = off.fold("i")(o => s"$o + i")
+    s"list_sum(list_transform(generate_series(1, $width), i -> ($v[$at] - $c[i]) * ($v[$at] - $c[i])))"
+  }
+
+  /** One quantizer level of the unrolled Lloyd oracles: the vector column its
+    * CTEs carry, that vector's width, the names the update step gives the
+    * element index and the mean, and the mean mode. The mean mirrors the
+    * Spark side: the id-ordered sequential fold (`list_sum(list(x ORDER BY
+    * id))` is a left fold, verified bit-identical to Spark's `aggregate`), or
+    * the order-free fixed-point LONG sum (`floor(x·1e8 + 0.5)` — both
+    * engines floor in double, sum as integers, divide back identically).
+    */
+  private case class Level(vec: String, width: Int, idx: String, mean: String, fixedPoint: Boolean)
+
+  /** Per row of `from` (an `e` alias), its `keep` nearest centroids of
+    * `cents`, ranked by (d2, cid) — the kernel's tie order. `rn = 1` is the
+    * assignment step; `rn <= nProbe` the probe ranking.
+    */
+  private def nearestCte(
+      lv: Level, name: String, from: String, cents: String,
+      where: String = "", keep: String = "rn = 1"): String =
+    s"""$name AS (
+       |  SELECT id, ${lv.vec}, cid FROM (
+       |    SELECT id, ${lv.vec}, cid, row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn FROM (
+       |      SELECT e.id, e.${lv.vec}, c.cid, ${d2Sql(s"e.${lv.vec}", "c.c", lv.width)} AS d2
+       |      FROM $from CROSS JOIN $cents c$where) dd) rr
+       |  WHERE $keep)""".stripMargin
+
+  /** The Lloyd update: each surviving cell's centroid, element by element,
+    * as the level's mean over the cell's members in `assigned`.
+    */
+  private def updateCte(lv: Level, name: String, assigned: String): String = {
+    val mean =
+      if (lv.fixedPoint)
+        "CAST(sum(CAST(floor(x * 100000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 100000000.0 / count(*)"
+      else "list_sum(list(x ORDER BY id)) / count(*)"
+    s"""$name AS (
+       |  SELECT cid, list(${lv.mean} ORDER BY ${lv.idx}) AS c FROM (
+       |    SELECT cid, ${lv.idx}, $mean AS ${lv.mean} FROM (
+       |      SELECT a.cid, a.id, g.i AS ${lv.idx}, a.${lv.vec}[g.i] AS x
+       |      FROM $assigned a CROSS JOIN generate_series(1, ${lv.width}) g(i)) xx
+       |    GROUP BY cid, ${lv.idx}) mm
+       |  GROUP BY cid)""".stripMargin
+  }
+
+  /** The first-k seed: the k smallest ids of `src`, numbered 0..k-1 in id
+    * order, with centroid `c` (an expression over the column `vec`).
+    */
+  private def seedCte(name: String, c: String, vec: String, src: String, k: Int): String =
+    s"""$name AS (
+       |  SELECT CAST(row_number() OVER (ORDER BY id) - 1 AS INT) AS cid, $c AS c
+       |  FROM (SELECT id, $vec FROM $src ORDER BY id LIMIT $k) s0)""".stripMargin
+
+  /** `iterations` assign→update rounds from the seed `${c}0`: assignments
+    * `${a}i` of the rows of `from`, centroids `${c}i`.
+    */
+  private def lloydCtes(lv: Level, from: String, a: String, c: String, iterations: Int): String =
+    (1 to iterations)
+      .flatMap(i => Seq(
+        nearestCte(lv, s"$a$i", from, s"$c${i - 1}"),
+        updateCte(lv, s"$c$i", s"$a$i")))
+      .mkString(",\n")
+
+  /** The coarse level, the unroll of [[VectorOps.ivfAssign]]: seed `c0`,
+    * `iterations` rounds, and the final assignment `af` of every row of e.
+    */
+  private def coarseCtes(lv: Level, k: Int, iterations: Int): String =
+    Seq(
+      seedCte("c0", "v", "v", "e", k),
+      lloydCtes(lv, "e", "a", "c", iterations),
+      nearestCte(lv, "af", "e", s"c$iterations")).mkString(",\n")
+
+  /** qp: each query's `nProbe` nearest coarse cells. */
+  private def probeCte(lv: Level, cents: String, nQueries: Int, nProbe: Int): String =
+    nearestCte(lv, "qp", "e", cents, s" WHERE e.id < $nQueries", s"rn <= $nProbe")
+
+  /** Each (id, v, cid) row of `src` minus its cell's centroid in `cents`,
+    * element-wise (exact in both engines); `id` renames the id column.
+    */
+  private def residualCte(
+      name: String, src: String, id: String, out: String, cents: String, dim: Int): String =
+    s"""$name AS (
+       |  SELECT $src.id$id, $src.cid,
+       |    list_transform(generate_series(1, $dim), i -> $src.v[i] - c.c[i]) AS $out
+       |  FROM $src JOIN $cents c USING (cid))""".stripMargin
+
+  /** CTE name prefixes of one PQ unroll: slice table, training sample,
+    * codebook, assignment (the encoding assignment is `${assign}f`).
+    */
+  private case class PqNames(slice: String, train: String, book: String, assign: String)
+
+  /** The PQ level, the unroll of [[VectorOps.pqTrain]] plus the encode
+    * pass, over the column `vec` of `src`: per subspace s, the sliced rows,
+    * the first-ks seed, the rounds with the fixed-point mean, and the final
+    * assignment of every row. Training reads the sampled slice table; the
+    * encoding assignment reads the FULL one — mirroring Spark, where only
+    * codebook training is sampled and every corpus row gets a code.
+    */
+  private def pqCtes(
+      src: String, vec: String, n: PqNames, dim: Int, m: Int, ks: Int,
+      iterations: Int, trainModulus: Int): String = {
+    val sub = dim / m
+    val lv = Level("vs", sub, "sd", "mn", fixedPoint = true)
+    val trainWhere = if (trainModulus > 1) s" WHERE id % $trainModulus = 0" else ""
+    (0 until m).map { s =>
+      val slice = s"$vec[${s * sub + 1}:${(s + 1) * sub}]"
+      Seq(
+        s"${n.slice}$s AS (SELECT id, $slice AS vs FROM $src)",
+        s"${n.train}$s AS (SELECT id, vs FROM ${n.slice}$s$trainWhere)",
+        seedCte(s"${n.book}${s}_0", slice, vec, s"$src$trainWhere", ks),
+        lloydCtes(lv, s"${n.train}$s e", s"${n.assign}${s}_", s"${n.book}${s}_", iterations),
+        nearestCte(lv, s"${n.assign}f$s", s"${n.slice}$s e", s"${n.book}${s}_$iterations")
+      ).mkString(",\n")
+    }.mkString(",\n")
+  }
+
+  /** sims: each candidate in `codes` scored by ADC — the left-to-right sum
+    * over subspaces of d2(query slice of `q`.`qv`, the codeword of its
+    * code), Spark's ADC fold order. `book(s)` is subspace s's codebook,
+    * joined as `${alias}s`; `join` brings in the queries.
+    */
+  private def adcSimsCte(
+      q: String, qv: String, book: Int => String, alias: String, join: String,
+      m: Int, sub: Int, nQueries: Int): String = {
+    val codeJoin = (0 until m)
+      .map(s => s"JOIN ${book(s)} $alias$s ON $alias$s.cid = x.k$s")
+      .mkString("\n  ")
+    val approx = (0 until m)
+      .map(s => d2Sql(s"$q.$qv", s"$alias$s.c", sub, Some(s * sub)))
+      .mkString(" + ")
+    s"""sims AS (
+       |  SELECT $q.query_id, x.id AS vec_id, round($approx, 6) + 0.0 AS approx_d2
+       |  FROM codes x
+       |  $codeJoin
+       |  $join
+       |  WHERE x.id >= $nQueries)""".stripMargin
+  }
+
+  /** Rank `from`'s (query_id, vec_id, score) rows per query by `order`,
+    * ties to the smaller vec_id.
+    */
+  private def rankCte(name: String, score: String, order: String, from: String): String =
+    s"""$name AS (
+       |  SELECT query_id, vec_id, $score,
+       |    row_number() OVER (PARTITION BY query_id ORDER BY $order, vec_id) AS rank
+       |  FROM $from)""".stripMargin
+
+  /** The ADC ranking's answer: its top-k, or (rerankTo > 0) that shortlist
+    * re-ranked by exact cosine. `queries` is the FROM item naming the query
+    * vectors q(query_id, v); `extra` holds the CTEs it needs.
+    */
+  private def adcTail(
+      ranked: String, topK: Int, rerankTo: Int, queries: String, extra: String = ""): String =
+    if (rerankTo <= 0)
+      s"""SELECT query_id, vec_id, approx_d2, CAST(rank AS BIGINT) AS rank
+         |FROM $ranked WHERE rank <= $topK""".stripMargin
+    else
+      s""",sl AS (SELECT query_id, vec_id FROM $ranked WHERE rank <= $topK),
+         |${extra}ex AS (
+         |  SELECT sl.query_id, sl.vec_id, round(${duckCos("q.v", "c.v")}, 6) + 0.0 AS cos_sim
+         |  FROM sl JOIN e c ON c.id = sl.vec_id JOIN $queries ON q.query_id = sl.query_id),
+         |${rankCte("rr", "cos_sim", "cos_sim DESC", "ex")}
+         |SELECT query_id, vec_id, cos_sim, CAST(rank AS BIGINT) AS rank
+         |FROM rr WHERE rank <= $rerankTo""".stripMargin
+
   /** DuckDB unroll of [[VectorOps.ivfAssign]] + [[VectorOps.annTopKIvf]]:
-    * same first-k seed, the same `iterations` assign→update rounds, then the
-    * cell-probed top-k. The mean update mirrors the Spark mode:
-    * `fixedPointMeans = false` (exact path) is the id-ordered sequential fold
-    * (`list_sum(list(x ORDER BY id))` is a left fold, verified bit-identical
-    * to Spark's `aggregate`); `fixedPointMeans = true` (the x_v4_fast
-    * production path) is the order-free fixed-point LONG power sum
-    * (`floor(x·1e8 + 0.5)` — both engines floor in double, sum as
-    * integers, divide back identically).
+    * same first-k seed, the same `iterations` assign→update rounds (the
+    * mean as the Spark mode: `fixedPointMeans` is x_v4_fast's production
+    * path), then the cell-probed top-k.
     */
   private def ivfOracleSql(
       k: Int, dim: Int, iterations: Int, nQueries: Int, topK: Int,
       nProbe: Int = 1, fixedPointMeans: Boolean = false): String = {
-    def d2(v: String, c: String) =
-      s"list_sum(list_transform(generate_series(1, $dim), i -> ($v[i] - $c[i]) * ($v[i] - $c[i])))"
-    def assign(name: String, cPrev: String) =
-      s"""$name AS (
-         |  SELECT id, v, cid FROM (
-         |    SELECT id, v, cid, row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn FROM (
-         |      SELECT e.id, e.v, c.cid, ${d2("e.v", "c.c")} AS d2
-         |      FROM e CROSS JOIN $cPrev c) dd) rr
-         |  WHERE rn = 1)""".stripMargin
-    val meanExpr =
-      if (fixedPointMeans)
-        "CAST(sum(CAST(floor(x * 100000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 100000000.0 / count(*)"
-      else "list_sum(list(x ORDER BY id)) / count(*)"
-    def update(name: String, aPrev: String) =
-      s"""$name AS (
-         |  SELECT cid, list(m ORDER BY dim) AS c FROM (
-         |    SELECT cid, dim, $meanExpr AS m FROM (
-         |      SELECT a.cid, a.id, g.i AS dim, a.v[g.i] AS x
-         |      FROM $aPrev a CROSS JOIN generate_series(1, $dim) g(i)) xx
-         |    GROUP BY cid, dim) mm
-         |  GROUP BY cid)""".stripMargin
-    val rounds = (1 to iterations)
-      .flatMap(i => Seq(assign(s"a$i", s"c${i - 1}"), update(s"c$i", s"a$i")))
-      .mkString(",\n")
-    val cos = duckCos("q.qv", "cor.cv")
-    s"""WITH e AS (SELECT vec_id AS id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |c0 AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY id) - 1 AS INT) AS cid, v AS c
-       |  FROM (SELECT id, v FROM e ORDER BY id LIMIT $k) s0),
-       |$rounds,
-       |${assign("af", s"c$iterations")},
-       |qp AS (
-       |  SELECT id, v, cid FROM (
-       |    SELECT id, v, cid, row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn FROM (
-       |      SELECT e.id, e.v, c.cid, ${d2("e.v", "c.c")} AS d2
-       |      FROM e CROSS JOIN c$iterations c WHERE e.id < $nQueries) dd) rr
-       |  WHERE rn <= $nProbe),
+    val lv = Level("v", dim, "dim", "m", fixedPointMeans)
+    s"""$vectorsCte,
+       |${coarseCtes(lv, k, iterations)},
+       |${probeCte(lv, s"c$iterations", nQueries, nProbe)},
        |q AS (SELECT id AS query_id, v AS qv, cid FROM qp),
        |cor AS (SELECT id AS vec_id, v AS cv, cid FROM af WHERE id >= $nQueries),
        |sims AS (
-       |  SELECT q.query_id, cor.vec_id, round($cos, 6) + 0.0 AS cos_sim
+       |  SELECT q.query_id, cor.vec_id, round(${duckCos("q.qv", "cor.cv")}, 6) + 0.0 AS cos_sim
        |  FROM cor JOIN q USING (cid)),
-       |r AS (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-       |  FROM sims)
+       |${rankCte("r", "cos_sim", "cos_sim DESC", "sims")}
        |SELECT query_id, vec_id, cos_sim, rank FROM r WHERE rank <= $topK""".stripMargin
   }
 
-  /** DuckDB unroll of [[VectorOps.pqTrain]] + [[VectorOps.annTopKPq]]: per
-    * subspace s, the sliced corpus `e_s`, the first-ks seed codebook, and
-    * `iterations` assign→update rounds with the fixed-point mean (identical
-    * to [[ivfOracleSql]]'s `fixedPointMeans = true` step); then the m-way
-    * code join reconstructs each corpus row's approx d2 as the SAME
-    * left-to-right sum of per-subspace d2 folds Spark computes through its
-    * ADC tables.
+  /** DuckDB unroll of [[VectorOps.pqTrain]] + [[VectorOps.annTopKPq]]: the
+    * PQ level over the corpus, the m-way code join, and each corpus row's
+    * approx d2 as the SAME left-to-right sum of per-subspace d2 folds Spark
+    * computes through its ADC tables.
     */
   private def pqOracleSql(
       dim: Int, m: Int, ks: Int, iterations: Int, nQueries: Int, topK: Int,
       trainModulus: Int = 1, rerankTo: Int = 0): String = {
-    val sub = dim / m
-    def d2sub(vs: String, c: String) =
-      s"list_sum(list_transform(generate_series(1, $sub), i -> ($vs[i] - $c[i]) * ($vs[i] - $c[i])))"
-    // d2 of the query's s-th subvector (offset into the FULL vector) against
-    // a codebook entry — same element order as the sliced fold above.
-    def d2off(v: String, off: Int, c: String) =
-      s"list_sum(list_transform(generate_series(1, $sub), i -> ($v[$off + i] - $c[i]) * ($v[$off + i] - $c[i])))"
-    val meanExpr =
-      "CAST(sum(CAST(floor(x * 100000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 100000000.0 / count(*)"
-    def assign(src: String, name: String, cPrev: String) =
-      s"""$name AS (
-         |  SELECT id, vs, cid FROM (
-         |    SELECT id, vs, cid, row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn FROM (
-         |      SELECT e.id, e.vs, c.cid, ${d2sub("e.vs", "c.c")} AS d2
-         |      FROM $src e CROSS JOIN $cPrev c) dd) rr
-         |  WHERE rn = 1)""".stripMargin
-    def update(name: String, aPrev: String) =
-      s"""$name AS (
-         |  SELECT cid, list(mn ORDER BY sd) AS c FROM (
-         |    SELECT cid, sd, $meanExpr AS mn FROM (
-         |      SELECT a.cid, a.id, g.i AS sd, a.vs[g.i] AS x
-         |      FROM $aPrev a CROSS JOIN generate_series(1, $sub) g(i)) xx
-         |    GROUP BY cid, sd) mm
-         |  GROUP BY cid)""".stripMargin
-    // Training reads the sampled slice tables (et_s); the final encode
-    // assign (af_s) reads the FULL slice tables — mirroring Spark, where
-    // only codebook training is sampled and every corpus row gets a code.
-    val trainWhere = if (trainModulus > 1) s" WHERE id % $trainModulus = 0" else ""
-    val perSubspace = (0 until m).map { s =>
-      val lo = s * sub + 1
-      val hi = (s + 1) * sub
-      val slices =
-        s"""e$s AS (SELECT id, v[$lo:$hi] AS vs FROM e),
-           |et$s AS (SELECT id, vs FROM e$s$trainWhere),
-           |c${s}_0 AS (
-           |  SELECT CAST(row_number() OVER (ORDER BY id) - 1 AS INT) AS cid, v[$lo:$hi] AS c
-           |  FROM (SELECT id, v FROM e$trainWhere ORDER BY id LIMIT $ks) s0)""".stripMargin
-      val rounds = (1 to iterations)
-        .flatMap(i => Seq(
-          assign(s"et$s", s"a${s}_$i", s"c${s}_${i - 1}"),
-          update(s"c${s}_$i", s"a${s}_$i")))
-        .mkString(",\n")
-      s"$slices,\n$rounds,\n${assign(s"e$s", s"af$s", s"c${s}_$iterations")}"
-    }.mkString(",\n")
-    val codeJoin = (0 until m)
-      .map(s => s"JOIN c${s}_$iterations c$s ON c$s.cid = x.k$s")
-      .mkString("\n  ")
-    val approx = (0 until m).map(s => d2off("q.v", s * sub, s"c$s.c")).mkString(" + ")
-    s"""WITH e AS (SELECT vec_id AS id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |$perSubspace,
+    val pq = pqCtes(
+      "e", "v", PqNames("e", "et", "c", "a"), dim, m, ks, iterations, trainModulus)
+    val sims = adcSimsCte(
+      "q", "v", s => s"c${s}_$iterations", "c", "CROSS JOIN q", m, dim / m, nQueries)
+    s"""$vectorsCte,
+       |$pq,
        |codes AS (
        |  SELECT af0.id, ${(0 until m).map(s => s"af$s.cid AS k$s").mkString(", ")}
        |  FROM af0 ${(1 until m).map(s => s"JOIN af$s USING (id)").mkString(" ")}),
        |q AS (SELECT id AS query_id, v FROM e WHERE id < $nQueries),
-       |sims AS (
-       |  SELECT q.query_id, x.id AS vec_id, round($approx, 6) + 0.0 AS approx_d2
-       |  FROM codes x
-       |  $codeJoin
-       |  CROSS JOIN q
-       |  WHERE x.id >= $nQueries),
-       |r AS (
-       |  SELECT query_id, vec_id, approx_d2,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY approx_d2, vec_id) AS rank
-       |  FROM sims)
-       |${if (rerankTo <= 0)
-           s"""SELECT query_id, vec_id, approx_d2, CAST(rank AS BIGINT) AS rank
-              |FROM r WHERE rank <= $topK""".stripMargin
-         else
-           s""",sl AS (SELECT query_id, vec_id FROM r WHERE rank <= $topK),
-              |ex AS (
-              |  SELECT sl.query_id, sl.vec_id, round(${duckCos("q.v", "c.v")}, 6) + 0.0 AS cos_sim
-              |  FROM sl JOIN e c ON c.id = sl.vec_id JOIN q ON q.query_id = sl.query_id),
-              |rr AS (
-              |  SELECT query_id, vec_id, cos_sim,
-              |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-              |  FROM ex)
-              |SELECT query_id, vec_id, cos_sim, CAST(rank AS BIGINT) AS rank
-              |FROM rr WHERE rank <= $rerankTo""".stripMargin}""".stripMargin
+       |$sims,
+       |${rankCte("r", "approx_d2", "approx_d2", "sims")}
+       |${adcTail("r", topK, rerankTo, "q")}""".stripMargin
   }
 
   /** DuckDB unroll of [[VectorOps.annTopKIvfPq]] — the two quantization
-    * levels composed: the coarse fixed-point Lloyd of [[ivfOracleSql]]
-    * (`fixedPointMeans = true`), a residual CTE (v − own-cell centroid,
-    * exact element-wise subtraction in both engines), [[pqOracleSql]]'s
-    * per-subspace training rounds re-rooted at the residual slices, and an
+    * levels composed: the fixed-point coarse level, a residual CTE (v −
+    * own-cell centroid), the PQ level re-rooted at the residuals, and an
     * ADC scoring join where each query's distance table comes from its
     * residual against the PROBED cell (qv − that cell's centroid) — the
     * IVFADC estimator. All arithmetic is the same left-to-right double
@@ -446,123 +507,27 @@ object VectorQueries {
       nCells: Int, dim: Int, m: Int, ks: Int, coarseIterations: Int,
       pqIterations: Int, nQueries: Int, topK: Int, nProbe: Int,
       trainModulus: Int, rerankTo: Int = 0): String = {
-    val sub = dim / m
-    val meanExpr =
-      "CAST(sum(CAST(floor(x * 100000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 100000000.0 / count(*)"
-    // -- coarse level (full vectors, column v) --
-    def d2full(v: String, c: String) =
-      s"list_sum(list_transform(generate_series(1, $dim), i -> ($v[i] - $c[i]) * ($v[i] - $c[i])))"
-    def cAssign(name: String, cPrev: String) =
-      s"""$name AS (
-         |  SELECT id, v, cid FROM (
-         |    SELECT id, v, cid, row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn FROM (
-         |      SELECT e.id, e.v, c.cid, ${d2full("e.v", "c.c")} AS d2
-         |      FROM e CROSS JOIN $cPrev c) dd) rr
-         |  WHERE rn = 1)""".stripMargin
-    def cUpdate(name: String, aPrev: String) =
-      s"""$name AS (
-         |  SELECT cid, list(m ORDER BY dim) AS c FROM (
-         |    SELECT cid, dim, $meanExpr AS m FROM (
-         |      SELECT a.cid, a.id, g.i AS dim, a.v[g.i] AS x
-         |      FROM $aPrev a CROSS JOIN generate_series(1, $dim) g(i)) xx
-         |    GROUP BY cid, dim) mm
-         |  GROUP BY cid)""".stripMargin
-    val coarse = (1 to coarseIterations)
-      .flatMap(i => Seq(cAssign(s"a$i", s"c${i - 1}"), cUpdate(s"c$i", s"a$i")))
-      .mkString(",\n")
+    val coarse = Level("v", dim, "dim", "m", fixedPoint = true)
     val cFinal = s"c$coarseIterations"
-    // -- PQ level (residual slices, column vs) --
-    def d2sub(vs: String, c: String) =
-      s"list_sum(list_transform(generate_series(1, $sub), i -> ($vs[i] - $c[i]) * ($vs[i] - $c[i])))"
-    def d2off(v: String, off: Int, c: String) =
-      s"list_sum(list_transform(generate_series(1, $sub), i -> ($v[$off + i] - $c[i]) * ($v[$off + i] - $c[i])))"
-    def pAssign(src: String, name: String, cPrev: String) =
-      s"""$name AS (
-         |  SELECT id, vs, cid FROM (
-         |    SELECT id, vs, cid, row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn FROM (
-         |      SELECT e.id, e.vs, c.cid, ${d2sub("e.vs", "c.c")} AS d2
-         |      FROM $src e CROSS JOIN $cPrev c) dd) rr
-         |  WHERE rn = 1)""".stripMargin
-    def pUpdate(name: String, aPrev: String) =
-      s"""$name AS (
-         |  SELECT cid, list(mn ORDER BY sd) AS c FROM (
-         |    SELECT cid, sd, $meanExpr AS mn FROM (
-         |      SELECT a.cid, a.id, g.i AS sd, a.vs[g.i] AS x
-         |      FROM $aPrev a CROSS JOIN generate_series(1, $sub) g(i)) xx
-         |    GROUP BY cid, sd) mm
-         |  GROUP BY cid)""".stripMargin
-    val trainWhere = if (trainModulus > 1) s" WHERE id % $trainModulus = 0" else ""
-    val perSubspace = (0 until m).map { s =>
-      val lo = s * sub + 1
-      val hi = (s + 1) * sub
-      val slices =
-        s"""rs$s AS (SELECT id, rv[$lo:$hi] AS vs FROM r),
-           |rt$s AS (SELECT id, vs FROM rs$s$trainWhere),
-           |cb${s}_0 AS (
-           |  SELECT CAST(row_number() OVER (ORDER BY id) - 1 AS INT) AS cid, rv[$lo:$hi] AS c
-           |  FROM (SELECT id, rv FROM r$trainWhere ORDER BY id LIMIT $ks) s0)""".stripMargin
-      val rounds = (1 to pqIterations)
-        .flatMap(i => Seq(
-          pAssign(s"rt$s", s"pa${s}_$i", s"cb${s}_${i - 1}"),
-          pUpdate(s"cb${s}_$i", s"pa${s}_$i")))
-        .mkString(",\n")
-      s"$slices,\n$rounds,\n${pAssign(s"rs$s", s"paf$s", s"cb${s}_$pqIterations")}"
-    }.mkString(",\n")
-    val codeJoin = (0 until m)
-      .map(s => s"JOIN cb${s}_$pqIterations b$s ON b$s.cid = x.k$s")
-      .mkString("\n  ")
-    val approx = (0 until m).map(s => d2off("qr.qrv", s * sub, s"b$s.c")).mkString(" + ")
-    s"""WITH e AS (SELECT vec_id AS id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       |c0 AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY id) - 1 AS INT) AS cid, v AS c
-       |  FROM (SELECT id, v FROM e ORDER BY id LIMIT $nCells) s0),
-       |$coarse,
-       |${cAssign("af", cFinal)},
-       |r AS (
-       |  SELECT af.id, af.cid,
-       |    list_transform(generate_series(1, $dim), i -> af.v[i] - c.c[i]) AS rv
-       |  FROM af JOIN $cFinal c USING (cid)),
-       |$perSubspace,
+    val pq = pqCtes(
+      "r", "rv", PqNames("rs", "rt", "cb", "pa"), dim, m, ks, pqIterations, trainModulus)
+    val sims = adcSimsCte(
+      "qr", "qrv", s => s"cb${s}_$pqIterations", "b", "JOIN qr ON qr.cid = x.cid",
+      m, dim / m, nQueries)
+    val exq = s"exq AS (SELECT id AS query_id, v FROM e WHERE id < $nQueries),\n"
+    s"""$vectorsCte,
+       |${coarseCtes(coarse, nCells, coarseIterations)},
+       |${residualCte("r", "af", "", "rv", cFinal, dim)},
+       |$pq,
        |codes AS (
        |  SELECT paf0.id, r.cid, ${(0 until m).map(s => s"paf$s.cid AS k$s").mkString(", ")}
        |  FROM paf0 ${(1 until m).map(s => s"JOIN paf$s ON paf$s.id = paf0.id").mkString(" ")}
        |  JOIN r ON r.id = paf0.id),
-       |qp AS (
-       |  SELECT id, v, cid FROM (
-       |    SELECT id, v, cid, row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn FROM (
-       |      SELECT e.id, e.v, c.cid, ${d2full("e.v", "c.c")} AS d2
-       |      FROM e CROSS JOIN $cFinal c WHERE e.id < $nQueries) dd) rr
-       |  WHERE rn <= $nProbe),
-       |qr AS (
-       |  SELECT qp.id AS query_id, qp.cid,
-       |    list_transform(generate_series(1, $dim), i -> qp.v[i] - c.c[i]) AS qrv
-       |  FROM qp JOIN $cFinal c USING (cid)),
-       |sims AS (
-       |  SELECT qr.query_id, x.id AS vec_id, round($approx, 6) + 0.0 AS approx_d2
-       |  FROM codes x
-       |  $codeJoin
-       |  JOIN qr ON qr.cid = x.cid
-       |  WHERE x.id >= $nQueries),
-       |rk AS (
-       |  SELECT query_id, vec_id, approx_d2,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY approx_d2, vec_id) AS rank
-       |  FROM sims)
-       |${if (rerankTo <= 0)
-           s"""SELECT query_id, vec_id, approx_d2, CAST(rank AS BIGINT) AS rank
-              |FROM rk WHERE rank <= $topK""".stripMargin
-         else
-           s""",sl AS (SELECT query_id, vec_id FROM rk WHERE rank <= $topK),
-              |exq AS (SELECT id AS query_id, v FROM e WHERE id < $nQueries),
-              |ex AS (
-              |  SELECT sl.query_id, sl.vec_id, round(${duckCos("q.v", "c.v")}, 6) + 0.0 AS cos_sim
-              |  FROM sl JOIN e c ON c.id = sl.vec_id JOIN exq q ON q.query_id = sl.query_id),
-              |rr AS (
-              |  SELECT query_id, vec_id, cos_sim,
-              |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-              |  FROM ex)
-              |SELECT query_id, vec_id, cos_sim, CAST(rank AS BIGINT) AS rank
-              |FROM rr WHERE rank <= $rerankTo""".stripMargin}""".stripMargin
+       |${probeCte(coarse, cFinal, nQueries, nProbe)},
+       |${residualCte("qr", "qp", " AS query_id", "qrv", cFinal, dim)},
+       |$sims,
+       |${rankCte("rk", "approx_d2", "approx_d2", "sims")}
+       |${adcTail("rk", topK, rerankTo, "exq q", exq)}""".stripMargin
   }
 
   val oracle: Map[String, String] = Map(
@@ -594,8 +559,7 @@ object VectorQueries {
       trainModulus = 4, rerankTo = 3),
     "x_v3_ann_lsh_neardup" -> {
       val cos = duckCos("a.v", "b.v")
-      s"""WITH e AS (SELECT vec_id AS id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""$vectorsCte,
          |bk AS (SELECT id, v, CAST(${srpBucketSql("v", 64, 8)} AS BIGINT) AS block FROM e)
          |SELECT a.block, a.id AS id_a, b.id AS id_b, round($cos, 6) + 0.0 AS cos_sim
          |FROM bk a JOIN bk b ON a.block = b.block AND a.id < b.id
@@ -614,8 +578,7 @@ object VectorQueries {
            |    FROM edges ed JOIN l${j - 1} l ON l.doc_id = ed.dst)
            |  GROUP BY doc_id)""".stripMargin
       }.mkString(",\n")
-      s"""WITH e AS (SELECT vec_id AS id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""$vectorsCte,
          |bk AS (SELECT id, v, CAST(${srpBucketSql("v", 64, 8)} AS BIGINT) AS block FROM e),
          |pairs AS (
          |  SELECT a.id AS doc_a, b.id AS doc_b
@@ -633,8 +596,7 @@ object VectorQueries {
     },
     "x_v6_ann_lsh_multiprobe" -> {
       val cos = duckCos("a.v", "b.v")
-      s"""WITH e AS (SELECT vec_id AS id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""$vectorsCte,
          |bk AS (SELECT id, v, CAST(${srpBucketSql("v", 64, 8)} AS BIGINT) AS b0 FROM e),
          |flips AS (
          |  SELECT CAST(0 AS BIGINT) AS f
@@ -660,10 +622,7 @@ object VectorQueries {
          |sims AS (
          |  SELECT q.query_id, c.vec_id, round($cos, 6) + 0.0 AS cos_sim
          |  FROM c CROSS JOIN q),
-         |r AS (
-         |  SELECT query_id, vec_id, cos_sim,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-         |  FROM sims)
+         |${rankCte("r", "cos_sim", "cos_sim DESC", "sims")}
          |SELECT query_id, vec_id, cos_sim, rank FROM r WHERE rank <= 3""".stripMargin
     },
     "v2_cosine_neardup" -> {

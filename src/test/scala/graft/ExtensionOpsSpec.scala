@@ -657,28 +657,27 @@ class ExtensionOpsSpec extends SparkSpec {
     }
   }
 
-  // --- VectorOps IVF assignment k-threshold guard -------------------------
+  // --- VectorOps IVF assignment: kernel vs the nProbe ranking -------------
 
   test("ivf assignment at k=128: join path matches the kernel path bit-for-bit") {
-    // At k=128 the default path is now the early-exit argmin kernel (the
-    // reference-object table removed the old codegen-tree-size ceiling);
-    // forcing the broadcast-join + rank path via maxExprK = 0 must give
-    // identical assignments — same d2 fold when computed in full, and the
-    // kernel's monotone prune can only drop candidates the (d2, cid) rank
-    // would have lost anyway.
-    assert(VectorOps.NearestCidExprMaxK >= 128)
+    // IVF assigns through the early-exit argmin kernel at any k (the
+    // reference-object table has no codegen-tree-size ceiling); the nProbe
+    // search ranks cells by a broadcast crossJoin + row_number instead.
+    // Rank 1 of that ranking must be the kernel's cid — same d2 fold when
+    // computed in full, and the kernel's monotone prune can only drop
+    // candidates the (d2, cid) rank would have lost anyway.
     val dim = 8
     def vec(seed: Int): Seq[Double] =
       (0 until dim).map(d => ((seed * 31 + d * 17) % 97).toDouble / 97.0)
     val vecs = (0 until 300).map(i => (i.toLong, vec(i))).toDF("id", "embedding")
     val v = vecs.select(col("id"), transform(col("embedding"), x => x.cast("double")).as("v"))
     val cents = (0 until 128).map(c => (c, vec(c * 7 + 3)))
-    val kernel = VectorOps.assignCids(v, cents)
+    val kernel = v.withColumn("cid", VectorOps.nearestCidExpr(col("v"), cents))
       .select("id", "cid").collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    val joined = VectorOps.assignCids(v, cents, maxExprK = 0)
+    val ranked = VectorOps.rankedCells(v, VectorOps.centroidDf(spark, cents), 1)
       .select("id", "cid").collect().map(r => (r.getLong(0), r.getInt(1))).toMap
     assert(kernel.size === 300)
-    assert(kernel === joined)
+    assert(kernel === ranked)
   }
 
   // The kernel's contract edges, on both eval paths: ties go to the smaller
