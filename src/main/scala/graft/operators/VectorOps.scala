@@ -636,7 +636,8 @@ object VectorOps {
       k: Int,
       nProbe: Int = 1): DataFrame = {
     val centroids = centroidDf(vecs.sparkSession, model.cents)
-    val qv = vectors(vecs).filter(col("id").isin(queryIds: _*))
+    // a query of another width has no distance to any cell: it gets no rows
+    val qv = vectors(vecs).filter(col("id").isin(queryIds: _*) && size(col("v")) === model.dim)
     val queries = residuals(rankedCells(qv, centroids, nProbe), centroids)
       .select(
         col("id").as("query_id"), col("cid"),

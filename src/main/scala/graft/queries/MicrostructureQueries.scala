@@ -61,8 +61,7 @@ object MicrostructureQueries {
           .select(col("trade_id"), frameCol.as("frame"))
           .orderBy("trade_id").collect()
         frames.grouped(512).zipWithIndex.foreach { case (chunk, i) =>
-          val f = new java.io.File(
-            feed, f"capture_$i%05d${graft.sources.SbeFrameSource.FileSuffix}")
+          val f = new java.io.File(feed, graft.sources.SbeFrameSource.captureFileName(i))
           f.deleteOnExit()
           graft.sources.SbeFrameSource.writeFrameFile(
             f, chunk.map(_.getAs[Array[Byte]]("frame")).toSeq)

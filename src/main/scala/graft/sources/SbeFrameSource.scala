@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.DataInputStream
 import java.util
 
 import org.apache.hadoop.conf.Configuration
@@ -64,12 +63,54 @@ object SbeFrameSource {
 
   val FileSuffix = ".sbef"
 
-  /** Sanity bound on a length prefix (shared intent with SocketCapture's
-    * maxFrameBytes): anything outside [0, MaxFrameBytes] is a corrupt or
-    * torn prefix, and readers stop at the last good boundary instead of
-    * mis-seeking or allocating garbage.
+  /** Bound on a length prefix: a capture refuses a frame above it loudly,
+    * and a reader takes a prefix outside [0, MaxFrameBytes] for a corrupt or
+    * torn one and stops at the last good boundary instead of mis-seeking or
+    * allocating garbage.
     */
   val MaxFrameBytes: Int = 16 << 20
+
+  private[sources] final val NoFrame = -1
+  private[sources] final val CorruptLength = -2
+
+  /** The next `[u32 big-endian length]` prefix of `in`: the frame length,
+    * [[NoFrame]] when fewer than 4 bytes remain, or [[CorruptLength]] when
+    * it is outside [0, MaxFrameBytes]. Allocates nothing: it runs per frame.
+    */
+  private[sources] def readLength(in: java.io.InputStream): Int = {
+    val b0 = in.read(); val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
+    if ((b0 | b1 | b2 | b3) < 0) NoFrame
+    else {
+      val len = (b0 << 24) | (b1 << 16) | (b2 << 8) | b3
+      if (len < 0 || len > MaxFrameBytes) CorruptLength else len
+    }
+  }
+
+  /** Appends one length-prefixed frame; returns the bytes written. A frame
+    * above [[MaxFrameBytes]] is refused: a reader would take its prefix for
+    * a corrupt one and silently drop the rest of the file.
+    */
+  private[sources] def writeFrame(out: java.io.DataOutputStream, frame: Array[Byte]): Int = {
+    require(frame.length <= MaxFrameBytes,
+      s"frame of ${frame.length} bytes above MaxFrameBytes ($MaxFrameBytes)")
+    out.writeInt(frame.length)
+    out.write(frame)
+    4 + frame.length
+  }
+
+  private val CaptureName = """capture_(\d+)\.sbef""".r
+
+  /** A capture's `idx`-th journal file; five-digit names sort in roll order. */
+  def captureFileName(idx: Int): String = f"capture_$idx%05d$FileSuffix"
+
+  /** The index a capture starting on `dir` journals to first: one past the
+    * highest existing capture file, so a restart after a retention delete
+    * never reuses the name of a file that is still there.
+    */
+  private[sources] def nextCaptureIndex(dir: String, conf: Configuration): Int =
+    listFrameFiles(dir, conf).map(_.getPath.getName).collect {
+      case CaptureName(i) => i.toInt + 1
+    }.maxOption.getOrElse(0)
 
   private[sources] def listFrameFiles(
       dir: String,
@@ -88,27 +129,21 @@ object SbeFrameSource {
     * (negative or > [[MaxFrameBytes]]) ends the walk at the last good
     * boundary — never a mis-seek or an EOF throw.
     */
-  private[sources] def completeFrameBoundary(
+  private[graft] def completeFrameBoundary(
       f: FileSystem, st: FileStatus, from: Long = 0L): Long = {
     val len = st.getLen
     val raw = f.open(st.getPath)
-    val in = try { raw.seek(from); new DataInputStream(new java.io.BufferedInputStream(raw)) }
+    val in = try { raw.seek(from); new java.io.BufferedInputStream(raw) }
     catch { case e: Throwable => raw.close(); throw e }
     try {
-      var pos = from
       var boundary = from
       var done = false
       while (!done) {
-        if (pos + 4 > len) done = true
+        val frameLen = if (boundary + 4 > len) NoFrame else readLength(in)
+        if (frameLen < 0 || boundary + 4 + frameLen > len) done = true
         else {
-          val frameLen = in.readInt().toLong
-          if (frameLen < 0 || frameLen > MaxFrameBytes) done = true
-          else if (pos + 4 + frameLen > len) done = true
-          else {
-            in.skipNBytes(frameLen)
-            pos += 4 + frameLen
-            boundary = pos
-          }
+          in.skipNBytes(frameLen)
+          boundary += 4 + frameLen
         }
       }
       boundary
@@ -130,7 +165,7 @@ object SbeFrameSource {
     val f = GraftFs.fs(path, conf)
     val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
       if (append && f.exists(path)) f.append(path) else f.create(path, true)))
-    try frames.foreach { fr => out.writeInt(fr.length); out.write(fr) }
+    try frames.foreach(writeFrame(out, _))
     finally out.close()
   }
 }
@@ -302,45 +337,30 @@ case class SbeFrameReaderFactory(conf: Broadcast[SerializableConfiguration])
         val raw = GraftFs.fs(path, conf.value.value).open(path)
         try raw.seek(p.fromByte)
         catch { case e: Throwable => raw.close(); throw e }
-        new DataInputStream(new java.io.BufferedInputStream(raw))
+        new java.io.BufferedInputStream(raw)
       }
       private val fileName = UTF8String.fromString(path.getName)
       private var pos = p.fromByte
       private var row: InternalRow = _
 
+      /** False at the end of the range, a corrupt prefix (torn-tail
+        * posture) or a truncated tail frame: that is what a live capture's
+        * in-flight write looks like, and the frame is re-read complete once
+        * the boundary advances (the reference's skip-bad-lines posture, S7).
+        */
       override def next(): Boolean = {
-        if (p.untilByte >= 0 && pos >= p.untilByte) { row = null; return false }
-        // readNBytes loops until 4 bytes or true EOF — a single read() may
-        // legally return short before EOF and would drop the partition tail.
-        val lenBytes = new Array[Byte](4)
-        val n = in.readNBytes(lenBytes, 0, 4)
-        if (n < 4) { row = null; false }
-        else {
-          val len = java.nio.ByteBuffer.wrap(lenBytes).getInt
-          // corrupt prefix: stop at the last good boundary (torn-tail
-          // posture) instead of a negative-size crash or a huge allocation
-          if (len < 0 || len > SbeFrameSource.MaxFrameBytes) { row = null; return false }
-          val frame = new Array[Byte](len)
-          var off = 0
-          var eof = false
-          while (off < len && !eof) {
-            val r = in.read(frame, off, len - off)
-            if (r < 0) eof = true else off += r
-          }
-          if (eof) {
-            // A truncated tail frame is what a live capture's in-flight
-            // write looks like — treat it as end-of-file (the frame is
-            // re-read complete once the boundary advances), mirroring the
-            // reference's skip-bad-lines posture (S7) rather than failing
-            // the whole partition.
-            row = null; false
-          } else {
-            val frameStart = pos
-            pos += 4 + len
-            row = InternalRow(frame, fileName, frameStart)
-            true
+        row = null
+        if (p.untilByte < 0 || pos < p.untilByte) {
+          val len = SbeFrameSource.readLength(in)
+          if (len >= 0) {
+            val frame = new Array[Byte](len)
+            if (in.readNBytes(frame, 0, len) == len) {
+              row = InternalRow(frame, fileName, pos)
+              pos += 4 + len
+            }
           }
         }
+        row != null
       }
       override def get(): InternalRow = row
       override def close(): Unit = in.close()

@@ -1,12 +1,19 @@
 package graft.sources
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
+import java.io.DataOutputStream
 import java.net.Socket
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.Path
 
-/** Live TCP feed → rolling capture journal: the receiver half of the
+/** One upstream feed: its next complete frame, or None at a clean end (a
+  * cut mid-frame included: a partial frame is never journaled).
+  */
+trait FrameTransport extends AutoCloseable {
+  def nextFrame(): Option[Array[Byte]]
+}
+
+/** Live feed → rolling capture journal: the receiver half of the
   * reference's WS/Kinesis consumers (`services/sbe_ingestor`,
   * `services/kinesis_*` — connect, frame, persist), re-expressed as the
   * standard log-consumer shape: an UNREPLAYABLE network stream is durably
@@ -15,44 +22,40 @@ import org.apache.hadoop.fs.Path
   * (file, offset) replay. Receive → append to log → consume by offset is
   * exactly the Kafka/Kinesis pattern; the journal is the topic, file names
   * are the partition's increasing offsets, and reconnect = replay from the
-  * checkpointed boundary.
+  * checkpointed boundary. A receiver starts one past the highest existing
+  * capture file and never overwrites one.
   *
-  * Durability invariant: only COMPLETELY received frames are journaled
-  * (length prefix + payload both fully read), so a connection cut mid-frame
-  * can never leave a torn record for the tailing source — the source's own
-  * complete-frame boundary walk then makes the pipeline end-to-end
-  * at-least-once with no partial reads.
+  * Durability invariant: only COMPLETE frames are journaled, so a
+  * connection cut mid-frame can never leave a torn record for the tailing
+  * source — the source's own complete-frame boundary walk then makes the
+  * pipeline end-to-end at-least-once with no partial reads.
   *
   * Scale shape: one receiver per upstream connection (shard/socket), each
   * journaling its own directory; Spark tails the directories with per-file
   * parallelism. The receiver itself is ingest infra (driver/edge side), not
   * a query-path operator.
   */
-final class SocketCapture(
-    host: String,
-    port: Int,
+abstract class FrameReceiver(
     dir: String,
-    rollBytes: Long = 64L << 20,
-    flushEveryFrames: Int = 1,
-    maxFrameBytes: Int = 16 << 20) extends AutoCloseable {
+    rollBytes: Long,
+    flushEveryFrames: Int,
+    threadName: String,
+    transport: FrameTransport) extends AutoCloseable {
 
   private val framesJournaled = new AtomicLong(0)
   @volatile private var failure: Option[Throwable] = None
-  private val socket = new Socket(host, port)
+  @volatile private var failureObserved = false
+  @volatile private var closing = false
   // Captured on the constructing thread (where a Spark session, if any,
   // is registered); the receiver thread must not re-resolve it.
   private val hadoopConf = GraftFs.conf()
 
-  private val thread = new Thread(() => run(), s"socket-capture-$host:$port")
+  private val thread = new Thread(() => run(), threadName)
   thread.setDaemon(true)
   thread.start()
 
-  private def nextFile(idx: Int): Path =
-    new Path(dir, f"capture_$idx%05d${SbeFrameSource.FileSuffix}")
-
   private def run(): Unit = {
-    val in = new DataInputStream(new java.io.BufferedInputStream(socket.getInputStream))
-    var fileIdx = SbeFrameSource.listFrameFiles(dir, hadoopConf).length
+    var fileIdx = SbeFrameSource.nextCaptureIndex(dir, hadoopConf)
     var out: DataOutputStream = null
     var written = 0L
     var sinceFlush = 0
@@ -62,63 +65,95 @@ final class SocketCapture(
       // object store without flush-visibility would journal closed rolls
       // only — set rollBytes small there). The per-frame flush pushes
       // complete frames toward the tailing source's boundary walk.
-      val p = nextFile(fileIdx)
+      val p = new Path(dir, SbeFrameSource.captureFileName(fileIdx))
       val f = GraftFs.fs(p, hadoopConf)
-      if (fileIdx == 0) f.mkdirs(new Path(dir))
-      out = new DataOutputStream(new java.io.BufferedOutputStream(f.create(p, true)))
+      f.mkdirs(p.getParent)
+      out = new DataOutputStream(new java.io.BufferedOutputStream(f.create(p, false)))
       fileIdx += 1
       written = 0L
     }
     try {
       roll()
-      var eof = false
-      while (!eof) {
-        val len =
-          try in.readInt()
-          catch { case _: EOFException => eof = true; -1 }
-        if (!eof) {
-          // The wire length prefix is untrusted input: a corrupt/negative or
-          // ~2 GB value must become a framing error, not an allocation crash
-          // (NegativeArraySizeException/OOM) inside the receiver thread.
-          if (len < 0 || len > maxFrameBytes)
-            throw new java.io.StreamCorruptedException(
-              s"framing error: length prefix $len outside [0, $maxFrameBytes]")
-          val payload = new Array[Byte](len)
-          in.readFully(payload) // EOF mid-payload aborts WITHOUT journaling
-          out.writeInt(len)
-          out.write(payload)
-          written += 4L + len
-          framesJournaled.incrementAndGet()
-          sinceFlush += 1
-          if (sinceFlush >= flushEveryFrames) { out.flush(); sinceFlush = 0 }
-          if (written >= rollBytes) roll()
-        }
+      var frame = transport.nextFrame()
+      while (frame.isDefined) {
+        written += SbeFrameSource.writeFrame(out, frame.get)
+        framesJournaled.incrementAndGet()
+        sinceFlush += 1
+        if (sinceFlush >= flushEveryFrames) { out.flush(); sinceFlush = 0 }
+        if (written >= rollBytes) roll()
+        frame = transport.nextFrame()
       }
     } catch {
-      case _: EOFException => () // cut mid-frame: partial frame discarded
-      case e: java.net.SocketException if socket.isClosed => () // close() called
+      case _: java.net.SocketException if closing => ()
       case e: Throwable => failure = Some(e)
     } finally {
       if (out != null) out.close()
-      socket.close()
+      transport.close()
     }
   }
 
   /** Frames fully received AND journaled so far. */
   def journaledCount: Long = framesJournaled.get()
 
-  /** Re-throws an unexpected receiver failure (None after a clean EOF). */
-  def checkFailure(): Unit = failure.foreach(throw _)
+  /** Re-throws an unexpected receiver failure (nothing after a clean end). */
+  def checkFailure(): Unit = failure.foreach { e => failureObserved = true; throw e }
 
-  /** Blocks until the upstream closes and the journal is fully flushed. */
+  /** Blocks until the feed ends and the journal is fully flushed. */
   def awaitCompletion(timeoutMs: Long = 30000): Unit = {
     thread.join(timeoutMs)
     require(!thread.isAlive, s"capture still draining after ${timeoutMs}ms")
     checkFailure()
   }
 
+  /** Closes the connection and joins the receiver thread. A failure the
+    * caller never saw (via [[checkFailure]]/[[awaitCompletion]]) is rethrown
+    * here, once; a `SocketException` after this call is a clean stop. A
+    * thread still alive after the join only warns: close() usually runs in
+    * a `finally`, where throwing for slowness would mask the primary error.
+    * Hold a capture with `scala.util.Using.resource`, which attaches a
+    * close() failure to a primary exception as suppressed instead of
+    * replacing it.
+    */
   override def close(): Unit = {
-    socket.close()
+    closing = true
+    transport.close()
     thread.join(5000)
+    if (thread.isAlive)
+      System.err.println(s"[FrameReceiver] WARNING: capture thread ${thread.getName} " +
+        "still running 5s after close; journal tail may be unflushed")
+    if (!failureObserved) checkFailure()
+  }
+}
+
+/** A live TCP feed in the journal's own frame layout. The wire length prefix
+  * is untrusted: one outside [0, MaxFrameBytes] is a framing error, never an
+  * allocation crash inside the receiver.
+  */
+final class SocketCapture(
+    host: String,
+    port: Int,
+    dir: String,
+    rollBytes: Long = 64L << 20,
+    flushEveryFrames: Int = 1)
+  extends FrameReceiver(
+    dir, rollBytes, flushEveryFrames, s"socket-capture-$host:$port",
+    SocketCapture.transport(host, port))
+
+object SocketCapture {
+  private def transport(host: String, port: Int): FrameTransport = new FrameTransport {
+    private val socket = new Socket(host, port)
+    private val in = new java.io.BufferedInputStream(socket.getInputStream)
+
+    override def nextFrame(): Option[Array[Byte]] = SbeFrameSource.readLength(in) match {
+      case SbeFrameSource.NoFrame => None
+      case SbeFrameSource.CorruptLength =>
+        throw new java.io.StreamCorruptedException(
+          s"framing error: length prefix outside [0, ${SbeFrameSource.MaxFrameBytes}]")
+      case len =>
+        val frame = new Array[Byte](len)
+        if (in.readNBytes(frame, 0, len) == len) Some(frame) else None
+    }
+
+    override def close(): Unit = socket.close()
   }
 }

@@ -3,9 +3,6 @@ package graft.sources
 import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.net.Socket
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.hadoop.fs.Path
 
 /** RFC 6455 WebSocket client — the transport under the reference's Binance
   * SBE ingest (`services/sbe_ingestor/src/binance_sbe.py:140-191` opens a
@@ -25,7 +22,8 @@ import org.apache.hadoop.fs.Path
   *   - a MASKED server frame aborts (RFC 6455 §5.1: servers must not mask);
   *   - a control frame over 125 bytes or a fragmented control frame aborts;
   *   - payloads above `maxMessageBytes` abort before allocation (untrusted
-  *     wire length, same guard as [[SocketCapture]]).
+  *     wire length, same guard as [[SocketCapture]]; the default is the
+  *     journal's own bound, [[SbeFrameSource.MaxFrameBytes]]).
   *
   * `wss:` = the same state machine over a TLS socket: pass
   * `SSLContext.getDefault.getSocketFactory` (or a pinned-trust context) as
@@ -37,7 +35,7 @@ final class WsClient(
     host: String,
     port: Int,
     path: String = "/",
-    maxMessageBytes: Int = 16 << 20,
+    maxMessageBytes: Int = SbeFrameSource.MaxFrameBytes,
     socketFactory: javax.net.SocketFactory = javax.net.SocketFactory.getDefault)
   extends AutoCloseable {
 
@@ -204,14 +202,13 @@ object WsClient {
   }
 }
 
-/** Live WebSocket feed → rolling capture journal: [[SocketCapture]]'s
-  * invariants (only complete messages journaled, length-prefixed rolling
-  * `.sbef` files, checkpointable tail via [[SbeFrameSource]]) over the real
-  * WS transport instead of a raw TCP length stream — binary messages ARE
-  * the frames, exactly how the reference's ingestor consumes Binance SBE
-  * (`binance_sbe.py:140-191`: one binary WS message = one SBE frame).
-  * Control traffic (ping/pong, close) is handled inside [[WsClient]] and
-  * never reaches the journal.
+/** A live WebSocket feed journaled by a [[FrameReceiver]]: the same
+  * invariants as [[SocketCapture]] over the real WS transport instead of a
+  * raw TCP length stream — binary messages ARE the frames, exactly how the
+  * reference's ingestor consumes Binance SBE (`binance_sbe.py:140-191`: one
+  * binary WS message = one SBE frame). Control traffic (ping/pong, close)
+  * is handled inside [[WsClient]] and never reaches the journal; text
+  * messages (feed metadata on real feeds) are skipped.
   */
 final class WebSocketCapture(
     host: String,
@@ -221,95 +218,18 @@ final class WebSocketCapture(
     rollBytes: Long = 64L << 20,
     flushEveryFrames: Int = 1,
     socketFactory: javax.net.SocketFactory = javax.net.SocketFactory.getDefault)
-  extends AutoCloseable {
+  extends FrameReceiver(
+    dir, rollBytes, flushEveryFrames, s"ws-capture-$host:$port$path",
+    WebSocketCapture.transport(new WsClient(host, port, path, socketFactory = socketFactory)))
 
-  private val framesJournaled = new AtomicLong(0)
-  @volatile private var failure: Option[Throwable] = None
-  private val client = new WsClient(host, port, path, socketFactory = socketFactory)
-  private val hadoopConf = GraftFs.conf()
-
-  private val thread = new Thread(() => run(), s"ws-capture-$host:$port$path")
-  thread.setDaemon(true)
-  thread.start()
-
-  private def nextFile(idx: Int): Path =
-    new Path(dir, f"capture_$idx%05d${SbeFrameSource.FileSuffix}")
-
-  private def run(): Unit = {
-    var fileIdx = SbeFrameSource.listFrameFiles(dir, hadoopConf).length
-    var out: DataOutputStream = null
-    var written = 0L
-    var sinceFlush = 0
-    def roll(): Unit = {
-      if (out != null) out.close()
-      val p = nextFile(fileIdx)
-      val f = GraftFs.fs(p, hadoopConf)
-      if (fileIdx == 0) f.mkdirs(new Path(dir))
-      out = new DataOutputStream(new java.io.BufferedOutputStream(f.create(p, true)))
-      fileIdx += 1
-      written = 0L
-    }
-    try {
-      roll()
+object WebSocketCapture {
+  private def transport(client: WsClient): FrameTransport = new FrameTransport {
+    override def nextFrame(): Option[Array[Byte]] = {
       var msg = client.readMessage()
-      while (msg.isDefined) {
-        msg.foreach { case (opcode, payload) =>
-          if (opcode == 2) { // binary: one WS message = one journaled frame
-            out.writeInt(payload.length)
-            out.write(payload)
-            written += 4L + payload.length
-            framesJournaled.incrementAndGet()
-            sinceFlush += 1
-            if (sinceFlush >= flushEveryFrames) { out.flush(); sinceFlush = 0 }
-            if (written >= rollBytes) roll()
-          } // text messages: feed metadata on real feeds, not journaled
-        }
-        msg = client.readMessage()
-      }
-    } catch {
-      case e: java.net.SocketException if e.getMessage != null && e.getMessage.contains("closed") => ()
-      case e: Throwable => failure = Some(e)
-    } finally {
-      if (out != null) out.close()
-      client.close()
+      while (msg.exists(_._1 != 2)) msg = client.readMessage()
+      msg.map(_._2)
     }
-  }
 
-  def journaledCount: Long = framesJournaled.get()
-
-  @volatile private var failureObserved = false
-
-  def checkFailure(): Unit = failure.foreach { e => failureObserved = true; throw e }
-
-  /** Blocks until the feed closes and the journal is fully flushed. */
-  def awaitCompletion(timeoutMs: Long = 30000): Unit = {
-    thread.join(timeoutMs)
-    require(!thread.isAlive, s"capture still draining after ${timeoutMs}ms")
-    checkFailure()
-  }
-
-  /** Closes the socket and joins the capture thread. A capture that died
-    * mid-run must not close SILENTLY: a stored failure the caller never saw
-    * (via [[checkFailure]]/[[awaitCompletion]]) is rethrown here; a thread
-    * still alive after the join gets a loud stderr warning (close() is
-    * usually in a `finally`, so throwing for mere slowness would mask the
-    * primary exception — a failure the caller already observed likewise
-    * stays rethrown-once).
-    *
-    * Because close() can throw, hold the capture with
-    * `scala.util.Using.resource` (or Java try-with-resources) rather than a
-    * manual `finally { cap.close() }`: resource scoping attaches a close()
-    * failure to a primary exception as SUPPRESSED, while a bare finally
-    * REPLACES the primary with it (JVM semantics), losing the error that
-    * actually aborted the run. Callers that `awaitCompletion()` before
-    * closing have always observed the failure and close() never throws.
-    */
-  override def close(): Unit = {
-    client.close()
-    thread.join(5000)
-    if (thread.isAlive)
-      System.err.println(s"[WebSocketCapture] WARNING: capture thread ${thread.getName} " +
-        "still running 5s after close; journal tail may be unflushed")
-    if (!failureObserved) checkFailure()
+    override def close(): Unit = client.close()
   }
 }

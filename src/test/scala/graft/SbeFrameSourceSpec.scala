@@ -7,7 +7,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.functions.Sbe
-import graft.sources.SbeFrameSource
+import graft.sources.{GraftFs, SbeFramePartition, SbeFrameReaderFactory, SbeFrameSource}
 
 /** End-to-end coverage for the `sbe-frames` DataSource V2 source: batch
   * read, micro-batch tailing of a growing capture directory, per-file
@@ -222,5 +222,37 @@ class SbeFrameSourceSpec extends SparkSpec {
       .select(Sbe.decodeTrade(col("frame")).as("d")).select("d.trade_id")
       .collect().map(_.getLong(0)).toSeq
     assert(ids === Seq(1L))
+  }
+
+  test("cut at every byte: reader and boundary walk keep exactly the complete frames") {
+    val conf = GraftFs.conf()
+    val reader = SbeFrameReaderFactory(GraftFs.broadcastConf(conf))
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val frames = rnd.shuffle(Array.emptyByteArray +:
+        Seq.fill(6)(Array.fill(rnd.nextInt(40))(rnd.nextInt().toByte))).map(_.toSeq)
+      val d = Files.createTempDirectory("sbef_cut").toFile
+      val full = new File(d, "full.sbef")
+      SbeFrameSource.writeFrameFile(full, frames.map(_.toArray))
+      val bytes = Files.readAllBytes(full.toPath)
+      val ends = frames.scanLeft(0L)((pos, f) => pos + 4 + f.length) // every boundary
+      assert(ends.last === bytes.length)
+      val cut = new File(d, "cut.sbef")
+      val path = new org.apache.hadoop.fs.Path(cut.toURI)
+      for (n <- 0 to bytes.length) {
+        Files.write(cut.toPath, java.util.Arrays.copyOf(bytes, n))
+        val complete = ends.lastIndexWhere(_ <= n)
+        val r = reader.createReader(SbeFramePartition(path.toString, 0L, -1L))
+        val got = try Iterator.continually(r.next()).takeWhile(identity)
+          .map(_ => r.get().getBinary(0).toSeq).toList
+        finally r.close()
+        assert(got === frames.take(complete), s"seed $seed, cut at $n")
+        val fs = GraftFs.fs(path, conf)
+        val st = fs.getFileStatus(path)
+        for (from <- ends.take(complete + 1))
+          assert(SbeFrameSource.completeFrameBoundary(fs, st, from) === ends(complete),
+            s"seed $seed, cut at $n, walk from $from")
+      }
+    }
   }
 }

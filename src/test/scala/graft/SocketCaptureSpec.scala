@@ -75,8 +75,8 @@ class SocketCaptureSpec extends SparkSpec {
     assert(n === frames.size)
   }
 
-  test("corrupt length prefix is a framing error, not an allocation crash") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sockcap_corrupt_").toFile
+  /** Serves one ~2 GB length claim and closes; returns the port. */
+  private def serveCorruptPrefix(): Int = {
     val server = new ServerSocket(0)
     val t = new Thread(() => {
       val sock = server.accept()
@@ -85,10 +85,48 @@ class SocketCaptureSpec extends SparkSpec {
       out.flush(); sock.close(); server.close()
     }, "corrupt-server")
     t.setDaemon(true); t.start()
-    val cap = new SocketCapture("localhost", server.getLocalPort, dir.toString, maxFrameBytes = 1 << 20)
+    server.getLocalPort
+  }
+
+  test("corrupt length prefix is a framing error, not an allocation crash") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sockcap_corrupt_").toFile
+    val cap = new SocketCapture("localhost", serveCorruptPrefix(), dir.toString)
     val e = intercept[java.io.StreamCorruptedException](cap.awaitCompletion())
     assert(e.getMessage.contains("framing error"))
     assert(cap.journaledCount === 0)
+    cap.close() // the failure was seen once; close does not rethrow it
+  }
+
+  test("close() rethrows a receiver failure the caller never saw") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sockcap_close_").toFile
+    val port = serveCorruptPrefix()
+    val cap = new SocketCapture("localhost", port, dir.toString)
+    // wait for the receiver thread to die on the prefix without asking the
+    // capture (awaitCompletion/checkFailure would observe the failure)
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName == s"socket-capture-localhost:$port").foreach(_.join(30000))
+    intercept[java.io.StreamCorruptedException](cap.close())
+  }
+
+  test("a restart after a retention delete resumes past the highest file") {
+    // capture_00000 is gone (retention), 00001 and 00002 remain: a capture
+    // numbering by file COUNT would reopen capture_00002 and truncate it
+    val dir = java.nio.file.Files.createTempDirectory("graft_sockcap_retention_").toFile
+    val frames = tradeFrames(60)
+    SbeFrameSource.writeFrameFile(
+      new java.io.File(dir, SbeFrameSource.captureFileName(1)), frames.take(20))
+    SbeFrameSource.writeFrameFile(
+      new java.io.File(dir, SbeFrameSource.captureFileName(2)), frames.slice(20, 40))
+    val (port, _) = serve(frames.drop(40))
+    val cap = new SocketCapture("localhost", port, dir.toString)
+    cap.awaitCompletion()
+    assert(cap.journaledCount === 20)
+    val ids = spark.read.format("sbe-frames").load(dir.toString)
+      .select(Sbe.decodeTrade(col("frame")).getField("trade_id").as("id"))
+      .as[Long].collect().sorted
+    assert(ids.toSeq === (0L until 60L))
+    assert(new java.io.File(dir, SbeFrameSource.captureFileName(3)).exists())
   }
 
   test("a second capture resumes file numbering instead of clobbering") {

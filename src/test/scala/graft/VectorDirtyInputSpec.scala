@@ -14,8 +14,7 @@ import graft.operators.VectorOps
   *    passes the null guard, gets a null cell, and the driver-side regroup
   *    of the means fails on that null;
   *  - `ivfPqEncode` drops all three (the null cid fails the centroid join);
-  *    `ivfPqSearch` drops null and null-element queries, and scores a
-  *    wrong-width query's candidates with a null `approx_d2`.
+  *    `ivfPqSearch` drops null, null-element and wrong-width queries.
   */
 class VectorDirtyInputSpec extends SparkSpec {
   import spark.implicits._
@@ -93,23 +92,18 @@ class VectorDirtyInputSpec extends SparkSpec {
     }
   }
 
-  test("ivfPqEncode drops every dirty row; ivfPqSearch nulls a wrong-width query's scores") {
+  test("ivfPqEncode drops every dirty row; ivfPqSearch answers no dirty query") {
     val (model, codes) = VectorOps.ivfPqTrain(clean, nCells = 4, dim = dim, m = 2, ks = 4)
     val all = corpus(nullArray, nullElement, wrongWidth)
     assert(rows(VectorOps.ivfPqEncode(model, all)) === rows(codes))
     val k = 5
     val base = rows(VectorOps.ivfPqSearch(model, codes, clean, qs, k, nProbe = 2))
     val got = rows(VectorOps.ivfPqSearch(model, codes, all, qs, k, nProbe = 2))
-    assert(got.filter(_.getLong(0) < 1000L) === base)
-    assert(!got.exists(r => r.getLong(0) == 1000L || r.getLong(0) == 1001L))
-    // a wrong-width query ties on a null d2 to every cell, so it probes the
-    // nProbe smallest cids and ranks their candidates by vec_id
-    val ww = got.filter(_.getLong(0) == 1002L).sortBy(_.getLong(3))
-    val probed = model.cents.map(_._1).sorted.take(2)
-    val expected = codes.filter(col("cid").isin(probed: _*) && !col("vec_id").isin(qs: _*))
-      .select("vec_id").as[Long].collect().sorted.take(k).toSeq
-    assert(ww.map(_.getLong(1)) === expected)
-    assert(ww.map(_.getLong(3)) === (1L to k.toLong))
-    assert(ww.forall(_.isNullAt(2)))
+    // a wrong-width query has no distance to any cell, so it probes none
+    assert(got === base)
+    assert(!got.exists(r => dirtyIds.contains(r.getLong(0))))
+    val reranked = VectorOps.ivfPqSearchRerank(model, codes, all, qs, k, shortlist = 8, nProbe = 2)
+    assert(rows(reranked) ===
+      rows(VectorOps.ivfPqSearchRerank(model, codes, clean, qs, k, shortlist = 8, nProbe = 2)))
   }
 }
